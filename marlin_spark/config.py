@@ -31,10 +31,6 @@ class EngineConfig:
     # Query-time partition pruning reads only the buckets of query terms.
     # Sandbox default 32; at 100 TB raise to O(4096).
     n_term_buckets: int = 32
-    # Extra salt factor applied on top of (term, range_id) when
-    # repartitioning the exploded token stream, so a single shuffle
-    # partition never holds one head term's whole range set.
-    shuffle_salt: int = 4
     # Resumable build: docids are processed in this many contiguous
     # range-aligned checkpoint groups; a completed group is never re-done
     # on restart (its postings/rgroup=K dir is final).

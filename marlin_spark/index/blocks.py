@@ -1,24 +1,26 @@
-"""Posting-block builders (mapInPandas kernels of the index build).
+"""Posting-block writer (mapInPandas kernels of the index build).
 
-Two build paths share one block emitter:
+One builder plus one merger write every posting block of the index:
 
-- make_doc_range_builder — the MAIN build path (zero-shuffle): runs
-  directly over the docs/ scan (docid, dl, text); each scan split
-  tokenizes its docs and assembles its (term, range_id) posting groups
-  locally, so the exploded token stream never touches the exchange.
-  Groups cut by split boundaries yield PARTIAL blocks; the block-merge
-  pass below folds them during the (already required) bucket-coalesce
-  shuffle of the ~100x-smaller compressed blocks.
-- make_block_builder — the token-shuffle path kept for streaming delta
-  segments: input partitions of (term, docid, pos, dl) rows sorted by
-  (term, range_id, docid, pos) where the shuffle key was (term, range_id).
+- make_doc_range_builder runs directly over a docs scan (docid, dl,
+  indexed fields). Each scan split tokenizes its docs and assembles its
+  (term, range_id) posting groups locally, so the exploded token stream
+  never touches the exchange. Groups cut by split boundaries yield
+  PARTIAL blocks.
+- make_block_merger folds those partial blocks into full blocks during
+  the bucket-coalesce shuffle of the ~100x-smaller compressed blocks.
+
+The bulk build and the streaming delta segments both run this pair
+(build.write_postings). Compaction re-cuts every (term, range) group with
+the merger's fold (fold_blocks), dropping tombstones and recomputing
+block-max under the post-compaction avgdl.
 
 Each (term, range) group is cut into blocks of <= block_size docs (never
 crossing the range boundary — the roaring-container echo,
 /root/reference/src/main/cont.h:8-14), delta+varbyte-compressed, and
 emitted with skip-pointer metadata (first/last docid) + block-max BM25
 tf-norm (multiplied by idf at query time to give the block-max WAND
-upper bound).
+upper bound). emit_blocks_vec is the one block encoder.
 """
 
 from __future__ import annotations
@@ -29,11 +31,8 @@ import numpy as np
 import pandas as pd
 
 from marlin_spark.functions.codec import (
-    decode_block,
     decode_blocks_many,
-    decode_positions,
     decode_positions_many,
-    encode_block,
     vb_encode_with_sizes,
 )
 
@@ -47,6 +46,9 @@ _OUT_COLS = [
     "term", "range_id", "block_id", "first_docid", "last_docid",
     "n_docs", "sum_tf", "max_tfnorm", "postings", "positions",
 ]
+
+# columns of a stored postings table (base or delta segment)
+POSTING_COLS = _OUT_COLS + ["bucket"]
 
 
 def emit_blocks_vec(
@@ -187,162 +189,6 @@ def collapse_positions_to_docs(
     return doc_idx, tf
 
 
-def _make_emitter(
-    k1: float, b: float, avgdl: float, block_size: int, acc: dict
-) -> Callable:
-    """Doc-level (term, range) group -> block rows. ``acc`` keys are
-    optional so build and merge passes can count disjoint metrics."""
-
-    norm_c = k1 * (1.0 - b)
-    norm_s = k1 * b / avgdl if avgdl > 0 else 0.0
-
-    def emit(
-        term: str,
-        range_id: int,
-        u_docids: np.ndarray,
-        tfs: np.ndarray,
-        u_dls: np.ndarray,
-        poss: np.ndarray,
-        out: list,
-    ) -> None:
-        """u_docids strictly increasing; poss doc-major (tfs[i] positions
-        for doc i)."""
-        n = u_docids.shape[0]
-        pos_bounds = np.concatenate(
-            ([0], np.cumsum(tfs.astype(np.int64)))
-        )
-        for blk, s in enumerate(range(0, n, block_size)):
-            e = min(s + block_size, n)
-            d = u_docids[s:e].astype(np.uint64)
-            t = tfs[s:e].astype(np.uint64)
-            l = u_dls[s:e].astype(np.uint64)
-            p = poss[pos_bounds[s]:pos_bounds[e]].astype(np.int64)
-            pb, xb = encode_block(d, t, l, p)
-            tfn = t.astype(np.float64)
-            score_core = tfn * (k1 + 1.0) / (tfn + norm_c + norm_s * l.astype(np.float64))
-            if "blocks_built" in acc:
-                acc["blocks_built"].add(1)
-            if "bytes_postings" in acc:
-                acc["bytes_postings"].add(len(pb))
-            if "bytes_positions" in acc:
-                acc["bytes_positions"].add(len(xb))
-            out.append(
-                (
-                    term,
-                    int(range_id),
-                    blk,
-                    int(d[0]),
-                    int(d[-1]),
-                    int(e - s),
-                    int(t.sum()),
-                    float(score_core.max()),
-                    pb,
-                    xb,
-                )
-            )
-
-    return emit
-
-
-def _make_group_builder(
-    k1: float, b: float, avgdl: float, block_size: int, acc: dict
-) -> Callable:
-    """Position-level (term, range) group -> block rows: collapses the
-    (docid, pos) stream to doc level, then emits blocks."""
-
-    emit = _make_emitter(k1, b, avgdl, block_size, acc)
-
-    def _build_group(
-        term: str,
-        range_id: int,
-        docids: np.ndarray,
-        poss: np.ndarray,
-        dls: np.ndarray,
-        out: list,
-    ) -> None:
-        doc_start = np.flatnonzero(np.diff(docids, prepend=-1))
-        u_docids = docids[doc_start]
-        tfs = np.diff(np.append(doc_start, docids.shape[0]))
-        u_dls = dls[doc_start]
-        if "postings_emitted" in acc:
-            acc["postings_emitted"].add(int(u_docids.shape[0]))
-        emit(term, range_id, u_docids, tfs, u_dls, poss, out)
-
-    return _build_group
-
-
-def make_block_builder(
-    k1: float,
-    b: float,
-    avgdl: float,
-    block_size: int,
-    range_size: int,
-    counters: dict | None = None,
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Returns a mapInPandas function over a (term, docid, pos, dl) token
-    stream shuffled by (term, range_id) — used by the streaming delta path.
-    ``counters`` maps names to Spark accumulators (postings_emitted,
-    blocks_built, bytes_postings, bytes_positions)."""
-
-    acc = counters or {}
-    _build_group = _make_group_builder(k1, b, avgdl, block_size, acc)
-
-    def builder(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-
-        def process(pdf: pd.DataFrame, final: bool) -> pd.DataFrame | None:
-            nonlocal carry
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
-                return None
-            terms = pdf["term"].to_numpy()
-            docids = pdf["docid"].to_numpy(dtype=np.int64)
-            rng = docids // range_size
-            if not final:
-                # hold back the trailing (term, range) group — it may
-                # continue in the next Arrow batch of this partition
-                last_t, last_r = terms[-1], rng[-1]
-                tail = (terms == last_t) & (rng == last_r)
-                # tail is a suffix because input is sorted
-                cut = int(tail.argmax()) if tail.any() else len(pdf)
-                carry = pdf.iloc[cut:]
-                pdf = pdf.iloc[:cut]
-                if pdf.empty:
-                    return None
-                terms = terms[:cut]
-                docids = docids[:cut]
-                rng = rng[:cut]
-            poss = pdf["pos"].to_numpy(dtype=np.int64)
-            dls = pdf["dl"].to_numpy(dtype=np.int64)
-            bounds = np.flatnonzero(
-                (terms[1:] != terms[:-1]) | (rng[1:] != rng[:-1])
-            )
-            starts = np.concatenate(([0], bounds + 1))
-            ends = np.concatenate((bounds + 1, [len(pdf)]))
-            out: list = []
-            for s, e in zip(starts, ends):
-                _build_group(
-                    terms[s], int(rng[s]), docids[s:e], poss[s:e], dls[s:e], out
-                )
-            if not out:
-                return None
-            return pd.DataFrame(out, columns=_OUT_COLS)
-
-        for pdf in batches:
-            res = process(pdf, final=False)
-            if res is not None:
-                yield res
-        if carry is not None and not carry.empty:
-            tail, carry = carry, None
-            res = process(tail, final=True)
-            if res is not None:
-                yield res
-
-    return builder
-
-
 def make_doc_range_builder(
     analyzer: str,
     k1: float,
@@ -355,8 +201,9 @@ def make_doc_range_builder(
     _force_generic: bool = False,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """ZERO-SHUFFLE postings builder: mapInPandas directly over the docs/
-    scan (docid, dl, text) — the main build path. ``_force_generic``
-    disables the bandwidth-lean sort fast path (equivalence tests only).
+    scan (docid, dl, text), run by build.write_postings for the bulk
+    build and for delta segments. ``_force_generic`` disables the
+    bandwidth-lean sort fast path (equivalence tests only).
 
     Every posting group keys on (term, range_id = docid // range_size),
     and a scan split holds a contiguous slab of docids, so each split can
@@ -567,6 +414,71 @@ def make_doc_range_builder(
     return builder
 
 
+def _group_order(
+    pdf: pd.DataFrame,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Orders block rows by (term, range_id, first_docid). Returns
+    (uniq, order, c, r): term strings by code, the row order, and the
+    term codes and range ids of the rows in that order."""
+    codes, uniq = pd.factorize(pdf["term"].to_numpy())
+    rng = pdf["range_id"].to_numpy(dtype=np.int64)
+    first = pdf["first_docid"].to_numpy(dtype=np.int64)
+    order = np.lexsort((first, rng, codes))
+    return np.asarray(uniq), order, codes[order], rng[order]
+
+
+def fold_blocks(
+    pdf: pd.DataFrame,
+    rows: np.ndarray,
+    uniq: np.ndarray,
+    c: np.ndarray,
+    r: np.ndarray,
+    k1: float,
+    b: float,
+    avgdl: float,
+    block_size: int,
+    acc: dict,
+    deleted: np.ndarray | None = None,
+) -> pd.DataFrame | None:
+    """Re-cuts the blocks ``pdf.take(rows)`` into full blocks with one
+    batch decode and one emit_blocks_vec call over every group.
+
+    ``rows`` are group-contiguous by (term code ``c``, range ``r``) and
+    ordered by first_docid. The source blocks of one group cover DISJOINT
+    docid slabs, so their concatenated decoded arrays are the full sorted
+    group, and re-cutting yields the blocks a single-pass build emits.
+    ``deleted``: sorted int64 tombstone docids, dropped before re-cutting.
+
+    max_tfnorm is recomputed under ``avgdl``. For compaction that is the
+    POST-compaction avgdl, and the recompute is correctness-critical, not
+    cosmetic: block-max WAND treats max_tfnorm as an upper bound of
+    tf/(tf + k1(1-b) + k1*b*dl/avgdl) under the avgdl the QUERY uses.
+    Compaction refreshes stats.json's avgdl; if avgdl shrinks (deletes,
+    shorter new docs), a stale stored max computed under the old avgdl
+    UNDERSTATES the bound and WAND would skip ranges that hold true top-k
+    docs.
+    """
+    nd = pdf["n_docs"].to_numpy().astype(np.int64)[rows]
+    post = pdf["postings"].to_numpy()[rows].tolist()
+    posx = pdf["positions"].to_numpy()[rows].tolist()
+    docids, tfs, dls, _ = decode_blocks_many(post, nd)
+    positions = decode_positions_many(posx, tfs)
+    codes = np.repeat(c, nd)
+    rids = np.repeat(r, nd)
+    if deleted is not None and deleted.size and docids.size:
+        idx = np.minimum(np.searchsorted(deleted, docids), deleted.size - 1)
+        keep = deleted[idx] != docids
+        if not keep.all():
+            positions = positions[np.repeat(keep, tfs)]
+            codes, rids, docids, tfs, dls = (
+                a[keep] for a in (codes, rids, docids, tfs, dls)
+            )
+    return emit_blocks_vec(
+        uniq, codes, rids, docids, tfs, dls, positions,
+        k1, b, avgdl, block_size, acc,
+    )
+
+
 def make_block_merger(
     k1: float,
     b: float,
@@ -577,11 +489,9 @@ def make_block_merger(
     """Folds the doc-range builder's partial blocks into full blocks.
 
     Runs inside the bucket-coalesce shuffle (keyed by (bucket,
-    range_id%4), which co-locates every block of a (term, range) group —
-    bucket is a pure function of term). Partial blocks of one group cover
-    DISJOINT docid slabs, so ordering them by first_docid and
-    concatenating their decoded arrays reconstructs the full sorted
-    group; re-cutting yields blocks bit-identical to a single-pass build.
+    range_id%16), which co-locates every block of a (term, range) group —
+    bucket is a pure function of term). Groups with one source block pass
+    through; the rest go through fold_blocks.
     Input/output schema: BLOCK_SCHEMA + trailing bucket column.
     """
     acc = counters or {}
@@ -601,15 +511,7 @@ def make_block_merger(
         if not parts:
             return
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        terms = pdf["term"].to_numpy()
-        rng = pdf["range_id"].to_numpy(dtype=np.int64)
-        first = pdf["first_docid"].to_numpy(dtype=np.int64)
-        buckets = pdf["bucket"].to_numpy(dtype=np.int64)
-        codes, uniq = pd.factorize(terms)
-        uniq = np.asarray(uniq)
-        order = np.lexsort((first, rng, codes))
-        c = codes[order]
-        r = rng[order]
+        uniq, order, c, r = _group_order(pdf)
         nrows = len(pdf)
         new_g = np.empty(nrows, dtype=bool)
         new_g[0] = True
@@ -636,25 +538,18 @@ def make_block_merger(
             outs.append(passthru)
         multi = ~is_single
         if multi.any():
-            rows = order[multi]  # group-contiguous, ordered by first_docid
-            nd = pdf["n_docs"].to_numpy().astype(np.int64)[rows]
-            post = pdf["postings"].to_numpy()[rows].tolist()
-            posx = pdf["positions"].to_numpy()[rows].tolist()
-            docids, tfs, dls, _ = decode_blocks_many(post, nd)
-            positions = decode_positions_many(posx, tfs)
-            res = emit_blocks_vec(
-                uniq,
-                np.repeat(c[multi], nd),
-                np.repeat(r[multi], nd),
-                docids, tfs, dls, positions,
+            rows = order[multi]
+            res = fold_blocks(
+                pdf, rows, uniq, c[multi], r[multi],
                 k1, b, avgdl, block_size, acc,
             )
-            if res is not None:
-                bmap = dict(zip(terms[rows].tolist(), buckets[rows].tolist()))
-                res["bucket"] = res["term"].map(bmap).astype("int32")
-                outs.append(res)
+            terms = pdf["term"].to_numpy()[rows]
+            buckets = pdf["bucket"].to_numpy(dtype=np.int64)[rows]
+            bmap = dict(zip(terms.tolist(), buckets.tolist()))
+            res["bucket"] = res["term"].map(bmap).astype("int32")
+            outs.append(res)
         res = pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
-        res = res[_OUT_COLS + ["bucket"]]
+        res = res[POSTING_COLS]
         if "ms_merge" in acc:
             acc["ms_merge"].add(int((_time.time() - _t0) * 1000))
         if "cpu_merge" in acc:
@@ -672,16 +567,9 @@ def make_compaction_rewriter(
     deleted: np.ndarray | None = None,
     counters: dict | None = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Compaction kernel: rewrites EVERY (term, range) group — merging
-    base + delta-segment blocks, dropping tombstoned docids, and
+    """Compaction kernel: fold_blocks over EVERY (term, range) group —
+    merging base + delta-segment blocks, dropping tombstoned docids, and
     recomputing max_tfnorm with the POST-compaction avgdl.
-
-    The avgdl recompute is correctness-critical, not cosmetic: block-max
-    WAND treats max_tfnorm as an upper bound of tf/(tf + k1(1-b) +
-    k1*b*dl/avgdl) under the avgdl the QUERY uses. Compaction refreshes
-    stats.json's avgdl; if avgdl shrinks (deletes, shorter new docs), a
-    stale stored max computed under the old avgdl UNDERSTATES the bound
-    and WAND would skip ranges that hold true top-k docs.
 
     ``deleted``: sorted int64 docid tombstones, captured in the closure.
     At 10^12-doc scale the tombstone set between compactions is bounded
@@ -691,58 +579,17 @@ def make_compaction_rewriter(
     (term, range) group (e.g. (bucket, range_id%4)). Output: BLOCK_SCHEMA.
     """
     acc = counters or {}
-    emit = _make_emitter(k1, b, new_avgdl, block_size, acc)
 
     def rewriter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [pdf for pdf in batches if not pdf.empty]
         if not parts:
             return
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        terms = pdf["term"].to_numpy()
-        rng = pdf["range_id"].to_numpy(dtype=np.int64)
-        first = pdf["first_docid"].to_numpy(dtype=np.int64)
-        codes, uniq = pd.factorize(terms)
-        order = np.lexsort((first, rng, codes))
-        c = codes[order]
-        r = rng[order]
-        bounds = np.flatnonzero((c[1:] != c[:-1]) | (r[1:] != r[:-1]))
-        starts = np.concatenate(([0], bounds + 1))
-        ends = np.concatenate((bounds + 1, [len(pdf)]))
-        post_col = pdf["postings"].to_numpy()
-        posx_col = pdf["positions"].to_numpy()
-        out: list = []
-        for s, e in zip(starts, ends):
-            d_parts, tf_parts, dl_parts, pos_parts = [], [], [], []
-            for i in order[s:e]:  # ordered by first_docid (disjoint slabs)
-                dd, tt, ll = decode_block(bytes(post_col[i]))
-                pp = decode_positions(bytes(posx_col[i]), tt)
-                if deleted is not None and deleted.size and dd.size:
-                    d64 = dd.astype(np.int64)
-                    idx = np.searchsorted(deleted, d64)
-                    idx[idx >= deleted.size] = deleted.size - 1
-                    keep = deleted[idx] != d64
-                    if not keep.all():
-                        pos_keep = np.repeat(keep, tt.astype(np.int64))
-                        dd, tt, ll = dd[keep], tt[keep], ll[keep]
-                        pp = pp[pos_keep]
-                if dd.size == 0:
-                    continue
-                d_parts.append(dd)
-                tf_parts.append(tt)
-                dl_parts.append(ll)
-                pos_parts.append(pp)
-            if not d_parts:
-                continue
-            emit(
-                uniq[c[s]],
-                int(r[s]),
-                np.concatenate(d_parts),
-                np.concatenate(tf_parts),
-                np.concatenate(dl_parts),
-                np.concatenate(pos_parts).astype(np.int64),
-                out,
-            )
-        if out:
-            yield pd.DataFrame(out, columns=_OUT_COLS)
+        uniq, order, c, r = _group_order(pdf)
+        res = fold_blocks(
+            pdf, order, uniq, c, r, k1, b, new_avgdl, block_size, acc, deleted
+        )
+        if res is not None:
+            yield res
 
     return rewriter

@@ -260,73 +260,19 @@ class IndexBuilder:
                       "cpu_read", "cpu_tokenize", "cpu_flatten", "cpu_sort",
                       "cpu_emit", "cpu_merge")
         }
-        fields = list(cfg.indexed_fields)
-        docs = self.cat.read(self.spark, "docs").select("docid", "dl", *fields)
+        docs = self.cat.read(self.spark, "docs")
         if n_groups > 1:
             # docs files are docid-range-sorted: parquet min/max stats
             # prune this to the group's slab without reading other groups
             docs = docs.filter((F.col("docid") >= lo) & (F.col("docid") <= hi))
-        builder = make_doc_range_builder(
-            cfg.analyzer, cfg.k1, cfg.b, stats["avgdl"],
-            cfg.block_size, cfg.range_size,
-            {"postings_emitted": acc["postings_emitted"], **timing},
-            fields=fields,
+        # each group owns its rgroup=K dir: a retried group overwrites
+        # idempotently, completed groups are untouched (read-side hive
+        # discovery exposes rgroup as a partition column, harmless)
+        write_postings(
+            self.spark, self.cat, f"postings/rgroup={gid}", docs, cfg,
+            stats["avgdl"], self.cat.dir_bytes("docs") // max(1, n_groups),
+            {**acc, **timing},
         )
-        merger = make_block_merger(
-            cfg.k1, cfg.b, stats["avgdl"], cfg.block_size,
-            {
-                **{k: acc[k] for k in ("blocks_built", "bytes_postings", "bytes_positions")},
-                "ms_merge": timing["ms_merge"],
-                "ms_merge_wait": timing["ms_merge_wait"],
-                "cpu_merge": timing["cpu_merge"],
-            },
-        )
-        # parallelism of the zero-shuffle stage = scan splits; docs/ is
-        # written with small row groups (docs_row_group_mb) precisely so
-        # this split size is effective. Split size adapts to the data so
-        # the stage always runs ~waves_per_core waves of uniform tasks —
-        # a fixed split width gave 1.4 waves at 32 cores (30% tail idle)
-        # while the 8-core run packed 5.5 waves (9%), which alone sank
-        # the measured N->4N efficiency.
-        cores = self.spark.sparkContext.defaultParallelism
-        docs_bytes = self.cat.dir_bytes("docs") // max(1, n_groups)
-        split = min(
-            max(docs_bytes // (4 * cores), cfg.docs_row_group_mb * 1024 * 1024),
-            16 * 1024 * 1024,
-        )
-        with _conf(self.spark, "spark.sql.files.maxPartitionBytes", str(split)):
-            raw = docs.mapInPandas(builder, BLOCK_SCHEMA)
-            raw = raw.withColumn(
-                "bucket", term_bucket_col(F.col("term"), cfg.n_term_buckets)
-            )
-            # coalesce blocks toward their bucket AND fold split-boundary
-            # partial blocks in the same (cheap — blocks are ~100x smaller
-            # than the token stream) shuffle: the key (bucket, range%S)
-            # co-locates every block of a (term, range) group, so the
-            # merger re-cuts them into the blocks a single-pass build
-            # would emit. The S-way sub-bucket salt spreads Zipf-head
-            # buckets across reducers: S=16 gives 16*n_term_buckets keys
-            # over ~4 partitions/core, so no single reducer straggles the
-            # merge wave.
-            blocks = raw.repartition(
-                max(16, 4 * cores),
-                "bucket",
-                F.pmod(F.col("range_id"), F.lit(16)),
-            ).mapInPandas(merger, BLOCK_SCHEMA + ", bucket int")
-            blocks = blocks.sortWithinPartitions("term", "range_id", "block_id")
-            # each group owns its rgroup=K dir: a retried group overwrites
-            # idempotently, completed groups are untouched (read-side hive
-            # discovery exposes rgroup as a partition column, harmless)
-            blocks.write.mode("overwrite").partitionBy("bucket").parquet(
-                self.cat.path(f"postings/rgroup={gid}")
-            )
-            if not self.cat.has_part_files(f"postings/rgroup={gid}"):
-                # zero postings in this group (empty corpus / clear):
-                # leave a schema-only footer so the table stays readable
-                # (limit(0) constant-folds — no re-execution of the UDFs)
-                blocks.limit(0).repartition(1).write.mode(
-                    "overwrite"
-                ).parquet(self.cat.path(f"postings/rgroup={gid}"))
         mf.mark_done(
             unit,
             {
@@ -353,6 +299,80 @@ class IndexBuilder:
         mf.mark_done(
             "dictionary", {"n_terms": n_terms, "merge_fan_in": fan_in}
         )
+
+
+# counters the merge pass owns; the builder gets every other one, so each
+# block is counted once
+_MERGE_COUNTERS = (
+    "blocks_built", "bytes_postings", "bytes_positions",
+    "ms_merge", "ms_merge_wait", "cpu_merge",
+)
+
+
+def write_postings(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    name: str,
+    docs: DataFrame,
+    cfg: EngineConfig,
+    avgdl: float,
+    docs_bytes: int,
+    counters: dict | None = None,
+) -> None:
+    """Writes the posting blocks of ``docs`` (docid, dl, indexed fields)
+    to table ``name``, partitioned by bucket: the one block writer of the
+    bulk build (one call per range group) and of streaming delta segments
+    (one call per micro-batch). ``docs_bytes`` is the on-disk size of the
+    scanned docs and sets the scan split width; ``counters`` maps names
+    to Spark accumulators."""
+    counters = counters or {}
+    fields = list(cfg.indexed_fields)
+    builder = make_doc_range_builder(
+        cfg.analyzer, cfg.k1, cfg.b, avgdl, cfg.block_size, cfg.range_size,
+        {k: v for k, v in counters.items() if k not in _MERGE_COUNTERS},
+        fields=fields,
+    )
+    merger = make_block_merger(
+        cfg.k1, cfg.b, avgdl, cfg.block_size,
+        {k: v for k, v in counters.items() if k in _MERGE_COUNTERS},
+    )
+    # parallelism of the zero-shuffle stage = scan splits; docs/ is
+    # written with small row groups (docs_row_group_mb) precisely so
+    # this split size is effective. Split size adapts to the data so
+    # the stage always runs ~waves_per_core waves of uniform tasks —
+    # a fixed split width gave 1.4 waves at 32 cores (30% tail idle)
+    # while the 8-core run packed 5.5 waves (9%), which alone sank
+    # the measured N->4N efficiency.
+    cores = spark.sparkContext.defaultParallelism
+    split = min(
+        max(docs_bytes // (4 * cores), cfg.docs_row_group_mb * 1024 * 1024),
+        16 * 1024 * 1024,
+    )
+    with _conf(spark, "spark.sql.files.maxPartitionBytes", str(split)):
+        scan = docs.select("docid", "dl", *fields)
+        raw = scan.mapInPandas(builder, BLOCK_SCHEMA).withColumn(
+            "bucket", term_bucket_col(F.col("term"), cfg.n_term_buckets)
+        )
+        # coalesce blocks toward their bucket AND fold split-boundary
+        # partial blocks in the same (cheap — blocks are ~100x smaller
+        # than the token stream) shuffle: the key (bucket, range%S)
+        # co-locates every block of a (term, range) group, so the
+        # merger re-cuts them into the blocks a single-pass build
+        # would emit. The S-way sub-bucket salt spreads Zipf-head
+        # buckets across reducers: S=16 gives 16*n_term_buckets keys
+        # over ~4 partitions/core, so no single reducer straggles the
+        # merge wave. The merge runs no more tasks than the scan: a merge
+        # task costs ~0.15 s even when empty (measured on a 4-core host),
+        # which dominated a one-split input such as a delta segment.
+        blocks = raw.repartition(
+            min(max(16, 4 * cores), scan.rdd.getNumPartitions()),
+            "bucket",
+            F.pmod(F.col("range_id"), F.lit(16)),
+        ).mapInPandas(merger, BLOCK_SCHEMA + ", bucket int")
+        blocks = blocks.sortWithinPartitions("term", "range_id", "block_id")
+        # zero postings (empty corpus / clear) leave a schema-only footer
+        # so the table stays readable
+        cat.write(blocks, name, partition_by=["bucket"])
 
 
 # Vocabularies at or below this are sorted and id-assigned ON THE DRIVER

@@ -251,6 +251,22 @@ class IndexCatalog:
                 out.append(d)
         return out
 
+    def read_delta(
+        self, spark: SparkSession, name: str, dirs: list[str] | None = None
+    ) -> DataFrame | None:
+        """Union of the delta batch dirs ``dirs`` (default: the committed
+        ones) of ``name``, or None when there are none. ``basePath`` makes
+        sibling ``batch=N`` dirs one table with a ``batch`` partition
+        column; without it Spark refuses them as
+        CONFLICTING_DIRECTORY_STRUCTURES."""
+        if dirs is None:
+            dirs = self.committed_delta_dirs(name)
+        if not dirs:
+            return None
+        return spark.read.option("basePath", self.path(f"{name}_delta")).parquet(
+            *dirs
+        )
+
     # --- json metadata ---
     def write_json(self, name: str, obj: dict) -> None:
         os.makedirs(self.dir, exist_ok=True)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from marlin_spark.config import EngineConfig
+from marlin_spark.index.blocks import POSTING_COLS
 from marlin_spark.index.catalog import IndexCatalog, term_bucket_py
 from marlin_spark.oracle.tokenizer import analyze
 from marlin_spark.query.wand import make_wand_scorer
@@ -217,15 +218,12 @@ class SearchEngine:
         cached = self._df_cache.get(key)
         if cached is not None:
             return cached
-        base = self.cat.read(self.spark, "postings")
-        cols = [
-            "term", "range_id", "block_id", "first_docid", "last_docid",
-            "n_docs", "sum_tf", "max_tfnorm", "postings", "positions", "bucket",
-        ]
-        base = base.select(*cols)
+        base = self.cat.read(self.spark, "postings").select(*POSTING_COLS)
         if deltas:
             base = base.unionByName(
-                self.spark.read.parquet(*deltas).select(*cols)
+                self.cat.read_delta(self.spark, "postings", deltas).select(
+                    *POSTING_COLS
+                )
             )
         self._df_cache[key] = base
         return base
@@ -234,7 +232,7 @@ class SearchEngine:
         base = self.cat.read(self.spark, "docs")
         deltas = self._delta_dirs("docs")
         if deltas:
-            dd = self.spark.read.parquet(*deltas).withColumn(
+            dd = self.cat.read_delta(self.spark, "docs", deltas).withColumn(
                 "range_id", (F.col("docid") / self.cfg.range_size).cast("int")
             )
             # column set, order AND types must match the base exactly
@@ -723,7 +721,7 @@ class SearchEngine:
             c = F.col("term").startswith(p)
             cond = c if cond is None else (cond | c)
         blocks = (
-            self.spark.read.parquet(*deltas)
+            self.cat.read_delta(self.spark, "postings", deltas)
             .filter(cond)
             .select("term", "postings")
         )

@@ -8,12 +8,15 @@ index.c:965-1034). Here the same single-writer invariant maps to
 Structured Streaming's exactly-once foreachBatch plus an explicit
 maintenance API:
 
-- ADD: each micro-batch of new turns is tokenized and appended as a
-  DELTA SEGMENT (same block layout, tagged with the batch id). Queries
-  see deltas immediately: SearchEngine._postings_df()/_docs_df() union
-  postings_delta/ and docs_delta/ into every scan. NRT caveats (stats
-  refreshed at compaction; brand-new terms invisible until the
-  dictionary rebuild) are documented on those helpers.
+- ADD: each micro-batch of new turns is appended as a DELTA SEGMENT:
+  its docs are written to docs_delta/batch=N first, then the bulk
+  build's block writer (build.write_postings) builds
+  postings_delta/batch=N from that dir at the base avgdl (same block
+  layout, tagged with the batch id). Queries see deltas immediately:
+  SearchEngine._postings_df()/_docs_df() union postings_delta/ and
+  docs_delta/ into every scan. NRT caveats (stats refreshed at
+  compaction; brand-new terms invisible until the dictionary rebuild)
+  are documented on those helpers.
 - DELETE: tombstone docids appended to tombstones/ (query-time
   anti-join / numpy mask inside WAND), folded at compaction — the
   Lucene liveDocs pattern.
@@ -21,9 +24,10 @@ maintenance API:
 - COMPACT: folds delta segments AND tombstones into the base in one
   rewrite (segment merge; what an Iceberg MERGE INTO + snapshot expire
   would do on a real lakehouse), then rebuilds the dictionary and
-  collection stats. Every (term, range) group's max_tfnorm is recomputed
-  under the POST-compaction avgdl — see make_compaction_rewriter for why
-  stale block-max values would break WAND's upper-bound contract.
+  collection stats. Every (term, range) group is re-cut by the block
+  merger's fold and its max_tfnorm recomputed under the POST-compaction
+  avgdl — see blocks.fold_blocks for why stale block-max values would
+  break WAND's upper-bound contract.
 
 Limitations kept honest:
 - docids for streamed turns continue AFTER the base build's max docid in
@@ -39,18 +43,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from marlin_spark.config import EngineConfig
-from marlin_spark.functions.analyzers import token_count_col, tokens_col
+from marlin_spark.functions.analyzers import token_count_col
 from marlin_spark.index.blocks import (
     BLOCK_SCHEMA,
-    make_block_builder,
+    POSTING_COLS,
     make_compaction_rewriter,
 )
+from marlin_spark.index.build import build_dictionary, write_postings
 from marlin_spark.index.catalog import IndexCatalog, term_bucket_col
-
-_POSTING_COLS = [
-    "term", "range_id", "block_id", "first_docid", "last_docid",
-    "n_docs", "sum_tf", "max_tfnorm", "postings", "positions", "bucket",
-]
 
 
 class IncrementalIndexer:
@@ -80,9 +80,11 @@ class IncrementalIndexer:
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch body: append one delta segment of posting blocks.
 
-        Idempotent per batch_id (streaming retry safety): the delta
-        partition dir is overwritten, mirroring the reference's
-        one-LMDB-txn-per-batch (si_write_end)."""
+        Writes docs_delta/batch=N, then builds postings_delta/batch=N
+        from it; the batch is visible once both have committed
+        (catalog.committed_delta_dirs). Idempotent per batch_id
+        (streaming retry safety): both dirs are overwritten, mirroring the
+        reference's one-LMDB-txn-per-batch (si_write_end)."""
         cfg = self.cfg
         base = int(self.stats.get("max_docid", self.stats["n_docs"]))
         capacity = int(self.stats.get("batch_capacity", cfg.batch_capacity))
@@ -113,44 +115,19 @@ class IncrementalIndexer:
             )
             .withColumn("dl", dl_col)
         )
-        # positions packed (field_priority << 16) | pos, like the build
-        tok_parts = []
-        for prio, fname in enumerate(cfg.indexed_fields):
-            t = docs.select(
-                "docid",
-                "dl",
-                F.explode(tokens_col(F.col(fname), cfg.analyzer, "index")).alias("t"),
-            ).select(
-                F.col("t.term").alias("term"),
-                "docid",
-                (F.col("t.pos") + F.lit(prio << 16)).alias("pos"),
-                "dl",
-            )
-            tok_parts.append(t)
-        tok = tok_parts[0]
-        for t in tok_parts[1:]:
-            tok = tok.unionByName(t)
-        builder = make_block_builder(
-            cfg.k1, cfg.b, self.stats["avgdl"], cfg.block_size, cfg.range_size
-        )
-        blocks = (
-            tok.withColumn("range_id", (F.col("docid") / cfg.range_size).cast("int"))
-            .repartition("term", "range_id")
-            .sortWithinPartitions("term", "docid", "pos")
-            .drop("range_id")
-            .mapInPandas(builder, BLOCK_SCHEMA)
-            .withColumn("bucket", term_bucket_col(F.col("term"), cfg.n_term_buckets))
-        )
-        blocks.write.mode("overwrite").partitionBy("bucket").parquet(
-            self.cat.path(f"postings_delta/batch={batch_id}")
-        )
         # carry EVERY source column (not just the default transcript
         # schema): _docs_df() selects the base docs schema from deltas,
         # so an auto-mapped index with extra stored fields must find
         # them here too (mirrors build.py's `keep` columns)
         keep = [c for c in docs.columns if c not in ("dl", "range_id", "docid")]
+        docs_name = f"docs_delta/batch={batch_id}"
         docs.select("docid", *keep, "dl").write.mode("overwrite").parquet(
-            self.cat.path(f"docs_delta/batch={batch_id}")
+            self.cat.path(docs_name)
+        )
+        write_postings(
+            self.spark, self.cat, f"postings_delta/batch={batch_id}",
+            self.cat.read(self.spark, docs_name), cfg, self.stats["avgdl"],
+            self.cat.dir_bytes(docs_name),
         )
 
     # ------------------------------------------------------------------
@@ -248,13 +225,17 @@ class IncrementalIndexer:
         self.update_turns(merged, batch_id)
 
     # ------------------------------------------------------------------
-    def _all_docs(self) -> DataFrame:
+    def _all_docs(self, delta_dirs: list[str] | None = None) -> DataFrame:
+        """Base docs + the delta docs of ``delta_dirs`` (default: every
+        committed batch)."""
         base = self.cat.read(self.spark, "docs")
-        deltas = self.cat.committed_delta_dirs("docs")
-        if deltas:
-            dd = self.spark.read.parquet(*deltas).withColumn(
+        dd = self.cat.read_delta(self.spark, "docs", delta_dirs)
+        if dd is not None:
+            dd = dd.withColumn(
                 "range_id", (F.col("docid") / self.cfg.range_size).cast("int")
             )
+            # delta columns must match the base EXACTLY (set, order AND
+            # types: mixed int32/int64 parquet files fail on read)
             base = base.unionByName(
                 dd.select(
                     *[
@@ -311,21 +292,7 @@ class IncrementalIndexer:
         postings_new = f"postings__snap{next_id}"
 
         # ---- 1. docs: base + deltas - tombstones -> staged docs dir
-        docs = self.cat.read(self.spark, "docs")
-        base_schema = docs.schema
-        if doc_deltas:
-            dd = self.spark.read.parquet(*doc_deltas).withColumn(
-                "range_id", (F.col("docid") / self.cfg.range_size).cast("int")
-            )
-            # delta columns must match the base EXACTLY (set, order AND
-            # types: mixed int32/int64 parquet files fail on read)
-            dd = dd.select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in base_schema.fields
-                ]
-            )
-            docs = docs.unionByName(dd)
+        docs = self._all_docs(doc_deltas)
         if tomb is not None:
             tomb_df = self.spark.createDataFrame(
                 [(int(d),) for d in tomb], "docid long"
@@ -345,13 +312,11 @@ class IncrementalIndexer:
         new_avgdl = float(row["avgdl"] or 0.0)
 
         # ---- 3. postings: base + deltas -> group-merge/tombstone/rewrite
-        base = self.cat.read(self.spark, "postings")
-        if "rgroup" in base.columns:  # build-time resume-group dirs
-            base = base.drop("rgroup")
-        merged = base.select(*_POSTING_COLS)
+        # (the select drops build-time rgroup partition columns)
+        merged = self.cat.read(self.spark, "postings").select(*POSTING_COLS)
         if delta_dirs:
-            deltas = self.spark.read.parquet(*delta_dirs).select(*_POSTING_COLS)
-            merged = merged.unionByName(deltas)
+            deltas = self.cat.read_delta(self.spark, "postings", delta_dirs)
+            merged = merged.unionByName(deltas.select(*POSTING_COLS))
         rewriter = make_compaction_rewriter(
             self.cfg.k1, self.cfg.b, new_avgdl, self.cfg.block_size, tomb
         )
@@ -396,8 +361,6 @@ class IncrementalIndexer:
 
         # ---- 5. refresh the dictionary (df/cf/term ids over merged
         # postings) and stats
-        from marlin_spark.index.build import build_dictionary
-
         n_terms, _ = build_dictionary(self.spark, self.cat, self.cfg)
         if self.cat.exists("prefix_accel"):
             # fold the merged segments into the short-prefix accelerator

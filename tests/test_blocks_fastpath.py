@@ -12,16 +12,32 @@ keys, same stats, byte-identical postings/positions payloads — since the
 merger and every query path decode them interchangeably. Reference
 analog: segment layout independence of build order
 (/root/reference/src/main/sindex.c postings segments).
+
+The same builder writes every block of the index: the streaming delta
+segments of IncrementalIndexer.process_batch and the postings that
+compact() re-cuts must equal its output over the same docs rows.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import shutil
+
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as pads
 import pytest
 
+from marlin_spark.config import EngineConfig
 from marlin_spark.functions.codec import vb_decode, vb_encode_with_sizes
-from marlin_spark.index.blocks import BLOCK_SCHEMA, make_doc_range_builder
+from marlin_spark.index.blocks import (
+    BLOCK_SCHEMA,
+    _OUT_COLS,
+    make_doc_range_builder,
+)
+from marlin_spark.index.build import IndexBuilder
+from marlin_spark.index.catalog import IndexCatalog
+from marlin_spark.streaming.incremental import IncrementalIndexer
 
 
 def _run_builder(pdf: pd.DataFrame, force_generic: bool, block_size=4,
@@ -99,3 +115,104 @@ def test_vb_encode_uint32_input_identical():
     assert b64 == b32
     assert np.array_equal(s64, s32)
     assert np.array_equal(vb_decode(b64), vals.astype(np.uint64))
+
+
+# ------------------------------------------- one writer for every block
+_KEY = ["term", "range_id", "block_id"]
+
+
+@pytest.fixture(scope="module", params=[("text",), ("text", "role", "tool")],
+                ids=["one_field", "three_fields"])
+def writer_index(request, spark, tiny_df, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("writer_index"))
+    cfg = EngineConfig(block_size=16, range_size=64, n_term_buckets=8,
+                       indexed_fields=request.param)
+    IndexBuilder(spark, d, cfg).build(tiny_df, build_id="w0")
+    return d, cfg
+
+
+def _stream_batch(spark, n: int, bid: int):
+    words = ["worst", "best", "test", "this", "is", "aaaa", "bbbb"]
+    rng = np.random.default_rng(bid)
+    rows = [
+        (f"w{bid}", i, ["user", "assistant"][i % 2],
+         " ".join(words[j] for j in rng.integers(0, len(words), 1 + i % 9)),
+         "search" if i % 3 == 0 else None,
+         dt.datetime(2025, 1, 1))
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+
+
+def _table_blocks(path: str) -> pd.DataFrame:
+    return (
+        pads.dataset(path, partitioning="hive", format="parquet")
+        .to_table(columns=_OUT_COLS).to_pandas()
+        .sort_values(_KEY).reset_index(drop=True)
+    )
+
+
+def _kernel_blocks(docs_path: str, cfg, avgdl: float) -> pd.DataFrame:
+    """The doc-range builder over every docs row of ``docs_path`` as one
+    partition: each (term, range) group is whole, so no merge applies."""
+    fields = list(cfg.indexed_fields)
+    docs = (
+        pads.dataset(docs_path, format="parquet")
+        .to_table(columns=["docid", "dl", *fields]).to_pandas()
+        .sort_values("docid").reset_index(drop=True)
+    )
+    builder = make_doc_range_builder(
+        cfg.analyzer, cfg.k1, cfg.b, avgdl, cfg.block_size, cfg.range_size,
+        fields=fields,
+    )
+    out = pd.concat(list(builder(iter([docs]))), ignore_index=True)
+    return out.sort_values(_KEY).reset_index(drop=True)
+
+
+def _assert_same_blocks(got: pd.DataFrame, want: pd.DataFrame) -> None:
+    assert len(got) == len(want) > 0
+    for col in _OUT_COLS:  # max_tfnorm included: bit-identical floats
+        assert got[col].tolist() == want[col].tolist(), col
+
+
+def test_delta_segment_blocks_equal_doc_range_builder(
+    spark, writer_index, tmp_path
+):
+    base, cfg = writer_index
+    d = str(tmp_path / "idx")
+    shutil.copytree(base, d)
+    inc = IncrementalIndexer(spark, d, cfg)
+    inc.process_batch(_stream_batch(spark, 90, 1), 1)
+    cat = IndexCatalog(d)
+    got = _table_blocks(cat.path("postings_delta/batch=1"))
+    want = _kernel_blocks(cat.path("docs_delta/batch=1"), cfg,
+                          inc.stats["avgdl"])
+    assert want["n_docs"].max() == cfg.block_size  # multi-block groups
+    _assert_same_blocks(got, want)
+
+
+def test_compacted_blocks_equal_doc_range_builder(
+    spark, writer_index, tmp_path
+):
+    base, cfg = writer_index
+    d = str(tmp_path / "idx")
+    shutil.copytree(base, d)
+    inc = IncrementalIndexer(spark, d, cfg)
+    for bid in (0, 2):
+        inc.process_batch(_stream_batch(spark, 40, bid), bid)
+    # tombstones in the base and in both delta segments
+    base_max = int(inc.stats["max_docid"])
+    cap = int(inc.stats["batch_capacity"])
+    inc.delete_docids([1, 5, 6, 40, base_max + 3, base_max + 2 * cap + 7])
+    avgdl_before = inc.stats["avgdl"]
+    inc.compact()
+    cat = IndexCatalog(d)
+    stats = cat.read_json("stats.json")
+    assert stats["avgdl"] != avgdl_before
+    got = _table_blocks(cat.path("postings"))
+    want = _kernel_blocks(cat.path("docs"), cfg, stats["avgdl"])
+    _assert_same_blocks(got, want)

@@ -126,13 +126,87 @@ def test_compaction_folds_tombstones_and_refreshes_stats(
     oracle = OracleIndex(pairs)
     assert abs(oracle.avgdl - eng.avgdl) < 1e-9
     for q in ["worst", "this best", "test", "aaaa bbbb"]:
-        want = [(doc, round(s, 6)) for doc, s in oracle.search(q, k=10)]
+        want = [(doc, round(s, 9)) for doc, s in oracle.search(q, k=10)]
         for wand in (True, False):
             got = [
-                (r["docid"], round(r["score"], 6))
+                (r["docid"], round(r["score"], 9))
                 for r in eng.search(q, k=10, use_wand=wand).collect()
             ]
             assert got == want, (q, wand)
+
+
+_NRT_BATCHES = [
+    [("nrt-a", 0, "user", "worst streamed turn", None),
+     ("nrt-a", 1, "assistant", "this is best test", None)],
+    [("nrt-b", 0, "user", "this is worst again", None),
+     ("nrt-b", 1, "user", "test test best", None)],
+    [("nrt-c", 0, "user", "worst best test", None),
+     ("nrt-c", 1, "assistant", "aaaa bbbb worst", None)],
+]
+
+
+def test_three_uncompacted_batches_and_deletes_match_oracle(
+    spark, crud_index, tiny_rows
+):
+    """Several live delta segments (sibling batch=N dirs) are one table
+    to every Spark path, before and after compaction, with deletes that
+    hit both a base turn and a streamed turn."""
+    d, cfg = crud_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    base_max = int(inc.stats.get("max_docid", inc.stats["n_docs"]))
+    capacity = int(inc.stats.get("batch_capacity", cfg.batch_capacity))
+    # docids: base turns by (conv_id, turn_idx) rank; batch N's turns
+    # follow base_max + N * capacity in (conv_id, turn_idx) order
+    docs = dict(assign_docids(tiny_rows))
+    keys = {
+        (r["conv_id"], r["turn_idx"]): i + 1
+        for i, r in enumerate(
+            sorted(tiny_rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
+        )
+    }
+    streamed = set()
+    for bid, rows in enumerate(_NRT_BATCHES):
+        inc.process_batch(_batch(spark, rows), bid)
+        for i, r in enumerate(sorted(rows)):
+            docid = base_max + bid * capacity + i + 1
+            docs[docid] = r[3]
+            keys[(r[0], r[1])] = docid
+            streamed.add(docid)
+    base_key = min(k for k in keys if not k[0].startswith("nrt-"))
+    inc.delete_turns([base_key, ("nrt-b", 0)])
+    for key in (base_key, ("nrt-b", 0)):
+        del docs[keys[key]]
+    oracle = OracleIndex(sorted(docs.items()))
+    queries = ["worst", "best test", "aaaa bbbb", "this worst"]
+
+    # before compaction: every path sees the same live docs, streamed
+    # ones included (scores use the base stats until compact())
+    eng = SearchEngine(spark, d, cfg)
+    seen = set()
+    for q in queries:
+        want = {doc for doc, _ in oracle.search(q, k=1000)}
+        wand = {r["docid"] for r in eng.search(q, k=1000).collect()}
+        exact = {
+            r["docid"] for r in eng.search(q, k=1000, use_wand=False).collect()
+        }
+        local = {doc for doc, _ in eng.search_local(q, k=1000)}
+        assert wand == exact == local == want, q
+        seen |= want & streamed
+    assert seen == streamed - {keys[("nrt-b", 0)]}
+
+    inc.compact()
+    eng = SearchEngine(spark, d, cfg)
+    assert eng.deleted is None
+    assert eng.stats["n_docs"] == len(docs)
+    assert abs(oracle.avgdl - eng.avgdl) < 1e-9
+    for q in queries:
+        want = [(doc, round(s, 9)) for doc, s in oracle.search(q, k=10)]
+        for use_wand in (True, False):
+            got = [
+                (r["docid"], round(r["score"], 9))
+                for r in eng.search(q, k=10, use_wand=use_wand).collect()
+            ]
+            assert got == want, (q, use_wand)
 
 
 def test_update_replaces_turn(spark, crud_index, tiny_rows):
