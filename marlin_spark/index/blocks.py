@@ -47,8 +47,9 @@ _OUT_COLS = [
     "n_docs", "sum_tf", "max_tfnorm", "postings", "positions",
 ]
 
-# columns of a stored postings table (base or delta segment)
+# columns and schema of a stored postings table (base or delta segment)
 POSTING_COLS = _OUT_COLS + ["bucket"]
+POSTINGS_SCHEMA = BLOCK_SCHEMA + ", bucket int"
 
 
 def emit_blocks_vec(
@@ -448,6 +449,7 @@ def fold_blocks(
     docid slabs, so their concatenated decoded arrays are the full sorted
     group, and re-cutting yields the blocks a single-pass build emits.
     ``deleted``: sorted int64 tombstone docids, dropped before re-cutting.
+    A ``bucket`` column of ``pdf`` is carried to the output blocks.
 
     max_tfnorm is recomputed under ``avgdl``. For compaction that is the
     POST-compaction avgdl, and the recompute is correctness-critical, not
@@ -473,10 +475,18 @@ def fold_blocks(
             codes, rids, docids, tfs, dls = (
                 a[keep] for a in (codes, rids, docids, tfs, dls)
             )
-    return emit_blocks_vec(
+    res = emit_blocks_vec(
         uniq, codes, rids, docids, tfs, dls, positions,
         k1, b, avgdl, block_size, acc,
     )
+    if res is not None and "bucket" in pdf.columns:
+        # bucket is a pure function of term: carried over, not recomputed
+        bmap = dict(zip(
+            pdf["term"].to_numpy()[rows].tolist(),
+            pdf["bucket"].to_numpy(dtype=np.int64)[rows].tolist(),
+        ))
+        res["bucket"] = res["term"].map(bmap).astype("int32")
+    return res
 
 
 def make_block_merger(
@@ -539,15 +549,10 @@ def make_block_merger(
         multi = ~is_single
         if multi.any():
             rows = order[multi]
-            res = fold_blocks(
+            outs.append(fold_blocks(
                 pdf, rows, uniq, c[multi], r[multi],
                 k1, b, avgdl, block_size, acc,
-            )
-            terms = pdf["term"].to_numpy()[rows]
-            buckets = pdf["bucket"].to_numpy(dtype=np.int64)[rows]
-            bmap = dict(zip(terms.tolist(), buckets.tolist()))
-            res["bucket"] = res["term"].map(bmap).astype("int32")
-            outs.append(res)
+            ))
         res = pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
         res = res[POSTING_COLS]
         if "ms_merge" in acc:
@@ -575,8 +580,9 @@ def make_compaction_rewriter(
     At 10^12-doc scale the tombstone set between compactions is bounded
     by ingest batch size; were it ever huge, the same kernel runs after a
     docid-range co-partitioned join instead of a broadcast closure.
-    Input: BLOCK_SCHEMA rows repartitioned by a key that co-locates each
-    (term, range) group (e.g. (bucket, range_id%4)). Output: BLOCK_SCHEMA.
+    Runs in the merge-and-write stage of the block merger
+    (build.merge_and_write), so its input and output schema is the
+    merger's: BLOCK_SCHEMA + trailing bucket column.
     """
     acc = counters or {}
 

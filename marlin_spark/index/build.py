@@ -36,7 +36,8 @@ Stages, each a resumable manifest unit:
                    /root/reference/src/main/dtrie.c:452-484]
 
 Counters (Spark accumulators -> manifest -> counters.json): postings
-emitted, blocks built, bytes compressed, merge fan-in. A killed build
+emitted, blocks built, bytes compressed, merge fan-in, and per stage its
+wall seconds (stage_seconds) and Spark jobs (stage_jobs). A killed build
 rerun with the same build_id skips completed units; a bucket-group's
 partition overwrite is idempotent.
 """
@@ -44,6 +45,7 @@ partition overwrite is idempotent.
 from __future__ import annotations
 
 import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,6 +55,7 @@ from marlin_spark.config import EngineConfig
 from marlin_spark.functions.analyzers import token_count_col
 from marlin_spark.index.blocks import (
     BLOCK_SCHEMA,
+    POSTINGS_SCHEMA,
     make_block_merger,
     make_doc_range_builder,
 )
@@ -82,33 +85,40 @@ class IndexBuilder:
         self._source_path = source_path
         mf = BuildManifest(self.cat.dir, build_id)
         t0 = time.time()
-        stage_secs = {}
+        # wall seconds and Spark jobs per stage; a skipped (resumed) stage
+        # reports ~0 of both
+        stage_secs, stage_jobs = {}, {}
+        mark = [t0, last_job_id(self.spark)]
+
+        def lap(stage: str) -> None:
+            now, job = time.time(), last_job_id(self.spark)
+            stage_secs[stage] = round(now - mark[0], 2)
+            stage_jobs[stage] = job - mark[1]
+            mark[:] = now, job
+
         if not (resume and mf.is_done("docs")):
             # full (re)build starts a fresh table history: without this a
             # rebuild on a compacted index would write INTO the live
             # snapshot dirs through the catalog's path indirection
             self.cat.clear_snapshots()
             self._stage_docs(mf)
-        stage_secs["docs"] = round(time.time() - t0, 2)
+        lap("docs")
         # stage A wrote docs/; stats needed by the block builder
         stats = self.cat.read_json("stats.json")
 
-        t1 = time.time()
         groups = self._range_groups(stats["n_docs"])
         for g, (lo, hi) in enumerate(groups):
             unit = f"postings:r{g}"
             if resume and mf.is_done(unit):
                 continue
             self._stage_postings(mf, unit, g, lo, hi, len(groups), stats)
-        stage_secs["postings"] = round(time.time() - t1, 2)
+        lap("postings")
 
-        t2 = time.time()
         if not (resume and mf.is_done("dictionary")):
             self._stage_dictionary(mf)
-        stage_secs["dictionary"] = round(time.time() - t2, 2)
+        lap("dictionary")
 
         if self.cfg.prefix_accel:
-            t3 = time.time()
             if not (resume and mf.is_done("prefix_accel")):
                 from marlin_spark.index.prefix_accel import build_prefix_accel
 
@@ -117,10 +127,11 @@ class IndexBuilder:
                 s = self.cat.read_json("stats.json")
                 s["prefix_accel_len"] = self.cfg.prefix_accel_len
                 self.cat.write_json("stats.json", s)
-            stage_secs["prefix_accel"] = round(time.time() - t3, 2)
+            lap("prefix_accel")
 
         counters = mf.counters()
         counters["stage_seconds"] = stage_secs
+        counters["stage_jobs"] = stage_jobs
         counters["build_seconds"] = round(time.time() - t0, 3)
         counters["n_docs"] = stats["n_docs"]
         self.cat.write_json("counters.json", counters)
@@ -286,13 +297,7 @@ class IndexBuilder:
 
     # ------------------------------------------------------------------
     def _stage_dictionary(self, mf: BuildManifest) -> None:
-        n_terms, fan_in = build_dictionary(
-            self.spark, self.cat, self.cfg,
-            # every postings block is one term's block within a (bucket,
-            # range) group, so blocks_built bounds the vocabulary size —
-            # lets the dictionary pick its single-partition fast path
-            n_blocks_hint=mf.counters().get("blocks_built"),
-        )
+        n_terms, fan_in = build_dictionary(self.spark, self.cat, self.cfg)
         stats = self.cat.read_json("stats.json")
         stats["n_terms"] = n_terms
         self.cat.write_json("stats.json", stats)
@@ -338,41 +343,82 @@ def write_postings(
     )
     # parallelism of the zero-shuffle stage = scan splits; docs/ is
     # written with small row groups (docs_row_group_mb) precisely so
-    # this split size is effective. Split size adapts to the data so
-    # the stage always runs ~waves_per_core waves of uniform tasks —
-    # a fixed split width gave 1.4 waves at 32 cores (30% tail idle)
-    # while the 8-core run packed 5.5 waves (9%), which alone sank
-    # the measured N->4N efficiency.
+    # this split size is effective
+    split = _split_bytes(spark, cfg, docs_bytes)
+    with _conf(spark, "spark.sql.files.maxPartitionBytes", str(split)):
+        raw = (
+            docs.select("docid", "dl", *fields)
+            .mapInPandas(builder, BLOCK_SCHEMA)
+            .withColumn(
+                "bucket", term_bucket_col(F.col("term"), cfg.n_term_buckets)
+            )
+        )
+        merge_and_write(spark, cat, name, raw, merger, cfg, docs_bytes)
+
+
+def _split_bytes(spark: SparkSession, cfg: EngineConfig, nbytes: int) -> int:
+    """Input bytes per task of a postings write: ~4 tasks per core, each
+    of [docs_row_group_mb, 16 MB]. Split size adapts to the data so the
+    stage always runs ~waves_per_core waves of uniform tasks — a fixed
+    split width gave 1.4 waves at 32 cores (30% tail idle) while the
+    8-core run packed 5.5 waves (9%), which alone sank the measured
+    N->4N efficiency."""
     cores = spark.sparkContext.defaultParallelism
-    split = min(
-        max(docs_bytes // (4 * cores), cfg.docs_row_group_mb * 1024 * 1024),
+    return min(
+        max(nbytes // (4 * cores), cfg.docs_row_group_mb * 1024 * 1024),
         16 * 1024 * 1024,
     )
-    with _conf(spark, "spark.sql.files.maxPartitionBytes", str(split)):
-        scan = docs.select("docid", "dl", *fields)
-        raw = scan.mapInPandas(builder, BLOCK_SCHEMA).withColumn(
-            "bucket", term_bucket_col(F.col("term"), cfg.n_term_buckets)
-        )
-        # coalesce blocks toward their bucket AND fold split-boundary
-        # partial blocks in the same (cheap — blocks are ~100x smaller
-        # than the token stream) shuffle: the key (bucket, range%S)
-        # co-locates every block of a (term, range) group, so the
-        # merger re-cuts them into the blocks a single-pass build
-        # would emit. The S-way sub-bucket salt spreads Zipf-head
-        # buckets across reducers: S=16 gives 16*n_term_buckets keys
-        # over ~4 partitions/core, so no single reducer straggles the
-        # merge wave. The merge runs no more tasks than the scan: a merge
-        # task costs ~0.15 s even when empty (measured on a 4-core host),
-        # which dominated a one-split input such as a delta segment.
-        blocks = raw.repartition(
-            min(max(16, 4 * cores), scan.rdd.getNumPartitions()),
-            "bucket",
-            F.pmod(F.col("range_id"), F.lit(16)),
-        ).mapInPandas(merger, BLOCK_SCHEMA + ", bucket int")
-        blocks = blocks.sortWithinPartitions("term", "range_id", "block_id")
+
+
+def merge_and_write(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    name: str,
+    blocks: DataFrame,
+    kernel: Callable,
+    cfg: EngineConfig,
+    input_bytes: int,
+) -> None:
+    """The merge-and-write stage of every postings table: shuffles
+    ``blocks`` (POSTINGS_SCHEMA) so each (term, range) group meets in one
+    task, runs the mapInPandas ``kernel`` there (the block merger of
+    write_postings, the rewriter of compaction; both keep the bucket
+    column) and writes table ``name`` partitioned by bucket.
+    ``input_bytes``, the on-disk size of what ``blocks`` is computed
+    from, sets the task count. Its Spark stages are named
+    ``merge <name>`` (Spark UI, status tracker)."""
+    # the key (bucket, range%S) co-locates every block of a (term, range)
+    # group, so the kernel re-cuts them into the blocks a single-pass
+    # build would emit; blocks are ~100x smaller than the token stream,
+    # so this is the one cheap exchange of a postings write. The S-way
+    # sub-bucket salt spreads Zipf-head buckets across reducers: S=16
+    # gives 16*n_term_buckets keys over ~4 partitions/core, so no single
+    # reducer straggles the merge wave. The task count is sized by the
+    # data, one task per input split: a merge task costs ~0.15 s even
+    # when empty, which dominated small inputs. On a 4-core host the
+    # rewrite of a ~2 MB compaction took 1.0 s in its scan's 8 splits and
+    # 0.4 s in one task; a delta segment is one split.
+    cores = spark.sparkContext.defaultParallelism
+    n_tasks = min(
+        max(16, 4 * cores),
+        max(1, -(-input_bytes // _split_bytes(spark, cfg, input_bytes))),
+    )
+    merged = blocks.repartition(
+        n_tasks, "bucket", F.pmod(F.col("range_id"), F.lit(16))
+    ).mapInPandas(kernel, POSTINGS_SCHEMA)
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("callSite.short")
+    sc.setLocalProperty("callSite.short", f"merge {name}")
+    try:
         # zero postings (empty corpus / clear) leave a schema-only footer
         # so the table stays readable
-        cat.write(blocks, name, partition_by=["bucket"])
+        cat.write(
+            merged.sortWithinPartitions("term", "range_id", "block_id"),
+            name,
+            partition_by=["bucket"],
+        )
+    finally:
+        sc.setLocalProperty("callSite.short", prev)
 
 
 # Vocabularies at or below this are sorted and id-assigned ON THE DRIVER
@@ -389,10 +435,7 @@ _DICT_DRIVER_MAX = 500_000
 
 
 def build_dictionary(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    cfg: EngineConfig,
-    n_blocks_hint: int | None = None,
+    spark: SparkSession, cat: IndexCatalog, cfg: EngineConfig
 ) -> tuple[int, int]:
     """Derive the term dictionary from postings blocks: df/cf/max_tfnorm
     per term + dense sorted term ids; partitioned by first-char class
@@ -401,18 +444,15 @@ def build_dictionary(
     min/max stats second (dtrie/twid analog, SURVEY.md §2.3 +
     query/fuzzy.py). Also used by streaming compaction.
 
-    The stage scans postings exactly once (persist + count), then picks
-    the id-assignment path from the TRUE vocabulary size (the old
-    ``n_blocks_hint`` upper bound overshot by >100x on Zipf corpora,
-    forcing distributed machinery onto kilobyte vocabularies): at or
-    below _DICT_DRIVER_MAX the sorted dense ids are assigned on the
-    driver from the cached aggregates — one scan job plus one small
-    write job, nothing serial on an executor; above it with_dense_ids
-    runs over the persisted frame (sampling, counts and offset join all
-    read cache, never postings)."""
-    from pyspark.storagelevel import StorageLevel
-
-    posts = cat.read(spark, "postings")
+    The postings are scanned and aggregated by ONE collect, bounded at
+    _DICT_DRIVER_MAX + 1 rows, whose size picks the id-assignment path:
+    at or below the bound the sorted dense ids are assigned on the
+    driver from the collected rows and one small write job follows
+    (no persist, no count). Above it the collected rows are dropped, the
+    aggregates are persisted and counted, and with_dense_ids runs over
+    that cache (sampling, counts and offset join never re-scan
+    postings). Returns (n_terms, merge fan-in)."""
+    posts = cat.read(spark, "postings", POSTINGS_SCHEMA)
     terms = posts.groupBy("term").agg(
         F.sum("n_docs").alias("df"),
         F.sum("sum_tf").alias("cf"),
@@ -427,11 +467,11 @@ def build_dictionary(
             F.sort_array(F.collect_list("max_tfnorm"), asc=False), 1, 16
         ).alias("top_maxes"),
     )
-    cached = terms.persist(StorageLevel.MEMORY_AND_DISK)
-    n_terms = cached.count()  # the one postings scan; fills the cache
-    if n_terms <= _DICT_DRIVER_MAX:
-        rows = [r.asDict() for r in cached.collect()]  # cache hit, tiny
-        rows.sort(key=lambda r: r["term"])
+    rows = terms.limit(_DICT_DRIVER_MAX + 1).collect()
+    cached = None
+    if len(rows) <= _DICT_DRIVER_MAX:
+        n_terms = len(rows)
+        rows = sorted((r.asDict() for r in rows), key=lambda r: r["term"])
         fan_in = 0
         for i, r in enumerate(rows):
             r["term_id"] = i + 1
@@ -443,26 +483,37 @@ def build_dictionary(
         ).select("term", "df", "cf", "max_tfnorm", "n_blocks",
                  "top_maxes", "term_id")
     else:
-        out = with_dense_ids(cached, ["term"], "term_id")
-        fan_in = None
-    out = out.withColumn("fc", term_fc_col(F.col("term")))
-    if fan_in is None:
         from pyspark.sql import Observation
+        from pyspark.storagelevel import StorageLevel
 
+        rows = None  # a prefix of the vocabulary: free it before the cache
+        cached = terms.persist(StorageLevel.MEMORY_AND_DISK)
+        n_terms = cached.count()
         obs = Observation("dictionary_stats")
-        out = out.observe(obs, F.sum("n_blocks").alias("fan_in"))
-        cat.write(
-            out.sortWithinPartitions("term"), "dictionary",
-            partition_by=["fc"],
+        out = with_dense_ids(cached, ["term"], "term_id").observe(
+            obs, F.sum("n_blocks").alias("fan_in")
         )
+    cat.write(
+        out.withColumn("fc", term_fc_col(F.col("term")))
+        .sortWithinPartitions("term"),
+        "dictionary",
+        partition_by=["fc"],
+    )
+    if cached is not None:
         fan_in = int(obs.get["fan_in"] or 0)
-    else:
-        cat.write(
-            out.sortWithinPartitions("term"), "dictionary",
-            partition_by=["fc"],
-        )
-    cached.unpersist()
-    return int(n_terms), int(fan_in)
+        cached.unpersist()
+    return n_terms, fan_in
+
+
+def last_job_id(spark: SparkSession) -> int:
+    """Highest Spark job id of this thread's job group so far. Job ids are
+    sequential, so two readings bracket the jobs started between them."""
+    sc = spark.sparkContext
+    ids = sc.statusTracker().getJobIdsForGroup(
+        sc.getLocalProperty("spark.jobGroup.id")
+    )
+    return max(ids, default=-1)
+
 
 class _conf:
     """Temporarily set a Spark conf (restores prior value)."""

@@ -16,7 +16,8 @@ src/main/dtrie.c; we keep partitioned Parquet tables + JSON metadata):
                                 dtrie short-prefix bitmap analog)
       stats.json                n_docs avgdl total_tokens n_terms build_id
       manifest/                 per-stage/per-group checkpoint records
-      counters.json             build counters (postings, bytes, fan-in)
+      counters.json             build counters (postings, bytes, fan-in,
+                                seconds and Spark jobs per stage)
 
 The production target is Iceberg (`df.writeTo(tbl).using("iceberg")`,
 partitioned by the same columns; atomic snapshot commits replace the
@@ -58,6 +59,10 @@ def term_fc_col(term: Column) -> Column:
         .when(c1 == "_", F.lit("us"))
         .otherwise(c1)
     )
+
+
+def _reader(spark: SparkSession, schema: str | None):
+    return spark.read if schema is None else spark.read.schema(schema)
 
 
 class IndexCatalog:
@@ -214,8 +219,12 @@ class IndexCatalog:
                 return True
         return False
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self.path(name))
+    def read(
+        self, spark: SparkSession, name: str, schema: str | None = None
+    ) -> DataFrame:
+        """Table ``name``. A known ``schema`` (partition columns included)
+        skips the footer-inference job a schemaless parquet read runs."""
+        return _reader(spark, schema).parquet(self.path(name))
 
     def exists(self, name: str) -> bool:
         return os.path.exists(self.path(name))
@@ -252,19 +261,25 @@ class IndexCatalog:
         return out
 
     def read_delta(
-        self, spark: SparkSession, name: str, dirs: list[str] | None = None
+        self,
+        spark: SparkSession,
+        name: str,
+        dirs: list[str] | None = None,
+        schema: str | None = None,
     ) -> DataFrame | None:
         """Union of the delta batch dirs ``dirs`` (default: the committed
         ones) of ``name``, or None when there are none. ``basePath`` makes
         sibling ``batch=N`` dirs one table with a ``batch`` partition
         column; without it Spark refuses them as
-        CONFLICTING_DIRECTORY_STRUCTURES."""
+        CONFLICTING_DIRECTORY_STRUCTURES. ``schema`` as in read()."""
         if dirs is None:
             dirs = self.committed_delta_dirs(name)
         if not dirs:
             return None
-        return spark.read.option("basePath", self.path(f"{name}_delta")).parquet(
-            *dirs
+        return (
+            _reader(spark, schema)
+            .option("basePath", self.path(f"{name}_delta"))
+            .parquet(*dirs)
         )
 
     # --- json metadata ---

@@ -24,10 +24,13 @@ maintenance API:
 - COMPACT: folds delta segments AND tombstones into the base in one
   rewrite (segment merge; what an Iceberg MERGE INTO + snapshot expire
   would do on a real lakehouse), then rebuilds the dictionary and
-  collection stats. Every (term, range) group is re-cut by the block
-  merger's fold and its max_tfnorm recomputed under the POST-compaction
-  avgdl — see blocks.fold_blocks for why stale block-max values would
-  break WAND's upper-bound contract.
+  collection stats. The collection stats are observed on the staged docs
+  write; the postings go through the bulk build's merge-and-write stage
+  (build.merge_and_write) with the compaction rewriter, which re-cuts
+  every (term, range) group with the block merger's fold and recomputes
+  its max_tfnorm under the POST-compaction avgdl — see
+  blocks.fold_blocks for why stale block-max values would break WAND's
+  upper-bound contract.
 
 Limitations kept honest:
 - docids for streamed turns continue AFTER the base build's max docid in
@@ -45,12 +48,17 @@ from pyspark.sql import functions as F
 from marlin_spark.config import EngineConfig
 from marlin_spark.functions.analyzers import token_count_col
 from marlin_spark.index.blocks import (
-    BLOCK_SCHEMA,
     POSTING_COLS,
+    POSTINGS_SCHEMA,
     make_compaction_rewriter,
 )
-from marlin_spark.index.build import build_dictionary, write_postings
-from marlin_spark.index.catalog import IndexCatalog, term_bucket_col
+from marlin_spark.index.build import (
+    build_dictionary,
+    last_job_id,
+    merge_and_write,
+    write_postings,
+)
+from marlin_spark.index.catalog import IndexCatalog
 
 
 class IncrementalIndexer:
@@ -204,12 +212,8 @@ class IncrementalIndexer:
             F.col("turn_idx").cast("long").alias("turn_idx"),
             *self.PATCHABLE_FIELDS,
         )
-        tomb = self._tombstones()
-        if tomb is not None:
-            tdf = self.spark.createDataFrame(
-                [(int(d),) for d in tomb], "docid long"
-            )
-            cur = cur.join(F.broadcast(tdf), "docid", "left_anti")
+        if self.cat.exists("tombstones"):
+            cur = cur.join(self._tombstone_df(), "docid", "left_anti")
         p = patch_df.select(
             F.col("conv_id").cast("string").alias("conv_id"),
             F.col("turn_idx").cast("long").alias("turn_idx"),
@@ -246,6 +250,13 @@ class IncrementalIndexer:
             )
         return base
 
+    def _tombstone_df(self) -> DataFrame:
+        """Distinct tombstoned docids, broadcast for an anti-join; read
+        where delete_docids wrote them, never through a driver list."""
+        return F.broadcast(
+            self.cat.read(self.spark, "tombstones", "docid long").distinct()
+        )
+
     def _tombstones(self):
         """Sorted int64 tombstone array, or None."""
         import numpy as np
@@ -270,7 +281,9 @@ class IncrementalIndexer:
         ``<table>__snap<N>`` dirs, then made live together by ONE atomic
         snapshot commit (catalog.commit_snapshot: version-hint rename) —
         a crash anywhere before that leaves the previous snapshot fully
-        intact; superseded dirs are expired afterwards.
+        intact; superseded dirs are expired afterwards. The snapshot
+        summary records the wall seconds and Spark jobs of the staged
+        rewrite it commits.
 
         Honesty note (scale): _tombstones() materializes the delete set
         on the driver for the rewriter closure — compaction of a >1e8
@@ -278,7 +291,11 @@ class IncrementalIndexer:
         distributed gate in engine._not_deleted has no compaction twin
         yet)."""
         import shutil
+        import time
 
+        from pyspark.sql import Observation
+
+        t0, job0 = time.time(), last_job_id(self.spark)
         # fold only fully-committed batches; a half-written (crashed)
         # batch dir is left in place for the streaming retry to overwrite
         delta_dirs = self.cat.committed_delta_dirs("postings")
@@ -291,48 +308,44 @@ class IncrementalIndexer:
         docs_new = f"docs__snap{next_id}"
         postings_new = f"postings__snap{next_id}"
 
-        # ---- 1. docs: base + deltas - tombstones -> staged docs dir
+        # ---- 1. docs: base + deltas - tombstones -> staged docs dir. The
+        # collection stats ride on the same write job (Observation), as
+        # in the bulk build's docs stage: the postings rewrite needs the
+        # post-compaction avgdl
         docs = self._all_docs(doc_deltas)
         if tomb is not None:
-            tomb_df = self.spark.createDataFrame(
-                [(int(d),) for d in tomb], "docid long"
-            )
-            docs = docs.join(F.broadcast(tomb_df), "docid", "left_anti")
-        rg_bytes = str(self.cfg.docs_row_group_mb * 1024 * 1024)
-        self.cat.write(docs, docs_new, options={"parquet.block.size": rg_bytes})
-
-        # ---- 2. collection stats FIRST: the postings rewrite recomputes
-        # block-max tfnorm under the post-compaction avgdl (read the
-        # STAGED dir — not yet committed/visible)
-        row = self.spark.read.parquet(self.cat.raw_path(docs_new)).agg(
-            F.count("*").alias("n"),
+            docs = docs.join(self._tombstone_df(), "docid", "left_anti")
+        obs = Observation("compact_stats")
+        docs = docs.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
             F.avg("dl").alias("avgdl"),
             F.max("docid").alias("mx"),
-        ).collect()[0]
+            F.sum("dl").alias("total"),
+        )
+        rg_bytes = str(self.cfg.docs_row_group_mb * 1024 * 1024)
+        self.cat.write(docs, docs_new, options={"parquet.block.size": rg_bytes})
+        row = obs.get
         new_avgdl = float(row["avgdl"] or 0.0)
 
-        # ---- 3. postings: base + deltas -> group-merge/tombstone/rewrite
-        # (the select drops build-time rgroup partition columns)
-        merged = self.cat.read(self.spark, "postings").select(*POSTING_COLS)
+        # ---- 2. postings: base + deltas -> the merge-and-write stage
+        # with the rewriter, which re-cuts every (term, range) group under
+        # the new avgdl and drops tombstones (the select drops build-time
+        # rgroup and delta batch partition columns)
+        merged = self.cat.read(self.spark, "postings", POSTINGS_SCHEMA).select(
+            *POSTING_COLS
+        )
         if delta_dirs:
-            deltas = self.cat.read_delta(self.spark, "postings", delta_dirs)
+            deltas = self.cat.read_delta(
+                self.spark, "postings", delta_dirs, POSTINGS_SCHEMA
+            )
             merged = merged.unionByName(deltas.select(*POSTING_COLS))
         rewriter = make_compaction_rewriter(
             self.cfg.k1, self.cfg.b, new_avgdl, self.cfg.block_size, tomb
         )
-        n_part = max(1, 4 * self.cfg.n_term_buckets)
-        rewritten = (
-            merged.repartition(
-                n_part, "bucket", F.pmod(F.col("range_id"), F.lit(4))
-            )
-            .mapInPandas(rewriter, BLOCK_SCHEMA)
-            .withColumn(
-                "bucket", term_bucket_col(F.col("term"), self.cfg.n_term_buckets)
-            )
-            .sortWithinPartitions("term", "range_id", "block_id")
-        )
-        self.cat.write(
-            rewritten, postings_new, partition_by=["bucket"], mode="overwrite"
+        merge_and_write(
+            self.spark, self.cat, postings_new, merged, rewriter, self.cfg,
+            self.cat.dir_bytes("postings") + self.cat.dir_bytes("postings_delta"),
         )
         # ---- COMMIT: docs + postings swap visibility in one atomic
         # version-hint rename (multi-table transaction); crash before
@@ -344,6 +357,8 @@ class IncrementalIndexer:
                 "folded_batches": len(delta_dirs),
                 "tombstones": 0 if tomb is None else int(tomb.size),
                 "n_docs": int(row["n"]),
+                "seconds": round(time.time() - t0, 3),
+                "spark_jobs": last_job_id(self.spark) - job0,
             },
         )
         self.cat.expire_superseded()
@@ -353,13 +368,13 @@ class IncrementalIndexer:
         self.spark.catalog.refreshByPath(self.cat.path("docs"))
         self.spark.catalog.refreshByPath(self.cat.path("postings"))
 
-        # ---- 4. clear folded inputs
+        # ---- 3. clear folded inputs
         for d in delta_dirs + doc_deltas:
             shutil.rmtree(d)
         if tomb is not None:
             shutil.rmtree(self.cat.path("tombstones"), ignore_errors=True)
 
-        # ---- 5. refresh the dictionary (df/cf/term ids over merged
+        # ---- 4. refresh the dictionary (df/cf/term ids over merged
         # postings) and stats
         n_terms, _ = build_dictionary(self.spark, self.cat, self.cfg)
         if self.cat.exists("prefix_accel"):
@@ -382,6 +397,7 @@ class IncrementalIndexer:
         self.stats.update(
             n_docs=int(row["n"]),
             avgdl=new_avgdl,
+            total_tokens=int(row["total"] or 0),
             max_docid=int(row["mx"] or 0),
             n_terms=n_terms,
             stats_epoch=self.stats.get("stats_epoch", 0) + 1,

@@ -100,6 +100,9 @@ def test_counters_recorded(tiny_index, tiny_oracle):
     assert counters["bytes_postings"] > 0
     assert counters["merge_fan_in"] == counters["blocks_built"]
     assert counters["n_terms"] == len(tiny_oracle.postings)
+    # every stage reports its wall seconds and the Spark jobs it ran
+    assert counters["stage_jobs"].keys() == counters["stage_seconds"].keys()
+    assert all(n >= 1 for n in counters["stage_jobs"].values())
 
 
 def test_positions_column_prunable(spark, cat):

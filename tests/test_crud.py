@@ -361,3 +361,118 @@ def test_distributed_tombstones_never_touch_driver(spark, crud_index):
     assert not eng3._tombstones_distributed
     ids = {r["docid"] for r in eng3.search("worst", k=1000).collect()}
     assert ids == survivors_expected
+
+
+def test_compaction_refreshes_total_tokens(spark, crud_index, tiny_rows):
+    """stats.json total_tokens after adds + deletes + compact() is the
+    token count of the live collection, not the base build's."""
+    d, cfg = crud_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    base_max = int(inc.stats.get("max_docid", inc.stats["n_docs"]))
+    rows = _NRT_BATCHES[0]
+    inc.process_batch(_batch(spark, rows), 0)
+    docs = dict(assign_docids(tiny_rows))
+    for i, r in enumerate(sorted(rows)):
+        docs[base_max + i + 1] = r[3]
+    key_rows = sorted(tiny_rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
+    victims = [(r["conv_id"], r["turn_idx"]) for r in key_rows[:3]]
+    inc.delete_turns(victims)
+    for docid in (1, 2, 3):
+        del docs[docid]
+    inc.compact()
+    oracle = OracleIndex(sorted(docs.items()))
+    stats = SearchEngine(spark, d, cfg).stats
+    assert stats["n_docs"] == oracle.n_docs
+    assert stats["total_tokens"] == oracle.total_tokens
+
+
+def _flushed_last_job(spark) -> int:
+    sc = spark.sparkContext
+    # the status tracker is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+# Spark jobs of the compaction below (one delta batch, no tombstones):
+# 2 docs footer reads, the docs write, the postings merge-and-write
+# (shuffle map + merge), and the dictionary's aggregate, collect and
+# write. Before compaction shared the bulk build's merge-and-write stage
+# it ran 17 jobs here.
+_COMPACT_MAX_JOBS = 8
+
+
+def test_compaction_merge_tasks_and_jobs_bounded(spark, crud_index):
+    """compact() runs its merge in no more tasks than its postings scan
+    has splits, and runs no more Spark jobs than the guard above."""
+    d, cfg = crud_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    inc.process_batch(_batch(spark, _NRT_BATCHES[0]), 0)
+    job0 = _flushed_last_job(spark)
+    inc.compact()
+    job1 = _flushed_last_job(spark)
+    assert job1 - job0 <= _COMPACT_MAX_JOBS
+    tracker = spark.sparkContext.statusTracker()
+    stages = sorted(
+        {
+            sid
+            for j in range(job0 + 1, job1 + 1)
+            for sid in tracker.getJobInfo(j).stageIds
+        }
+    )
+    label = f"merge postings__snap{inc.cat.current_snapshot()['snapshot_id']}"
+    merge = [
+        tracker.getStageInfo(s)
+        for s in stages
+        if tracker.getStageInfo(s).name == label
+    ]
+    # the stage that scans base + delta postings, then the merge stage
+    assert len(merge) >= 2
+    assert merge[-1].numTasks <= merge[0].numTasks
+    summary = inc.cat.current_snapshot()["summary"]
+    assert summary["spark_jobs"] <= job1 - job0
+    assert summary["seconds"] > 0
+
+
+_DICT_COLS = ["term", "term_id", "df", "cf", "max_tfnorm", "n_blocks", "top_maxes"]
+
+
+@pytest.mark.parametrize("driver_max", [None, 1], ids=["driver", "distributed"])
+def test_compacted_dictionary_equals_bulk_build(
+    spark, crud_index, tiny_rows, tmp_path, monkeypatch, driver_max
+):
+    """compact()'s dictionary equals the one the bulk build's postings and
+    dictionary stages write over the compacted docs; with the driver
+    bound at 1 compaction takes the distributed with_dense_ids path."""
+    from marlin_spark.index import build
+    from marlin_spark.index.catalog import IndexCatalog
+
+    d, cfg = crud_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    for bid, rows in enumerate(_NRT_BATCHES[:2]):
+        inc.process_batch(_batch(spark, rows), bid)
+    key_rows = sorted(tiny_rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
+    inc.delete_turns([(key_rows[0]["conv_id"], key_rows[0]["turn_idx"]),
+                      ("nrt-b", 1)])
+    with monkeypatch.context() as m:
+        if driver_max is not None:
+            m.setattr(build, "_DICT_DRIVER_MAX", driver_max)
+        inc.compact()
+
+    cat = IndexCatalog(d)
+    fresh = IndexCatalog(str(tmp_path / "fresh"))
+    build.write_postings(
+        spark, fresh, "postings", cat.read(spark, "docs"), cfg,
+        cat.read_json("stats.json")["avgdl"], cat.dir_bytes("docs"),
+    )
+    build.build_dictionary(spark, fresh, cfg)
+
+    def rows(c):
+        return [
+            r.asDict()
+            for r in c.read(spark, "dictionary").select(*_DICT_COLS)
+            .orderBy("term").collect()
+        ]
+
+    got, want = rows(cat), rows(fresh)
+    assert got == want
+    assert [r["term_id"] for r in got] == list(range(1, len(got) + 1))
