@@ -282,6 +282,25 @@ class IndexCatalog:
             .parquet(*dirs)
         )
 
+    def read_docs(
+        self, spark: SparkSession, range_size: int, dirs: list[str] | None = None
+    ) -> DataFrame:
+        """Base docs + the delta docs of ``dirs`` (default: the committed
+        ones). Delta rows get their range_id and are cast to the base
+        schema: set, order AND types must match exactly (mixed
+        int32/int64 parquet files fail on read)."""
+        base = self.read(spark, "docs")
+        dd = self.read_delta(spark, "docs", dirs)
+        if dd is None:
+            return base
+        dd = dd.withColumn("range_id", (F.col("docid") / range_size).cast("int"))
+        return base.unionByName(
+            dd.select(
+                *[F.col(f.name).cast(f.dataType).alias(f.name)
+                  for f in base.schema.fields]
+            )
+        )
+
     # --- json metadata ---
     def write_json(self, name: str, obj: dict) -> None:
         os.makedirs(self.dir, exist_ok=True)

@@ -1,4 +1,4 @@
-"""Search engine: planner + exact scorer + WAND dispatch (SURVEY.md §3.1).
+"""Search engine: planner + BM25 scorers + where they run (SURVEY.md §3.1).
 
 Query lifecycle mapping (reference: api.c -> index_json_query ->
 execute_query fan-out -> per-shard squery -> form_result merge):
@@ -6,9 +6,17 @@ execute_query fan-out -> per-shard squery -> form_result merge):
    mode), look up query terms in the dictionary with bucket partition
    pruning + term pushdown, compute idf (reference: lookup_terms,
    /root/reference/src/main/squery.c:159-166);
-2. one Spark job: partition-pruned scan of postings (only the buckets of
-   the query terms, only the postings_bytes column — positions are never
-   read for BM25), score, global TakeOrderedAndProject top-k;
+2. score: one pruned postings scan (_matched_blocks: only the buckets of
+   the query terms; BM25 never reads the positions column), then one of
+   two scorers, each taking a batch of queries (a single query is a
+   batch of one):
+   - the block-max WAND kernel (query/wand.py), placed on the driver
+     (_local_topk: cached pyarrow blocks, zero Spark jobs) or on Spark
+     (_wand_scores: mapInPandas per doc-range partition);
+   - the exact DataFrame scorer (_exact_scores), for filtered queries
+     and distributed tombstone sets;
+   and rank: TakeOrderedAndProject for one query (_rank), a per-query
+   window for a batch (_window_rank);
 3. hydration = broadcast join of the top page against docs/
    (reference: query.c:385-401).
 
@@ -30,9 +38,13 @@ from marlin_spark.config import EngineConfig
 from marlin_spark.index.blocks import POSTING_COLS
 from marlin_spark.index.catalog import IndexCatalog, term_bucket_py
 from marlin_spark.oracle.tokenizer import analyze
-from marlin_spark.query.wand import make_wand_scorer
+from marlin_spark.query.wand import make_batch_wand_scorer
 
 DECODE_SCHEMA = "term string, docid long, tf int, dl int"
+# block columns the WAND kernel reads (positions stay pruned)
+KERNEL_COLS = ["term", "range_id", "block_id", "n_docs", "max_tfnorm", "postings"]
+SCORED_SCHEMA = "query_id string, docid long, score double"
+RANKED_SCHEMA = "query_id string, docid long, score double, rank int"
 
 
 def _in_pred(col: str, values) -> "F.Column":
@@ -229,21 +241,7 @@ class SearchEngine:
         return base
 
     def _docs_df(self, with_deleted: bool = False) -> DataFrame:
-        base = self.cat.read(self.spark, "docs")
-        deltas = self._delta_dirs("docs")
-        if deltas:
-            dd = self.cat.read_delta(self.spark, "docs", deltas).withColumn(
-                "range_id", (F.col("docid") / self.cfg.range_size).cast("int")
-            )
-            # column set, order AND types must match the base exactly
-            base = base.unionByName(
-                dd.select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in base.schema.fields
-                    ]
-                )
-            )
+        base = self.cat.read_docs(self.spark, self.cfg.range_size)
         if not with_deleted and (
             self.deleted is not None or self._tombstones_distributed
         ):
@@ -441,14 +439,23 @@ class SearchEngine:
         return plan
 
     # ----------------------------------------------------------- search
-    def _matched_blocks(self, plan: QueryPlan) -> DataFrame:
-        posts = self._postings_df()
-        terms = list(plan.term_meta)
+    def _matched_blocks(self, terms) -> DataFrame:
+        """The pruned postings scan of ``terms``: their term buckets'
+        partitions only, the term predicate pushed into parquet."""
+        terms = sorted(terms)
         buckets = sorted(
             {term_bucket_py(t, self.cfg.n_term_buckets) for t in terms}
         )
-        return posts.filter(
+        return self._postings_df().filter(
             _in_pred("bucket", buckets) & _in_pred("term", terms)
+        )
+
+    def _decoded_postings(self, terms) -> DataFrame:
+        """(term, docid, tf, dl) rows of every posting of ``terms``."""
+        return (
+            self._matched_blocks(terms)
+            .select("term", "postings")
+            .mapInPandas(_decode_blocks, DECODE_SCHEMA)
         )
 
     def _rank(self, scored: DataFrame, k: int) -> DataFrame:
@@ -509,17 +516,26 @@ class SearchEngine:
             return self._search_wand(plan)
         return self._search_exact(plan, filter_cond)
 
-    # exact path: full scoring through DataFrame ops (verification path &
-    # filtered path)
-    def _search_exact(self, plan: QueryPlan, filter_cond=None) -> DataFrame:
-        postings = self._decoded_postings(plan)
+    # ---------------------------------------------------------- scorers
+    def _exact_scores(self, metas: dict, n_slots: dict, mode: str) -> DataFrame:
+        """Exact BM25 as DataFrame ops, every matching doc of every query:
+        (query_id, docid, score). ``metas``: query_id -> term -> (idf,
+        slot); mode='all' keeps docs holding ``n_slots[query_id]``
+        distinct slots. The filtered path and the distributed-tombstone
+        fallback: no top-k inside, so a shuffled anti-join or a filter
+        semi-join after it stays exact."""
         meta = self.spark.createDataFrame(
-            [(t, float(i), int(s)) for t, (i, s) in plan.term_meta.items()],
-            "term string, idf double, slot int",
+            [
+                (qid, t, float(idf), int(slot), int(n_slots[qid]))
+                for qid, m in metas.items()
+                for t, (idf, slot) in m.items()
+            ],
+            "query_id string, term string, idf double, slot int, n_slots int",
         )
+        decoded = self._decoded_postings({t for m in metas.values() for t in m})
         k1, b = self.cfg.k1, self.cfg.b
         scored = (
-            postings.join(F.broadcast(meta), "term")
+            decoded.join(F.broadcast(meta), "term")
             .withColumn(
                 "tscore",
                 F.col("idf")
@@ -530,52 +546,52 @@ class SearchEngine:
                     + k1 * (1.0 - b + b * F.col("dl") / float(self.avgdl))
                 ),
             )
-            .groupBy("docid")
+            .groupBy("query_id", "docid")
             .agg(
                 F.sum("tscore").alias("score"),
-                F.countDistinct("slot").alias("n_slots"),
+                F.countDistinct("slot").alias("got_slots"),
+                F.first("n_slots").alias("n_slots"),
             )
         )
-        if plan.mode == "all":
-            scored = scored.filter(F.col("n_slots") >= plan.n_slots)
-        scored = scored.drop("n_slots")
-        scored = self._not_deleted(scored)
+        if mode == "all":
+            scored = scored.filter(F.col("got_slots") >= F.col("n_slots"))
+        return self._not_deleted(scored.select("query_id", "docid", "score"))
+
+    def _kernel(self, metas: dict, n_slots: dict, k: int, mode: str,
+                theta_seed: "dict[str, float] | None" = None):
+        """The WAND kernel under this index's BM25 parameters and
+        driver-resident tombstones, for either placement."""
+        return make_batch_wand_scorer(
+            metas, n_slots, k, mode, self.cfg.k1, self.cfg.b, self.avgdl,
+            deleted=self.deleted, theta_seed=theta_seed,
+        )
+
+    def _wand_scores(self, metas: dict, n_slots: dict, k: int, mode: str,
+                     theta_seed: "dict[str, float] | None" = None) -> DataFrame:
+        """The WAND kernel placed on Spark: matched blocks repartitioned
+        by doc range, one kernel call per partition. (query_id, docid,
+        score) rows, a partition-local top-k per query."""
+        blocks = self._matched_blocks(
+            {t for m in metas.values() for t in m}
+        ).select(*KERNEL_COLS)
+        return blocks.repartition(self._scorer_partitions(), "range_id").mapInPandas(
+            self._kernel(metas, n_slots, k, mode, theta_seed), SCORED_SCHEMA
+        )
+
+    def _search_exact(self, plan: QueryPlan, filter_cond=None) -> DataFrame:
+        scored = self._exact_scores(
+            {"": plan.term_meta}, {"": plan.n_slots}, plan.mode
+        ).select("docid", "score")
         if filter_cond is not None:
             docs = self._docs_df().filter(filter_cond)
             scored = scored.join(docs.select("docid"), "docid", "left_semi")
         return self._rank(scored, plan.k)
 
-    def _decoded_postings(self, plan: QueryPlan) -> DataFrame:
-        blocks = self._matched_blocks(plan).select("term", "postings")
-        return blocks.mapInPandas(_decode_blocks, DECODE_SCHEMA)
-
-    # WAND path
     def _search_wand(self, plan: QueryPlan) -> DataFrame:
-        sc = self.spark.sparkContext
-        acc = {
-            "ranges_skipped": sc.accumulator(0),
-            "ranges_scored": sc.accumulator(0),
-        }
-        self._last_wand_counters = acc
-        blocks = self._matched_blocks(plan).select(
-            "term", "range_id", "block_id", "n_docs", "max_tfnorm", "postings"
-        )
-        n_part = self._scorer_partitions()
-        scorer = make_wand_scorer(
-            plan.term_meta,
-            plan.k,
-            plan.n_slots,
-            plan.mode,
-            self.cfg.k1,
-            self.cfg.b,
-            self.avgdl,
-            acc,
-            deleted=self.deleted,
-        )
-        local = blocks.repartition(n_part, "range_id").mapInPandas(
-            scorer, "docid long, score double"
-        )
-        return self._rank(local, plan.k)
+        scored = self._wand_scores(
+            {"": plan.term_meta}, {"": plan.n_slots}, plan.k, plan.mode
+        ).select("docid", "score")
+        return self._rank(scored, plan.k)
 
     # ------------------------------------ marlin matching semantics
     def match_marlin(self, q: str, prefix_last: bool = True, typos: bool = False) -> DataFrame:
@@ -693,18 +709,7 @@ class SearchEngine:
                 if t in exact or any(t.startswith(p) for p in rest)
             ]
             if matched:
-                posts = self._postings_df()
-                buckets = sorted(
-                    {term_bucket_py(t, self.cfg.n_term_buckets) for t in matched}
-                )
-                blocks = posts.filter(
-                    _in_pred("bucket", buckets) & _in_pred("term", matched)
-                ).select("term", "postings")
-                parts.append(
-                    blocks.mapInPandas(_decode_blocks, DECODE_SCHEMA).select(
-                        "docid"
-                    )
-                )
+                parts.append(self._decoded_postings(matched).select("docid"))
         if not parts:
             return self.spark.createDataFrame([], "docid long")
         docids = parts[0]
@@ -743,8 +748,6 @@ class SearchEngine:
             return [(r["docid"], r["score"]) for r in df.collect()]
         return self._local_topk(plan)
 
-    _LOCAL_COLS = ["term", "range_id", "block_id", "n_docs", "max_tfnorm", "postings"]
-
     def _arrow_dataset(self, key: str, path: str):
         """Memoized pyarrow dataset (file discovery + schema) per stats
         epoch — the cache lives in _load_live_state so construction and
@@ -775,7 +778,7 @@ class SearchEngine:
             tbl = self._arrow_dataset(
                 "postings", self.cat.path("postings")
             ).to_table(
-                columns=self._LOCAL_COLS,
+                columns=KERNEL_COLS,
                 filter=pads.field("bucket") == bucket,
             ).sort_by(
                 [("term", "ascending"), ("range_id", "ascending"),
@@ -800,9 +803,9 @@ class SearchEngine:
         return entry
 
     def _local_topk(self, plan: QueryPlan) -> list[tuple[int, float]]:
+        """The WAND kernel placed on the driver: the query's blocks from
+        the bucket cache plus any uncompacted delta segments, one call."""
         import pyarrow.dataset as pads
-
-        from marlin_spark.query.wand import make_wand_scorer
 
         terms = list(plan.term_meta)
         buckets = sorted(
@@ -828,7 +831,7 @@ class SearchEngine:
                     pads.dataset(
                         d, partitioning="hive", format="parquet"
                     ).to_table(
-                        columns=self._LOCAL_COLS, filter=flt
+                        columns=KERNEL_COLS, filter=flt
                     ).to_pandas()
                 )
         if len(pdfs) == 1:
@@ -836,18 +839,9 @@ class SearchEngine:
         elif pdfs:
             pdf = pd.concat(pdfs, ignore_index=True)
         else:
-            pdf = pd.DataFrame(columns=self._LOCAL_COLS)
-        scorer = make_wand_scorer(
-            plan.term_meta,
-            plan.k,
-            plan.n_slots,
-            plan.mode,
-            self.cfg.k1,
-            self.cfg.b,
-            self.avgdl,
-            deleted=self.deleted,
-        )
-        out = next(scorer(iter([pdf])))
+            pdf = pd.DataFrame(columns=KERNEL_COLS)
+        kernel = self._kernel({"": plan.term_meta}, {"": plan.n_slots}, plan.k, plan.mode)
+        out = next(kernel(iter([pdf])))
         ranked = sorted(
             zip(out["docid"], out["score"]),
             key=lambda ds: (-round(float(ds[1]), 9), int(ds[0])),
@@ -877,12 +871,9 @@ class SearchEngine:
         found = {r["term"] for r in rows}
         if not all(w in found for w in words):
             return self.spark.createDataFrame([], "docid long")
-        buckets = sorted(
-            {term_bucket_py(t, self.cfg.n_term_buckets) for t in words}
+        blocks = self._matched_blocks(set(words)).select(
+            "term", "range_id", "postings", "positions"
         )
-        blocks = self._postings_df().filter(
-            _in_pred("bucket", buckets) & _in_pred("term", sorted(set(words)))
-        ).select("term", "range_id", "postings", "positions")
 
         word_seq = list(words)
 
@@ -1138,13 +1129,9 @@ class SearchEngine:
             if not term_meta:
                 base = self.spark.createDataFrame([], RANK_SCHEMA)
                 return base if explain else base.select("docid")
-            terms = sorted(term_meta)
-            buckets = sorted(
-                {term_bucket_py(t, self.cfg.n_term_buckets) for t in terms}
+            blocks = self._matched_blocks(term_meta).select(
+                "term", "range_id", "postings", "positions"
             )
-            blocks = self._postings_df().filter(
-                _in_pred("bucket", buckets) & _in_pred("term", terms)
-            ).select("term", "range_id", "postings", "positions")
             n_part = self._scorer_partitions()
             kernel = make_rank_kernel(term_meta, words, self.deleted)
             feats = blocks.repartition(n_part, "range_id").mapInPandas(
@@ -1227,13 +1214,7 @@ class SearchEngine:
         terms = sorted({t for t, _ in meta_rows})
         if not terms:
             return self.spark.createDataFrame([], "docid long")
-        buckets = sorted(
-            {term_bucket_py(t, self.cfg.n_term_buckets) for t in terms}
-        )
-        blocks = self._postings_df().filter(
-            _in_pred("bucket", buckets) & _in_pred("term", terms)
-        ).select("term", "postings")
-        decoded = blocks.mapInPandas(_decode_blocks, DECODE_SCHEMA)
+        decoded = self._decoded_postings(terms)
         meta = self.spark.createDataFrame(
             meta_rows, "term string, gid int"
         )
@@ -1298,18 +1279,12 @@ class SearchEngine:
                 seeds[qid] = float(best)
         return seeds or None
 
-    def search_many_wand(self, queries: dict[str, str], k: int = 10, mode: str = "any") -> DataFrame:
-        """Batched block-max WAND: one dictionary lookup + one pruned
-        postings scan for ALL queries; each block decoded once per range,
-        per-query theta pruning, per-partition top-k — avoids the exact
-        path's |candidates| x |queries| shuffle entirely."""
-        if self._tombstones_distributed:
-            # per-partition top-k with an unseeable tombstone set could
-            # evict live docs; the exact batch path anti-joins correctly
-            self._check_tombstone_pressure()
-            return self.search_many(queries, k, mode)
-        from marlin_spark.query.wand import make_batch_wand_scorer
-
+    def _plan_many(self, queries: dict[str, str], k: int):
+        """Plan a batch with ONE dictionary lookup for the union of all
+        query terms (not one driver job per query). Returns (metas,
+        n_slots, kth_of): term -> (idf, slot) and the word count of every
+        query with a dictionary term, and each term's k-th largest block
+        max (theta seeds)."""
         per_q = {qid: self.analyze_query(q) for qid, q in queries.items()}
         all_terms = sorted({t for ts in per_q.values() for t in ts})
         dict_rows = self._dictionary_lookup(all_terms, [])
@@ -1330,10 +1305,34 @@ class SearchEngine:
             if meta:
                 metas[qid] = meta
                 n_slots[qid] = len(terms)
+        return metas, n_slots, kth_of
+
+    @staticmethod
+    def _window_rank(scored: DataFrame, k: int) -> DataFrame:
+        """Per-query top-k of (query_id, docid, score) rows, with rank."""
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc(F.round("score", 9)), F.asc("docid")
+        )
+        return (
+            scored.withColumn("score", F.round("score", 9))
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "docid", "score", "rank")
+        )
+
+    def search_many_wand(self, queries: dict[str, str], k: int = 10, mode: str = "any") -> DataFrame:
+        """Batched block-max WAND: one dictionary lookup + one pruned
+        postings scan for ALL queries; each block decoded once per range,
+        per-query theta pruning, per-partition top-k — avoids the exact
+        path's |candidates| x |queries| shuffle entirely."""
+        if self._tombstones_distributed:
+            # per-partition top-k with an unseeable tombstone set could
+            # evict live docs; the exact batch path anti-joins correctly
+            self._check_tombstone_pressure()
+            return self.search_many(queries, k, mode)
+        metas, n_slots, kth_of = self._plan_many(queries, k)
         if not metas:
-            return self.spark.createDataFrame(
-                [], "query_id string, docid long, score double, rank int"
-            )
+            return self.spark.createDataFrame([], RANKED_SCHEMA)
         # dedupe identical term-sets: real query fleets repeat queries
         # (Zipf over query space), and two queries with the same term set
         # and slot count score identically — run the scorer once per
@@ -1354,40 +1353,15 @@ class SearchEngine:
                 aliases.append((rep, qid))
         deduped = len(rep_metas) < len(metas)
         metas, n_slots = rep_metas, rep_slots
-        matched = sorted({t for m in metas.values() for t in m})
-        buckets = sorted(
-            {term_bucket_py(t, self.cfg.n_term_buckets) for t in matched}
-        )
-        blocks = (
-            self._postings_df()
-            .filter(_in_pred("bucket", buckets) & _in_pred("term", matched))
-            .select("term", "range_id", "block_id", "n_docs", "max_tfnorm", "postings")
-        )
-        n_part = self._scorer_partitions()
         seeds = self._theta_seeds(metas, k, kth_of, mode)
-        scorer = make_batch_wand_scorer(
-            metas, n_slots, k, mode, self.cfg.k1, self.cfg.b, self.avgdl,
-            deleted=self.deleted, theta_seed=seeds,
-        )
-        local = blocks.repartition(n_part, "range_id").mapInPandas(
-            scorer, "query_id string, docid long, score double"
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc(F.round("score", 9)), F.asc("docid")
-        )
+        local = self._wand_scores(metas, n_slots, k, mode, theta_seed=seeds)
         # explicit partition count for the rank exchange: left to AQE the
         # ~10 MB of per-partition top-k rows coalesce into ONE task — a
         # serial merge whose wall clock is identical at every cluster
         # size, i.e. pure fixed cost against N->4N scaling. The window's
         # required clustering (query_id) is satisfied, so no 2nd exchange.
         n_rank = max(8, self.spark.sparkContext.defaultParallelism)
-        ranked = (
-            local.repartition(n_rank, "query_id")
-            .withColumn("score", F.round("score", 9))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "docid", "score", "rank")
-        )
+        ranked = self._window_rank(local.repartition(n_rank, "query_id"), k)
         if deduped:
             # fan results back out to duplicate queries AFTER ranking
             # (aliases rank identically) with a pure-Catalyst literal
@@ -1416,68 +1390,10 @@ class SearchEngine:
         return ranked
 
     def search_many(self, queries: dict[str, str], k: int = 10, mode: str = "any") -> DataFrame:
-        """Score MANY queries in one Spark job (throughput path for the
-        wrk-style benchmark set). ONE dictionary lookup for the union of
-        all query terms (not one driver job per query), one postings scan,
-        per-query top-k via window."""
-        per_q = {qid: self.analyze_query(q) for qid, q in queries.items()}
-        all_terms = sorted({t for ts in per_q.values() for t in ts})
-        df_map = {
-            r["term"]: r["df"] for r in self._dictionary_lookup(all_terms, [])
-        }
-        rows = []
-        for qid, terms in per_q.items():
-            for slot, t in enumerate(terms):
-                if t in df_map:
-                    rows.append(
-                        (qid, t, float(self.idf(df_map[t])), slot, len(terms))
-                    )
-        if not rows:
-            return self.spark.createDataFrame(
-                [], "query_id string, docid long, score double, rank int"
-            )
-        meta = self.spark.createDataFrame(
-            rows, "query_id string, term string, idf double, slot int, n_slots int"
-        )
-        all_terms = sorted({r[1] for r in rows})
-        buckets = sorted(
-            {term_bucket_py(t, self.cfg.n_term_buckets) for t in all_terms}
-        )
-        posts = self._postings_df().filter(
-            _in_pred("bucket", buckets) & _in_pred("term", all_terms)
-        )
-        decoded = posts.select("term", "postings").mapInPandas(
-            _decode_blocks, DECODE_SCHEMA
-        )
-        decoded = self._not_deleted(decoded)
-        k1, b = self.cfg.k1, self.cfg.b
-        scored = (
-            decoded.join(F.broadcast(meta), "term")
-            .withColumn(
-                "tscore",
-                F.col("idf")
-                * F.col("tf")
-                * (k1 + 1.0)
-                / (
-                    F.col("tf")
-                    + k1 * (1.0 - b + b * F.col("dl") / float(self.avgdl))
-                ),
-            )
-            .groupBy("query_id", "docid")
-            .agg(
-                F.sum("tscore").alias("score"),
-                F.countDistinct("slot").alias("got_slots"),
-                F.first("n_slots").alias("n_slots"),
-            )
-        )
-        if mode == "all":
-            scored = scored.filter(F.col("got_slots") >= F.col("n_slots"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc(F.round("score", 9)), F.asc("docid")
-        )
-        return (
-            scored.withColumn("score", F.round("score", 9))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "docid", "score", "rank")
-        )
+        """Score MANY queries in one Spark job with the exact scorer:
+        one dictionary lookup, one postings scan, per-query top-k via
+        window. The batch fallback under a distributed tombstone set."""
+        metas, n_slots, _ = self._plan_many(queries, k)
+        if not metas:
+            return self.spark.createDataFrame([], RANKED_SCHEMA)
+        return self._window_rank(self._exact_scores(metas, n_slots, mode), k)

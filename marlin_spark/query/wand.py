@@ -1,23 +1,31 @@
-"""Block-max WAND top-k scorer over compressed posting blocks.
+"""Block-max WAND top-k: one scoring kernel over compressed posting blocks.
 
-Runs as mapInPandas over matched block rows repartitioned by doc range
-(range_id). Within a partition, ranges are processed in descending
-upper-bound order with the top-k threshold THETA carried across ranges:
+``make_batch_wand_scorer`` is the only BM25 scoring loop. It scores any
+number of queries in one pass over the matched blocks of their term
+union; a single query is a batch of one (``make_wand_scorer`` is that
+adapter). The engine decides only where the kernel runs:
 
-- range upper bound = sum over query terms of idf * max(block max_tfnorm
-  in range): if ub <= THETA the WHOLE range (all its blocks, all terms) is
-  skipped without decoding — this is block-max pruning at doc-range
-  granularity, which is *sound for exact scores*: a pruned range cannot
-  contain a top-k doc, and no surviving doc ever loses a term
-  contribution (pruning single blocks of one term would silently corrupt
-  scores of docs that other terms still emit — the classic per-block WAND
-  pivot needs doc-at-a-time cursors, a scalar loop that belongs in native
-  code, not in a Python executor).
-- surviving ranges decode (docids, tfs, dls) — the positions column is
-  never read (parquet column pruning) — and score fully vectorized:
-  per-term scores concatenated, stable-argsorted by docid (terms iterate
-  in sorted order => accumulation order matches the oracle), summed with
-  np.add.reduceat.
+- on the driver (``SearchEngine._local_topk``): cached pyarrow blocks of
+  the query's terms, one call;
+- on Spark (``SearchEngine._wand_scores``): matched blocks repartitioned
+  by doc range (range_id), one call per partition via mapInPandas, then a
+  global top-k merge with the same comparator.
+
+Within a call, ranges are processed in descending upper-bound order with
+each query's top-k threshold THETA carried across ranges:
+
+- range upper bound = sum over the query's terms of idf * max(block
+  max_tfnorm in range): if ub < THETA the WHOLE range is skipped without
+  decoding. This is block-max pruning at doc-range granularity and is
+  *sound for exact scores*: a pruned range cannot contain a top-k doc,
+  and no surviving doc ever loses a term contribution (pruning single
+  blocks of one term would corrupt scores of docs that other terms still
+  emit — the classic per-block WAND pivot needs doc-at-a-time cursors, a
+  scalar loop that belongs in native code, not in a Python executor).
+- surviving ranges decode (docids, tfs, dls) in one varbyte pass — the
+  positions column is never read (parquet column pruning) — and score
+  vectorized, with MaxScore candidate selection inside the range (see
+  make_batch_wand_scorer).
 
 Reference analog: the fast-rank partial scan + early termination
 (/root/reference/src/main/docrank.c:478-574); ours prunes with provable
@@ -61,111 +69,16 @@ def make_wand_scorer(
     counters: dict | None = None,
     deleted: "np.ndarray | None" = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """term_meta: term -> (idf, slot). Slots group prefix expansions with
-    their source word for conjunctive (mode='all') matching; n_slots is
-    the number of required slots. ``deleted``: sorted int64 tombstone
-    docids, masked out right after block decode so a deleted doc can
-    neither score nor occupy a top-k slot (block-max values stay valid
-    upper bounds — they bound a superset)."""
-
-    norm_c = k1 * (1.0 - b)
-    norm_s = k1 * b / avgdl if avgdl > 0 else 0.0
-    acc = counters or {}
+    """One query as a batch of one: make_batch_wand_scorer over
+    ``{"": term_meta}``, yielding (docid, score) frames."""
+    kernel = make_batch_wand_scorer(
+        {"": term_meta}, {"": n_slots}, k, mode, k1, b, avgdl,
+        deleted=deleted, counters=counters,
+    )
 
     def scorer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = [pdf for pdf in batches if not pdf.empty]
-        if not rows:
-            yield pd.DataFrame({"docid": pd.Series([], dtype="int64"),
-                                "score": pd.Series([], dtype="float64")})
-            return
-        all_blocks = pd.concat(rows, ignore_index=True)
-
-        # group blocks by range, compute each range's upper bound
-        ranges: dict[int, list] = {}
-        for t in all_blocks.itertuples(index=False):
-            ranges.setdefault(t.range_id, []).append(t)
-        ubs = []
-        for rid, blks in ranges.items():
-            per_term_max: dict[str, float] = {}
-            for blk in blks:
-                idf = term_meta[blk.term][0]
-                v = idf * blk.max_tfnorm
-                if v > per_term_max.get(blk.term, -1.0):
-                    per_term_max[blk.term] = v
-            ubs.append((sum(per_term_max.values()), rid))
-        ubs.sort(reverse=True)
-
-        top_d = np.empty(0, dtype=np.int64)
-        top_s = np.empty(0, dtype=np.float64)
-        theta = -np.inf
-        skipped = 0
-
-        for ub, rid in ubs:
-            # strict: a range whose bound EQUALS theta can still hold an
-            # equal-score doc that wins the docid tie-break
-            if top_d.size >= k and ub < theta - _EPS:
-                skipped += 1
-                continue
-            # decode the WHOLE range in one varbyte pass (terms sorted ->
-            # accumulation order matches the oracle); per-block decode_block
-            # calls were ~50 us of numpy overhead each, the dominant cost
-            # of the driver-local path at 100+ blocks per head-term query
-            blks = sorted(ranges[rid], key=lambda t: (t.term, t.block_id))
-            nb = len(blks)
-            nd = np.fromiter((b_.n_docs for b_ in blks), np.int64, nb)
-            d, tfs, dls, _ = decode_blocks_many(
-                [b_.postings for b_ in blks], nd
-            )
-            s = np.repeat(
-                np.fromiter((term_meta[b_.term][0] for b_ in blks), np.float64, nb),
-                nd,
-            )
-            slots_all = np.repeat(
-                np.fromiter((term_meta[b_.term][1] for b_ in blks), np.int64, nb),
-                nd,
-            )
-            keep = _mask_deleted(d, deleted)
-            if keep is not None:
-                d, tfs, dls = d[keep], tfs[keep], dls[keep]
-                s, slots_all = s[keep], slots_all[keep]
-            if d.size == 0:  # every posting in the range was tombstoned
-                continue
-            tfn = tfs.astype(np.float64)
-            s = s * tfn * (k1 + 1.0) / (
-                tfn + norm_c + norm_s * dls.astype(np.float64)
-            )
-            order = np.argsort(d, kind="stable")
-            d, s = d[order], s[order]
-            starts = np.flatnonzero(np.diff(d, prepend=-1))
-            scores = np.add.reduceat(s, starts)
-            u_docids = d[starts]
-            if mode == "all" and n_slots > 0:
-                slots = slots_all[order]
-                # distinct slots per doc: sort (doc, slot) pairs
-                key = d * (n_slots + 1) + slots
-                uniq = np.unique(key)
-                cnt = np.bincount(
-                    np.searchsorted(u_docids, uniq // (n_slots + 1)),
-                    minlength=u_docids.shape[0],
-                )
-                keep = cnt >= n_slots
-                u_docids, scores = u_docids[keep], scores[keep]
-            if u_docids.size == 0:
-                continue
-            top_d = np.concatenate([top_d, u_docids])
-            top_s = np.concatenate([top_s, scores])
-            if top_d.size > k:
-                # same comparator as the global merge: rounded score desc,
-                # docid asc — keeps partition-local and global top-k
-                # selections consistent under ties
-                order = np.lexsort((top_d, -np.round(top_s, 9)))[:k]
-                top_d, top_s = top_d[order], top_s[order]
-            if top_d.size >= k:
-                theta = top_s.min()
-        if acc:
-            acc["ranges_skipped"].add(skipped)
-            acc["ranges_scored"].add(len(ubs) - skipped)
-        yield pd.DataFrame({"docid": top_d, "score": top_s})
+        for pdf in kernel(batches):
+            yield pdf.iloc[:, 1:]  # drop query_id
 
     return scorer
 
@@ -187,6 +100,26 @@ def _topk_trim(d: np.ndarray, s: np.ndarray, k: int):
     return (d if d.base is None else d.copy()), s
 
 
+def _run_starts(*keys: np.ndarray) -> np.ndarray:
+    """Row indices where any of the equal-length ``keys`` changes value
+    (row 0 included): the starts of runs in rows sorted by the keys."""
+    m = np.zeros(keys[0].size, bool)
+    m[:1] = True
+    for a in keys:
+        m[1:] |= a[1:] != a[:-1]
+    return np.flatnonzero(m)
+
+
+def _empty() -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "query_id": pd.Series([], dtype="object"),
+            "docid": pd.Series([], dtype="int64"),
+            "score": pd.Series([], dtype="float64"),
+        }
+    )
+
+
 def make_batch_wand_scorer(
     query_metas: dict[str, dict[str, tuple[float, int]]],
     n_slots: dict[str, int],
@@ -197,11 +130,16 @@ def make_batch_wand_scorer(
     avgdl: float = 1.0,
     deleted: "np.ndarray | None" = None,
     theta_seed: "dict[str, float] | None" = None,
+    counters: dict | None = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Batched WAND: scores MANY queries in one pass over the matched
-    blocks of their term union. Each block is decoded ONCE per range and
-    the decoded (docids, core) arrays are shared by every query that
-    references the term. Three pruning layers, all exact:
+    """Block-max WAND for MANY queries in one pass over the matched
+    blocks of their term union; yields (query_id, docid, score) rows, at
+    most k per query. ``query_metas``: query_id -> term -> (idf, slot);
+    slots group prefix expansions with their source word, so mode='all'
+    requires ``n_slots[query_id]`` DISTINCT slots per doc. Each block is
+    decoded ONCE per range and the decoded (docids, core) arrays are
+    shared by every query that references the term. Three pruning
+    layers, all exact:
 
     - range level (block-max): a query skips a whole range when its
       upper bound there cannot beat its running theta (vectorized for
@@ -219,8 +157,12 @@ def make_batch_wand_scorer(
 
     Float exactness: every candidate's score accumulates term-ascending
     (zeros + t1 + t2 + ...; 0.0 + x == x in IEEE), the same order as the
-    single-query scorer's stable argsort + reduceat and the oracle's
-    term-sorted GROUP BY sum.
+    oracle's term-sorted sum.
+
+    ``deleted``: sorted int64 tombstone docids, masked out right after
+    block decode so a deleted doc can neither score nor occupy a top-k
+    slot (block-max values stay valid upper bounds — they bound a
+    superset).
 
     ``theta_seed``: optional per-query GLOBAL lower bounds on the final
     k-th best score (see SearchEngine._theta_seeds for the derivation
@@ -232,13 +174,15 @@ def make_batch_wand_scorer(
     unaffected because no doc with score >= the true k-th best (rounding
     ties included, via the eps guards) is ever dropped.
 
-    Reference analog: fast-rank early termination
-    (/root/reference/src/main/docrank.c:478-574), upgraded from sampling
-    to provable bounds.
+    ``counters``: optional ``ranges_skipped`` / ``ranges_scored``
+    accumulators (anything with ``.add``); a range counts as skipped
+    when no query needs it decoded.
     """
     norm_c = k1 * (1.0 - b)
     norm_s = k1 * b / avgdl if avgdl > 0 else 0.0
+    acc = counters or {}
     qid_list = sorted(query_metas)
+    qid_arr = np.array(qid_list, dtype=object)
     qcode_of = {qid: i for i, qid in enumerate(qid_list)}
     nq = len(qid_list)
     want_slots = mode == "all"
@@ -268,48 +212,46 @@ def make_batch_wand_scorer(
             np.fromiter((r[0] for r in trows), np.int64, len(trows)),
             np.fromiter((r[1] for r in trows), np.float64, len(trows)),
         )
+    # term codes for grouping blocks, and each term's max idf over the
+    # queries to order ranges (the exact upper bound for a single query)
+    term_arr = np.array(sorted(by_term), dtype=object)
+    code_of = {t: i for i, t in enumerate(term_arr)}
+    idf_max = np.array([by_term[t][1].max() for t in term_arr])
 
     def scorer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="object"),
-                "docid": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
         rows = [pdf for pdf in batches if not pdf.empty]
         if not rows:
-            yield empty
+            yield _empty()
             return
         blk = pd.concat(rows, ignore_index=True) if len(rows) > 1 else rows[0]
-        blk = blk.sort_values(
-            ["range_id", "term", "block_id"], kind="mergesort",
-            ignore_index=True,
-        )
+        # (range, term, block) order on integer term codes: sorting the
+        # string column costs a quarter of a small query's kernel time
+        term_col = blk["term"].to_numpy()
+        tc_a = np.fromiter(map(code_of.__getitem__, term_col), np.int64, term_col.size)
         rid_a = blk["range_id"].to_numpy()
-        term_a = blk["term"].to_numpy()
-        nd_a = blk["n_docs"].to_numpy()
-        mtf_a = blk["max_tfnorm"].to_numpy(dtype=np.float64)
-        posts_a = blk["postings"].to_numpy()
-        n_blk = rid_a.size
-        r_change = np.r_[True, rid_a[1:] != rid_a[:-1]]
-        t_change = r_change | np.r_[True, term_a[1:] != term_a[:-1]]
-        t_starts = np.flatnonzero(t_change)
-        tmax_all = np.maximum.reduceat(mtf_a, t_starts)  # per (range,term)
-        term_of_slot = term_a[t_starts]
-        slot_range = rid_a[t_starts]
-        rs_starts = np.flatnonzero(np.r_[True, slot_range[1:] != slot_range[:-1]])
-        rs_ends = np.r_[rs_starts[1:], t_starts.size]
-        r_starts_blk = np.flatnonzero(r_change)
-        r_ends_blk = np.r_[r_starts_blk[1:], n_blk]
-        # descending total-ub order so thetas rise fast
+        o = np.lexsort((blk["block_id"].to_numpy(), tc_a, rid_a))
+        rid_a, tc_a = rid_a[o], tc_a[o]
+        nd_a = blk["n_docs"].to_numpy()[o]
+        mtf_a = blk["max_tfnorm"].to_numpy(dtype=np.float64)[o]
+        posts_a = blk["postings"].to_numpy()[o]
+        # runs: (range, term) "slots" of blocks, ranges of slots
+        t_starts = _run_starts(rid_a, tc_a)
+        t_cnt_all = np.diff(t_starts, append=rid_a.size)  # blocks per slot
+        tmax_all = np.maximum.reduceat(mtf_a, t_starts)
+        tc_slot = tc_a[t_starts]
+        term_of_slot = term_arr[tc_slot]
+        rs_starts = _run_starts(rid_a[t_starts])
+        rs_ends = np.append(rs_starts[1:], t_starts.size)
+        # descending upper-bound order so thetas rise fast
         order = np.argsort(
-            -np.add.reduceat(tmax_all, rs_starts), kind="stable"
+            -np.add.reduceat(idf_max[tc_slot] * tmax_all, rs_starts),
+            kind="stable",
         )
 
         state_d: list = [None] * nq  # per-query running top-k
         state_s: list = [None] * nq
         theta = np.full(nq, -np.inf)
+        skipped = 0
 
         for ri in order:
             s_lo, s_hi = rs_starts[ri], rs_ends[ri]
@@ -326,22 +268,22 @@ def make_batch_wand_scorer(
                 minlength=nq,
             )
             # theta[qc] is -inf until that query holds k docs; a global
-            # seed prunes even before then (it bounds the FINAL k-th)
+            # seed prunes even before then (it bounds the FINAL k-th).
+            # Not strict: a range whose bound EQUALS theta can still hold
+            # an equal-score doc that wins the docid tie-break
             th_eff = np.maximum(theta, seed_arr)
             active = (ub > 0) & (ub >= th_eff - _EPS)
             if not active.any():
+                skipped += 1
                 continue
             needed = np.fromiter(
                 (active[by_term[t][0]].any() for t in terms_r),
                 bool, terms_r.size,
             )
-            if not needed.any():
-                continue
             # decode every needed term's blocks in one varbyte pass
-            rel_t = t_starts[s_lo:s_hi] - r_starts_blk[ri]
-            t_cnt = np.diff(np.r_[rel_t, r_ends_blk[ri] - r_starts_blk[ri]])
+            t_cnt = t_cnt_all[s_lo:s_hi]
             keep_blk = np.repeat(needed, t_cnt)
-            blk_sl = slice(r_starts_blk[ri], r_ends_blk[ri])
+            blk_sl = slice(t_starts[s_lo], t_starts[s_lo] + t_cnt.sum())
             nd_kept = np.asarray(nd_a[blk_sl][keep_blk], np.int64)
             d_all, tf_all, dl_all, _ = decode_blocks_many(
                 list(posts_a[blk_sl][keep_blk]), nd_kept
@@ -381,13 +323,13 @@ def make_batch_wand_scorer(
                 if not present:
                     continue
                 th = th_eff[qc]
+                if want_slots and len({slot for _t, _i, slot in present}) < ns_arr[qc]:
+                    continue  # too few distinct slots in this range
                 if len(present) == 1:
                     t, idf, slot = present[0]
                     d_t, c_t = decoded[t]
                     cand_d = d_t
                     cand_s = idf * c_t
-                    if want_slots and ns_arr[qc] > 1:
-                        continue  # one distinct slot can never reach ns
                 else:
                     # MaxScore split: largest LOW-bound prefix whose
                     # cumulative upper bound stays under theta is
@@ -417,31 +359,27 @@ def make_batch_wand_scorer(
                     if cand_d.size == 0:
                         continue
                     cand_s = np.zeros(cand_d.size)
-                    # every entry of `present` carries a DISTINCT slot
-                    # (slots are enumerate() positions and the meta dict
-                    # is keyed by term), so distinct-slot coverage is
-                    # simply the count of hitting terms — exact for any
-                    # query length (a 64-bit mask aliased slots >= 64,
-                    # silently zeroing long conjunctive queries)
-                    slot_cnt = (
-                        np.zeros(cand_d.size, np.int32) if want_slots else None
-                    )
+                    # per slot: does the candidate hold ANY of the slot's
+                    # terms? Prefix expansions share their word's slot, so
+                    # mode='all' counts distinct slots, never hitting terms
+                    slot_hit: dict[int, np.ndarray] = {}
                     only_ess = len(ess) == 1
                     for i, (t, idf, slot) in enumerate(present):
                         d_t, c_t = decoded[t]
                         if only_ess and i == ess[0]:
                             cand_s += idf * c_t  # aligned: cand_d IS d_t
-                            if slot_cnt is not None:
-                                slot_cnt += 1
-                            continue
-                        p = np.searchsorted(d_t, cand_d)
-                        p[p >= d_t.size] = d_t.size - 1
-                        hit = d_t[p] == cand_d
-                        cand_s[hit] += idf * c_t[p[hit]]
-                        if slot_cnt is not None:
-                            slot_cnt[hit] += 1
+                            hit = np.ones(cand_d.size, bool)
+                        else:
+                            p = np.searchsorted(d_t, cand_d)
+                            p[p >= d_t.size] = d_t.size - 1
+                            hit = d_t[p] == cand_d
+                            cand_s[hit] += idf * c_t[p[hit]]
+                        if want_slots:
+                            prev = slot_hit.get(slot)
+                            slot_hit[slot] = hit if prev is None else prev | hit
                     if want_slots:
-                        okm = slot_cnt >= ns_arr[qc]
+                        n_hit = np.sum(list(slot_hit.values()), axis=0)
+                        okm = n_hit >= ns_arr[qc]
                         cand_d, cand_s = cand_d[okm], cand_s[okm]
                         if cand_d.size == 0:
                             continue
@@ -458,20 +396,20 @@ def make_batch_wand_scorer(
                 state_d[qc], state_s[qc] = cand_d, cand_s
                 if cand_d.size >= k:
                     theta[qc] = cand_s.min()
-        out_q, out_d, out_s = [], [], []
-        for qc in range(nq):
-            if state_d[qc] is not None and state_d[qc].size:
-                out_q.extend([qid_list[qc]] * state_d[qc].size)
-                out_d.append(state_d[qc])
-                out_s.append(state_s[qc])
-        if not out_q:
-            yield empty
+        if acc:
+            acc["ranges_skipped"].add(skipped)
+            acc["ranges_scored"].add(order.size - skipped)
+        hit = [qc for qc in range(nq) if state_d[qc] is not None]
+        if not hit:
+            yield _empty()
             return
         yield pd.DataFrame(
             {
-                "query_id": out_q,
-                "docid": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
+                "query_id": np.repeat(
+                    qid_arr[hit], [state_d[qc].size for qc in hit]
+                ),
+                "docid": np.concatenate([state_d[qc] for qc in hit]),
+                "score": np.concatenate([state_s[qc] for qc in hit]),
             }
         )
 

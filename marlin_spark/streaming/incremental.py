@@ -124,7 +124,8 @@ class IncrementalIndexer:
             .withColumn("dl", dl_col)
         )
         # carry EVERY source column (not just the default transcript
-        # schema): _docs_df() selects the base docs schema from deltas,
+        # schema): IndexCatalog.read_docs selects the base docs schema
+        # from deltas,
         # so an auto-mapped index with extra stored fields must find
         # them here too (mirrors build.py's `keep` columns)
         keep = [c for c in docs.columns if c not in ("dl", "range_id", "docid")]
@@ -174,7 +175,7 @@ class IncrementalIndexer:
             F.col("conv_id").cast("string").alias("conv_id"),
             F.col("turn_idx").cast("long").alias("turn_idx"),
         )
-        docs = self._all_docs().select(
+        docs = self.cat.read_docs(self.spark, self.cfg.range_size).select(
             "docid",
             F.col("conv_id").cast("string").alias("conv_id"),
             F.col("turn_idx").cast("long").alias("turn_idx"),
@@ -206,7 +207,7 @@ class IncrementalIndexer:
                 f"patch_turns: patchable fields are {self.PATCHABLE_FIELDS},"
                 f" got {sorted(patch_cols)}"
             )
-        cur = self._all_docs().select(
+        cur = self.cat.read_docs(self.spark, self.cfg.range_size).select(
             "docid",
             F.col("conv_id").cast("string").alias("conv_id"),
             F.col("turn_idx").cast("long").alias("turn_idx"),
@@ -229,27 +230,6 @@ class IncrementalIndexer:
         self.update_turns(merged, batch_id)
 
     # ------------------------------------------------------------------
-    def _all_docs(self, delta_dirs: list[str] | None = None) -> DataFrame:
-        """Base docs + the delta docs of ``delta_dirs`` (default: every
-        committed batch)."""
-        base = self.cat.read(self.spark, "docs")
-        dd = self.cat.read_delta(self.spark, "docs", delta_dirs)
-        if dd is not None:
-            dd = dd.withColumn(
-                "range_id", (F.col("docid") / self.cfg.range_size).cast("int")
-            )
-            # delta columns must match the base EXACTLY (set, order AND
-            # types: mixed int32/int64 parquet files fail on read)
-            base = base.unionByName(
-                dd.select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in base.schema.fields
-                    ]
-                )
-            )
-        return base
-
     def _tombstone_df(self) -> DataFrame:
         """Distinct tombstoned docids, broadcast for an anti-join; read
         where delete_docids wrote them, never through a driver list."""
@@ -312,7 +292,7 @@ class IncrementalIndexer:
         # collection stats ride on the same write job (Observation), as
         # in the bulk build's docs stage: the postings rewrite needs the
         # post-compaction avgdl
-        docs = self._all_docs(doc_deltas)
+        docs = self.cat.read_docs(self.spark, self.cfg.range_size, doc_deltas)
         if tomb is not None:
             docs = docs.join(self._tombstone_df(), "docid", "left_anti")
         obs = Observation("compact_stats")
