@@ -297,6 +297,11 @@ def make_batch_wand_scorer(
             )
             decoded: dict[str, tuple] = {}
             tdoc = np.concatenate(([0], np.cumsum(nd_kept)))
+            # a term's run may mix segments (base + uncompacted deltas)
+            # whose block_ids each restart at 0, so block order is not
+            # always docid order; a run with a docid descent is re-sorted
+            # (the candidate gather binary-searches each term's docids)
+            desc = np.flatnonzero(d_all[1:] < d_all[:-1]) + 1
             cnt_kept = t_cnt[needed]
             pos = 0
             blk_i = 0
@@ -307,6 +312,11 @@ def make_batch_wand_scorer(
                 if kmask is not None:
                     kk = kmask[lo:hi]
                     d_t, c_t = d_t[kk], c_t[kk]
+                if desc.size and (
+                    np.searchsorted(desc, hi) > np.searchsorted(desc, lo, "right")
+                ):
+                    o_t = np.argsort(d_t, kind="stable")
+                    d_t, c_t = d_t[o_t], c_t[o_t]
                 if d_t.size:
                     decoded[terms_r[ti]] = (d_t, c_t)
                 pos += 1

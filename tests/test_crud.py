@@ -209,6 +209,68 @@ def test_three_uncompacted_batches_and_deletes_match_oracle(
             assert got == want, (q, use_wand)
 
 
+def test_delta_blocks_inside_a_base_range_rank_like_exact(
+    spark, tiny_df, tmp_path
+):
+    """At the default range_size an uncompacted batch's docids fall in
+    the base's last doc range, and a delta segment's block_ids restart
+    at 0, so one (range, term) run holds base and delta blocks whose
+    block_id order is not docid order. Every WAND placement (Spark
+    single query, driver-local, Spark batch) must rank as the exact
+    path does, scores included."""
+    import pyarrow.dataset as pads
+
+    from marlin_spark.config import EngineConfig
+    from marlin_spark.index.build import IndexBuilder
+
+    d = str(tmp_path / "one_range_idx")
+    cfg = EngineConfig(block_size=2, n_term_buckets=8)
+    IndexBuilder(spark, d, cfg).build(tiny_df, build_id="t0")
+    inc = IncrementalIndexer(spark, d, cfg)
+    inc.process_batch(_batch(spark, [r for b in _NRT_BATCHES for r in b]), 0)
+    eng = SearchEngine(spark, d, cfg)
+
+    # the case is exercised: a query term with several base blocks and
+    # a delta block in one range
+    def _runs(path):
+        t = pads.dataset(path, partitioning="hive", format="parquet").to_table(
+            columns=["term", "range_id"]
+        ).to_pylist()
+        runs = {}
+        for r in t:
+            key = (r["term"], r["range_id"])
+            runs[key] = runs.get(key, 0) + 1
+        return runs
+
+    base = _runs(eng.cat.path("postings"))
+    delta = _runs(eng.cat.committed_delta_dirs("postings")[0])
+    assert any(base.get(key, 0) >= 2 for key in delta if key[0] in {"this", "best"})
+
+    queries = ["best test", "this worst", "worst best test", "this is test",
+               "aaaa worst"]
+    for mode in ("any", "all"):
+        batch = {}
+        for r in eng.search_many_wand({q: q for q in queries}, k=10, mode=mode).collect():
+            batch.setdefault(r["query_id"], []).append(
+                (r["rank"], r["docid"], round(r["score"], 9))
+            )
+        for q in queries:
+            want = [
+                (r["docid"], round(r["score"], 9))
+                for r in eng.search(q, k=10, mode=mode, use_wand=False).collect()
+            ]
+            assert want, (q, mode)
+            wand = [
+                (r["docid"], round(r["score"], 9))
+                for r in eng.search(q, k=10, mode=mode).collect()
+            ]
+            local = [(doc, round(s, 9)) for doc, s in eng.search_local(q, 10, mode)]
+            many = [(doc, s) for _rank, doc, s in sorted(batch.get(q, []))]
+            assert wand == want, (q, mode, "wand")
+            assert local == want, (q, mode, "local")
+            assert many == want, (q, mode, "many")
+
+
 def test_update_replaces_turn(spark, crud_index, tiny_rows):
     d, cfg = crud_index
     key_rows = sorted(tiny_rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
