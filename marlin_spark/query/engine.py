@@ -459,8 +459,10 @@ class SearchEngine:
         )
 
     def _rank(self, scored: DataFrame, k: int) -> DataFrame:
+        """Top-k (docid, score) of one query's scored rows (any other
+        column, e.g. query_id, is dropped in the same projection)."""
         return (
-            scored.withColumn("score", F.round(F.col("score"), 9))
+            scored.select("docid", F.round(F.col("score"), 9).alias("score"))
             .orderBy(F.desc("score"), F.asc("docid"))
             .limit(k)
         )
@@ -581,7 +583,7 @@ class SearchEngine:
     def _search_exact(self, plan: QueryPlan, filter_cond=None) -> DataFrame:
         scored = self._exact_scores(
             {"": plan.term_meta}, {"": plan.n_slots}, plan.mode
-        ).select("docid", "score")
+        )
         if filter_cond is not None:
             docs = self._docs_df().filter(filter_cond)
             scored = scored.join(docs.select("docid"), "docid", "left_semi")
@@ -590,7 +592,7 @@ class SearchEngine:
     def _search_wand(self, plan: QueryPlan) -> DataFrame:
         scored = self._wand_scores(
             {"": plan.term_meta}, {"": plan.n_slots}, plan.k, plan.mode
-        ).select("docid", "score")
+        )
         return self._rank(scored, plan.k)
 
     # ------------------------------------ marlin matching semantics
