@@ -9,9 +9,13 @@ get_index_by_name). Index creation/deletion is the app's index registry
 
 Spark-first shape: an app is a directory of index catalogs
 (``<app_dir>/<index_name>/``). Routing is a dict lookup on the driver;
-each index keeps its own SearchEngine (stats snapshot + caches), which
-matches the reference's per-index in-memory state. Nothing here touches
-the data plane — all heavy work stays in the per-index engines.
+each index keeps its own SearchEngine (stats snapshot + segment cache),
+which matches the reference's per-index in-memory state. A query
+answers with Python rows: plain top-k queries come from
+``SearchEngine.search_local`` (driver kernel, no Spark job for most
+queries); filtered and hydrated queries run as Spark plans and are
+collected here. Nothing here touches the data plane — all heavy work
+stays in the per-index engines.
 """
 
 from __future__ import annotations
@@ -195,16 +199,33 @@ class MarlinApp:
             )
 
     # ------------------------------------------------------------ query
-    def query(self, index_name: str, q: str, api_key: str | None = None, **kw) -> DataFrame:
-        """Route one query to its index (app_index_query analog)."""
+    def query(self, index_name: str, q: str, api_key: str | None = None,
+              k: int = 10, hydrate: bool = False, **kw) -> list[dict]:
+        """Route one query to its index (app_index_query analog) and
+        return its hits as dicts ranked: {docid, score}, plus the stored
+        turn's columns with ``hydrate``. ``k`` must be in 1..max_hits.
+        ``kw`` are SearchEngine.search's options; with ``filter_cond``,
+        ``use_wand`` or ``hydrate`` the query runs as a Spark plan,
+        otherwise through search_local."""
         self._authorize(api_key, "query", index_name)
-        return self.get_index(index_name).search(q, **kw)
+        eng = self.get_index(index_name)
+        if type(k) is not int or not 1 <= k <= eng.cfg.max_hits:
+            raise ValueError(f"k must be an integer in 1..{eng.cfg.max_hits}, got {k!r}")
+        if hydrate or kw.keys() - {"mode", "prefix_last"}:
+            df = eng.search(q, k, **kw)
+            if hydrate:
+                df = eng.hydrate(df)
+            return [r.asDict(recursive=True) for r in df.collect()]
+        return [
+            {"docid": d, "score": s} for d, s in eng.search_local(q, k, **kw)
+        ]
 
     def multi_query(self, requests: list[dict]) -> list[dict]:
         """``requests`` array fan-out (app.c query_app_indexes_handler):
         each entry is {"indexName": ..., "query": ..., **search kwargs};
         failures are isolated per entry exactly like the reference's
-        per-result success flag."""
+        per-result success flag. A successful entry's ``hits`` are
+        query()'s rows."""
         results = []
         for req in requests:
             try:
@@ -214,12 +235,7 @@ class MarlinApp:
                     k: v for k, v in req.items()
                     if k not in ("indexName", "query")
                 }
-                df = self.query(name, q, **kw)
-                # execute INSIDE the try: the plan is lazy, so without
-                # this a corrupt-index / analysis error would surface at
-                # the caller's collect, outside per-entry isolation
-                rows = df.collect()
-                hits = self.spark.createDataFrame(rows, df.schema)
+                hits = self.query(name, q, **kw)
                 results.append({"success": True, "hits": hits})
             except Exception as exc:  # isolate: one bad entry, not the batch
                 results.append({"success": False, "error": str(exc)})

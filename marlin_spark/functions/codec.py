@@ -75,18 +75,27 @@ def vb_encode(values: np.ndarray) -> bytes:
 
 
 def vb_decode(buf: bytes) -> np.ndarray:
-    """Vectorized varbyte decode -> uint64 array."""
+    """Vectorized varbyte decode -> uint64 array. Loops over byte
+    positions within a value (posting values are mostly 1-2 bytes), so its
+    temporaries are per value, not per byte."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
-    term_idx = np.flatnonzero((b & 0x80) == 0)
-    starts = np.empty_like(term_idx)
+    ends = np.flatnonzero(b < 0x80)
+    if ends.size == b.size:  # every value is one byte
+        return b.astype(np.uint64)
+    starts = np.empty_like(ends)
     starts[0] = 0
-    starts[1:] = term_idx[:-1] + 1
-    sizes = term_idx - starts + 1
-    ji = (np.arange(b.size) - np.repeat(starts, sizes)).astype(np.uint64)
-    contrib = (b & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * ji)
-    return np.add.reduceat(contrib, starts)
+    starts[1:] = ends[:-1] + 1
+    out = (b[starts] & 0x7F).astype(np.uint64)
+    longer = np.flatnonzero(ends > starts)
+    j = 1
+    while longer.size:
+        pos = starts[longer] + j
+        out[longer] |= (b[pos] & 0x7F).astype(np.uint64) << np.uint64(7 * j)
+        longer = longer[pos < ends[longer]]
+        j += 1
+    return out
 
 
 def encode_block(

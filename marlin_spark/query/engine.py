@@ -11,8 +11,8 @@ execute_query fan-out -> per-shard squery -> form_result merge):
    two scorers, each taking a batch of queries (a single query is a
    batch of one):
    - the block-max WAND kernel (query/wand.py), placed on the driver
-     (_local_topk: cached pyarrow blocks, zero Spark jobs) or on Spark
-     (_wand_scores: mapInPandas per doc-range partition);
+     (_local_topk: blocks from the segment cache, zero Spark jobs) or
+     on Spark (_wand_scores: mapInPandas per doc-range partition);
    - the exact DataFrame scorer (_exact_scores), for filtered queries
      and distributed tombstone sets;
    and rank: TakeOrderedAndProject for one query (_rank), a per-query
@@ -27,6 +27,8 @@ ranking key = (round(score, 9) desc, docid asc).
 from __future__ import annotations
 
 import math
+import os
+import threading
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -38,13 +40,19 @@ from marlin_spark.config import EngineConfig
 from marlin_spark.index.blocks import POSTING_COLS
 from marlin_spark.index.catalog import IndexCatalog, term_bucket_py
 from marlin_spark.oracle.tokenizer import analyze
-from marlin_spark.query.wand import make_batch_wand_scorer
+from marlin_spark.query.wand import make_batch_wand_kernel, pandas_scorer
 
 DECODE_SCHEMA = "term string, docid long, tf int, dl int"
 # block columns the WAND kernel reads (positions stay pruned)
 KERNEL_COLS = ["term", "range_id", "block_id", "n_docs", "max_tfnorm", "postings"]
 SCORED_SCHEMA = "query_id string, docid long, score double"
 RANKED_SCHEMA = "query_id string, docid long, score double, rank int"
+# search_local hands a query whose matched terms' summed df exceeds this
+# to the Spark WAND job. Below it the driver kernel answers faster than
+# the Spark job's fixed cost: on a 4-core VM the kernel took ~0.18 ms per
+# 1k df and the job 1.6-1.9 s on a 1M-doc index (crossing near 9M df),
+# 3.1-4.4 s on a 6M-doc one (no crossing up to 10.8M df; CHANGES.md)
+LOCAL_MAX_DF = 8_000_000
 
 
 def _in_pred(col: str, values) -> "F.Column":
@@ -107,6 +115,47 @@ def _decode_blocks(batches):
             )
 
 
+class _Blocks:
+    """One term bucket of one postings segment, held as numpy columns
+    sorted by (term, range_id, block_id), with each term's row span."""
+
+    COLS = ("range_id", "block_id", "n_docs", "max_tfnorm", "postings")
+    __slots__ = COLS + ("spans", "nbytes")
+
+    @classmethod
+    def read(cls, seg_dir: str, bucket: int) -> "_Blocks":
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as pads
+        import pyarrow.parquet as pq
+
+        # each of the bucket partition's files is read whole on this
+        # thread: the dataset scanner's thread pools left ~1.5 MB more
+        # of driver memory resident per 8 buckets read (measured)
+        ds = pads.dataset(seg_dir, partitioning="hive", format="parquet")
+        tables = []
+        for frag in ds.get_fragments(filter=pads.field("bucket") == bucket):
+            with pq.ParquetFile(frag.path) as f:
+                tables.append(f.read(columns=KERNEL_COLS, use_threads=False))
+        tbl = pa.concat_tables(
+            tables or [ds.schema.empty_table().select(KERNEL_COLS)]
+        ).sort_by(
+            [("term", "ascending"), ("range_id", "ascending"),
+             ("block_id", "ascending")]
+        )
+        self = cls()
+        for c in cls.COLS:
+            setattr(self, c, tbl[c].to_numpy())
+        # value_counts lists terms in first-seen, i.e. sorted, order
+        runs = pc.value_counts(tbl["term"])
+        ends = np.cumsum(runs.field("counts").to_numpy())
+        starts = ends - runs.field("counts").to_numpy()
+        self.spans = dict(zip(runs.field("values").to_pylist(),
+                              zip(starts.tolist(), ends.tolist())))
+        self.nbytes = tbl.nbytes
+        return self
+
+
 class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str, config: EngineConfig | None = None):
         self.spark = spark
@@ -127,6 +176,9 @@ class SearchEngine:
         )
         self.n_docs = self.stats["n_docs"]
         self.avgdl = self.stats["avgdl"]
+        # guards the segment cache's LRU order and byte count: server
+        # handler threads look up concurrently
+        self._cache_lock = threading.Lock()
         self._load_live_state()
 
     # ------------------------------------------------- live index state
@@ -135,7 +187,7 @@ class SearchEngine:
         on the NEXT engine construction or refresh() — the reference's
         serial writer has the same read-your-writes boundary (a query
         started before the delete commit sees the old snapshot)."""
-        import numpy as np
+        import pyarrow.dataset as pads
 
         self._df_cache: dict = {}
         # per-epoch pyarrow caches for the driver-local fast path
@@ -143,8 +195,11 @@ class SearchEngine:
         # reads per query regressed bm25_local_qps 63 -> 16; both caches
         # reset here, i.e. at construction and refresh())
         self._pads_cache: dict = {}          # name/path -> pads.Dataset
-        self._bucket_cache: "dict[int, object]" = {}  # bucket -> (pdf, spans, nbytes) LRU
-        self._bucket_cache_bytes = 0
+        with self._cache_lock:
+            # (segment, bucket) -> _Blocks, LRU by dict order
+            self._bucket_cache: dict = {}
+            self._bucket_cache_bytes = 0
+            self._segments_seen: list = []
         self._stats_epoch = self.stats.get("stats_epoch", 0)
         # short-prefix accelerator: available iff built for this index
         self._accel_len = (
@@ -158,39 +213,19 @@ class SearchEngine:
         if self.cat.exists("tombstones"):
             # size-gate BEFORE materializing: count_rows is parquet
             # metadata only (round-3 verdict item #3 — a bulk delete of
-            # 1e9 docids must never OOM the driver)
-            try:
-                import pyarrow.dataset as pads
-
-                n_rows = pads.dataset(
-                    self.cat.path("tombstones"), format="parquet"
-                ).count_rows()
-            except Exception:
-                n_rows = self.spark.read.parquet(
-                    self.cat.path("tombstones")
-                ).count()
+            # 1e9 docids must never OOM the driver). A pyarrow error here
+            # is a damaged tombstones file and propagates.
+            tombs = pads.dataset(self.cat.path("tombstones"), format="parquet")
+            n_rows = tombs.count_rows()
             self._n_tombstones = int(n_rows)
             if n_rows > self.cfg.tombstone_driver_max:
                 # distributed mode: the set stays in parquet; queries
                 # anti-join it (see _not_deleted / search dispatch)
                 self._tombstones_distributed = True
             elif n_rows:
-                try:
-                    import pyarrow.dataset as pads
-
-                    tbl = pads.dataset(
-                        self.cat.path("tombstones"), format="parquet"
-                    ).to_table(columns=["docid"])
-                    arr = np.unique(tbl["docid"].to_numpy())
-                    if arr.size:
-                        self.deleted = arr.astype(np.int64)
-                except Exception:
-                    rows = self.spark.read.parquet(
-                        self.cat.path("tombstones")
-                    ).select("docid").distinct().collect()
-                    arr = np.sort(np.array([r["docid"] for r in rows], dtype=np.int64))
-                    if arr.size:
-                        self.deleted = arr
+                arr = np.unique(tombs.to_table(columns=["docid"])["docid"].to_numpy())
+                if arr.size:
+                    self.deleted = arr.astype(np.int64)
 
     def refresh(self) -> None:
         """Re-read stats.json + tombstones and drop the term->df cache.
@@ -215,12 +250,14 @@ class SearchEngine:
         return self.cat.committed_delta_dirs(name)
 
     def _postings_df(self) -> DataFrame:
-        """Base postings UNIONed with any uncompacted streaming delta
-        segments, so streamed turns are searchable before compact().
-        Terms not yet in the base dictionary still miss (df lookup finds
-        nothing) and df/idf of existing terms stay at base values until
-        compaction — the standard NRT trade (segment visible, stats
-        refreshed on commit)."""
+        """The Spark plans' postings: base UNIONed with any uncompacted
+        streaming delta segments, so streamed turns are searchable before
+        compact() (search_local reads the same segments through the
+        driver segment cache, _bucket_table). Terms not yet in the base
+        dictionary still miss (df lookup finds nothing) and df/idf of
+        existing terms stay at base values until compaction — the
+        standard NRT trade (segment visible, stats refreshed on
+        commit)."""
         deltas = self._delta_dirs("postings")
         # cache the assembled DataFrame keyed by the committed delta set:
         # spark.read.parquet lists files + reads a footer on the driver
@@ -324,19 +361,16 @@ class SearchEngine:
         if not prefixes and terms:
             # exact-term lookups read the pruned dictionary parquet with
             # pyarrow on the driver — no Spark job (the trie-in-mmap
-            # analog); prefix range scans still go through Spark
-            try:
-                rows = self._dictionary_lookup_arrow(terms)
-            except Exception:  # fall back to the Spark scan
-                rows = None
-            if rows is not None:
-                found = {r["term"] for r in rows}
-                for r in rows:
-                    cache[r["term"]] = (r["df"], r.get("top_maxes"))
-                for t in terms:
-                    if t not in found:
-                        cache[t] = None
-                return rows
+            # analog); prefix range scans still go through Spark. A
+            # pyarrow error is a damaged dictionary and propagates.
+            rows = self._dictionary_lookup_arrow(terms)
+            found = {r["term"] for r in rows}
+            for r in rows:
+                cache[r["term"]] = (r["df"], r.get("top_maxes"))
+            for t in terms:
+                if t not in found:
+                    cache[t] = None
+            return rows
         from marlin_spark.query.fuzzy import OTHER_FC, fc_of_char, term_fc_py
 
         d = self.cat.read(self.spark, "dictionary")
@@ -475,31 +509,27 @@ class SearchEngine:
         prefix_last: bool = False,
         use_wand: bool = True,
         filter_cond=None,
-        local_threshold: int = 0,
     ) -> DataFrame:
-        """Top-k BM25. Returns DataFrame(docid, score) ranked.
+        """Top-k BM25 as a Spark plan. Returns DataFrame(docid, score)
+        ranked; search_local answers the same queries on the driver.
 
         filter_cond: optional Catalyst Column over docs/ columns
         (role/tool/ts/...). Filters force the exact path — the filter is
         ANDed before ranking, like the reference
         (/root/reference/src/main/squery.c:377-395).
-
-        local_threshold: if > 0 and the total matched df is below it, the
-        query is answered ON THE DRIVER — a pyarrow partition-pruned read
-        of the matched blocks + the same numpy WAND scorer, zero Spark
-        jobs. This is the adaptive small-query fast path (the analog of
-        the reference's fullScanThreshold gate, index.h:24): single-digit
-        milliseconds instead of a cluster round-trip, while huge queries
-        still fan out. Rank-identical to the distributed paths.
         """
+        return self._search_plan(
+            self.plan(q, k, mode, prefix_last), use_wand, filter_cond
+        )
+
+    def _search_plan(self, plan: QueryPlan, use_wand: bool = True,
+                     filter_cond=None) -> DataFrame:
         if self._tombstones_distributed:
-            # the numpy-masked kernels (WAND / local) cannot see a
-            # distributed tombstone set — route through the exact path,
-            # whose _not_deleted anti-join shuffles (scale-safe)
+            # the numpy-masked WAND kernel cannot see a distributed
+            # tombstone set — route through the exact path, whose
+            # _not_deleted anti-join shuffles (scale-safe)
             self._check_tombstone_pressure()
             use_wand = False
-            local_threshold = 0
-        plan = self.plan(q, k, mode, prefix_last)
         if plan.match_all_docs:
             docs = self._docs_df()
             if filter_cond is not None:
@@ -512,8 +542,6 @@ class SearchEngine:
             )
         if not plan.term_meta:
             return self.spark.createDataFrame([], "docid long, score double")
-        if filter_cond is None and 0 < plan.total_df <= local_threshold:
-            return self._search_local(plan)
         if use_wand and filter_cond is None:
             return self._search_wand(plan)
         return self._search_exact(plan, filter_cond)
@@ -563,7 +591,7 @@ class SearchEngine:
                 theta_seed: "dict[str, float] | None" = None):
         """The WAND kernel under this index's BM25 parameters and
         driver-resident tombstones, for either placement."""
-        return make_batch_wand_scorer(
+        return make_batch_wand_kernel(
             metas, n_slots, k, mode, self.cfg.k1, self.cfg.b, self.avgdl,
             deleted=self.deleted, theta_seed=theta_seed,
         )
@@ -577,7 +605,8 @@ class SearchEngine:
             {t for m in metas.values() for t in m}
         ).select(*KERNEL_COLS)
         return blocks.repartition(self._scorer_partitions(), "range_id").mapInPandas(
-            self._kernel(metas, n_slots, k, mode, theta_seed), SCORED_SCHEMA
+            pandas_scorer(self._kernel(metas, n_slots, k, mode, theta_seed)),
+            SCORED_SCHEMA,
         )
 
     def _search_exact(self, plan: QueryPlan, filter_cond=None) -> DataFrame:
@@ -737,17 +766,26 @@ class SearchEngine:
     # ------------------------------------------ driver-local fast path
     def search_local(self, q: str, k: int = 10, mode: str = "any",
                      prefix_last: bool = False) -> list[tuple[int, float]]:
-        """Answer a small query entirely on the driver (no Spark job):
-        pyarrow partition-pruned block read + the same numpy WAND scorer.
-        Returns [(docid, score)] ranked. Rank-identical to search()."""
+        """Top-k BM25 as Python rows: [(docid, score)] ranked, scores
+        rounded to 9 dp, rank-identical to search(). A query is scored
+        on the driver by the WAND kernel over blocks from the segment
+        cache (_bucket_table) — no Spark job. Spark answers what the
+        driver should not: match-all (a docs scan), a distributed
+        tombstone set (the kernel's numpy mask cannot see it) and a
+        summed df above LOCAL_MAX_DF, where the Spark WAND job's fixed
+        cost is already paid back. A query with no dictionary term
+        answers [] on the driver."""
         plan = self.plan(q, k, mode, prefix_last)
         if (
             plan.match_all_docs
-            or not plan.term_meta
-            or self._tombstones_distributed  # numpy mask unavailable
+            or self._tombstones_distributed
+            or plan.total_df > LOCAL_MAX_DF
         ):
-            df = self.search(q, k, mode, prefix_last)
-            return [(r["docid"], r["score"]) for r in df.collect()]
+            return [
+                (r["docid"], r["score"]) for r in self._search_plan(plan).collect()
+            ]
+        if not plan.term_meta:
+            return []
         return self._local_topk(plan)
 
     def _arrow_dataset(self, key: str, path: str):
@@ -763,98 +801,85 @@ class SearchEngine:
             )
         return ds
 
-    def _bucket_table(self, bucket: int):
-        """In-memory posting blocks of one term bucket (BM25 columns
-        only — positions stay pruned), term-sorted with a term -> row
-        span index so a query term's blocks are an O(1) dict hit + a
-        cheap row slice. Cached as a PANDAS frame: the WAND kernel
-        consumes pandas, and converting the Arrow table per query was
-        the dominant warm-path cost (the blob column copies; ~20 ms on
-        a head term vs <1 ms for an iloc view). First touch reads the
-        bucket's parquet once; LRU-bounded by cfg.local_cache_bytes.
-        Returns (pdf, spans, nbytes)."""
-        entry = self._bucket_cache.pop(bucket, None)
-        if entry is None:
-            import pyarrow.dataset as pads
+    def _segments(self) -> list[tuple[str, "int | None"]]:
+        """The postings segments a driver lookup reads, as (dir, stamp):
+        the base (stamp None: it changes only at refresh(), which empties
+        the cache) and every committed delta segment, stamped with the
+        mtime of its postings _SUCCESS so a retried overwrite of
+        batch=N is a new segment, never served stale. When the set
+        changes, cached buckets of segments no longer in it are
+        dropped."""
+        segs = [(self.cat.path("postings"), None)] + [
+            (d, os.stat(os.path.join(d, "_SUCCESS")).st_mtime_ns)
+            for d in self._delta_dirs("postings")
+        ]
+        if segs != self._segments_seen:
+            live = set(segs)
+            with self._cache_lock:
+                for key in [k for k in self._bucket_cache if k[0] not in live]:
+                    self._bucket_cache_bytes -= self._bucket_cache.pop(key).nbytes
+                self._segments_seen = segs
+        return segs
 
-            tbl = self._arrow_dataset(
-                "postings", self.cat.path("postings")
-            ).to_table(
-                columns=KERNEL_COLS,
-                filter=pads.field("bucket") == bucket,
-            ).sort_by(
-                [("term", "ascending"), ("range_id", "ascending"),
-                 ("block_id", "ascending")]
-            )
-            spans: dict[str, tuple[int, int]] = {}
-            terms = tbl["term"].to_pylist()
-            lo = 0
-            for i in range(1, len(terms) + 1):
-                if i == len(terms) or terms[i] != terms[lo]:
-                    spans[terms[lo]] = (lo, i)
-                    lo = i
-            entry = (tbl.to_pandas(), spans, tbl.nbytes)
-            self._bucket_cache_bytes += entry[2]
-            while (
-                self._bucket_cache
-                and self._bucket_cache_bytes > self.cfg.local_cache_bytes
-            ):
-                oldest = next(iter(self._bucket_cache))  # LRU via dict order
-                self._bucket_cache_bytes -= self._bucket_cache.pop(oldest)[2]
-        self._bucket_cache[bucket] = entry  # (re)insert = most recent
-        return entry
+    def _bucket_table(self, seg: tuple[str, "int | None"], bucket: int) -> "_Blocks":
+        """In-memory posting blocks of one term bucket of one segment
+        (BM25 columns only — positions stay pruned), term-sorted with a
+        term -> row span index, so a query term's blocks are a dict hit
+        plus array slices. A committed segment is immutable, so base and
+        delta buckets share one LRU bounded by cfg.local_cache_bytes.
+        The parquet read runs outside the lock: two threads missing the
+        same bucket both read it, and the first insert wins."""
+        key = (seg, bucket)
+        with self._cache_lock:
+            entry = self._bucket_cache.pop(key, None)
+            if entry is not None:
+                self._bucket_cache[key] = entry  # re-insert = most recent
+                return entry
+        entry = _Blocks.read(seg[0], bucket)
+        with self._cache_lock:
+            won = self._bucket_cache.pop(key, None)
+            if won is None:
+                won = entry
+                self._bucket_cache_bytes += entry.nbytes
+                while (
+                    self._bucket_cache
+                    and self._bucket_cache_bytes > self.cfg.local_cache_bytes
+                ):
+                    oldest = next(iter(self._bucket_cache))  # LRU via dict order
+                    self._bucket_cache_bytes -= self._bucket_cache.pop(oldest).nbytes
+            self._bucket_cache[key] = won
+        return won
 
     def _local_topk(self, plan: QueryPlan) -> list[tuple[int, float]]:
-        """The WAND kernel placed on the driver: the query's blocks from
-        the bucket cache plus any uncompacted delta segments, one call."""
-        import pyarrow.dataset as pads
-
-        terms = list(plan.term_meta)
+        """The WAND kernel placed on the driver: the query's blocks, as
+        column slices of the cached buckets of every segment, one call."""
+        terms = sorted(plan.term_meta)
         buckets = sorted(
             {term_bucket_py(t, self.cfg.n_term_buckets) for t in terms}
         )
-        pdfs = []
-        for b in buckets:
-            pdf_b, spans, _ = self._bucket_table(b)
-            for t in terms:
-                span = spans.get(t)
-                if span is not None:
-                    pdfs.append(pdf_b.iloc[span[0]: span[1]])
-        deltas = self._delta_dirs("postings")
-        if deltas:
-            flt = (
-                pads.field("bucket").isin(buckets)
-                & pads.field("term").isin(terms)
-            )
-            for d in deltas:  # uncompacted NRT segments
-                # deltas are never cached: they appear/disappear between
-                # compactions and must stay visible without refresh()
-                pdfs.append(
-                    pads.dataset(
-                        d, partitioning="hive", format="parquet"
-                    ).to_table(
-                        columns=KERNEL_COLS, filter=flt
-                    ).to_pandas()
-                )
-        if len(pdfs) == 1:
-            pdf = pdfs[0]
-        elif pdfs:
-            pdf = pd.concat(pdfs, ignore_index=True)
-        else:
-            pdf = pd.DataFrame(columns=KERNEL_COLS)
-        kernel = self._kernel({"": plan.term_meta}, {"": plan.n_slots}, plan.k, plan.mode)
-        out = next(kernel(iter([pdf])))
-        ranked = sorted(
-            zip(out["docid"], out["score"]),
-            key=lambda ds: (-round(float(ds[1]), 9), int(ds[0])),
-        )[: plan.k]
-        return [(int(d), float(s)) for d, s in ranked]
-
-    def _search_local(self, plan: QueryPlan) -> DataFrame:
-        rows = self._local_topk(plan)
-        return self.spark.createDataFrame(
-            [(d, float(round(s, 9))) for d, s in rows], "docid long, score double"
+        names, spans = [], []
+        for seg in self._segments():
+            for b in buckets:
+                blocks = self._bucket_table(seg, b)
+                for t in terms:
+                    span = blocks.spans.get(t)
+                    if span is not None:
+                        names.append(t)
+                        spans.append((blocks, span[0], span[1]))
+        if not spans:
+            return []
+        cols = {
+            c: np.concatenate([getattr(bl, c)[lo:hi] for bl, lo, hi in spans])
+            for c in _Blocks.COLS
+        }
+        cols["term"] = np.repeat(
+            np.array(names, dtype=object), [hi - lo for _bl, lo, hi in spans]
         )
+        kernel = self._kernel({"": plan.term_meta}, {"": plan.n_slots}, plan.k, plan.mode)
+        _qid, d, s = kernel(cols)
+        s = np.round(s, 9)
+        o = np.lexsort((d, -s))[: plan.k]
+        return [(int(d[i]), float(s[i])) for i in o]
 
     # ----------------------------------------------------- phrase match
     def phrase_match(self, q: str) -> DataFrame:

@@ -1,15 +1,16 @@
 """Block-max WAND top-k: one scoring kernel over compressed posting blocks.
 
-``make_batch_wand_scorer`` is the only BM25 scoring loop. It scores any
+``make_batch_wand_kernel`` is the only BM25 scoring loop. It scores any
 number of queries in one pass over the matched blocks of their term
 union; a single query is a batch of one (``make_wand_scorer`` is that
 adapter). The engine decides only where the kernel runs:
 
-- on the driver (``SearchEngine._local_topk``): cached pyarrow blocks of
-  the query's terms, one call;
+- on the driver (``SearchEngine._local_topk``): the query's blocks as
+  column slices of the engine's segment cache, one call;
 - on Spark (``SearchEngine._wand_scores``): matched blocks repartitioned
-  by doc range (range_id), one call per partition via mapInPandas, then a
-  global top-k merge with the same comparator.
+  by doc range (range_id), one call per partition via mapInPandas
+  (``pandas_scorer``), then a global top-k merge with the same
+  comparator.
 
 Within a call, ranges are processed in descending upper-bound order with
 each query's top-k threshold THETA carried across ranges:
@@ -25,7 +26,7 @@ each query's top-k threshold THETA carried across ranges:
 - surviving ranges decode (docids, tfs, dls) in one varbyte pass — the
   positions column is never read (parquet column pruning) — and score
   vectorized, with MaxScore candidate selection inside the range (see
-  make_batch_wand_scorer).
+  make_batch_wand_kernel).
 
 Reference analog: the fast-rank partial scan + early termination
 (/root/reference/src/main/docrank.c:478-574); ours prunes with provable
@@ -69,15 +70,15 @@ def make_wand_scorer(
     counters: dict | None = None,
     deleted: "np.ndarray | None" = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """One query as a batch of one: make_batch_wand_scorer over
+    """One query as a batch of one: make_batch_wand_kernel over
     ``{"": term_meta}``, yielding (docid, score) frames."""
-    kernel = make_batch_wand_scorer(
+    frames = pandas_scorer(make_batch_wand_kernel(
         {"": term_meta}, {"": n_slots}, k, mode, k1, b, avgdl,
         deleted=deleted, counters=counters,
-    )
+    ))
 
     def scorer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in kernel(batches):
+        for pdf in frames(batches):
             yield pdf.iloc[:, 1:]  # drop query_id
 
     return scorer
@@ -110,17 +111,25 @@ def _run_starts(*keys: np.ndarray) -> np.ndarray:
     return np.flatnonzero(m)
 
 
-def _empty() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "query_id": pd.Series([], dtype="object"),
-            "docid": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64"),
-        }
-    )
+def pandas_scorer(
+    kernel: Callable[[object], tuple[np.ndarray, np.ndarray, np.ndarray]],
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """A make_batch_wand_kernel kernel as a mapInPandas function: all
+    block frames of a partition in, one (query_id, docid, score) frame
+    out."""
+
+    def scorer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows = [pdf for pdf in batches if not pdf.empty]
+        qid, docid, score = kernel(
+            pd.concat(rows, ignore_index=True) if len(rows) > 1
+            else rows[0] if rows else None
+        )
+        yield pd.DataFrame({"query_id": qid, "docid": docid, "score": score})
+
+    return scorer
 
 
-def make_batch_wand_scorer(
+def make_batch_wand_kernel(
     query_metas: dict[str, dict[str, tuple[float, int]]],
     n_slots: dict[str, int],
     k: int,
@@ -131,10 +140,10 @@ def make_batch_wand_scorer(
     deleted: "np.ndarray | None" = None,
     theta_seed: "dict[str, float] | None" = None,
     counters: dict | None = None,
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+) -> Callable[[object], tuple[np.ndarray, np.ndarray, np.ndarray]]:
     """Block-max WAND for MANY queries in one pass over the matched
-    blocks of their term union; yields (query_id, docid, score) rows, at
-    most k per query. ``query_metas``: query_id -> term -> (idf, slot);
+    blocks of their term union; returns (query_id, docid, score) arrays,
+    at most k rows per query. ``query_metas``: query_id -> term -> (idf, slot);
     slots group prefix expansions with their source word, so mode='all'
     requires ``n_slots[query_id]`` DISTINCT slots per doc. Each block is
     decoded ONCE per range and the decoded (docids, core) arrays are
@@ -177,6 +186,10 @@ def make_batch_wand_scorer(
     ``counters``: optional ``ranges_skipped`` / ``ranges_scored``
     accumulators (anything with ``.add``); a range counts as skipped
     when no query needs it decoded.
+
+    The returned kernel takes the blocks as one mapping of column name
+    -> array (a pandas frame, or numpy columns on the driver), or None
+    for no blocks.
     """
     norm_c = k1 * (1.0 - b)
     norm_s = k1 * b / avgdl if avgdl > 0 else 0.0
@@ -218,22 +231,19 @@ def make_batch_wand_scorer(
     code_of = {t: i for i, t in enumerate(term_arr)}
     idf_max = np.array([by_term[t][1].max() for t in term_arr])
 
-    def scorer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = [pdf for pdf in batches if not pdf.empty]
-        if not rows:
-            yield _empty()
-            return
-        blk = pd.concat(rows, ignore_index=True) if len(rows) > 1 else rows[0]
+    def kernel(blk) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        if blk is None:
+            return _NO_HITS
         # (range, term, block) order on integer term codes: sorting the
         # string column costs a quarter of a small query's kernel time
-        term_col = blk["term"].to_numpy()
+        term_col = np.asarray(blk["term"])
         tc_a = np.fromiter(map(code_of.__getitem__, term_col), np.int64, term_col.size)
-        rid_a = blk["range_id"].to_numpy()
-        o = np.lexsort((blk["block_id"].to_numpy(), tc_a, rid_a))
+        rid_a = np.asarray(blk["range_id"])
+        o = np.lexsort((np.asarray(blk["block_id"]), tc_a, rid_a))
         rid_a, tc_a = rid_a[o], tc_a[o]
-        nd_a = blk["n_docs"].to_numpy()[o]
-        mtf_a = blk["max_tfnorm"].to_numpy(dtype=np.float64)[o]
-        posts_a = blk["postings"].to_numpy()[o]
+        nd_a = np.asarray(blk["n_docs"])[o]
+        mtf_a = np.asarray(blk["max_tfnorm"], dtype=np.float64)[o]
+        posts_a = np.asarray(blk["postings"])[o]
         # runs: (range, term) "slots" of blocks, ranges of slots
         t_starts = _run_starts(rid_a, tc_a)
         t_cnt_all = np.diff(t_starts, append=rid_a.size)  # blocks per slot
@@ -411,16 +421,14 @@ def make_batch_wand_scorer(
             acc["ranges_scored"].add(order.size - skipped)
         hit = [qc for qc in range(nq) if state_d[qc] is not None]
         if not hit:
-            yield _empty()
-            return
-        yield pd.DataFrame(
-            {
-                "query_id": np.repeat(
-                    qid_arr[hit], [state_d[qc].size for qc in hit]
-                ),
-                "docid": np.concatenate([state_d[qc] for qc in hit]),
-                "score": np.concatenate([state_s[qc] for qc in hit]),
-            }
+            return _NO_HITS
+        return (
+            np.repeat(qid_arr[hit], [state_d[qc].size for qc in hit]),
+            np.concatenate([state_d[qc] for qc in hit]),
+            np.concatenate([state_s[qc] for qc in hit]),
         )
 
-    return scorer
+    return kernel
+
+
+_NO_HITS = (np.empty(0, object), np.empty(0, np.int64), np.empty(0, np.float64))

@@ -41,3 +41,16 @@ def tiny_index(spark, tiny_df, tmp_path_factory):
     builder = IndexBuilder(spark, d, cfg)
     counters = builder.build(tiny_df, build_id="t0")
     return d, cfg, counters
+
+
+@pytest.fixture(scope="session")
+def last_job_id(spark):
+    """Callable: the highest Spark job id so far (ids are sequential)."""
+
+    def job_id() -> int:
+        sc = spark.sparkContext
+        # the status tracker is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+    return job_id

@@ -21,8 +21,8 @@ def test_registry_lists_created_indexes(app):
 
 
 def test_query_routes_to_named_index(app):
-    hits_a = app.query("alpha", "the", k=5).collect()
-    hits_b = app.query("beta", "the", k=5).collect()
+    hits_a = app.query("alpha", "the", k=5)
+    hits_b = app.query("beta", "the", k=5)
     assert len(hits_a) == 5
     # beta indexes a subset: same query, different corpus stats
     assert [r["docid"] for r in hits_a] != [] and len(hits_b) <= 5
@@ -43,7 +43,7 @@ def test_multi_query_isolates_failures(app):
     )
     assert [r["success"] for r in res] == [True, False, True]
     assert "Invalid indexName" in res[1]["error"]
-    assert len(res[0]["hits"].collect()) == 3
+    assert len(res[0]["hits"]) == 3
 
 
 def test_delete_index_removes_and_invalidates(app):
@@ -83,7 +83,7 @@ def test_api_keys_scope_and_index_limits(app):
     # no key -> denied
     with _pytest.raises(PermissionError):
         app.query("alpha", "the", k=2)
-    assert app.query("alpha", "the", k=2, api_key=qkey).count() == 2
+    assert len(app.query("alpha", "the", k=2, api_key=qkey)) == 2
     # wrong index for the scoped key
     with _pytest.raises(PermissionError):
         app.query("beta", "the", k=2, api_key=qkey)
@@ -91,7 +91,7 @@ def test_api_keys_scope_and_index_limits(app):
     # (beta was dropped by an earlier test in this shared app fixture)
     with _pytest.raises(PermissionError):
         app.delete_index("alpha", api_key=qkey)
-    assert app.query("alpha", "the", k=2, api_key=admin).count() == 2
+    assert len(app.query("alpha", "the", k=2, api_key=admin)) == 2
     # keys.json stores only sha256 digests, never the credential
     import json as _json
 
@@ -102,4 +102,4 @@ def test_api_keys_scope_and_index_limits(app):
     with _pytest.raises(PermissionError):
         app.query("alpha", "the", k=2, api_key=qkey)
     assert app.delete_api_key(admin, api_key=admin)
-    assert app.query("alpha", "the", k=2).count() == 2
+    assert len(app.query("alpha", "the", k=2)) == 2

@@ -448,13 +448,6 @@ def test_compaction_refreshes_total_tokens(spark, crud_index, tiny_rows):
     assert stats["total_tokens"] == oracle.total_tokens
 
 
-def _flushed_last_job(spark) -> int:
-    sc = spark.sparkContext
-    # the status tracker is fed by the listener bus: drain it first
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
-
-
 # Spark jobs of the compaction below (one delta batch, no tombstones):
 # 2 docs footer reads, the docs write, the postings merge-and-write
 # (shuffle map + merge), and the dictionary's aggregate, collect and
@@ -463,15 +456,15 @@ def _flushed_last_job(spark) -> int:
 _COMPACT_MAX_JOBS = 8
 
 
-def test_compaction_merge_tasks_and_jobs_bounded(spark, crud_index):
+def test_compaction_merge_tasks_and_jobs_bounded(spark, crud_index, last_job_id):
     """compact() runs its merge in no more tasks than its postings scan
     has splits, and runs no more Spark jobs than the guard above."""
     d, cfg = crud_index
     inc = IncrementalIndexer(spark, d, cfg)
     inc.process_batch(_batch(spark, _NRT_BATCHES[0]), 0)
-    job0 = _flushed_last_job(spark)
+    job0 = last_job_id()
     inc.compact()
-    job1 = _flushed_last_job(spark)
+    job1 = last_job_id()
     assert job1 - job0 <= _COMPACT_MAX_JOBS
     tracker = spark.sparkContext.statusTracker()
     stages = sorted(
@@ -538,3 +531,112 @@ def test_compacted_dictionary_equals_bulk_build(
     got, want = rows(cat), rows(fresh)
     assert got == want
     assert [r["term_id"] for r in got] == list(range(1, len(got) + 1))
+
+
+# ------------------------------------------- driver segment cache (NRT)
+def _delta_keys(eng) -> list:
+    """Cached (segment, bucket) keys of delta segments (stamped)."""
+    return [key for key in eng._bucket_cache if key[0][1] is not None]
+
+
+def test_committed_batch_visible_to_search_local_without_refresh(spark, crud_index):
+    """A micro-batch committed after the engine warmed its cache is
+    answered by the same engine, without refresh(), and ranks like a
+    fresh engine's Spark exact path."""
+    d, cfg = crud_index
+    eng = SearchEngine(spark, d, cfg)
+    before = eng.search_local("worst best", k=100)
+    inc = IncrementalIndexer(spark, d, cfg)
+    inc.process_batch(_batch(spark, _NRT_BATCHES[0]), 0)
+    after = eng.search_local("worst best", k=100)
+    new = {doc for doc, _ in after} - {doc for doc, _ in before}
+    assert len(new) == 2  # both streamed turns hit
+    assert _delta_keys(eng)
+    want = [
+        (r["docid"], round(r["score"], 9))
+        for r in SearchEngine(spark, d, cfg)
+        .search("worst best", k=100, use_wand=False).collect()
+    ]
+    assert [(doc, round(s, 9)) for doc, s in after] == want
+
+
+def test_rerun_batch_is_served_fresh(spark, crud_index):
+    """Re-running process_batch for the same batch id with different
+    turns overwrites batch=0; the cache keys segments by their commit
+    stamp, so the warmed engine serves the new turns, not the old."""
+    d, cfg = crud_index
+    eng = SearchEngine(spark, d, cfg)
+    inc = IncrementalIndexer(spark, d, cfg)
+    first = int(inc.stats.get("max_docid", inc.stats["n_docs"])) + 1
+    inc.process_batch(
+        _batch(spark, [("zzz-nrt", 0, "user", "worst worst worst", None)]), 0
+    )
+    assert first in {doc for doc, _ in eng.search_local("worst", k=1000)}
+    old_keys = set(_delta_keys(eng))
+    inc.process_batch(
+        _batch(spark, [("zzz-nrt", 0, "user", "best best best", None)]), 0
+    )
+    assert first not in {doc for doc, _ in eng.search_local("worst", k=1000)}
+    assert first in {doc for doc, _ in eng.search_local("best", k=1000)}
+    assert not old_keys & set(_delta_keys(eng))  # stale segment dropped
+    fresh = SearchEngine(spark, d, cfg)
+    for q in ("worst", "best", "worst best"):
+        for mode in ("any", "all"):
+            assert eng.search_local(q, 10, mode) == fresh.search_local(q, 10, mode)
+
+
+def test_compact_and_refresh_leave_no_delta_entries(spark, crud_index):
+    d, cfg = crud_index
+    eng = SearchEngine(spark, d, cfg)
+    inc = IncrementalIndexer(spark, d, cfg)
+    inc.process_batch(_batch(spark, _NRT_BATCHES[1]), 0)
+    eng.search_local("this worst", k=10)
+    assert _delta_keys(eng)
+    inc.compact()
+    eng.refresh()
+    got = eng.search_local("this worst", k=10)
+    assert not _delta_keys(eng)
+    assert {key[0] for key in eng._bucket_cache} == {(eng.cat.path("postings"), None)}
+    assert got == SearchEngine(spark, d, cfg).search_local("this worst", k=10)
+
+
+def test_concurrent_lookups_keep_the_cache_consistent(spark, crud_index):
+    """8 threads of random lookups over base + delta segments under a
+    cache budget that forces evictions: every answer equals the serial
+    one and the byte count equals the live entries' bytes."""
+    import random
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    d, cfg = crud_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    for bid, rows in enumerate(_NRT_BATCHES[:2]):
+        inc.process_batch(_batch(spark, rows), bid)
+    words = ["worst", "best", "test", "this", "aaaa", "bbbb", "is", "again"]
+    rng = random.Random(7)
+    pool = [
+        (" ".join(rng.sample(words, rng.randint(1, 3))), rng.choice(["any", "all"]))
+        for _ in range(40)
+    ]
+    serial_eng = SearchEngine(spark, d, cfg)
+    serial = {qm: serial_eng.search_local(qm[0], 10, qm[1]) for qm in pool}
+    total = serial_eng._bucket_cache_bytes
+    eng = SearchEngine(spark, d, cfg.with_(local_cache_bytes=total // 3))
+    stream = [rng.choice(pool) for _ in range(800)]
+
+    def run(chunk):
+        return [(qm, eng.search_local(qm[0], 10, qm[1])) for qm in chunk]
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the threads' bookkeeping
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            parts = ex.map(run, [stream[i::8] for i in range(8)], timeout=300)
+            results = [r for part in parts for r in part]
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(results) == len(stream)
+    for qm, got in results:
+        assert got == serial[qm], qm
+    assert eng._bucket_cache_bytes == sum(e.nbytes for e in eng._bucket_cache.values())
+    assert eng._bucket_cache_bytes <= total // 3 or len(eng._bucket_cache) == 1

@@ -244,11 +244,10 @@ def test_local_fast_path_rank_identical(engine, tiny_oracle):
             (d, round(s, 6)) for d, s in engine.search_local(q, k=10)
         ]
         assert got == want, q
-    # via search() with the adaptive threshold
+    # search_local vs the Spark plan of search()
     for q in ["test", "aaaa bbbb"]:
         got = _spark_ranks(engine, q)  # distributed
-        local = engine.search(q, k=10, local_threshold=10_000)
-        got_local = [(r["docid"], round(r["score"], 6)) for r in local.collect()]
+        got_local = [(d, round(s, 6)) for d, s in engine.search_local(q, k=10)]
         assert got_local == got, q
     # latency: driver-local answers are sub-50ms after warmup
     engine.search_local("test", k=10)

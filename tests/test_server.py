@@ -11,7 +11,8 @@ import urllib.request
 
 import pytest
 
-from marlin_spark.oracle.corpus import small_corpus
+from marlin_spark.oracle.bm25 import OracleIndex, assign_docids
+from marlin_spark.oracle.corpus import VOCAB, small_corpus
 from marlin_spark.server import API_KEY_HEADER, MarlinServer
 
 
@@ -128,3 +129,90 @@ def test_clear_and_delete(srv):
         "deleted": "httpidx"
     }
     assert _call(srv, "GET", "/1/indexes", expect=200)["indexes"] == []
+
+
+# 1-, 2- and 3-word queries over head words of the small corpus
+_ORACLE_QUERIES = [" ".join(VOCAB[i] for i in ids) for ids in (
+    (0,), (3,), (1, 2), (0, 5), (2, 4, 7), (1, 3, 6),
+)]
+
+
+@pytest.fixture(scope="module")
+def oracle_idx(srv):
+    """An index of its own (the tests above end with an empty app)."""
+    _call(srv, "POST", "/1/indexes",
+          {"name": "oracleidx", "documents": _docs()}, expect=201)
+    yield OracleIndex(assign_docids(_docs()))
+    _call(srv, "DELETE", "/1/indexes/oracleidx", expect=200)
+
+
+def _hits(srv, q, mode, k=10):
+    out = _call(srv, "POST", "/1/indexes/oracleidx/query",
+                {"q": q, "hitsPerPage": k, "mode": mode}, expect=200)
+    return [(h["docid"], round(h["score"], 9)) for h in out["hits"]]
+
+
+def _want(oracle, q, mode, k=10):
+    return [(d, round(s, 9)) for d, s in oracle.search(q, k=k, mode=mode)]
+
+
+def test_http_query_matches_oracle_without_spark_job(srv, oracle_idx, last_job_id):
+    """A plain query is answered on the driver: rank-identical to the
+    oracle at 9 dp, and no Spark job runs for it."""
+    _hits(srv, _ORACLE_QUERIES[0], "any")  # engine construction
+    job0 = last_job_id()
+    for q in _ORACLE_QUERIES:
+        for mode in ("any", "all"):
+            assert _hits(srv, q, mode) == _want(oracle_idx, q, mode), (q, mode)
+    assert last_job_id() == job0
+
+
+def test_http_query_above_local_max_df_runs_on_spark(
+    srv, oracle_idx, last_job_id, monkeypatch
+):
+    """Above LOCAL_MAX_DF search_local hands the query to the Spark WAND
+    job, which answers identically."""
+    from marlin_spark.query import engine
+
+    monkeypatch.setattr(engine, "LOCAL_MAX_DF", 0)
+    job0 = last_job_id()
+    for q in _ORACLE_QUERIES[::2]:
+        for mode in ("any", "all"):
+            assert _hits(srv, q, mode) == _want(oracle_idx, q, mode), (q, mode)
+    assert last_job_id() > job0
+
+
+@pytest.mark.parametrize("field,value", [
+    ("hitsPerPage", 0), ("hitsPerPage", -1), ("k", -3), ("hitsPerPage", 1001),
+])
+def test_query_k_out_of_range_is_400(srv, oracle_idx, field, value):
+    out = _call(srv, "POST", "/1/indexes/oracleidx/query",
+                {"q": VOCAB[0], field: value}, expect=400)
+    assert "1..1000" in out["error"]
+
+
+@pytest.mark.parametrize("body", [[], "x", 3])
+def test_query_body_not_an_object_is_400(srv, oracle_idx, body):
+    out = _call(srv, "POST", "/1/indexes/oracleidx/query", body, expect=400)
+    assert "JSON object" in out["error"]
+
+
+def test_truncated_dictionary_is_500_not_an_answer(srv, oracle_idx):
+    """A damaged dictionary file fails the query loudly: no fallback
+    scan answers around it."""
+    import glob
+    import os
+
+    _call(srv, "POST", "/1/indexes",
+          {"name": "brokenidx", "documents": _docs(40)}, expect=201)
+    files = glob.glob(os.path.join(
+        srv.app.index_path("brokenidx"), "dictionary", "**", "*.parquet"),
+        recursive=True)
+    assert files
+    for f in files:
+        with open(f, "r+b") as fh:
+            fh.truncate(os.path.getsize(f) // 2)
+    out = _call(srv, "POST", "/1/indexes/brokenidx/query",
+                {"q": VOCAB[0]}, expect=500)
+    assert "hits" not in out
+    _call(srv, "DELETE", "/1/indexes/brokenidx", expect=200)

@@ -129,18 +129,12 @@ def _group(rows):
 
 
 def test_spark_fallback_lookup_caches_top_maxes(engine):
-    """The Spark-SQL dictionary fallback must cache top_maxes like the
-    arrow fast path: caching (df, None) permanently disabled theta-seed
-    pruning for any term that first entered the cache via the fallback."""
+    """The Spark-SQL dictionary scan (prefix lookups) must cache
+    top_maxes like the arrow path: caching (df, None) permanently
+    disabled theta-seed pruning for any term that first entered the
+    cache via the Spark scan."""
     engine._df_cache = {}
-    orig = engine._dictionary_lookup_arrow
-    engine._dictionary_lookup_arrow = lambda terms: (_ for _ in ()).throw(
-        RuntimeError("forced fallback")
-    )
-    try:
-        rows = engine._dictionary_lookup(["the"], [])
-    finally:
-        engine._dictionary_lookup_arrow = orig
-    assert rows and rows[0]["term"] == "the"
+    rows = engine._dictionary_lookup([], ["the"])
+    assert "the" in {r["term"] for r in rows}
     df, tm = engine._df_cache["the"]
     assert tm is not None and len(tm) >= 1 and tm[0] > 0.0
