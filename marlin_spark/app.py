@@ -20,8 +20,10 @@ stays in the per-index engines.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,6 +38,7 @@ class MarlinApp:
         self.dir = app_dir
         os.makedirs(app_dir, exist_ok=True)
         self._engines: dict[str, SearchEngine] = {}
+        self._keys_cache: tuple | None = None  # (file stamp, parsed keys)
 
     # ---------------------------------------------------------- registry
     def index_path(self, name: str) -> str:
@@ -117,13 +120,30 @@ class MarlinApp:
         return os.path.join(self.dir, "keys.json")
 
     def _load_keys(self) -> dict:
-        import json
-
+        """keys.json, parsed once per version of the file: check_key on
+        every request costs a stat, not a read and a parse. The stamp
+        holds the inode, and _write_keys replaces the file, so a write by
+        any app on this dir is seen even within one mtime tick."""
         try:
-            with open(self._keys_path()) as f:
-                return json.load(f)
+            st = os.stat(self._keys_path())
         except FileNotFoundError:
             return {}
+        stamp = (st.st_ino, st.st_mtime_ns, st.st_size)
+        cached = self._keys_cache
+        if cached is not None and cached[0] == stamp:
+            return cached[1]
+        with open(self._keys_path()) as f:
+            keys = json.load(f)
+        self._keys_cache = (stamp, keys)
+        return keys
+
+    def _write_keys(self, keys: dict) -> None:
+        """Atomic replace: a concurrent reader sees the old or the new
+        file, never a partial one."""
+        tmp = f"{self._keys_path()}.{os.getpid()}.{threading.get_ident()}.tmp"
+        with open(tmp, "w") as f:
+            json.dump(keys, f, indent=1)
+        os.replace(tmp, self._keys_path())
 
     @staticmethod
     def _hash_key(key: str) -> str:
@@ -145,7 +165,6 @@ class MarlinApp:
         key CRUD through admin-key-authenticated handlers
         (api.c:161-215); the very first key is mintable without auth
         (bootstrap, = the reference's generated master key)."""
-        import json
         import secrets
 
         self._authorize(api_key, "admin", None)
@@ -153,27 +172,23 @@ class MarlinApp:
         if bad or not scopes:
             raise ValueError(f"scopes must be among {self.SCOPES}, got {scopes}")
         key = secrets.token_hex(16)
-        keys = self._load_keys()
+        keys = dict(self._load_keys())  # the cached dict stays unchanged
         keys[self._hash_key(key)] = {
             "scopes": sorted(scopes),
             "indexes": sorted(indexes) if indexes is not None else None,
             "description": description,
         }
-        with open(self._keys_path(), "w") as f:
-            json.dump(keys, f, indent=1)
+        self._write_keys(keys)
         return key
 
     def delete_api_key(self, key: str, api_key: str | None = None) -> bool:
-        import json
-
         self._authorize(api_key, "admin", None)
-        keys = self._load_keys()
+        keys = dict(self._load_keys())
         h = self._hash_key(key)
         if h not in keys:
             return False
         del keys[h]
-        with open(self._keys_path(), "w") as f:
-            json.dump(keys, f, indent=1)
+        self._write_keys(keys)
         return True
 
     def check_key(self, key: str | None, scope: str, index: str | None = None) -> bool:

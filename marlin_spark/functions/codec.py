@@ -155,9 +155,8 @@ def decode_blocks_many(
     Returns (docids, tfs, dls, d_start) where the first three are
     doc-level arrays concatenated in input-block order and ``d_start`` is
     each block's starting index into them. Delta chains reset per block,
-    so docids are only valid within a block's segment — callers merging
-    blocks of one group get increasing docids because slabs are disjoint
-    and pre-ordered.
+    so each block's docids are exact and increasing; blocks follow one
+    another in input order.
     """
     n = np.asarray(n_docs, dtype=np.int64)
     nd_total = int(n.sum())

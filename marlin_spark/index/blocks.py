@@ -445,9 +445,13 @@ def fold_blocks(
     batch decode and one emit_blocks_vec call over every group.
 
     ``rows`` are group-contiguous by (term code ``c``, range ``r``) and
-    ordered by first_docid. The source blocks of one group cover DISJOINT
-    docid slabs, so their concatenated decoded arrays are the full sorted
-    group, and re-cutting yields the blocks a single-pass build emits.
+    ordered by first_docid. The source blocks of one group hold disjoint
+    docid sets, but not always disjoint slabs: a scan split that packs
+    several non-adjacent docs files emits partial blocks whose docid
+    spans interleave with another split's. A group whose concatenated
+    docids are not increasing is re-sorted (positions follow their
+    docs), so re-cutting always yields the blocks a single-pass build
+    emits.
     ``deleted``: sorted int64 tombstone docids, dropped before re-cutting.
     A ``bucket`` column of ``pdf`` is carried to the output blocks.
 
@@ -467,6 +471,14 @@ def fold_blocks(
     positions = decode_positions_many(posx, tfs)
     codes = np.repeat(c, nd)
     rids = np.repeat(r, nd)
+    same = (codes[1:] == codes[:-1]) & (rids[1:] == rids[:-1])
+    if (same & (docids[1:] <= docids[:-1])).any():
+        o = np.lexsort((docids, np.cumsum(np.append(True, ~same))))
+        tf_o = tfs[o]
+        src = (np.cumsum(tfs) - tfs)[o]
+        dst = np.cumsum(tf_o) - tf_o
+        positions = positions[np.repeat(src - dst, tf_o) + np.arange(tf_o.sum())]
+        docids, tfs, dls = docids[o], tf_o, dls[o]
     if deleted is not None and deleted.size and docids.size:
         idx = np.minimum(np.searchsorted(deleted, docids), deleted.size - 1)
         keep = deleted[idx] != docids

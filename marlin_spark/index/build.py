@@ -44,6 +44,7 @@ partition overwrite is idempotent.
 
 from __future__ import annotations
 
+import contextlib
 import time
 from typing import Callable
 
@@ -196,7 +197,16 @@ class IndexBuilder:
         )
         phases["plan"] = round(time.time() - t, 2)
         t = time.time()
-        self.cat.write(docs, "docs", options={"parquet.block.size": rg_bytes})
+        # over sorted source files, a scan task must read ONE file: Spark
+        # packs small files into a task largest first, which would write
+        # non-adjacent docid slabs, out of order, into one docs file.
+        # An open cost of a whole split stops the packing.
+        one_file_per_task = contextlib.nullcontext() if persisted else _conf(
+            self.spark, "spark.sql.files.openCostInBytes",
+            self.spark.conf.get("spark.sql.files.maxPartitionBytes"),
+        )
+        with one_file_per_task:
+            self.cat.write(docs, "docs", options={"parquet.block.size": rg_bytes})
         phases["write_job"] = round(time.time() - t, 2)
         t = time.time()
         if persisted:

@@ -155,8 +155,8 @@ def dense_ids_over_sorted_files(
     read->write pass: no sampling job, no range shuffle, no persist, no
     per-partition count job. Rows must be sorted by ``order_cols``
     WITHIN each file (parquet footers cannot attest intra-row-group
-    order); callers opt in only for tables they staged sorted, and the
-    driver's docid-assignment oracle cross-checks the contract.
+    order, and nothing checks it at build time): callers opt in only
+    for tables they staged sorted.
 
     Returns None when the layout proof fails (caller falls back).
     """

@@ -24,9 +24,9 @@ each query's top-k threshold THETA carried across ranges:
   emit — the classic per-block WAND pivot needs doc-at-a-time cursors, a
   scalar loop that belongs in native code, not in a Python executor).
 - surviving ranges decode (docids, tfs, dls) in one varbyte pass — the
-  positions column is never read (parquet column pruning) — and score
-  vectorized, with MaxScore candidate selection inside the range (see
-  make_batch_wand_kernel).
+  positions column is never read (parquet column pruning) — and each
+  query scores the range set-at-a-time in a dense accumulator over the
+  range's docid span (see make_batch_wand_kernel).
 
 Reference analog: the fast-rank partial scan + early termination
 (/root/reference/src/main/docrank.c:478-574); ours prunes with provable
@@ -43,6 +43,9 @@ import pandas as pd
 from marlin_spark.functions.codec import decode_blocks_many
 
 _EPS = 1e-9
+# docids one doc range may span (range_size is far below it): the dense
+# accumulator of a wider range would be a damaged index's allocation
+_MAX_SPAN = 1 << 24
 
 
 def _mask_deleted(docids: np.ndarray, deleted: np.ndarray | None) -> np.ndarray | None:
@@ -147,26 +150,27 @@ def make_batch_wand_kernel(
     slots group prefix expansions with their source word, so mode='all'
     requires ``n_slots[query_id]`` DISTINCT slots per doc. Each block is
     decoded ONCE per range and the decoded (docids, core) arrays are
-    shared by every query that references the term. Three pruning
-    layers, all exact:
+    shared by every query that references the term.
+
+    Pruning is exact at two levels:
 
     - range level (block-max): a query skips a whole range when its
       upper bound there cannot beat its running theta (vectorized for
       all queries at once via bincount over term->query incidence);
-    - term level (MaxScore, Turtle & Flood 1995): within a range, terms
-      are split per query into essential / non-essential by cumulative
-      upper bound against theta — candidate docs come ONLY from
-      essential postings; non-essential terms cannot lift a doc that
-      appears in none of the essential lists above theta, but their
-      exact contributions to surviving candidates are gathered by
-      binary search into the term's (sorted) decoded docids;
-    - candidate level: scored candidates below theta - 2e-9 are dropped
+    - candidate level: docs scoring below theta - 2e-9 are dropped
       before the top-k merge (2e-9 > one 9-decimal rounding step, so no
       rounded-tie winner is lost).
 
-    Float exactness: every candidate's score accumulates term-ascending
-    (zeros + t1 + t2 + ...; 0.0 + x == x in IEEE), the same order as the
-    oracle's term-sorted sum.
+    Scoring: each surviving (query, range) gets a float64 array over the
+    range's docid span; every query term's idf * core is scatter-added at
+    its docids, and the candidates are the nonzero slots (8 B per doc
+    of the span, transient). mode='all' keeps the docs whose boolean
+    hit array is set for every slot.
+
+    Float exactness: terms are added in ascending order, so every score
+    is zeros + t1 + t2 + ... (0.0 + x == x in IEEE), the same order as
+    the oracle's term-sorted sum. A term lists a docid once, so the
+    scatter never collides.
 
     ``deleted``: sorted int64 tombstone docids, masked out right after
     block decode so a deleted doc can neither score nor occupy a top-k
@@ -205,13 +209,6 @@ def make_batch_wand_kernel(
             qc = qcode_of.get(qid)
             if qc is not None:
                 seed_arr[qc] = sv
-    # per-query: terms ascending with aligned idf/slot arrays
-    q_terms: list[list] = [None] * nq
-    ns_arr = np.zeros(nq, np.int64)
-    for qid, meta in query_metas.items():
-        qc = qcode_of[qid]
-        q_terms[qc] = [(t, meta[t][0], meta[t][1]) for t in sorted(meta)]
-        ns_arr[qc] = n_slots.get(qid, 0)
     # term -> (qcodes, idfs) for the vectorized range-level bound
     tmp: dict[str, list] = {}
     for qid, meta in query_metas.items():
@@ -230,16 +227,23 @@ def make_batch_wand_kernel(
     term_arr = np.array(sorted(by_term), dtype=object)
     code_of = {t: i for i, t in enumerate(term_arr)}
     idf_max = np.array([by_term[t][1].max() for t in term_arr])
+    # per-query: (term code, idf, slot), terms ascending
+    q_terms: list[list] = [None] * nq
+    ns_arr = np.zeros(nq, np.int64)
+    for qid, meta in query_metas.items():
+        qc = qcode_of[qid]
+        q_terms[qc] = [(code_of[t], *meta[t]) for t in sorted(meta)]
+        ns_arr[qc] = n_slots.get(qid, 0)
 
     def kernel(blk) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         if blk is None:
             return _NO_HITS
-        # (range, term, block) order on integer term codes: sorting the
-        # string column costs a quarter of a small query's kernel time
+        # (range, term) order on integer term codes: sorting the string
+        # column costs a quarter of a small query's kernel time
         term_col = np.asarray(blk["term"])
         tc_a = np.fromiter(map(code_of.__getitem__, term_col), np.int64, term_col.size)
         rid_a = np.asarray(blk["range_id"])
-        o = np.lexsort((np.asarray(blk["block_id"]), tc_a, rid_a))
+        o = np.lexsort((tc_a, rid_a))
         rid_a, tc_a = rid_a[o], tc_a[o]
         nd_a = np.asarray(blk["n_docs"])[o]
         mtf_a = np.asarray(blk["max_tfnorm"], dtype=np.float64)[o]
@@ -298,116 +302,69 @@ def make_batch_wand_kernel(
             d_all, tf_all, dl_all, _ = decode_blocks_many(
                 list(posts_a[blk_sl][keep_blk]), nd_kept
             )
+            # postings per needed term: decoded runs are term-ascending
+            cnt_kept = t_cnt[needed]
+            nd_t = np.add.reduceat(nd_kept, np.cumsum(cnt_kept) - cnt_kept)
+            kmask = _mask_deleted(d_all, deleted)
+            if kmask is not None:
+                nd_t = np.bincount(
+                    np.repeat(np.arange(nd_t.size), nd_t)[kmask],
+                    minlength=nd_t.size,
+                )
+                d_all, tf_all, dl_all = d_all[kmask], tf_all[kmask], dl_all[kmask]
             if d_all.size == 0:
                 continue
-            kmask = _mask_deleted(d_all, deleted)
             tfn = tf_all.astype(np.float64)
             core_all = tfn * (k1 + 1.0) / (
                 tfn + norm_c + norm_s * dl_all.astype(np.float64)
             )
-            decoded: dict[str, tuple] = {}
-            tdoc = np.concatenate(([0], np.cumsum(nd_kept)))
-            # a term's run may mix segments (base + uncompacted deltas)
-            # whose block_ids each restart at 0, so block order is not
-            # always docid order; a run with a docid descent is re-sorted
-            # (the candidate gather binary-searches each term's docids)
-            desc = np.flatnonzero(d_all[1:] < d_all[:-1]) + 1
-            cnt_kept = t_cnt[needed]
-            pos = 0
-            blk_i = 0
-            for ti in np.flatnonzero(needed):
-                nb_t = cnt_kept[pos]
-                lo, hi = tdoc[blk_i], tdoc[blk_i + nb_t]
-                d_t, c_t = d_all[lo:hi], core_all[lo:hi]
-                if kmask is not None:
-                    kk = kmask[lo:hi]
-                    d_t, c_t = d_t[kk], c_t[kk]
-                if desc.size and (
-                    np.searchsorted(desc, hi) > np.searchsorted(desc, lo, "right")
-                ):
-                    o_t = np.argsort(d_t, kind="stable")
-                    d_t, c_t = d_t[o_t], c_t[o_t]
-                if d_t.size:
-                    decoded[terms_r[ti]] = (d_t, c_t)
-                pos += 1
-                blk_i += nb_t
-            if not decoded:
-                continue
-            tmax_d = {terms_r[i]: tmax_r[i] for i in range(terms_r.size)}
+            # dense slots over the range's docid span; a scatter needs no
+            # docid order, so blocks of several segments mix freely
+            base = d_all.min()
+            off_all = d_all - base
+            span = int(off_all.max()) + 1
+            if span > _MAX_SPAN:
+                raise RuntimeError(
+                    f"doc range {rid_a[t_starts[s_lo]]} spans {span} docids; "
+                    "its posting blocks are damaged"
+                )
+            t_end = np.cumsum(nd_t)
+            span_of = dict(zip(
+                tc_slot[s_lo:s_hi][needed].tolist(),
+                zip((t_end - nd_t).tolist(), t_end.tolist()),
+            ))
             for qc in np.flatnonzero(active):
-                present = [
-                    (t, idf, slot)
-                    for t, idf, slot in q_terms[qc]
-                    if t in decoded
-                ]
+                present = []
+                for code, idf, slot in q_terms[qc]:
+                    lo, hi = span_of.get(code, (0, 0))
+                    if hi > lo:
+                        present.append((lo, hi, idf, slot))
                 if not present:
                     continue
-                th = th_eff[qc]
-                if want_slots and len({slot for _t, _i, slot in present}) < ns_arr[qc]:
+                if want_slots and len({p[3] for p in present}) < ns_arr[qc]:
                     continue  # too few distinct slots in this range
-                if len(present) == 1:
-                    t, idf, slot = present[0]
-                    d_t, c_t = decoded[t]
-                    cand_d = d_t
-                    cand_s = idf * c_t
-                else:
-                    # MaxScore split: largest LOW-bound prefix whose
-                    # cumulative upper bound stays under theta is
-                    # non-essential — candidates come from the rest
-                    ubs_t = [idf * tmax_d[t] for t, idf, _ in present]
-                    o_asc = sorted(range(len(present)), key=lambda i: ubs_t[i])
-                    cum = 0.0
-                    non_ess = set()
-                    if th > -np.inf:
-                        for i in o_asc:
-                            cum += ubs_t[i]
-                            if cum < th - _EPS:
-                                non_ess.add(i)
-                            else:
-                                break
-                    ess = [i for i in range(len(present)) if i not in non_ess]
-                    if not ess:
-                        continue
-                    if len(ess) == 1:
-                        cand_d = decoded[present[ess[0]][0]][0]
-                    else:
-                        cand_d = np.unique(
-                            np.concatenate(
-                                [decoded[present[i][0]][0] for i in ess]
-                            )
-                        )
-                    if cand_d.size == 0:
-                        continue
-                    cand_s = np.zeros(cand_d.size)
-                    # per slot: does the candidate hold ANY of the slot's
-                    # terms? Prefix expansions share their word's slot, so
-                    # mode='all' counts distinct slots, never hitting terms
+                # terms ascending: each doc's sum is zeros + t1 + t2 + ...
+                # (docids are unique within a term, so += never collides)
+                score = np.zeros(span)
+                for lo, hi, idf, _slot in present:
+                    score[off_all[lo:hi]] += idf * core_all[lo:hi]
+                floor = th_eff[qc] - 2.0 * _EPS
+                keep = score >= floor if floor > 0 else score > 0
+                if want_slots:
+                    # a doc must hold every slot; prefix expansions share
+                    # their word's slot, so any one of them satisfies it
                     slot_hit: dict[int, np.ndarray] = {}
-                    only_ess = len(ess) == 1
-                    for i, (t, idf, slot) in enumerate(present):
-                        d_t, c_t = decoded[t]
-                        if only_ess and i == ess[0]:
-                            cand_s += idf * c_t  # aligned: cand_d IS d_t
-                            hit = np.ones(cand_d.size, bool)
-                        else:
-                            p = np.searchsorted(d_t, cand_d)
-                            p[p >= d_t.size] = d_t.size - 1
-                            hit = d_t[p] == cand_d
-                            cand_s[hit] += idf * c_t[p[hit]]
-                        if want_slots:
-                            prev = slot_hit.get(slot)
-                            slot_hit[slot] = hit if prev is None else prev | hit
-                    if want_slots:
-                        n_hit = np.sum(list(slot_hit.values()), axis=0)
-                        okm = n_hit >= ns_arr[qc]
-                        cand_d, cand_s = cand_d[okm], cand_s[okm]
-                        if cand_d.size == 0:
-                            continue
-                if th > -np.inf:
-                    keepm = cand_s >= th - 2.0 * _EPS
-                    cand_d, cand_s = cand_d[keepm], cand_s[keepm]
-                    if cand_d.size == 0:
-                        continue
+                    for lo, hi, _idf, slot in present:
+                        hit = slot_hit.get(slot)
+                        if hit is None:
+                            hit = slot_hit[slot] = np.zeros(span, bool)
+                        hit[off_all[lo:hi]] = True
+                    for hit in slot_hit.values():
+                        keep &= hit
+                cand = np.flatnonzero(keep)
+                if cand.size == 0:
+                    continue
+                cand_d, cand_s = cand + base, score[cand]
                 sd, ss = state_d[qc], state_s[qc]
                 if sd is not None:
                     cand_d = np.concatenate([sd, cand_d])

@@ -103,3 +103,28 @@ def test_api_keys_scope_and_index_limits(app):
         app.query("alpha", "the", k=2, api_key=qkey)
     assert app.delete_api_key(admin, api_key=admin)
     assert len(app.query("alpha", "the", k=2)) == 2
+
+
+def test_keys_written_by_another_app_take_effect(app, spark, monkeypatch):
+    """check_key parses keys.json once per version of the file, and keys
+    minted or revoked through a second MarlinApp on the same dir apply
+    to the first at once."""
+    import json
+
+    other = MarlinApp(spark, app.dir)
+    assert app.check_key(None, "query")
+    admin = other.create_api_key(scopes=("admin",))
+    assert not app.check_key(None, "query")
+    assert app.check_key(admin, "query", "alpha")
+    qkey = other.create_api_key(scopes=("query",), api_key=admin)
+    assert app.check_key(qkey, "query")
+    loads = []
+    real = json.load
+    monkeypatch.setattr(json, "load", lambda f: loads.append(1) or real(f))
+    for _ in range(20):
+        assert app.check_key(qkey, "query")
+    assert loads == []  # unchanged file: served from the cache
+    assert other.delete_api_key(qkey, api_key=admin)
+    assert not app.check_key(qkey, "query")
+    assert other.delete_api_key(admin, api_key=admin)
+    assert app.check_key(None, "query")

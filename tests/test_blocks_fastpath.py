@@ -33,6 +33,7 @@ from marlin_spark.functions.codec import vb_decode, vb_encode_with_sizes
 from marlin_spark.index.blocks import (
     BLOCK_SCHEMA,
     _OUT_COLS,
+    make_block_merger,
     make_doc_range_builder,
 )
 from marlin_spark.index.build import IndexBuilder
@@ -105,6 +106,30 @@ def test_fast_path_spans_range_boundaries():
     slow = _run_builder(pdf, force_generic=True)
     assert fast["range_id"].nunique() > 3
     assert fast["postings"].tolist() == slow["postings"].tolist()
+
+
+def test_merger_folds_interleaved_splits():
+    """A scan split may pack non-adjacent docs files, largest first:
+    here docs 61-90 then 1-30 in one split, 31-60 in another. The
+    partial blocks of one (term, range) group then interleave, and the
+    merger must still emit the blocks of one builder pass over all
+    docs, positions included."""
+    pdf = _corpus(90, seed=5)
+    splits = [pd.concat([pdf.iloc[60:], pdf.iloc[:30]]), pdf.iloc[30:60]]
+    partial = pd.concat(
+        [_run_builder(sp, force_generic=False, range_size=128) for sp in splits],
+        ignore_index=True,
+    )
+    partial["bucket"] = 0
+    merger = make_block_merger(1.2, 0.75, 6.0, 4)
+    got = (
+        pd.concat(list(merger(iter([partial]))), ignore_index=True)
+        .sort_values(_KEY).reset_index(drop=True)
+    )
+    want = _run_builder(pdf, force_generic=False, range_size=128)
+    assert len(got) == len(want)
+    for col in _OUT_COLS:
+        assert got[col].tolist() == want[col].tolist(), col
 
 
 def test_vb_encode_uint32_input_identical():

@@ -585,6 +585,48 @@ def test_rerun_batch_is_served_fresh(spark, crud_index):
             assert eng.search_local(q, 10, mode) == fresh.search_local(q, 10, mode)
 
 
+def test_rerun_batch_is_served_fresh_on_spark_paths(spark, crud_index):
+    """The Spark plans read the postings DataFrame the engine caches, and
+    Spark keeps its own listing of each delta dir. After process_batch
+    re-runs batch 0 with different turns, the same engine's Spark WAND
+    and exact paths and a hydrated app query serve the new turn."""
+    import os
+
+    from marlin_spark.app import MarlinApp
+
+    d, cfg = crud_index
+    app = MarlinApp(spark, os.path.dirname(d))
+    name = os.path.basename(d)
+    eng = app.get_index(name)
+    inc = IncrementalIndexer(spark, d, cfg)
+    first = int(inc.stats.get("max_docid", inc.stats["n_docs"])) + 1
+
+    def spark_ids(q: str, use_wand: bool) -> set:
+        return {r["docid"] for r in eng.search(q, k=1000, use_wand=use_wand).collect()}
+
+    def hydrated(q: str) -> dict:
+        return {r["docid"]: r["text"] for r in app.query(name, q, k=100, hydrate=True)}
+
+    inc.process_batch(
+        _batch(spark, [("zzz-nrt", 0, "user", "worst worst worst", None)]), 0
+    )
+    for use_wand in (True, False):
+        assert first in spark_ids("worst", use_wand)
+    assert hydrated("worst")[first] == "worst worst worst"
+    inc.process_batch(
+        _batch(spark, [("zzz-nrt", 0, "user", "best best best", None)]), 0
+    )
+    for use_wand in (True, False):
+        assert first not in spark_ids("worst", use_wand), use_wand
+        assert first in spark_ids("best", use_wand), use_wand
+    assert first not in hydrated("worst")
+    assert hydrated("best")[first] == "best best best"
+    fresh = SearchEngine(spark, d, cfg)
+    for q in ("worst", "best", "worst best"):
+        got = [(r["docid"], r["score"]) for r in eng.search(q, k=10).collect()]
+        assert got == [(r["docid"], r["score"]) for r in fresh.search(q, k=10).collect()]
+
+
 def test_compact_and_refresh_leave_no_delta_entries(spark, crud_index):
     d, cfg = crud_index
     eng = SearchEngine(spark, d, cfg)

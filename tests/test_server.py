@@ -216,3 +216,75 @@ def test_truncated_dictionary_is_500_not_an_answer(srv, oracle_idx):
                 {"q": VOCAB[0]}, expect=500)
     assert "hits" not in out
     _call(srv, "DELETE", "/1/indexes/brokenidx", expect=200)
+
+
+# ------------------------------------------------ request thread pool
+def test_handler_threads_are_a_fixed_pool(srv, oracle_idx, monkeypatch):
+    """50 requests from 8 concurrent clients run on at most POOL_THREADS
+    long-lived threads, not one new thread each."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from marlin_spark.server import POOL_THREADS
+
+    seen = set()
+    real = srv.query
+
+    def query(*args):
+        seen.add(threading.get_ident())
+        return real(*args)
+
+    monkeypatch.setattr(srv, "query", query)
+    q = _ORACLE_QUERIES[2]
+    want = _want(oracle_idx, q, "any")
+    with ThreadPoolExecutor(8) as ex:
+        got = list(ex.map(lambda _i: _hits(srv, q, "any"), range(50)))
+    assert got == [want] * 50
+    assert 1 <= len(seen) <= POOL_THREADS
+
+
+def test_stop_ends_every_pool_thread(spark, tmp_path):
+    import threading
+
+    s = MarlinServer(spark, str(tmp_path / "app"), port=0).start()
+    threads = []
+    real = s.list_indexes
+
+    def list_indexes(key):
+        threads.append(threading.current_thread())
+        return real(key)
+
+    s.list_indexes = list_indexes
+    for _ in range(5):
+        assert _call(s, "GET", "/1/indexes", expect=200) == {"indexes": []}
+    s.stop()
+    assert threads and not any(t.is_alive() for t in threads)
+
+
+def test_slow_spark_request_does_not_block_a_plain_query(srv, oracle_idx, monkeypatch):
+    """A hydrated query (a Spark job) held in flight leaves pool threads
+    for a concurrent plain query, which answers while it waits."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    eng = srv.app.get_index("oracleidx")
+    entered, release = threading.Event(), threading.Event()
+    real = eng.hydrate
+
+    def hydrate(hits):
+        entered.set()
+        release.wait(60)
+        return real(hits)
+
+    monkeypatch.setattr(eng, "hydrate", hydrate)
+    q = _ORACLE_QUERIES[1]
+    with ThreadPoolExecutor(1) as ex:
+        slow = ex.submit(_call, srv, "POST", "/1/indexes/oracleidx/query",
+                         {"q": q, "k": 3, "hydrate": True}, None, 200)
+        try:
+            assert entered.wait(60)
+            assert _hits(srv, q, "any") == _want(oracle_idx, q, "any")
+            assert not slow.done()
+        finally:
+            release.set()
+        assert all("text" in h for h in slow.result(timeout=120)["hits"])
