@@ -38,7 +38,7 @@ class MarlinApp:
         self.dir = app_dir
         os.makedirs(app_dir, exist_ok=True)
         self._engines: dict[str, SearchEngine] = {}
-        self._keys_cache: tuple | None = None  # (file stamp, parsed keys)
+        self._keys_cache: tuple | None = None  # (file bytes, parsed keys)
 
     # ---------------------------------------------------------- registry
     def index_path(self, name: str) -> str:
@@ -120,21 +120,21 @@ class MarlinApp:
         return os.path.join(self.dir, "keys.json")
 
     def _load_keys(self) -> dict:
-        """keys.json, parsed once per version of the file: check_key on
-        every request costs a stat, not a read and a parse. The stamp
-        holds the inode, and _write_keys replaces the file, so a write by
-        any app on this dir is seen even within one mtime tick."""
+        """keys.json, parsed once per content of the file: check_key on
+        every request costs a read, not a parse. The bytes themselves are
+        the cache key, so a write by any app on this dir is seen at once
+        (a stat stamp can repeat: a freed inode is reused, and two writes
+        of one size may share an mtime tick)."""
         try:
-            st = os.stat(self._keys_path())
+            with open(self._keys_path(), "rb") as f:
+                raw = f.read()
         except FileNotFoundError:
             return {}
-        stamp = (st.st_ino, st.st_mtime_ns, st.st_size)
         cached = self._keys_cache
-        if cached is not None and cached[0] == stamp:
+        if cached is not None and cached[0] == raw:
             return cached[1]
-        with open(self._keys_path()) as f:
-            keys = json.load(f)
-        self._keys_cache = (stamp, keys)
+        keys = json.loads(raw)
+        self._keys_cache = (raw, keys)
         return keys
 
     def _write_keys(self, keys: dict) -> None:

@@ -25,8 +25,9 @@ each query's top-k threshold THETA carried across ranges:
   scalar loop that belongs in native code, not in a Python executor).
 - surviving ranges decode (docids, tfs, dls) in one varbyte pass — the
   positions column is never read (parquet column pruning) — and each
-  query scores the range set-at-a-time in a dense accumulator over the
-  range's docid span (see make_batch_wand_kernel).
+  query scores the range set-at-a-time in one accumulator: over the
+  range's docid span when its postings fill it densely, else over their
+  distinct docids (see make_batch_wand_kernel).
 
 Reference analog: the fast-rank partial scan + early termination
 (/root/reference/src/main/docrank.c:478-574); ours prunes with provable
@@ -43,9 +44,15 @@ import pandas as pd
 from marlin_spark.functions.codec import decode_blocks_many
 
 _EPS = 1e-9
-# docids one doc range may span (range_size is far below it): the dense
-# accumulator of a wider range would be a damaged index's allocation
+# docids one doc range may span (range_size is far below it): a wider
+# range is a damaged index, not a range to allocate an accumulator for
 _MAX_SPAN = 1 << 24
+# a multi-term (query, range) is scored over the range's docid span while
+# the span is at most this many times the query's postings there, else
+# over their distinct docids. A dense pass costs ~1 ns per docid of the span, the
+# sort of the distinct docids ~10-20 ns per posting plus a fixed ~10 us;
+# 16, 32 and 64 measured within noise of each other on a 1M-doc index
+_DENSE_SPAN_PER_POSTING = 32
 
 
 def _mask_deleted(docids: np.ndarray, deleted: np.ndarray | None) -> np.ndarray | None:
@@ -161,11 +168,16 @@ def make_batch_wand_kernel(
       before the top-k merge (2e-9 > one 9-decimal rounding step, so no
       rounded-tie winner is lost).
 
-    Scoring: each surviving (query, range) gets a float64 array over the
-    range's docid span; every query term's idf * core is scatter-added at
-    its docids, and the candidates are the nonzero slots (8 B per doc
-    of the span, transient). mode='all' keeps the docs whose boolean
-    hit array is set for every slot.
+    Scoring: each surviving (query, range) gets one float64 accumulator,
+    and every query term's idf * core is scatter-added at its docids'
+    cells. A lone term's postings are their own cells. Otherwise the
+    cells are the range's docid span while that span is at most
+    _DENSE_SPAN_PER_POSTING times the query's postings there (head terms;
+    8 B per doc of the span, transient), else the sorted distinct docids
+    of its postings, each term's found by binary search (rare terms in a
+    wide range, or a sparse query in a batch whose other queries widen
+    the span). The candidates are the cells at or above theta - 2e-9;
+    mode='all' keeps those whose boolean hit array is set for every slot.
 
     Float exactness: terms are added in ascending order, so every score
     is zeros + t1 + t2 + ... (0.0 + x == x in IEEE), the same order as
@@ -299,12 +311,22 @@ def make_batch_wand_kernel(
             keep_blk = np.repeat(needed, t_cnt)
             blk_sl = slice(t_starts[s_lo], t_starts[s_lo] + t_cnt.sum())
             nd_kept = np.asarray(nd_a[blk_sl][keep_blk], np.int64)
-            d_all, tf_all, dl_all, _ = decode_blocks_many(
+            d_all, tf_all, dl_all, d_first = decode_blocks_many(
                 list(posts_a[blk_sl][keep_blk]), nd_kept
             )
             # postings per needed term: decoded runs are term-ascending
             cnt_kept = t_cnt[needed]
             nd_t = np.add.reduceat(nd_kept, np.cumsum(cnt_kept) - cnt_kept)
+            # the range's lowest and highest docid, from its blocks' first
+            # and last (a block's docids ascend; dropping tombstones below
+            # only narrows them)
+            base = int(d_all[d_first].min())
+            span = int(d_all[d_first + nd_kept - 1].max()) - base + 1
+            if span > _MAX_SPAN:
+                raise RuntimeError(
+                    f"doc range {rid_a[t_starts[s_lo]]} spans {span} docids; "
+                    "its posting blocks are damaged"
+                )
             kmask = _mask_deleted(d_all, deleted)
             if kmask is not None:
                 nd_t = np.bincount(
@@ -318,53 +340,61 @@ def make_batch_wand_kernel(
             core_all = tfn * (k1 + 1.0) / (
                 tfn + norm_c + norm_s * dl_all.astype(np.float64)
             )
-            # dense slots over the range's docid span; a scatter needs no
-            # docid order, so blocks of several segments mix freely
-            base = d_all.min()
-            off_all = d_all - base
-            span = int(off_all.max()) + 1
-            if span > _MAX_SPAN:
-                raise RuntimeError(
-                    f"doc range {rid_a[t_starts[s_lo]]} spans {span} docids; "
-                    "its posting blocks are damaged"
-                )
             t_end = np.cumsum(nd_t)
-            span_of = dict(zip(
+            run_of = dict(zip(
                 tc_slot[s_lo:s_hi][needed].tolist(),
                 zip((t_end - nd_t).tolist(), t_end.tolist()),
             ))
             for qc in np.flatnonzero(active):
                 present = []
                 for code, idf, slot in q_terms[qc]:
-                    lo, hi = span_of.get(code, (0, 0))
+                    lo, hi = run_of.get(code, (0, 0))
                     if hi > lo:
                         present.append((lo, hi, idf, slot))
                 if not present:
                     continue
                 if want_slots and len({p[3] for p in present}) < ns_arr[qc]:
                     continue  # too few distinct slots in this range
-                # terms ascending: each doc's sum is zeros + t1 + t2 + ...
-                # (docids are unique within a term, so += never collides)
-                score = np.zeros(span)
-                for lo, hi, idf, _slot in present:
-                    score[off_all[lo:hi]] += idf * core_all[lo:hi]
+                if len(present) == 1:  # a lone term's postings are its docs
+                    lo, hi, idf, _slot = present[0]
+                    acc_docs, at = d_all[lo:hi], None
+                    score = idf * core_all[lo:hi]  # == 0.0 + idf * core
+                else:
+                    # accumulator cells: the range's docid span while the
+                    # query's postings fill it densely enough, else their
+                    # distinct docids. A scatter needs no docid order, so
+                    # blocks of several segments mix freely
+                    if span <= _DENSE_SPAN_PER_POSTING * sum(p[1] - p[0] for p in present):
+                        acc_docs, n_acc = None, span
+                        at = [d_all[p[0]:p[1]] - base for p in present]
+                    else:
+                        docs = [d_all[p[0]:p[1]] for p in present]
+                        acc_docs = np.unique(np.concatenate(docs))
+                        at = [np.searchsorted(acc_docs, d) for d in docs]
+                        n_acc = acc_docs.size
+                    # terms ascending: each doc's sum is zeros + t1 + t2 + ...
+                    # (docids are unique within a term, so += never collides)
+                    score = np.zeros(n_acc)
+                    for a, p in zip(at, present):
+                        score[a] += p[2] * core_all[p[0]:p[1]]
                 floor = th_eff[qc] - 2.0 * _EPS
                 keep = score >= floor if floor > 0 else score > 0
-                if want_slots:
+                if want_slots and at is not None:
                     # a doc must hold every slot; prefix expansions share
                     # their word's slot, so any one of them satisfies it
                     slot_hit: dict[int, np.ndarray] = {}
-                    for lo, hi, _idf, slot in present:
-                        hit = slot_hit.get(slot)
+                    for a, p in zip(at, present):
+                        hit = slot_hit.get(p[3])
                         if hit is None:
-                            hit = slot_hit[slot] = np.zeros(span, bool)
-                        hit[off_all[lo:hi]] = True
+                            hit = slot_hit[p[3]] = np.zeros(score.size, bool)
+                        hit[a] = True
                     for hit in slot_hit.values():
                         keep &= hit
                 cand = np.flatnonzero(keep)
                 if cand.size == 0:
                     continue
-                cand_d, cand_s = cand + base, score[cand]
+                cand_d = cand + base if acc_docs is None else acc_docs[cand]
+                cand_s = score[cand]
                 sd, ss = state_d[qc], state_s[qc]
                 if sd is not None:
                     cand_d = np.concatenate([sd, cand_d])

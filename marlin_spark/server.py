@@ -12,13 +12,16 @@ per-index SearchEngine — the HTTP layer adds no data-plane logic, so
 the 100-TB execution story is unchanged. A plain top-k query is
 answered on the driver by SearchEngine.search_local from its segment
 cache, without a Spark job; match-all, filtered, hydrated and very
-high-df queries run as Spark jobs. Requests run on a fixed pool of
-long-lived handler threads (POOL_THREADS, the reference's search pool
-size): a new thread per request cost more than a driver lookup's own
-fixed work. The engine's segment cache is shared under a lock, and for
-the queries that do run on Spark its scheduler (FAIR-capable) is the
-concurrency layer; the reference's h2o loop plays the same front-door
-role in front of its single writer.
+high-df queries run as Spark jobs. One event-loop thread accepts
+connections and hands each, once its request bytes have arrived, to a
+fixed pool of long-lived handler threads (POOL_THREADS, the reference's
+search pool size): a new thread per request cost more than a driver
+lookup's own fixed work. A request that may run a Spark job (an index
+write, a multi-index or a hydrated query) is answered on a thread of its
+own, so it never queues plain lookups behind it. The engine's segment
+cache is shared under a lock, and for the queries that do run on Spark
+its scheduler (FAIR-capable) is the concurrency layer; the reference's
+h2o loop plays the same front-door role in front of its single writer.
 
 Writes serialize through one lock (the reference's serial write pipeline,
 src/main/sindex.c single writer); queries run concurrently.
@@ -28,9 +31,11 @@ from __future__ import annotations
 
 import json
 import os
+import selectors
 import threading
+import time
 from concurrent.futures import ThreadPoolExecutor
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler, HTTPServer
 from typing import Any
 
 from pyarrow import ArrowException
@@ -42,6 +47,8 @@ API_KEY_HEADER = "x-marlin-rest-api-key"  # api.h M_API_KEY
 # request handler threads: the reference sizes its search pool at
 # 1.5 x cores + 1 (marlin.c:37-44)
 POOL_THREADS = int(1.5 * (os.cpu_count() or 1)) + 1
+# a connection that sends nothing for this long is closed unanswered
+IDLE_S = 30
 
 _TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -49,23 +56,76 @@ _TRANSCRIPT_SCHEMA = (
 )
 
 
-class _PooledHTTPServer(ThreadingHTTPServer):
-    """ThreadingHTTPServer whose requests run on a fixed pool of
-    long-lived threads instead of one new thread each. The executor
-    starts a thread only when none is idle, so a lone client is served
-    by one thread. Serving it round-robin from every pool thread (each
-    blocked in accept()) cut ~0.2 ms per request but grew the driver's
-    peak RSS by 16-18 MB on the benchmark, likely one malloc arena per
-    thread."""
+class _PooledHTTPServer(HTTPServer):
+    """HTTP/1.0 server whose event-loop thread (serve_forever) accepts
+    connections and waits, in one selector, until each has request bytes
+    to read; only then does a pool thread read and answer it. A client
+    that connects and stays silent holds no pool thread, and is dropped
+    after IDLE_S. A handler that leaves a ``deferred`` answer (a request
+    that may run a Spark job) is finished on a thread of its own, so the
+    pool thread is free again at once. The executor starts a thread only
+    when none is idle, so a lone client is served by one thread."""
 
     def __init__(self, addr, handler):
         super().__init__(addr, handler)
         self.pool = ThreadPoolExecutor(POOL_THREADS, "marlin-http")
+        self._stopping = False
+        self._stopped = threading.Event()
 
-    def process_request(self, request, client_address):
-        self.pool.submit(self.process_request_thread, request, client_address)
+    def serve_forever(self, poll_interval: float = 0.5) -> None:
+        with selectors.DefaultSelector() as sel:
+            sel.register(self.socket, selectors.EVENT_READ)
+            while not self._stopping:
+                for key, _ in sel.select(poll_interval):
+                    if key.fileobj is self.socket:
+                        try:
+                            conn, addr = self.get_request()
+                        except OSError:
+                            continue
+                        sel.register(conn, selectors.EVENT_READ,
+                                     (addr, time.monotonic()))
+                    else:
+                        sel.unregister(key.fileobj)
+                        self.pool.submit(self._serve, key.fileobj, key.data[0])
+                self._close_waiting(sel, time.monotonic() - IDLE_S)
+            self._close_waiting(sel, float("inf"))
+        self._stopped.set()
 
-    def server_close(self):
+    def _close_waiting(self, sel, accepted_before: float) -> None:
+        for key in list(sel.get_map().values()):
+            if key.data is not None and key.data[1] < accepted_before:
+                sel.unregister(key.fileobj)
+                self.shutdown_request(key.fileobj)
+
+    def shutdown(self) -> None:
+        """Like socketserver's: the loop sees the flag within
+        poll_interval; connections still waiting are closed."""
+        self._stopping = True
+        self._stopped.wait()
+
+    def _serve(self, request, client_address) -> None:
+        try:
+            handler = self.RequestHandlerClass(request, client_address, self)
+        except Exception:  # noqa: BLE001 — what socketserver does
+            self.handle_error(request, client_address)
+            handler = None
+        if handler is None or handler.deferred is None:
+            self.shutdown_request(request)
+            return
+        threading.Thread(target=self._finish_deferred, args=(handler,),
+                         name="marlin-http-spark", daemon=True).start()
+
+    def _finish_deferred(self, handler) -> None:
+        try:
+            answer, handler.deferred = handler.deferred, None
+            answer()
+            handler.finish()
+        except Exception:  # noqa: BLE001
+            self.handle_error(handler.request, handler.client_address)
+        finally:
+            self.shutdown_request(handler.request)
+
+    def server_close(self) -> None:
         super().server_close()
         self.pool.shutdown(wait=True)
 
@@ -211,11 +271,25 @@ def _jsonable(v):
     return v
 
 
+def _may_run_spark(method: str, parts: list[str], body: dict) -> bool:
+    """Requests answered off the handler pool: index writes, multi-index
+    queries and hydrated queries (the only Spark option of an HTTP
+    query). A plain query stays on the pool even when search_local
+    hands it to Spark (match-all, very high df)."""
+    if method == "GET" or parts[1:2] == ["keys"]:
+        return False
+    if parts[3:] == ["query"] and parts[2] != "*":
+        return bool(body.get("hydrate"))
+    return True
+
+
 def _make_handler(srv: MarlinServer):
     class Handler(BaseHTTPRequestHandler):
-        # socket timeout (s): a client that connects and goes silent
-        # frees its pool thread instead of holding it
-        timeout = 30
+        # socket timeout (s): a request that stalls part-way holds its
+        # pool thread at most this long per read
+        timeout = 5
+        # an answer left for the server to run off the pool (see _route)
+        deferred = None
 
         # quiet: no per-request stderr lines under pytest
         def log_message(self, fmt, *args):  # noqa: D102
@@ -239,11 +313,27 @@ def _make_handler(srv: MarlinServer):
             self.end_headers()
             self.wfile.write(body)
 
+        def finish(self):
+            if self.deferred is None:  # else its own thread finishes it
+                super().finish()
+
         def _route(self, method: str) -> None:
             key = self.headers.get(API_KEY_HEADER)
             parts = [p for p in self.path.split("?")[0].split("/") if p]
             try:
-                self._send(*self._dispatch(method, parts, key))
+                body = self._body() if method == "POST" else {}
+            except ValueError as exc:
+                self._send(400, {"error": str(exc)})
+                return
+            if _may_run_spark(method, parts, body):
+                self.deferred = lambda: self._answer(method, parts, key, body)
+            else:
+                self._answer(method, parts, key, body)
+
+        def _answer(self, method: str, parts: list[str], key: str | None,
+                    body: dict) -> None:
+            try:
+                self._send(*self._dispatch(method, parts, key, body))
             except PermissionError as exc:
                 self._send(403, {"error": str(exc)})
             except (KeyError, FileNotFoundError) as exc:
@@ -255,14 +345,14 @@ def _make_handler(srv: MarlinServer):
             except Exception as exc:  # noqa: BLE001 — fault barrier
                 self._send(500, {"error": str(exc)})
 
-        def _dispatch(self, method: str, parts: list[str],
-                      key: str | None) -> tuple[int, Any]:
+        def _dispatch(self, method: str, parts: list[str], key: str | None,
+                      body: dict) -> tuple[int, Any]:
             # URL tree: /1/indexes[/<name>[/query|/clear|/info]] , /1/keys
             if len(parts) < 2 or parts[0] != "1":
                 return 404, {"error": "unknown path"}
             if parts[1] == "keys":
                 if method == "POST" and len(parts) == 2:
-                    return srv.create_key(self._body(), key)
+                    return srv.create_key(body, key)
                 if method == "DELETE" and len(parts) == 3:
                     return srv.delete_key(parts[2], key)
                 return 405, {"error": "method not allowed"}
@@ -272,7 +362,7 @@ def _make_handler(srv: MarlinServer):
                 if method == "GET":
                     return srv.list_indexes(key)
                 if method == "POST":
-                    return srv.create_index(self._body(), key)
+                    return srv.create_index(body, key)
                 return 405, {"error": "method not allowed"}
             name = parts[2]
             if len(parts) == 3:
@@ -284,8 +374,8 @@ def _make_handler(srv: MarlinServer):
             action = parts[3]
             if action == "query" and method == "POST":
                 if name == "*":
-                    return srv.multi_query(self._body(), key)
-                return srv.query(name, self._body(), key)
+                    return srv.multi_query(body, key)
+                return srv.query(name, body, key)
             if action == "clear" and method == "POST":
                 return srv.clear_index(name, key)
             if action == "info" and method == "GET":

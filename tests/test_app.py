@@ -1,5 +1,7 @@
 """Multi-index app surface (reference app.c:146-210 routing semantics)."""
 
+import os
+
 import pytest
 
 from marlin_spark.app import MarlinApp
@@ -106,9 +108,9 @@ def test_api_keys_scope_and_index_limits(app):
 
 
 def test_keys_written_by_another_app_take_effect(app, spark, monkeypatch):
-    """check_key parses keys.json once per version of the file, and keys
+    """check_key parses keys.json once per content of the file, and keys
     minted or revoked through a second MarlinApp on the same dir apply
-    to the first at once."""
+    to the first at once, also when the file keeps its size."""
     import json
 
     other = MarlinApp(spark, app.dir)
@@ -119,12 +121,20 @@ def test_keys_written_by_another_app_take_effect(app, spark, monkeypatch):
     qkey = other.create_api_key(scopes=("query",), api_key=admin)
     assert app.check_key(qkey, "query")
     loads = []
-    real = json.load
-    monkeypatch.setattr(json, "load", lambda f: loads.append(1) or real(f))
+    real = json.loads
+    monkeypatch.setattr(json, "loads", lambda raw: loads.append(1) or real(raw))
     for _ in range(20):
         assert app.check_key(qkey, "query")
     assert loads == []  # unchanged file: served from the cache
+    # revoke one key and mint another like it: same file size, and
+    # likely the same mtime tick
+    size = os.path.getsize(os.path.join(app.dir, "keys.json"))
     assert other.delete_api_key(qkey, api_key=admin)
+    fresh = other.create_api_key(scopes=("query",), api_key=admin)
+    assert os.path.getsize(os.path.join(app.dir, "keys.json")) == size
     assert not app.check_key(qkey, "query")
+    assert app.check_key(fresh, "query")
+    assert other.delete_api_key(fresh, api_key=admin)
+    assert not app.check_key(fresh, "query")
     assert other.delete_api_key(admin, api_key=admin)
     assert app.check_key(None, "query")

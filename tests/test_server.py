@@ -261,30 +261,59 @@ def test_stop_ends_every_pool_thread(spark, tmp_path):
     assert threads and not any(t.is_alive() for t in threads)
 
 
-def test_slow_spark_request_does_not_block_a_plain_query(srv, oracle_idx, monkeypatch):
-    """A hydrated query (a Spark job) held in flight leaves pool threads
-    for a concurrent plain query, which answers while it waits."""
+def test_held_spark_requests_do_not_block_a_plain_query(srv, oracle_idx, monkeypatch):
+    """POOL_THREADS hydrated queries (Spark jobs) held in flight at once
+    run off the handler pool: a concurrent plain query still answers."""
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
+    from marlin_spark.server import POOL_THREADS
+
     eng = srv.app.get_index("oracleidx")
-    entered, release = threading.Event(), threading.Event()
+    entered = threading.Semaphore(0)
+    release = threading.Event()
     real = eng.hydrate
 
     def hydrate(hits):
-        entered.set()
+        entered.release()
         release.wait(60)
         return real(hits)
 
     monkeypatch.setattr(eng, "hydrate", hydrate)
     q = _ORACLE_QUERIES[1]
-    with ThreadPoolExecutor(1) as ex:
-        slow = ex.submit(_call, srv, "POST", "/1/indexes/oracleidx/query",
-                         {"q": q, "k": 3, "hydrate": True}, None, 200)
+    with ThreadPoolExecutor(POOL_THREADS) as ex:
+        slow = [
+            ex.submit(_call, srv, "POST", "/1/indexes/oracleidx/query",
+                      {"q": q, "k": 3, "hydrate": True}, None, 200)
+            for _ in range(POOL_THREADS)
+        ]
         try:
-            assert entered.wait(60)
+            for _ in range(POOL_THREADS):
+                assert entered.acquire(timeout=60)
             assert _hits(srv, q, "any") == _want(oracle_idx, q, "any")
-            assert not slow.done()
+            assert not any(f.done() for f in slow)
         finally:
             release.set()
-        assert all("text" in h for h in slow.result(timeout=120)["hits"])
+        for f in slow:
+            assert all("text" in h for h in f.result(timeout=120)["hits"])
+
+
+def test_silent_connections_hold_no_pool_thread(srv, oracle_idx):
+    """More idle connections than pool threads (clients that connect and
+    send nothing) leave a plain query answered at once."""
+    import socket
+    import time
+
+    from marlin_spark.server import POOL_THREADS
+
+    idle = [socket.create_connection(("127.0.0.1", srv.port))
+            for _ in range(POOL_THREADS + 1)]
+    try:
+        q = _ORACLE_QUERIES[0]
+        t0 = time.monotonic()
+        assert _hits(srv, q, "any") == _want(oracle_idx, q, "any")
+        # not after a read timeout freed a thread
+        assert time.monotonic() - t0 < srv.httpd.RequestHandlerClass.timeout / 2
+    finally:
+        for c in idle:
+            c.close()

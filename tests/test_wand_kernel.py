@@ -1,10 +1,12 @@
-"""The WAND kernel's dense per-range scoring against the oracle at 9 dp.
+"""The WAND kernel's per-range scoring against the oracle at 9 dp.
 
 Every placement of make_batch_wand_kernel (the driver's search_local,
 the Spark WAND job, the batched search_many_wand) must rank exactly as
 oracle/bm25.py does on the tiny index, whose 64-doc ranges give it
 several ranges: both modes, prefix_last, driver-resident tombstones and
-an uncompacted delta segment whose docids fall inside a base range.
+an uncompacted delta segment whose docids fall inside a base range. The
+driver placement also runs with multi-term ranges forced onto each
+accumulator layout (the range's docid span, the query's distinct docids).
 """
 
 import datetime as dt
@@ -14,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from marlin_spark.oracle.bm25 import OracleIndex, assign_docids
+from marlin_spark.query import wand
 from marlin_spark.query.engine import KERNEL_COLS, SearchEngine
 from marlin_spark.query.wand import make_wand_scorer
 from marlin_spark.streaming.incremental import IncrementalIndexer
@@ -38,6 +41,7 @@ def _placements(eng, queries, mode, prefix=False, k=10):
             (r["docid"], round(r["score"], 9))
             for r in eng.search(q, k, mode, prefix).collect()
         ]
+    out.update(_layouts(eng, queries, mode, prefix, k))
     if not prefix:
         ranked = {}
         for r in eng.search_many_wand({q: q for q in queries}, k, mode).collect():
@@ -46,6 +50,23 @@ def _placements(eng, queries, mode, prefix=False, k=10):
             )
         out["many"] = {q: [(d, s) for _r, d, s in sorted(ranked.get(q, []))]
                        for q in queries}
+    return out
+
+
+def _layouts(eng, queries, mode, prefix=False, k=10):
+    """search_local with every multi-term range scored over the range's
+    docid span, then over the query's distinct docids."""
+    out = {}
+    real = wand._DENSE_SPAN_PER_POSTING
+    try:
+        for name, ratio in (("local-span", 1 << 30), ("local-distinct", 0)):
+            wand._DENSE_SPAN_PER_POSTING = ratio
+            out[name] = {
+                q: [(d, round(s, 9)) for d, s in eng.search_local(q, k, mode, prefix)]
+                for q in queries
+            }
+    finally:
+        wand._DENSE_SPAN_PER_POSTING = real
     return out
 
 
@@ -148,7 +169,7 @@ class _Count:
 
 
 def test_range_pruning_skips_ranges(spark, tiny_index, tiny_oracle):
-    """Block-max range pruning survives the dense scorer: top-1 queries
+    """Block-max range pruning survives the per-range scorer: top-1 queries
     over terms found in both 64-doc ranges of the tiny index skip one."""
     d, cfg, _ = tiny_index
     eng = SearchEngine(spark, d, cfg)
