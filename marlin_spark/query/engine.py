@@ -3,9 +3,11 @@
 Query lifecycle mapping (reference: api.c -> index_json_query ->
 execute_query fan-out -> per-shard squery -> form_result merge):
 1. driver-side plan: analyze query text with the same analyzer (search
-   mode), look up query terms in the dictionary with bucket partition
-   pruning + term pushdown, compute idf (reference: lookup_terms,
-   /root/reference/src/main/squery.c:159-166);
+   mode), look up query terms and prefixes in the dictionary — one
+   pyarrow read of its fc partitions on the driver, no Spark job
+   (_dictionary_lookup; typo expansion reads the same way, with a Spark
+   fallback only for fc partitions above typo_local_bytes) — and compute
+   idf (reference: lookup_terms, squery.c:159-166);
 2. score: one pruned postings scan (_matched_blocks: only the buckets of
    the query terms; BM25 never reads the positions column), then one of
    two scorers, each taking a batch of queries (a single query is a
@@ -53,6 +55,10 @@ RANKED_SCHEMA = "query_id string, docid long, score double, rank int"
 # 1k df and the job 1.6-1.9 s on a 1M-doc index (crossing near 9M df),
 # 3.1-4.4 s on a 6M-doc one (no crossing up to 10.8M df; CHANGES.md)
 LOCAL_MAX_DF = 8_000_000
+# _dictionary_lookup's term -> (df, top_maxes) cache starts over past this
+# many entries (each holds up to 16 top_maxes floats): a server's distinct
+# query terms, unseen ones included, must not grow the driver for ever
+DF_CACHE_MAX = 16_384
 
 
 def _in_pred(col: str, values) -> "F.Column":
@@ -345,97 +351,48 @@ class SearchEngine:
         return sorted({t for t, _ in analyze(q, self.cfg.analyzer, mode="search")})
 
     def _dictionary_lookup(self, terms: list[str], prefixes: list[str]) -> list[dict]:
-        """Partition-pruned + pushed-down dictionary scan, with a
-        driver-side term->df cache (the reference keeps its whole trie
-        mmap'd; we memoize only the terms actually queried — bounded,
-        works at any dictionary size)."""
-        cache = getattr(self, "_df_cache", None)
-        if cache is None:
-            cache = self._df_cache = {}
-        if not prefixes and terms and all(t in cache for t in terms):
+        """Dictionary rows {term, df, top_maxes} of ``terms`` and of every
+        term starting with one of ``prefixes`` (an empty prefix matches
+        every term): one pyarrow read on the driver, no Spark job — the
+        reference answers both from its in-memory trie (dtrie.c:642-700).
+        The filter is the fuzzy filter's d = 0 case (query/fuzzy.py), so
+        only the fc partitions of the terms and prefixes are read. Exact
+        terms are memoized in a term -> (df, top_maxes) cache, unseen
+        terms as None, emptied past DF_CACHE_MAX entries so client input
+        cannot grow it without bound. A pyarrow error is a damaged
+        dictionary and propagates."""
+        from marlin_spark.query import fuzzy
+
+        cache = self._df_cache  # another thread may swap in a new dict
+        if not prefixes and all(t in cache for t in terms):
             return [
                 {"term": t, "df": cache[t][0], "top_maxes": cache[t][1]}
                 for t in terms
                 if cache[t] is not None
             ]
-        if not prefixes and terms:
-            # exact-term lookups read the pruned dictionary parquet with
-            # pyarrow on the driver — no Spark job (the trie-in-mmap
-            # analog); prefix range scans still go through Spark. A
-            # pyarrow error is a damaged dictionary and propagates.
-            rows = self._dictionary_lookup_arrow(terms)
-            found = {r["term"] for r in rows}
-            for r in rows:
-                cache[r["term"]] = (r["df"], r.get("top_maxes"))
-            for t in terms:
-                if t not in found:
-                    cache[t] = None
-            return rows
-        from marlin_spark.query.fuzzy import OTHER_FC, fc_of_char, term_fc_py
-
-        d = self.cat.read(self.spark, "dictionary")
-        conds = []
-        if terms:
-            fcs = sorted({term_fc_py(t) for t in terms})
-            conds.append(_in_pred("fc", fcs) & _in_pred("term", terms))
-        for p in prefixes:
-            # term range scan over sorted dictionary files (dtrie subtree
-            # walk analog, /root/reference/src/main/dtrie.c:642-700);
-            # fc partition prune: matching terms start with p[0] unless
-            # they contain a non-token char (-> oth partition). An EMPTY
-            # prefix matches every term, so it must skip the fc predicate
-            # entirely (pruning to oth-only would drop all ASCII terms).
-            if not p:
-                conds.append(F.lit(True))
-                continue
-            pfcs = [OTHER_FC]
-            c = fc_of_char(p[0])
-            if c is not None:
-                pfcs.append(c)
-            conds.append(_in_pred("fc", sorted(pfcs)) & F.col("term").startswith(p))
-        if not conds:
+        expr = fuzzy.arrow_expression(fuzzy.specs_filter(
+            [(t, False, 0) for t in terms] + [(p, True, 0) for p in prefixes]
+        ))
+        if expr is None:
             return []
-        cond = conds[0]
-        for c in conds[1:]:
-            cond = cond | c
-        # select top_maxes here too: caching (df, None) from this path
-        # would permanently disable theta-seed pruning for the term (the
-        # cache is checked first on later batched lookups)
-        sel = ["term", "df"]
-        if "top_maxes" in d.columns:
-            sel.append("top_maxes")
-        rows = [r.asDict() for r in d.filter(cond).select(*sel).collect()]
-        found = {r["term"] for r in rows}
-        for r in rows:
-            cache[r["term"]] = (r["df"], r.get("top_maxes"))
-        for t in terms:
-            if t not in found:
-                cache[t] = None  # negative cache: unseen term
-        return rows
-
-    def _dictionary_lookup_arrow(self, terms: list[str]) -> list[dict]:
-        import pyarrow.dataset as pads
-
-        from marlin_spark.query.fuzzy import term_fc_py
-
-        fcs = sorted({term_fc_py(t) for t in terms})
         dataset = self._arrow_dataset("dictionary", self.cat.path("dictionary"))
         cols = ["term", "df"]
-        has_tm = "top_maxes" in dataset.schema.names
-        if has_tm:
+        if "top_maxes" in dataset.schema.names:
             cols.append("top_maxes")
-        tbl = dataset.to_table(
-            columns=cols,
-            filter=pads.field("fc").isin(fcs)
-            & pads.field("term").isin(terms),
-        )
-        tms = tbl["top_maxes"].to_pylist() if has_tm else [None] * tbl.num_rows
-        return [
+        tbl = dataset.to_table(columns=cols, filter=expr)
+        tms = tbl["top_maxes"].to_pylist() if "top_maxes" in cols else [None] * tbl.num_rows
+        rows = [
             {"term": t, "df": int(d), "top_maxes": tm}
-            for t, d, tm in zip(
-                tbl["term"].to_pylist(), tbl["df"].to_pylist(), tms
-            )
+            for t, d, tm in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist(), tms)
         ]
+        for r in rows:
+            cache[r["term"]] = (r["df"], r["top_maxes"])
+        for t in set(terms) - {r["term"] for r in rows}:
+            cache[t] = None
+        if len(cache) > DF_CACHE_MAX:
+            # a new dict, not clear(): a reader may hold the old one
+            self._df_cache = {}
+        return rows
 
     def plan(self, q: str, k: int = 10, mode: str = "any", prefix_last: bool = False) -> QueryPlan:
         # the typed last word must be captured BEFORE sorting: PREFIX_LAST
@@ -454,7 +411,7 @@ class SearchEngine:
         if prefix_last:
             prefixes = [last_typed]
             exact_terms = [w for w in words if w != last_typed]
-        rows = self._dictionary_lookup(exact_terms or words, prefixes)
+        rows = self._dictionary_lookup(exact_terms, prefixes)
         slot_of_word = {w: i for i, w in enumerate(words)}
         for r in rows:
             t = r["term"]
@@ -732,13 +689,7 @@ class SearchEngine:
                 # NRT segments not yet folded into the accelerator
                 parts.append(self._delta_prefix_docids(deltas, short))
         if exact or rest:
-            rows = self._dictionary_lookup(exact, rest)
-            matched = [r["term"] for r in rows]
-            matched = [
-                t
-                for t in matched
-                if t in exact or any(t.startswith(p) for p in rest)
-            ]
+            matched = [r["term"] for r in self._dictionary_lookup(exact, rest)]
             if matched:
                 parts.append(self._decoded_postings(matched).select("docid"))
         if not parts:
@@ -953,32 +904,28 @@ class SearchEngine:
 
     # ---------------------------------------------- typo (fuzzy) match
     def _typo_scan_terms(self, specs: list[tuple[str, bool, int]]):
-        """Retrieve the PRUNED candidate term set for a list of
-        (word, prefix, maxdist) specs as a numpy object array, or None if
-        the scan is too large for the driver (query/fuzzy.py builds an
-        exact superset filter: fc partition scan + prefix ranges + exact
-        candidates — the trie-walk-bounding analog, dtrie.c:702-791)."""
-        import numpy as np
-
+        """The pruned candidate terms of (word, prefix, maxdist) specs as
+        a numpy object array, read on the driver with pyarrow, or None
+        when the fc partitions the filter scans whole exceed
+        typo_local_bytes (query/fuzzy.py builds the exact superset
+        filter: fc partition scan + prefix ranges + exact candidates —
+        the trie-walk-bounding analog, dtrie.c:702-791). A pyarrow error
+        is a damaged dictionary and propagates."""
         from marlin_spark.query import fuzzy
 
         flt = fuzzy.specs_filter(specs)
         self._last_fuzzy_filter = flt  # plan-test / explain hook
-        if not (flt.partitions or flt.exact or flt.ranges):
+        expr = fuzzy.arrow_expression(flt)
+        if expr is None:
             return np.empty(0, dtype=object), flt
         part_bytes = sum(
             self.cat.dir_bytes(f"dictionary/fc={p}") for p in flt.partitions
         )
         if part_bytes > self.cfg.typo_local_bytes:
             return None, flt
-        try:
-            from marlin_spark.query.fuzzy import arrow_expression
-
-            ds = self._arrow_dataset("dictionary", self.cat.path("dictionary"))
-            tbl = ds.to_table(columns=["term"], filter=arrow_expression(flt))
-            return np.asarray(tbl["term"].to_pylist(), dtype=object), flt
-        except Exception:
-            return None, flt
+        ds = self._arrow_dataset("dictionary", self.cat.path("dictionary"))
+        tbl = ds.to_table(columns=["term"], filter=expr)
+        return np.asarray(tbl["term"].to_pylist(), dtype=object), flt
 
     def _fuzzy_pruned_dictionary(self, flt) -> DataFrame:
         """Distributed fuzzy candidate scan: UNION of (a) the fc
@@ -998,59 +945,24 @@ class SearchEngine:
         return out
 
     def _typo_expand_words(self, specs: list[tuple[str, bool, int]]) -> list[list[str]]:
-        """Expand each (word, prefix, maxdist) spec to its matching
-        dictionary terms. Fast path: driver-local pyarrow read of the
-        fuzzy-pruned candidate set (fc partitions + ranges + exact
-        candidates, query/fuzzy.py) + the numpy banded OSA DP — zero
-        Spark jobs, like the reference's in-memory trie walk. When the
-        pruned scan is too big for the driver (typo_local_bytes), ONE
-        distributed scan with the same pushed filters and a single
-        Arrow-batched UDF running the DP for ALL specs per batch."""
-        cands, flt = self._typo_scan_terms(specs)
-        if cands is not None:
-            from marlin_spark.query.typo_vec import osa_match_batch
-
-            return [
-                sorted(cands[osa_match_batch(w, cands, pf, dd)].tolist())
-                for w, pf, dd in specs
-            ]
-        dic = self._fuzzy_pruned_dictionary(flt)
-        local_specs = list(specs)
-
-        @F.pandas_udf("long")
-        def _mask(terms: pd.Series) -> pd.Series:
-            import numpy as np
-
-            from marlin_spark.query.typo_vec import osa_match_batch
-
-            arr = terms.to_numpy(dtype=object)
-            m = np.zeros(len(arr), dtype=np.int64)
-            for i, (w, pf, dd) in enumerate(local_specs):
-                m |= osa_match_batch(w, arr, pf, dd).astype(np.int64) << i
-            return pd.Series(m)
-
-        rows = (
-            dic.withColumn("m", _mask(F.col("term")))
-            .filter(F.col("m") > 0)
-            .select("term", "m")
-            .collect()
-        )
-        out: list[list[str]] = [[] for _ in specs]
-        for r in rows:
-            for i in range(len(specs)):
-                if r["m"] & (1 << i):
-                    out[i].append(r["term"])
-        return [sorted(g) for g in out]
+        """The sorted dictionary terms matching each (word, prefix,
+        maxdist) spec: the term-only view of _typo_expand_dists."""
+        return [[t for t, _d in g] for g in self._typo_expand_dists(specs)]
 
     def _typo_expand_dists(self, specs: list[tuple[str, bool, int]]) -> list[list[tuple[str, int]]]:
-        """Like _typo_expand_words but returns (term, best_distance) per
-        spec — the WID2TYPOS payload the rank cascade consumes."""
+        """Expand each (word, prefix, maxdist) spec to its matching
+        dictionary terms as sorted (term, best OSA distance) pairs — the
+        WID2TYPOS payload the rank cascade consumes. Fast path: the
+        driver's pyarrow read of the fuzzy-pruned candidates
+        (_typo_scan_terms) + the numpy banded OSA DP, zero Spark jobs,
+        like the reference's in-memory trie walk. When the partitions it
+        scans whole exceed typo_local_bytes, ONE distributed scan with
+        the same pushed filters and a single Arrow-batched UDF running
+        the DP for ALL specs per batch."""
+        from marlin_spark.query.typo_vec import osa_dist_batch
+
         cands, flt = self._typo_scan_terms(specs)
         if cands is not None:
-            import numpy as np
-
-            from marlin_spark.query.typo_vec import osa_dist_batch
-
             out: list[list[tuple[str, int]]] = []
             for w, pf, dd in specs:
                 dist = osa_dist_batch(w, cands, pf, dd)
@@ -1181,15 +1093,9 @@ class SearchEngine:
             )
             est = None
             if words:
-                try:
-                    est = sum(
-                        r["df"]
-                        for r in self._dictionary_lookup(
-                            sorted({t for t in (term_meta or {})}), []
-                        )
-                    )
-                except Exception:
-                    est = None
+                est = sum(
+                    r["df"] for r in self._dictionary_lookup(sorted(term_meta), [])
+                )
             # the df bound comes from the BASE dictionary only (df
             # refreshes at compaction) — with uncompacted streaming
             # deltas the match set can exceed it, and F.broadcast

@@ -25,7 +25,9 @@ Correctness argument (OSA distance, per spec):
   scanned ``oth`` partition, so the enumerations below only need the
   ASCII token alphabet.
 - d = 0: the match set is exactly {w} (or terms with prefix w in prefix
-  mode) -> one exact candidate / one range; NO scan at all.
+  mode) -> one exact candidate / one range; NO scan at all. This is
+  also the engine's exact and prefix dictionary lookup
+  (SearchEngine._dictionary_lookup).
 - d >= 1 and t[0] in {w[0], w[1], (w[2] if d = 2)}: partition scan + DP.
 - d = 1, t[0] elsewhere: the single edit is consumed at position 0
   (substitution -> t = c + w[1:], insertion -> t = c + w); both
@@ -107,10 +109,11 @@ def spec_filter(word: str, prefix: bool, d: int) -> FuzzyFilter:
     the exact-superset contract must hold for every caller of
     _docids_for, not just analyzer-produced specs."""
     f = FuzzyFilter()
-    if not word:
-        return f
-    if d >= 1 and (d > 2 or len(word) < d + 1):
+    if (prefix and not word) or (d >= 1 and (d > 2 or len(word) < d + 1)):
+        # every term has the empty prefix; degenerate typo specs scan all
         f.partitions |= ALL_FCS
+        return f
+    if not word:
         return f
     if d == 0:
         if prefix:
@@ -180,25 +183,38 @@ def _next_string(p: str) -> str:
     return p + chr(0x10FFFF)
 
 
+def _any(conds: list):
+    """OR of ``conds`` as a balanced tree, or None if empty: a d = 2
+    prefix spec gives thousands of ranges, and a left-deep chain of them
+    overflows the JVM stack when Spark converts the Column."""
+    while len(conds) > 1:
+        pairs = [a | b for a, b in zip(conds[::2], conds[1::2])]
+        conds = pairs + conds[2 * len(pairs):]
+    return conds[0] if conds else None
+
+
 def arrow_expression(f: FuzzyFilter):
-    """pyarrow.dataset filter expression for the driver-local path."""
+    """pyarrow.dataset filter expression for the driver reads, or None
+    when *f* admits no term. Every disjunct carries its fc predicate, so
+    the dataset opens only the partitions some disjunct can match: the
+    exact candidates' own classes, a range's first-char class and oth."""
     import pyarrow.dataset as pads
 
+    fc, term = pads.field("fc"), pads.field("term")
     conds = []
     if f.partitions:
-        conds.append(pads.field("fc").isin(sorted(f.partitions)))
+        conds.append(fc.isin(sorted(f.partitions)))
     if f.exact:
-        conds.append(pads.field("term").isin(sorted(f.exact)))
-    for r in sorted(f.ranges):
         conds.append(
-            (pads.field("term") >= r) & (pads.field("term") < _next_string(r))
+            fc.isin(sorted({term_fc_py(e) for e in f.exact}))
+            & term.isin(sorted(f.exact))
         )
-    if not conds:
-        return None
-    expr = conds[0]
-    for c in conds[1:]:
-        expr = expr | c
-    return expr
+    for r in sorted(f.ranges):
+        fcs = sorted({OTHER_FC, fc_of_char(r[0])} - {None})
+        conds.append(
+            fc.isin(fcs) & (term >= r) & (term < _next_string(r))
+        )
+    return _any(conds)
 
 
 def spark_conditions(f: FuzzyFilter) -> list:
@@ -223,9 +239,7 @@ def spark_conditions(f: FuzzyFilter) -> list:
     for r in sorted(f.ranges):
         cands.append((F.col("term") >= r) & (F.col("term") < _next_string(r)))
     if cands:
-        c = cands[0]
-        for x in cands[1:]:
-            c = c | x
+        c = _any(cands)
         if f.partitions:
             c = ~F.col("fc").isin(sorted(f.partitions)) & c
         out.append(c)

@@ -9,6 +9,7 @@ the library layer."""
 import json
 import urllib.request
 
+import pyarrow as pa
 import pytest
 
 from marlin_spark.oracle.bm25 import OracleIndex, assign_docids
@@ -215,6 +216,9 @@ def test_truncated_dictionary_is_500_not_an_answer(srv, oracle_idx):
     out = _call(srv, "POST", "/1/indexes/brokenidx/query",
                 {"q": VOCAB[0]}, expect=500)
     assert "hits" not in out
+    # nor does a typo lookup rescan it with Spark
+    with pytest.raises(pa.ArrowException):
+        srv.app.get_index("brokenidx").typo_match("worst tes")
     _call(srv, "DELETE", "/1/indexes/brokenidx", expect=200)
 
 

@@ -129,12 +129,27 @@ def _group(rows):
 
 
 def test_spark_fallback_lookup_caches_top_maxes(engine):
-    """The Spark-SQL dictionary scan (prefix lookups) must cache
-    top_maxes like the arrow path: caching (df, None) permanently
-    disabled theta-seed pruning for any term that first entered the
-    cache via the Spark scan."""
+    """A prefix lookup caches each expansion's top_maxes, as an exact
+    lookup does (both are the one pyarrow dictionary read): caching
+    (df, None) would disable theta-seed pruning for any term that first
+    entered the cache through a prefix."""
     engine._df_cache = {}
     rows = engine._dictionary_lookup([], ["the"])
     assert "the" in {r["term"] for r in rows}
     df, tm = engine._df_cache["the"]
     assert tm is not None and len(tm) >= 1 and tm[0] > 0.0
+
+
+def test_df_cache_is_bounded(engine, monkeypatch):
+    """Distinct unknown query terms cannot grow the term -> df cache past
+    DF_CACHE_MAX; a lookup after it starts over answers as before."""
+    from marlin_spark.query import engine as engine_mod
+
+    want = engine._dictionary_lookup(["the", "neural"], [])
+    monkeypatch.setattr(engine_mod, "DF_CACHE_MAX", 8)
+    engine._df_cache = {}
+    for i in range(50):
+        assert engine._dictionary_lookup([f"zzunknown{i}"], []) == []
+        assert len(engine._df_cache) <= 8
+        assert engine._dictionary_lookup(["the", "neural"], []) == want
+        assert len(engine._df_cache) <= 8

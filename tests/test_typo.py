@@ -113,11 +113,23 @@ def _expand(oracle, word, prefix):
     return set(expand_typo(word, set(oracle.postings), prefix=prefix))
 
 
-def test_multi_word_typo_is_and_of_expansions(spark, tiny_index, tiny_oracle):
+def _typo_engine(spark, tiny_index, local_bytes):
+    """An engine over the tiny index; local_bytes=0 sends every typo
+    expansion that scans an fc partition to the distributed fallback."""
+    d, cfg, _ = tiny_index
+    if local_bytes is not None:
+        cfg = cfg.with_(typo_local_bytes=local_bytes)
+    eng = SearchEngine(spark, d, cfg)
+    on_spark = eng._typo_scan_terms([("worst", False, 1)])[0] is None
+    assert on_spark == (local_bytes == 0)
+    return eng
+
+
+@pytest.mark.parametrize("local_bytes", [None, 0], ids=["driver", "spark"])
+def test_multi_word_typo_is_and_of_expansions(spark, tiny_index, tiny_oracle, local_bytes):
     """Reference semantics: every word typo-expands and the match set is
     the AND of per-word expansion ORs (squery.c:72-142,159-166)."""
-    d, cfg, _ = tiny_index
-    eng = SearchEngine(spark, d, cfg)
+    eng = _typo_engine(spark, tiny_index, local_bytes)
     for q, words in [("worst tes", ["worst", "tes"]), ("this bets", ["this", "bets"])]:
         want = None
         for i, w in enumerate(words):
@@ -130,14 +142,13 @@ def test_multi_word_typo_is_and_of_expansions(spark, tiny_index, tiny_oracle):
         assert got == want, q
 
 
-def test_match_marlin_typos_expands_generated_terms(spark, tiny_index, tiny_oracle):
+@pytest.mark.parametrize("local_bytes", [None, 0], ids=["driver", "spark"])
+def test_match_marlin_typos_expands_generated_terms(spark, tiny_index, tiny_oracle, local_bytes):
     """typos=True expands every generated term (words, neighbor concats,
     full concatenation) before the same boolean combine."""
     from marlin_spark.oracle.tokenizer import analyze
-    from marlin_spark.oracle.typo import maxdist as md
 
-    d, cfg, _ = tiny_index
-    eng = SearchEngine(spark, d, cfg)
+    eng = _typo_engine(spark, tiny_index, local_bytes)
 
     def expected(q, prefix_last=True):
         words = [t for t, _ in analyze(q, "marlin", mode="search")]
@@ -170,6 +181,18 @@ def test_match_marlin_typos_expands_generated_terms(spark, tiny_index, tiny_orac
             for r in eng.match_marlin(q, prefix_last=True, typos=True).collect()
         }
         assert got == expected(q), q
+
+
+def test_ranked_typos_feature_same_on_spark_fallback(spark, tiny_index):
+    """The rank cascade's typos feature is the expansion's OSA distance,
+    whether the driver or the distributed fallback computes it."""
+    rows = {}
+    for local_bytes in (None, 0):
+        eng = _typo_engine(spark, tiny_index, local_bytes)
+        out = eng.search_ranked("worst bets", k=10_000, explain=True)
+        rows[local_bytes] = sorted((r["docid"], r["typos"]) for r in out.collect())
+    assert rows[None] and any(t for _d, t in rows[None])
+    assert rows[0] == rows[None]
 
 
 def test_typo_dictionary_scan_is_pruned_before_udf(lev_index):

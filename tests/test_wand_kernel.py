@@ -97,15 +97,21 @@ def test_every_placement_matches_oracle(spark, tiny_index, tiny_oracle, mode):
     assert any(got["local"][q] for q in QUERIES)
 
 
-def test_prefix_last_matches_oracle(spark, tiny_index, tiny_oracle):
+def test_prefix_last_matches_oracle(spark, tiny_index, tiny_oracle, last_job_id):
     d, cfg, _ = tiny_index
     eng = SearchEngine(spark, d, cfg)
-    got = _placements(eng, PREFIX_QUERIES, "any", prefix=True)
-    for q in PREFIX_QUERIES:
-        want = _want(tiny_oracle, q, prefix=True)
-        assert want, q
-        for where, answers in got.items():
-            assert answers[q] == want, (where, q)
+    for mode in ("any", "all"):
+        # the driver placement expands the prefix without a Spark job
+        job0 = last_job_id()
+        for q in PREFIX_QUERIES:
+            eng.search_local(q, 10, mode, True)
+        assert last_job_id() == job0, mode
+        got = _placements(eng, PREFIX_QUERIES, mode, prefix=True)
+        for q in PREFIX_QUERIES:
+            want = _want(tiny_oracle, q, mode, prefix=True)
+            assert want or mode == "all", q
+            for where, answers in got.items():
+                assert answers[q] == want, (where, q, mode)
 
 
 def test_driver_tombstones_match_oracle(spark, index_copy, tiny_rows, tiny_oracle):
