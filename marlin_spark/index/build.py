@@ -471,7 +471,7 @@ def build_dictionary(
         # top-16 block maxes: each is the EXACT max core of a distinct
         # doc (blocks are disjoint), so top_maxes[k-1] * idf is a valid
         # global lower bound on a query's final k-th best score — the
-        # batched-WAND theta seed (engine._theta_seeds) reads it straight
+        # WAND theta seed (engine.plan_queries) reads it straight
         # off the dictionary lookup instead of scanning postings metadata
         F.slice(
             F.sort_array(F.collect_list("max_tfnorm"), asc=False), 1, 16

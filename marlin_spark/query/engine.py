@@ -2,16 +2,19 @@
 
 Query lifecycle mapping (reference: api.c -> index_json_query ->
 execute_query fan-out -> per-shard squery -> form_result merge):
-1. driver-side plan: analyze query text with the same analyzer (search
-   mode), look up query terms and prefixes in the dictionary — one
+1. driver-side plan: one planner (plan_queries; plan is a batch of one)
+   analyzes each text with the same analyzer (search mode), looks up the
+   union of the queries' terms and prefixes in the dictionary — one
    pyarrow read of its fc partitions on the driver, no Spark job
    (_dictionary_lookup; typo expansion reads the same way, with a Spark
-   fallback only for fc partitions above typo_local_bytes) — and compute
-   idf (reference: lookup_terms, squery.c:159-166);
-2. score: one pruned postings scan (_matched_blocks: only the buckets of
-   the query terms; BM25 never reads the positions column), then one of
-   two scorers, each taking a batch of queries (a single query is a
-   batch of one):
+   fallback only for fc partitions above typo_local_bytes) — lists the
+   postings segments once, and returns {query_id: QueryPlan}: terms with
+   idf and slots (reference: lookup_terms, squery.c:159-166), required
+   slots, a theta seed and the segment list;
+2. score: one pruned postings scan of the plans' segments
+   (_matched_blocks: only the query terms' buckets; BM25 never reads the
+   positions column), then one of two scorers, each taking a ``plans``
+   mapping (a single query is a batch of one; a batch may mix modes):
    - the block-max WAND kernel (query/wand.py), placed on the driver
      (_local_topk: blocks from the segment cache, zero Spark jobs) or
      on Spark (_wand_scores: mapInPandas per doc-range partition);
@@ -31,7 +34,7 @@ from __future__ import annotations
 import math
 import os
 import threading
-from dataclasses import dataclass, field
+from bisect import bisect_left
 
 import numpy as np
 import pandas as pd  # noqa: F401 — resolves stringified UDF type hints
@@ -42,7 +45,7 @@ from marlin_spark.config import EngineConfig
 from marlin_spark.index.blocks import POSTING_COLS
 from marlin_spark.index.catalog import IndexCatalog, term_bucket_py
 from marlin_spark.oracle.tokenizer import analyze
-from marlin_spark.query.wand import make_batch_wand_kernel, pandas_scorer
+from marlin_spark.query.wand import QueryPlan, make_batch_wand_kernel, pandas_scorer
 
 DECODE_SCHEMA = "term string, docid long, tf int, dl int"
 # block columns the WAND kernel reads (positions stay pruned)
@@ -81,44 +84,32 @@ def _in_pred(col: str, values) -> "F.Column":
     return F.expr(f"`{col}` IN ({body})")
 
 
-@dataclass
-class QueryPlan:
-    query: str
-    words: list[str]
-    # scoring terms: term -> (idf, slot); slot = index of the required
-    # word group (prefix expansions share their word's slot)
-    term_meta: dict[str, tuple[float, int]] = field(default_factory=dict)
-    n_slots: int = 0
-    mode: str = "any"
-    k: int = 10
-    match_all_docs: bool = False
-    total_df: int = 0  # sum of matched terms' dfs (fast-path gate)
-
-
 def _decode_blocks(batches):
+    """mapInPandas: (term, n_docs, postings) blocks -> one (term, docid,
+    tf, dl) row per posting, each batch decoded in one varbyte pass."""
+    import numpy as np
     import pandas as pd
 
-    from marlin_spark.functions.codec import decode_block
+    from marlin_spark.functions.codec import decode_blocks_many
 
     for pdf in batches:
-        out_t, out_d, out_tf, out_dl = [], [], [], []
-        for term, blob in zip(pdf["term"], pdf["postings"]):
-            docids, tfs, dls = decode_block(blob)
-            out_t.extend([term] * len(docids))
-            out_d.append(docids)
-            out_tf.append(tfs)
-            out_dl.append(dls)
-        if out_t:
-            import numpy as np
+        n = pdf["n_docs"].to_numpy(np.int64)
+        docids, tfs, dls, _ = decode_blocks_many(list(pdf["postings"]), n)
+        yield pd.DataFrame(
+            {
+                "term": np.repeat(pdf["term"].to_numpy(object), n),
+                "docid": docids,
+                "tf": tfs.astype("int32"),
+                "dl": dls.astype("int32"),
+            }
+        )
 
-            yield pd.DataFrame(
-                {
-                    "term": out_t,
-                    "docid": np.concatenate(out_d).astype("int64"),
-                    "tf": np.concatenate(out_tf).astype("int32"),
-                    "dl": np.concatenate(out_dl).astype("int32"),
-                }
-            )
+
+def _scan_of(plans: dict) -> tuple[list[str], tuple]:
+    """The sorted term union of a batch of plans and the segments they
+    were planned against (one planner call made them all)."""
+    terms = sorted({t for p in plans.values() for t in p.term_meta})
+    return terms, next(iter(plans.values())).segments
 
 
 class _Blocks:
@@ -203,7 +194,7 @@ class SearchEngine:
             # (segment, bucket) -> _Blocks, LRU by dict order
             self._bucket_cache: dict = {}
             self._bucket_cache_bytes = 0
-            self._segments_seen: list = []
+            self._segments_seen: tuple = ()
         self._stats_epoch = self.stats.get("stats_epoch", 0)
         # short-prefix accelerator: available iff built for this index
         self._accel_len = (
@@ -248,21 +239,15 @@ class SearchEngine:
                 pass
         self._load_live_state()
 
-    def _delta_dirs(self, name: str) -> list[str]:
-        # only fully-committed batches (postings AND docs _SUCCESS):
-        # crash-consistency gate for NRT visibility
-        return self.cat.committed_delta_dirs(name)
-
-    def _postings_df(self) -> DataFrame:
-        """The Spark plans' postings: base UNIONed with any uncompacted
-        streaming delta segments, so streamed turns are searchable before
-        compact() (search_local reads the same segments through the
-        driver segment cache, _bucket_table). Terms not yet in the base
-        dictionary still miss (df lookup finds nothing) and df/idf of
-        existing terms stay at base values until compaction — the
-        standard NRT trade (segment visible, stats refreshed on
-        commit)."""
-        segs = tuple(self._segments())
+    def _postings_df(self, segs: tuple) -> DataFrame:
+        """The Spark plans' postings: the segments ``segs`` (_segments),
+        base UNIONed with any uncompacted streaming delta segments, so
+        streamed turns are searchable before compact() (search_local
+        reads the same segments through the driver segment cache,
+        _bucket_table). Terms not yet in the base dictionary still miss
+        (df lookup finds nothing) and df/idf of existing terms stay at
+        base values until compaction — the standard NRT trade (segment
+        visible, stats refreshed on commit)."""
         # cache the assembled DataFrame keyed by the committed segments
         # and their commit stamps: spark.read.parquet lists files + reads
         # a footer on the driver (~90 ms), a fixed per-query cost. A new
@@ -395,57 +380,93 @@ class SearchEngine:
         return rows
 
     def plan(self, q: str, k: int = 10, mode: str = "any", prefix_last: bool = False) -> QueryPlan:
-        # the typed last word must be captured BEFORE sorting: PREFIX_LAST
-        # applies to the last word in QUERY order (reference: query.c
-        # generate_query_terms applies it at i == num_words-1), while the
-        # sorted list only fixes the float accumulation order
-        ordered = [t for t, _ in analyze(q, self.cfg.analyzer, mode="search")]
-        words = sorted(set(ordered))
-        plan = QueryPlan(query=q, words=words, mode=mode, k=min(k, self.cfg.max_hits))
-        if not words:
-            plan.match_all_docs = True
-            return plan
-        last_typed = ordered[-1]
-        exact_terms = list(words)
-        prefixes = []
-        if prefix_last:
-            prefixes = [last_typed]
-            exact_terms = [w for w in words if w != last_typed]
-        rows = self._dictionary_lookup(exact_terms, prefixes)
-        slot_of_word = {w: i for i, w in enumerate(words)}
-        for r in rows:
-            t = r["term"]
-            if t in slot_of_word and not (prefix_last and t == last_typed):
-                slot = slot_of_word[t]
-            elif prefix_last and t.startswith(last_typed):
-                # prefix expansions share the source word's slot so that
-                # mode='all' treats "any expansion present" as satisfying
-                # the word (oracle: OracleIndex.search required handling)
-                slot = slot_of_word[last_typed]
-            else:
-                continue
-            plan.term_meta[t] = (self.idf(r["df"]), slot)
-            plan.total_df += int(r["df"])
-        plan.n_slots = len(words)
-        return plan
+        """One query's plan: a batch of one of plan_queries."""
+        return self.plan_queries({"": q}, k, mode, prefix_last)[""]
+
+    def plan_queries(self, queries: dict[str, str], k: int = 10, mode: str = "any",
+                     prefix_last: bool = False) -> dict[str, QueryPlan]:
+        """The one query planner: {query_id: QueryPlan} for
+        {query_id: text}, from ONE dictionary lookup for the union of the
+        queries' exact terms and prefixes and ONE listing of the postings
+        segments, which every plan carries so that the block fetch reads
+        the segments the seed gate saw. k is capped at max_hits. A term
+        maps to (idf, slots): the slots of the query words it satisfies;
+        under prefix_last the typed-last word's expansions take its slot.
+
+        theta_seed, a GLOBAL lower bound on the final k-th best score, is
+        read off the dictionary's top_maxes (index/build.py): a block's
+        max_tfnorm is the EXACT max core of a real doc in it and blocks
+        are disjoint, so a term's k largest block maxes belong to k
+        distinct docs scoring >= idf * (k-th largest max). The seed is the
+        max over the plan's terms, and None (the kernel warms theta
+        itself) in mode 'all' (a seed doc might fail the slot check),
+        with tombstones (its doc may be deleted), with a live delta (base
+        block maxes may not hold under the refreshed avgdl) and when no
+        term has k top_maxes.
+        """
+        k = min(k, self.cfg.max_hits)
+        segs = self._segments()
+        seeded = (mode == "any" and len(segs) == 1 and self.deleted is None
+                  and not self._tombstones_distributed)
+        parsed, exact, prefixes = {}, set(), set()
+        for qid, q in queries.items():
+            # the typed last word is taken BEFORE sorting: PREFIX_LAST
+            # applies to the last word in QUERY order (reference: query.c
+            # generate_query_terms applies it at i == num_words-1), while
+            # the sorted list only fixes the float accumulation order
+            ordered = [t for t, _ in analyze(q, self.cfg.analyzer, mode="search")]
+            last = ordered[-1] if prefix_last and ordered else None
+            words = sorted(set(ordered))
+            parsed[qid] = (words, last)
+            exact.update(w for w in words if w != last)
+            if last is not None:
+                prefixes.add(last)
+        rows = self._dictionary_lookup(sorted(exact), sorted(prefixes))
+        row_of = {r["term"]: r for r in rows}
+        dict_terms = sorted(row_of)  # a prefix's expansions are one run
+        plans: dict[str, QueryPlan] = {}
+        for qid, (words, last) in parsed.items():
+            plan = plans[qid] = QueryPlan(
+                queries[qid], words, n_slots=len(words), mode=mode, k=k,
+                match_all_docs=not words, segments=segs,
+            )
+            slots = {w: {i} for i, w in enumerate(words) if w != last and w in row_of}
+            if last is not None:
+                slot, i = words.index(last), bisect_left(dict_terms, last)
+                while i < len(dict_terms) and dict_terms[i].startswith(last):
+                    slots.setdefault(dict_terms[i], set()).add(slot)
+                    i += 1
+            seeds = []
+            for t, t_slots in slots.items():
+                r = row_of[t]
+                idf = self.idf(r["df"])
+                plan.term_meta[t] = (idf, frozenset(t_slots))
+                plan.total_df += r["df"]
+                tm = r["top_maxes"]
+                if seeded and 0 < k <= len(tm or ()):
+                    seeds.append(idf * tm[k - 1])
+            if seeds:
+                plan.theta_seed = float(max(seeds))
+        return plans
 
     # ----------------------------------------------------------- search
-    def _matched_blocks(self, terms) -> DataFrame:
-        """The pruned postings scan of ``terms``: their term buckets'
-        partitions only, the term predicate pushed into parquet."""
+    def _matched_blocks(self, terms, segs: tuple) -> DataFrame:
+        """The pruned postings scan of ``terms`` in the segments ``segs``:
+        their term buckets' partitions only, the term predicate pushed
+        into parquet."""
         terms = sorted(terms)
         buckets = sorted(
             {term_bucket_py(t, self.cfg.n_term_buckets) for t in terms}
         )
-        return self._postings_df().filter(
+        return self._postings_df(segs).filter(
             _in_pred("bucket", buckets) & _in_pred("term", terms)
         )
 
-    def _decoded_postings(self, terms) -> DataFrame:
+    def _decoded_postings(self, terms, segs: tuple) -> DataFrame:
         """(term, docid, tf, dl) rows of every posting of ``terms``."""
         return (
-            self._matched_blocks(terms)
-            .select("term", "postings")
+            self._matched_blocks(terms, segs)
+            .select("term", "n_docs", "postings")
             .mapInPandas(_decode_blocks, DECODE_SCHEMA)
         )
 
@@ -504,22 +525,22 @@ class SearchEngine:
         return self._search_exact(plan, filter_cond)
 
     # ---------------------------------------------------------- scorers
-    def _exact_scores(self, metas: dict, n_slots: dict, mode: str) -> DataFrame:
-        """Exact BM25 as DataFrame ops, every matching doc of every query:
-        (query_id, docid, score). ``metas``: query_id -> term -> (idf,
-        slot); mode='all' keeps docs holding ``n_slots[query_id]``
-        distinct slots. The filtered path and the distributed-tombstone
-        fallback: no top-k inside, so a shuffled anti-join or a filter
-        semi-join after it stays exact."""
+    def _exact_scores(self, plans: dict) -> DataFrame:
+        """Exact BM25 as DataFrame ops, every matching doc of every plan:
+        (query_id, docid, score). A doc sums each matched term's score
+        once and is kept when the union of its terms' slot sets holds the
+        plan's required_slots. The filtered path and the
+        distributed-tombstone fallback: no top-k inside, so a shuffled
+        anti-join or a filter semi-join after it stays exact."""
         meta = self.spark.createDataFrame(
             [
-                (qid, t, float(idf), int(slot), int(n_slots[qid]))
-                for qid, m in metas.items()
-                for t, (idf, slot) in m.items()
+                (qid, t, float(idf), sorted(slots), p.required_slots)
+                for qid, p in plans.items()
+                for t, (idf, slots) in p.term_meta.items()
             ],
-            "query_id string, term string, idf double, slot int, n_slots int",
+            "query_id string, term string, idf double, slots array<int>, need int",
         )
-        decoded = self._decoded_postings({t for m in metas.values() for t in m})
+        decoded = self._decoded_postings(*_scan_of(plans))
         k1, b = self.cfg.k1, self.cfg.b
         scored = (
             decoded.join(F.broadcast(meta), "term")
@@ -536,50 +557,39 @@ class SearchEngine:
             .groupBy("query_id", "docid")
             .agg(
                 F.sum("tscore").alias("score"),
-                F.countDistinct("slot").alias("got_slots"),
-                F.first("n_slots").alias("n_slots"),
+                F.size(F.array_distinct(F.flatten(F.collect_list("slots"))))
+                .alias("got"),
+                F.first("need").alias("need"),
             )
+            .filter(F.col("got") >= F.col("need"))
         )
-        if mode == "all":
-            scored = scored.filter(F.col("got_slots") >= F.col("n_slots"))
         return self._not_deleted(scored.select("query_id", "docid", "score"))
 
-    def _kernel(self, metas: dict, n_slots: dict, k: int, mode: str,
-                theta_seed: "dict[str, float] | None" = None):
+    def _kernel(self, plans: dict):
         """The WAND kernel under this index's BM25 parameters and
         driver-resident tombstones, for either placement."""
         return make_batch_wand_kernel(
-            metas, n_slots, k, mode, self.cfg.k1, self.cfg.b, self.avgdl,
-            deleted=self.deleted, theta_seed=theta_seed,
+            plans, self.cfg.k1, self.cfg.b, self.avgdl, deleted=self.deleted
         )
 
-    def _wand_scores(self, metas: dict, n_slots: dict, k: int, mode: str,
-                     theta_seed: "dict[str, float] | None" = None) -> DataFrame:
+    def _wand_scores(self, plans: dict) -> DataFrame:
         """The WAND kernel placed on Spark: matched blocks repartitioned
         by doc range, one kernel call per partition. (query_id, docid,
         score) rows, a partition-local top-k per query."""
-        blocks = self._matched_blocks(
-            {t for m in metas.values() for t in m}
-        ).select(*KERNEL_COLS)
+        blocks = self._matched_blocks(*_scan_of(plans)).select(*KERNEL_COLS)
         return blocks.repartition(self._scorer_partitions(), "range_id").mapInPandas(
-            pandas_scorer(self._kernel(metas, n_slots, k, mode, theta_seed)),
-            SCORED_SCHEMA,
+            pandas_scorer(self._kernel(plans)), SCORED_SCHEMA
         )
 
     def _search_exact(self, plan: QueryPlan, filter_cond=None) -> DataFrame:
-        scored = self._exact_scores(
-            {"": plan.term_meta}, {"": plan.n_slots}, plan.mode
-        )
+        scored = self._exact_scores({"": plan})
         if filter_cond is not None:
             docs = self._docs_df().filter(filter_cond)
             scored = scored.join(docs.select("docid"), "docid", "left_semi")
         return self._rank(scored, plan.k)
 
     def _search_wand(self, plan: QueryPlan) -> DataFrame:
-        scored = self._wand_scores(
-            {"": plan.term_meta}, {"": plan.n_slots}, plan.k, plan.mode
-        )
-        return self._rank(scored, plan.k)
+        return self._rank(self._wand_scores({"": plan}), plan.k)
 
     # ------------------------------------ marlin matching semantics
     def match_marlin(self, q: str, prefix_last: bool = True, typos: bool = False) -> DataFrame:
@@ -680,18 +690,20 @@ class SearchEngine:
         short = [p for p in prefixes if len(p) <= accel_len]
         rest = [p for p in prefixes if len(p) > accel_len]
         parts: list[DataFrame] = []
+        segs = self._segments()
         if short:
             from marlin_spark.index.prefix_accel import accel_docids_df
 
             parts.append(accel_docids_df(self.spark, self.cat, short))
-            deltas = self._delta_dirs("postings")
-            if deltas:
+            if len(segs) > 1:
                 # NRT segments not yet folded into the accelerator
-                parts.append(self._delta_prefix_docids(deltas, short))
+                parts.append(self._delta_prefix_docids(
+                    [d for d, _stamp in segs[1:]], short
+                ))
         if exact or rest:
             matched = [r["term"] for r in self._dictionary_lookup(exact, rest)]
             if matched:
-                parts.append(self._decoded_postings(matched).select("docid"))
+                parts.append(self._decoded_postings(matched, segs).select("docid"))
         if not parts:
             return self.spark.createDataFrame([], "docid long")
         docids = parts[0]
@@ -710,7 +722,7 @@ class SearchEngine:
         blocks = (
             self.cat.read_delta(self.spark, "postings", deltas)
             .filter(cond)
-            .select("term", "postings")
+            .select("term", "n_docs", "postings")
         )
         return blocks.mapInPandas(_decode_blocks, DECODE_SCHEMA).select("docid")
 
@@ -737,7 +749,7 @@ class SearchEngine:
             ]
         if not plan.term_meta:
             return []
-        return self._local_topk(plan)
+        return self._local_topk({"": plan})[""]
 
     def _arrow_dataset(self, key: str, path: str):
         """Memoized pyarrow dataset (file discovery + schema) per stats
@@ -752,18 +764,18 @@ class SearchEngine:
             )
         return ds
 
-    def _segments(self) -> list[tuple[str, "int | None"]]:
-        """The postings segments a driver lookup reads, as (dir, stamp):
+    def _segments(self) -> tuple[tuple[str, "int | None"], ...]:
+        """The postings segments a lookup reads, as (dir, stamp):
         the base (stamp None: it changes only at refresh(), which empties
         the cache) and every committed delta segment, stamped with the
         mtime of its postings _SUCCESS so a retried overwrite of
         batch=N is a new segment, never served stale. When the set
         changes, cached buckets of segments no longer in it are
         dropped."""
-        segs = [(self.cat.path("postings"), None)] + [
+        segs = ((self.cat.path("postings"), None),) + tuple(
             (d, os.stat(os.path.join(d, "_SUCCESS")).st_mtime_ns)
-            for d in self._delta_dirs("postings")
-        ]
+            for d in self.cat.committed_delta_dirs("postings")
+        )
         if segs != self._segments_seen:
             live = set(segs)
             with self._cache_lock:
@@ -801,15 +813,16 @@ class SearchEngine:
             self._bucket_cache[key] = won
         return won
 
-    def _local_topk(self, plan: QueryPlan) -> list[tuple[int, float]]:
-        """The WAND kernel placed on the driver: the query's blocks, as
-        column slices of the cached buckets of every segment, one call."""
-        terms = sorted(plan.term_meta)
+    def _local_topk(self, plans: dict) -> dict[str, list[tuple[int, float]]]:
+        """The WAND kernel placed on the driver: the plans' blocks, as
+        column slices of the cached buckets of their segments, one call.
+        query_id -> [(docid, score)] ranked, scores rounded to 9 dp."""
+        terms, segs = _scan_of(plans)
         buckets = sorted(
             {term_bucket_py(t, self.cfg.n_term_buckets) for t in terms}
         )
         names, spans = [], []
-        for seg in self._segments():
+        for seg in segs:
             for b in buckets:
                 blocks = self._bucket_table(seg, b)
                 for t in terms:
@@ -817,8 +830,9 @@ class SearchEngine:
                     if span is not None:
                         names.append(t)
                         spans.append((blocks, span[0], span[1]))
+        out: dict[str, list[tuple[int, float]]] = {qid: [] for qid in plans}
         if not spans:
-            return []
+            return out
         cols = {
             c: np.concatenate([getattr(bl, c)[lo:hi] for bl, lo, hi in spans])
             for c in _Blocks.COLS
@@ -826,11 +840,12 @@ class SearchEngine:
         cols["term"] = np.repeat(
             np.array(names, dtype=object), [hi - lo for _bl, lo, hi in spans]
         )
-        kernel = self._kernel({"": plan.term_meta}, {"": plan.n_slots}, plan.k, plan.mode)
-        _qid, d, s = kernel(cols)
+        qid, d, s = self._kernel(plans)(cols)
         s = np.round(s, 9)
-        o = np.lexsort((d, -s))[: plan.k]
-        return [(int(d[i]), float(s[i])) for i in o]
+        # the kernel keeps at most k rows per query
+        for i in np.lexsort((d, -s)):
+            out[qid[i]].append((int(d[i]), float(s[i])))
+        return out
 
     # ----------------------------------------------------- phrase match
     def phrase_match(self, q: str) -> DataFrame:
@@ -849,7 +864,7 @@ class SearchEngine:
         found = {r["term"] for r in rows}
         if not all(w in found for w in words):
             return self.spark.createDataFrame([], "docid long")
-        blocks = self._matched_blocks(set(words)).select(
+        blocks = self._matched_blocks(set(words), self._segments()).select(
             "term", "range_id", "postings", "positions"
         )
 
@@ -1068,7 +1083,7 @@ class SearchEngine:
             if not term_meta:
                 base = self.spark.createDataFrame([], RANK_SCHEMA)
                 return base if explain else base.select("docid")
-            blocks = self._matched_blocks(term_meta).select(
+            blocks = self._matched_blocks(term_meta, self._segments()).select(
                 "term", "range_id", "postings", "positions"
             )
             n_part = self._scorer_partitions()
@@ -1101,7 +1116,7 @@ class SearchEngine:
             # deltas the match set can exceed it, and F.broadcast
             # bypasses AQE's size check, so skip the forced broadcast
             # and let AQE decide from actual sizes instead
-            deltas_pending = bool(self._delta_dirs("postings"))
+            deltas_pending = len(self._segments()) > 1
             left = (
                 F.broadcast(feats)
                 if est is not None
@@ -1147,7 +1162,7 @@ class SearchEngine:
         terms = sorted({t for t, _ in meta_rows})
         if not terms:
             return self.spark.createDataFrame([], "docid long")
-        decoded = self._decoded_postings(terms)
+        decoded = self._decoded_postings(terms, self._segments())
         meta = self.spark.createDataFrame(
             meta_rows, "term string, gid int"
         )
@@ -1170,76 +1185,6 @@ class SearchEngine:
         )
 
     # ------------------------------------------------- batched queries
-    def _theta_seeds(
-        self, metas: dict, k: int, kth_of: dict, mode: str
-    ) -> "dict[str, float] | None":
-        """Per-query GLOBAL lower bounds on the final k-th best score,
-        read straight off the dictionary's precomputed top_maxes column
-        (index/build.py build_dictionary) — zero extra I/O. Validity:
-        each block's max_tfnorm is the EXACT max core of a real doc in
-        that block (index/blocks.py:99) and blocks are disjoint, so the
-        k largest block maxes of a term belong to k distinct docs whose
-        one-term partial scores are >= idf * (k-th largest max) — their
-        full scores can only be higher, hence the final k-th best is >=
-        that value. seed(q) = max over q's terms.
-
-        Gates (returns None, scorer falls back to local theta warmup):
-        - mode != 'any': a seed doc might fail conjunctive slot checks;
-        - tombstones present: the doc achieving a block max may be
-          deleted;
-        - uncompacted delta segments: base block maxes may not be
-          achieved under the refreshed avgdl;
-        - pre-top_maxes index layout (kth_of empty).
-        """
-        if (
-            mode != "any"
-            or not kth_of
-            or self.deleted is not None
-            or self._tombstones_distributed
-            or self._delta_dirs("postings")
-        ):
-            return None
-        seeds: dict[str, float] = {}
-        for qid, meta in metas.items():
-            best = -np.inf
-            for t, (idf, _slot) in meta.items():
-                m = kth_of.get(t)
-                if m is not None:
-                    v = idf * m
-                    if v > best:
-                        best = v
-            if best > -np.inf:
-                seeds[qid] = float(best)
-        return seeds or None
-
-    def _plan_many(self, queries: dict[str, str], k: int):
-        """Plan a batch with ONE dictionary lookup for the union of all
-        query terms (not one driver job per query). Returns (metas,
-        n_slots, kth_of): term -> (idf, slot) and the word count of every
-        query with a dictionary term, and each term's k-th largest block
-        max (theta seeds)."""
-        per_q = {qid: self.analyze_query(q) for qid, q in queries.items()}
-        all_terms = sorted({t for ts in per_q.values() for t in ts})
-        dict_rows = self._dictionary_lookup(all_terms, [])
-        df_map = {r["term"]: r["df"] for r in dict_rows}
-        kth_of = {
-            r["term"]: r["top_maxes"][k - 1]
-            for r in dict_rows
-            if r.get("top_maxes") and len(r["top_maxes"]) >= k
-        }
-        metas: dict[str, dict] = {}
-        n_slots: dict[str, int] = {}
-        for qid, terms in per_q.items():
-            meta = {
-                t: (self.idf(df_map[t]), slot)
-                for slot, t in enumerate(terms)
-                if t in df_map
-            }
-            if meta:
-                metas[qid] = meta
-                n_slots[qid] = len(terms)
-        return metas, n_slots, kth_of
-
     @staticmethod
     def _window_rank(scored: DataFrame, k: int) -> DataFrame:
         """Per-query top-k of (query_id, docid, score) rows, with rank."""
@@ -1254,8 +1199,8 @@ class SearchEngine:
         )
 
     def search_many_wand(self, queries: dict[str, str], k: int = 10, mode: str = "any") -> DataFrame:
-        """Batched block-max WAND: one dictionary lookup + one pruned
-        postings scan for ALL queries; each block decoded once per range,
+        """Batched block-max WAND: one planner call + one pruned postings
+        scan for ALL queries; each block decoded once per range,
         per-query theta pruning, per-partition top-k — avoids the exact
         path's |candidates| x |queries| shuffle entirely."""
         if self._tombstones_distributed:
@@ -1263,47 +1208,34 @@ class SearchEngine:
             # evict live docs; the exact batch path anti-joins correctly
             self._check_tombstone_pressure()
             return self.search_many(queries, k, mode)
-        metas, n_slots, kth_of = self._plan_many(queries, k)
-        if not metas:
+        plans = self.plan_queries(queries, k, mode)
+        plans = {qid: p for qid, p in plans.items() if p.term_meta}
+        if not plans:
             return self.spark.createDataFrame([], RANKED_SCHEMA)
-        # dedupe identical term-sets: real query fleets repeat queries
-        # (Zipf over query space), and two queries with the same term set
-        # and slot count score identically — run the scorer once per
-        # distinct set, fan results back out with a broadcast join
+        # dedupe identical plans: real query fleets repeat queries (Zipf
+        # over query space), and two plans with the same terms, slots and
+        # required slots score identically — run the scorer once per
+        # distinct plan, fan results back out after ranking
         rep_of: dict[tuple, str] = {}
-        aliases: list[tuple[str, str]] = []  # (rep, qid)
-        rep_metas: dict[str, dict] = {}
-        rep_slots: dict[str, int] = {}
-        for qid in sorted(metas):
-            key = (tuple(sorted(metas[qid])), n_slots[qid])
-            rep = rep_of.get(key)
-            if rep is None:
-                rep_of[key] = qid
-                rep_metas[qid] = metas[qid]
-                rep_slots[qid] = n_slots[qid]
-                aliases.append((qid, qid))
-            else:
-                aliases.append((rep, qid))
-        deduped = len(rep_metas) < len(metas)
-        metas, n_slots = rep_metas, rep_slots
-        seeds = self._theta_seeds(metas, k, kth_of, mode)
-        local = self._wand_scores(metas, n_slots, k, mode, theta_seed=seeds)
+        fanout: dict[str, list[str]] = {}  # rep -> the queries it answers
+        for qid in sorted(plans):
+            p = plans[qid]
+            key = (tuple(sorted(p.term_meta.items())), p.required_slots)
+            fanout.setdefault(rep_of.setdefault(key, qid), []).append(qid)
+        local = self._wand_scores({rep: plans[rep] for rep in fanout})
         # explicit partition count for the rank exchange: left to AQE the
         # ~10 MB of per-partition top-k rows coalesce into ONE task — a
         # serial merge whose wall clock is identical at every cluster
         # size, i.e. pure fixed cost against N->4N scaling. The window's
         # required clustering (query_id) is satisfied, so no 2nd exchange.
         n_rank = max(8, self.spark.sparkContext.defaultParallelism)
+        k = next(iter(plans.values())).k  # capped by the planner
         ranked = self._window_rank(local.repartition(n_rank, "query_id"), k)
-        if deduped:
+        if len(fanout) < len(plans):
             # fan results back out to duplicate queries AFTER ranking
             # (aliases rank identically) with a pure-Catalyst literal
             # map + explode — a createDataFrame/broadcast-join here cost
             # ~1.3 s/batch spinning python workers for a 1000-row table
-            fanout: dict[str, list[str]] = {}
-            for rep, qid in aliases:
-                fanout.setdefault(rep, []).append(qid)
-
             def _q(s: str) -> str:
                 return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
@@ -1324,9 +1256,11 @@ class SearchEngine:
 
     def search_many(self, queries: dict[str, str], k: int = 10, mode: str = "any") -> DataFrame:
         """Score MANY queries in one Spark job with the exact scorer:
-        one dictionary lookup, one postings scan, per-query top-k via
-        window. The batch fallback under a distributed tombstone set."""
-        metas, n_slots, _ = self._plan_many(queries, k)
-        if not metas:
+        one planner call, one postings scan, per-query top-k via window.
+        The batch fallback under a distributed tombstone set."""
+        plans = self.plan_queries(queries, k, mode)
+        plans = {qid: p for qid, p in plans.items() if p.term_meta}
+        if not plans:
             return self.spark.createDataFrame([], RANKED_SCHEMA)
-        return self._window_rank(self._exact_scores(metas, n_slots, mode), k)
+        k = next(iter(plans.values())).k  # capped by the planner
+        return self._window_rank(self._exact_scores(plans), k)

@@ -1,11 +1,15 @@
 """Block-max WAND top-k: one scoring kernel over compressed posting blocks.
 
-``make_batch_wand_kernel`` is the only BM25 scoring loop. It scores any
-number of queries in one pass over the matched blocks of their term
-union; a single query is a batch of one (``make_wand_scorer`` is that
-adapter). The engine decides only where the kernel runs:
+``make_batch_wand_kernel`` is the only BM25 scoring loop. It scores a
+``plans`` mapping (query_id -> ``QueryPlan``, as the engine's one
+planner, ``SearchEngine.plan_queries``, returns it) in one pass over the
+matched blocks of their term union; a single query is a batch of one
+(``make_wand_scorer`` is that adapter). Each plan carries its own k, its
+own theta seed and its own required slot count (``n_slots`` in mode
+'all', 0 in mode 'any'), so one call may score a batch of mixed modes.
+The engine decides only where the kernel runs:
 
-- on the driver (``SearchEngine._local_topk``): the query's blocks as
+- on the driver (``SearchEngine._local_topk``): the queries' blocks as
   column slices of the engine's segment cache, one call;
 - on Spark (``SearchEngine._wand_scores``): matched blocks repartitioned
   by doc range (range_id), one call per partition via mapInPandas
@@ -36,6 +40,7 @@ score bounds instead of sampling.
 
 from __future__ import annotations
 
+from dataclasses import dataclass, field
 from typing import Callable, Iterator
 
 import numpy as np
@@ -53,6 +58,33 @@ _MAX_SPAN = 1 << 24
 # sort of the distinct docids ~10-20 ns per posting plus a fixed ~10 us;
 # 16, 32 and 64 measured within noise of each other on a 1M-doc index
 _DENSE_SPAN_PER_POSTING = 32
+
+
+@dataclass
+class QueryPlan:
+    """One planned query: what the kernel and the exact scorer read."""
+
+    query: str
+    words: list[str]
+    # scoring terms: term -> (idf, slots); a slot is the index of a
+    # required word, and a term counts for every word it satisfies (a
+    # prefix expansion of the typed-last word may be a query word too)
+    term_meta: dict[str, tuple[float, frozenset]] = field(default_factory=dict)
+    n_slots: int = 0
+    mode: str = "any"
+    k: int = 10
+    match_all_docs: bool = False
+    total_df: int = 0  # sum of matched terms' dfs (fast-path gate)
+    # a global lower bound on the final k-th best score, or None (see
+    # SearchEngine.plan_queries for its derivation and gates)
+    theta_seed: "float | None" = None
+    # the postings segments the plan was made against, as (dir, stamp)
+    segments: tuple = ()
+
+    @property
+    def required_slots(self) -> int:
+        """Distinct slots a doc must hold: every word in mode 'all'."""
+        return self.n_slots if self.mode == "all" else 0
 
 
 def _mask_deleted(docids: np.ndarray, deleted: np.ndarray | None) -> np.ndarray | None:
@@ -80,11 +112,11 @@ def make_wand_scorer(
     counters: dict | None = None,
     deleted: "np.ndarray | None" = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """One query as a batch of one: make_batch_wand_kernel over
-    ``{"": term_meta}``, yielding (docid, score) frames."""
+    """One query as a batch of one: make_batch_wand_kernel over a plan
+    of ``term_meta``, yielding (docid, score) frames."""
+    plan = QueryPlan("", [], term_meta, n_slots, mode, k)
     frames = pandas_scorer(make_batch_wand_kernel(
-        {"": term_meta}, {"": n_slots}, k, mode, k1, b, avgdl,
-        deleted=deleted, counters=counters,
+        {"": plan}, k1, b, avgdl, deleted=deleted, counters=counters,
     ))
 
     def scorer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -140,24 +172,21 @@ def pandas_scorer(
 
 
 def make_batch_wand_kernel(
-    query_metas: dict[str, dict[str, tuple[float, int]]],
-    n_slots: dict[str, int],
-    k: int,
-    mode: str = "any",
+    plans: "dict[str, QueryPlan]",
     k1: float = 1.2,
     b: float = 0.75,
     avgdl: float = 1.0,
     deleted: "np.ndarray | None" = None,
-    theta_seed: "dict[str, float] | None" = None,
     counters: dict | None = None,
 ) -> Callable[[object], tuple[np.ndarray, np.ndarray, np.ndarray]]:
     """Block-max WAND for MANY queries in one pass over the matched
     blocks of their term union; returns (query_id, docid, score) arrays,
-    at most k rows per query. ``query_metas``: query_id -> term -> (idf, slot);
-    slots group prefix expansions with their source word, so mode='all'
-    requires ``n_slots[query_id]`` DISTINCT slots per doc. Each block is
-    decoded ONCE per range and the decoded (docids, core) arrays are
-    shared by every query that references the term.
+    at most ``plans[query_id].k`` rows per query. A plan's term_meta maps
+    term -> (idf, slots); prefix expansions share their word's slot, so a
+    doc must hold ``required_slots`` DISTINCT slots (every word in mode
+    'all', none in mode 'any'). Each block is decoded ONCE per range and
+    the decoded (docids, core) arrays are shared by every query that
+    references the term.
 
     Pruning is exact at two levels:
 
@@ -176,8 +205,9 @@ def make_batch_wand_kernel(
     8 B per doc of the span, transient), else the sorted distinct docids
     of its postings, each term's found by binary search (rare terms in a
     wide range, or a sparse query in a batch whose other queries widen
-    the span). The candidates are the cells at or above theta - 2e-9;
-    mode='all' keeps those whose boolean hit array is set for every slot.
+    the span). The candidates are the cells at or above theta - 2e-9; a
+    query with required slots keeps those whose boolean hit array is set
+    for every slot.
 
     Float exactness: terms are added in ascending order, so every score
     is zeros + t1 + t2 + ... (0.0 + x == x in IEEE), the same order as
@@ -189,9 +219,9 @@ def make_batch_wand_kernel(
     slot (block-max values stay valid upper bounds — they bound a
     superset).
 
-    ``theta_seed``: optional per-query GLOBAL lower bounds on the final
-    k-th best score (see SearchEngine._theta_seeds for the derivation
-    and its validity gates). A seed lets every partition prune from its
+    A plan's ``theta_seed`` is a GLOBAL lower bound on its final k-th
+    best score (see SearchEngine.plan_queries for the derivation and its
+    validity gates). A seed lets every partition prune from its
     first range instead of warming theta locally — without it, pruning
     power degrades as partitions get smaller, i.e. with core count,
     which is exactly the wrong scaling direction. Partitions may then
@@ -210,22 +240,20 @@ def make_batch_wand_kernel(
     norm_c = k1 * (1.0 - b)
     norm_s = k1 * b / avgdl if avgdl > 0 else 0.0
     acc = counters or {}
-    qid_list = sorted(query_metas)
+    qid_list = sorted(plans)
     qid_arr = np.array(qid_list, dtype=object)
-    qcode_of = {qid: i for i, qid in enumerate(qid_list)}
     nq = len(qid_list)
-    want_slots = mode == "all"
-    seed_arr = np.full(nq, -np.inf)
-    if theta_seed:
-        for qid, sv in theta_seed.items():
-            qc = qcode_of.get(qid)
-            if qc is not None:
-                seed_arr[qc] = sv
+    ps = [plans[qid] for qid in qid_list]
+    k_of = [p.k for p in ps]
+    need_of = [p.required_slots for p in ps]
+    seed_arr = np.array(
+        [-np.inf if p.theta_seed is None else p.theta_seed for p in ps],
+        np.float64,
+    )
     # term -> (qcodes, idfs) for the vectorized range-level bound
     tmp: dict[str, list] = {}
-    for qid, meta in query_metas.items():
-        qc = qcode_of[qid]
-        for t, (idf, _slot) in meta.items():
+    for qc, p in enumerate(ps):
+        for t, (idf, _slots) in p.term_meta.items():
             tmp.setdefault(t, []).append((qc, idf))
     by_term: dict[str, tuple] = {}
     for t, trows in tmp.items():
@@ -239,13 +267,11 @@ def make_batch_wand_kernel(
     term_arr = np.array(sorted(by_term), dtype=object)
     code_of = {t: i for i, t in enumerate(term_arr)}
     idf_max = np.array([by_term[t][1].max() for t in term_arr])
-    # per-query: (term code, idf, slot), terms ascending
-    q_terms: list[list] = [None] * nq
-    ns_arr = np.zeros(nq, np.int64)
-    for qid, meta in query_metas.items():
-        qc = qcode_of[qid]
-        q_terms[qc] = [(code_of[t], *meta[t]) for t in sorted(meta)]
-        ns_arr[qc] = n_slots.get(qid, 0)
+    # per-query: (term code, idf, slots), terms ascending
+    q_terms = [
+        [(code_of[t], *p.term_meta[t]) for t in sorted(p.term_meta)]
+        for p in ps
+    ]
 
     def kernel(blk) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         if blk is None:
@@ -347,16 +373,17 @@ def make_batch_wand_kernel(
             ))
             for qc in np.flatnonzero(active):
                 present = []
-                for code, idf, slot in q_terms[qc]:
+                for code, idf, slots in q_terms[qc]:
                     lo, hi = run_of.get(code, (0, 0))
                     if hi > lo:
-                        present.append((lo, hi, idf, slot))
+                        present.append((lo, hi, idf, slots))
                 if not present:
                     continue
-                if want_slots and len({p[3] for p in present}) < ns_arr[qc]:
+                need = need_of[qc]
+                if need and len(frozenset().union(*(p[3] for p in present))) < need:
                     continue  # too few distinct slots in this range
                 if len(present) == 1:  # a lone term's postings are its docs
-                    lo, hi, idf, _slot = present[0]
+                    lo, hi, idf, _slots = present[0]
                     acc_docs, at = d_all[lo:hi], None
                     score = idf * core_all[lo:hi]  # == 0.0 + idf * core
                 else:
@@ -379,15 +406,17 @@ def make_batch_wand_kernel(
                         score[a] += p[2] * core_all[p[0]:p[1]]
                 floor = th_eff[qc] - 2.0 * _EPS
                 keep = score >= floor if floor > 0 else score > 0
-                if want_slots and at is not None:
+                if need and at is not None:
                     # a doc must hold every slot; prefix expansions share
-                    # their word's slot, so any one of them satisfies it
+                    # their word's slot, so any one of them satisfies it,
+                    # and a term that is also a query word counts for both
                     slot_hit: dict[int, np.ndarray] = {}
                     for a, p in zip(at, present):
-                        hit = slot_hit.get(p[3])
-                        if hit is None:
-                            hit = slot_hit[p[3]] = np.zeros(score.size, bool)
-                        hit[a] = True
+                        for slot in p[3]:
+                            hit = slot_hit.get(slot)
+                            if hit is None:
+                                hit = slot_hit[slot] = np.zeros(score.size, bool)
+                            hit[a] = True
                     for hit in slot_hit.values():
                         keep &= hit
                 cand = np.flatnonzero(keep)
@@ -399,9 +428,9 @@ def make_batch_wand_kernel(
                 if sd is not None:
                     cand_d = np.concatenate([sd, cand_d])
                     cand_s = np.concatenate([ss, cand_s])
-                cand_d, cand_s = _topk_trim(cand_d, cand_s, k)
+                cand_d, cand_s = _topk_trim(cand_d, cand_s, k_of[qc])
                 state_d[qc], state_s[qc] = cand_d, cand_s
-                if cand_d.size >= k:
+                if cand_d.size >= k_of[qc]:
                     theta[qc] = cand_s.min()
         if acc:
             acc["ranges_skipped"].add(skipped)

@@ -49,11 +49,18 @@ API_KEY_HEADER = "x-marlin-rest-api-key"  # api.h M_API_KEY
 POOL_THREADS = int(1.5 * (os.cpu_count() or 1)) + 1
 # a connection that sends nothing for this long is closed unanswered
 IDLE_S = 30
+# largest request body read (413 above it, before any body byte is read):
+# room for a create_index upload of ~100k turns as JSON
+MAX_BODY_BYTES = 64 << 20
 
 _TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
 )
+
+
+class _BodyTooLarge(ValueError):
+    """A Content-Length above MAX_BODY_BYTES (answered 413)."""
 
 
 class _PooledHTTPServer(HTTPServer):
@@ -297,7 +304,14 @@ def _make_handler(srv: MarlinServer):
 
         # ------------------------------------------------------ plumbing
         def _body(self) -> dict:
-            n = int(self.headers.get("Content-Length") or 0)
+            length = self.headers.get("Content-Length") or "0"
+            if not (length.isascii() and length.isdigit()):
+                raise ValueError(f"bad Content-Length {length!r}")
+            n = int(length)
+            if n > MAX_BODY_BYTES:
+                raise _BodyTooLarge(
+                    f"request body of {n} bytes exceeds {MAX_BODY_BYTES}"
+                )
             if not n:
                 return {}
             body = json.loads(self.rfile.read(n) or b"{}")
@@ -323,7 +337,8 @@ def _make_handler(srv: MarlinServer):
             try:
                 body = self._body() if method == "POST" else {}
             except ValueError as exc:
-                self._send(400, {"error": str(exc)})
+                self._send(413 if isinstance(exc, _BodyTooLarge) else 400,
+                           {"error": str(exc)})
                 return
             if _may_run_spark(method, parts, body):
                 self.deferred = lambda: self._answer(method, parts, key, body)

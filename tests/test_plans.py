@@ -19,7 +19,8 @@ def _plan(df) -> str:
 
 
 def test_postings_scan_prunes_partitions_and_positions(engine):
-    plan_str = _plan(engine._matched_blocks(engine.plan("test worst").term_meta))
+    plan = engine.plan("test worst")
+    plan_str = _plan(engine._matched_blocks(plan.term_meta, plan.segments))
     # bucket partition pruning reaches the scan
     assert "PartitionFilters" in plan_str
     assert "bucket" in plan_str.split("PartitionFilters")[1][:200]

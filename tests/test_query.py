@@ -84,17 +84,12 @@ def test_prefix_last_queries_share_a_slot(engine):
     shared = []
     for q in PREFIX_QUERIES:
         plan = engine.plan(q, prefix_last=True)
-        slots = [slot for _idf, slot in plan.term_meta.values()]
+        slots = [s for _idf, slot_set in plan.term_meta.values() for s in slot_set]
         if plan.n_slots > 1 and len(set(slots)) < len(slots):
             shared.append(q)
     assert shared
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="a plan gives each term one slot: an expansion of the typed-last "
-    "word that is also another query word does not count for the last word",
-)
 def test_prefix_expansion_that_is_also_a_query_word(engine, tiny_oracle):
     """'worst wor' in mode='all': 'worst' is both a query word and a wor*
     expansion, so a doc holding only 'worst' satisfies both words."""

@@ -321,3 +321,39 @@ def test_silent_connections_hold_no_pool_thread(srv, oracle_idx):
     finally:
         for c in idle:
             c.close()
+
+
+def _raw_post(srv, length: str) -> tuple[int, dict, float]:
+    """POST a query whose Content-Length header is ``length`` and send no
+    body: (status, payload, seconds until the server closed)."""
+    import socket
+    import time
+
+    t0 = time.monotonic()
+    with socket.create_connection(("127.0.0.1", srv.port)) as c:
+        c.sendall(
+            f"POST /1/indexes/oracleidx/query HTTP/1.0\r\n"
+            f"Content-Length: {length}\r\n\r\n".encode()
+        )
+        reply = b""
+        while chunk := c.recv(65536):
+            reply += chunk
+    head, _, body = reply.partition(b"\r\n\r\n")
+    return int(head.split()[1]), json.loads(body), time.monotonic() - t0
+
+
+@pytest.mark.parametrize("length", ["-1", "abc", "1e3", "+5"])
+def test_bad_content_length_is_400_at_once(srv, length):
+    """A negative or non-integer body length is refused before any read:
+    rfile.read(-1) would hold a pool thread until the socket timeout."""
+    status, out, took = _raw_post(srv, length)
+    assert status == 400 and "Content-Length" in out["error"]
+    assert took < srv.httpd.RequestHandlerClass.timeout / 2
+
+
+def test_oversized_body_is_413_before_reading_it(srv):
+    from marlin_spark.server import MAX_BODY_BYTES
+
+    status, out, took = _raw_post(srv, str(MAX_BODY_BYTES + 1))
+    assert status == 413 and str(MAX_BODY_BYTES) in out["error"]
+    assert took < srv.httpd.RequestHandlerClass.timeout / 2

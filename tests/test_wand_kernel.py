@@ -207,7 +207,7 @@ def test_damaged_blocks_raise_instead_of_allocating():
     import numpy as np
 
     from marlin_spark.functions.codec import encode_block
-    from marlin_spark.query.wand import make_batch_wand_kernel
+    from marlin_spark.query.wand import QueryPlan, make_batch_wand_kernel
 
     def block(docid):
         one = np.array([1], np.int64)
@@ -220,6 +220,78 @@ def test_damaged_blocks_raise_instead_of_allocating():
         "max_tfnorm": np.array([1.0, 1.0]),
         "postings": np.array([block(1), block(1 << 40)], dtype=object),
     }
-    kernel = make_batch_wand_kernel({"": {"a": (1.0, 0)}}, {"": 1}, 10)
+    plan = QueryPlan("a", ["a"], {"a": (1.0, frozenset({0}))}, n_slots=1)
+    kernel = make_batch_wand_kernel({"": plan})
     with pytest.raises(RuntimeError, match="damaged"):
         kernel(blocks)
+
+
+def test_mixed_mode_batch_is_one_kernel_call(spark, tiny_index, monkeypatch):
+    """Plans of both modes, with and without prefix_last, score in ONE
+    kernel call on the driver (and in one Spark job), each as its own
+    search_local answers it: a plan carries its mode's required slots."""
+    from marlin_spark.query import engine as engine_mod
+
+    d, cfg, _ = tiny_index
+    eng = SearchEngine(spark, d, cfg)
+    plans, want = {}, {}
+    for mode, prefix in (("any", False), ("all", False), ("all", True), ("any", True)):
+        qs = PREFIX_QUERIES if prefix else QUERIES
+        batch = {f"{mode} {prefix} {q}": q for q in qs}
+        for qid, p in eng.plan_queries(batch, 10, mode, prefix).items():
+            if p.term_meta:
+                plans[qid] = p
+                want[qid] = [(d, round(s, 9))
+                             for d, s in eng.search_local(p.query, 10, mode, prefix)]
+    assert any(want.values())
+    calls = []
+    real = engine_mod.make_batch_wand_kernel
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(engine_mod, "make_batch_wand_kernel", counting)
+    got = eng._local_topk(plans)
+    assert len(calls) == 1
+    assert {qid: [(d, round(s, 9)) for d, s in hits]
+            for qid, hits in got.items()} == want
+    on_spark = {}
+    for r in eng._wand_scores(plans).collect():
+        on_spark.setdefault(r["query_id"], []).append((r["docid"], round(r["score"], 9)))
+    for qid, hits in want.items():
+        top = sorted(on_spark.get(qid, []), key=lambda h: (-h[1], h[0]))[:10]
+        assert top == hits, qid
+
+
+@pytest.mark.parametrize("uncompacted", [False, True])
+def test_one_delta_listing_per_lookup_and_batch(spark, index_copy, monkeypatch,
+                                                uncompacted):
+    """The planner lists the committed delta dirs once, and the seed gate
+    and the block fetch both read that list: one listing per search_local
+    and one per search_many_wand."""
+    from marlin_spark.index.catalog import IndexCatalog
+
+    d, cfg = index_copy
+    if uncompacted:
+        IncrementalIndexer(spark, d, cfg).process_batch(
+            _batch(spark, [("nrt-a", 0, "user", "bi ta lefu", None)]), 0
+        )
+    calls = []
+    real = IndexCatalog.committed_delta_dirs
+
+    def counting(self, name):
+        calls.append(name)
+        return real(self, name)
+
+    monkeypatch.setattr(IndexCatalog, "committed_delta_dirs", counting)
+    eng = SearchEngine(spark, d, cfg)
+    for q, mode, prefix in (("bi", "any", False), ("ta de", "all", False),
+                            ("bi lef", "any", True)):
+        calls.clear()
+        assert eng.search_local(q, 10, mode, prefix)
+        assert len(calls) == 1, (q, mode, prefix, calls)
+    calls.clear()
+    # k=1: every matched term has a top_maxes entry, so the seed gate runs
+    assert eng.search_many_wand({q: q for q in QUERIES}, 1).collect()
+    assert len(calls) == 1, calls
