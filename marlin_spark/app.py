@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from marlin_spark.config import EngineConfig
 from marlin_spark.index.build import IndexBuilder
+from marlin_spark.index.catalog import IndexCatalog
 from marlin_spark.query.engine import SearchEngine
 
 
@@ -48,8 +49,14 @@ class MarlinApp:
     def list_indexes(self) -> list[str]:
         return sorted(
             d for d in os.listdir(self.dir)
-            if os.path.exists(os.path.join(self.dir, d, "stats.json"))
+            if self._is_index(os.path.join(self.dir, d))
         )
+
+    @staticmethod
+    def _is_index(path: str) -> bool:
+        """A dir whose stats.json, resolved through its snapshot log
+        (compaction commits a new one), exists."""
+        return os.path.isdir(path) and IndexCatalog(path).has_json("stats.json")
 
     def create_index(
         self,
@@ -80,8 +87,6 @@ class MarlinApp:
             self.spark, self.index_path(name), config
         ).build(transcripts, build_id)
         if auto_mapping:
-            from marlin_spark.index.catalog import IndexCatalog
-
             cat = IndexCatalog(self.index_path(name))
             cat.write_json("mapping.json", mapping)
             counters["mapping"] = mapping
@@ -103,7 +108,7 @@ class MarlinApp:
         eng = self._engines.get(name)
         if eng is None:
             path = self.index_path(name)
-            if not os.path.exists(os.path.join(path, "stats.json")):
+            if not self._is_index(path):
                 raise KeyError(f"Invalid indexName specified: {name!r}")
             eng = SearchEngine(self.spark, path)
             self._engines[name] = eng

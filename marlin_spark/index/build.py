@@ -45,6 +45,7 @@ partition overwrite is idempotent.
 from __future__ import annotations
 
 import contextlib
+import shutil
 import time
 from typing import Callable
 
@@ -100,8 +101,12 @@ class IndexBuilder:
         if not (resume and mf.is_done("docs")):
             # full (re)build starts a fresh table history: without this a
             # rebuild on a compacted index would write INTO the live
-            # snapshot dirs through the catalog's path indirection
+            # snapshot dirs through the catalog's path indirection. The
+            # old history's segments, tombstones and postings go too:
+            # their docids name other docs in the new one
             self.cat.clear_snapshots()
+            for name in ("postings", "tombstones", "docs_delta", "postings_delta"):
+                shutil.rmtree(self.cat.raw_path(name), ignore_errors=True)
             self._stage_docs(mf)
         lap("docs")
         # stage A wrote docs/; stats needed by the block builder
@@ -445,14 +450,17 @@ _DICT_DRIVER_MAX = 500_000
 
 
 def build_dictionary(
-    spark: SparkSession, cat: IndexCatalog, cfg: EngineConfig
+    spark: SparkSession, cat: IndexCatalog, cfg: EngineConfig,
+    postings: str = "postings", table: str = "dictionary",
 ) -> tuple[int, int]:
-    """Derive the term dictionary from postings blocks: df/cf/max_tfnorm
+    """Derive the term dictionary table ``table`` from the posting
+    blocks of table ``postings``: df/cf/max_tfnorm
     per term + dense sorted term ids; partitioned by first-char class
     (fc) with term-sorted files, so exact lookups, prefix range scans AND
     fuzzy expansion all prune at the partition level first and by parquet
     min/max stats second (dtrie/twid analog, SURVEY.md §2.3 +
-    query/fuzzy.py). Also used by streaming compaction.
+    query/fuzzy.py). Also used by streaming compaction, which stages
+    both tables under ``__snap`` names.
 
     The postings are scanned and aggregated by ONE collect, bounded at
     _DICT_DRIVER_MAX + 1 rows, whose size picks the id-assignment path:
@@ -462,7 +470,7 @@ def build_dictionary(
     aggregates are persisted and counted, and with_dense_ids runs over
     that cache (sampling, counts and offset join never re-scan
     postings). Returns (n_terms, merge fan-in)."""
-    posts = cat.read(spark, "postings", POSTINGS_SCHEMA)
+    posts = cat.read(spark, postings, POSTINGS_SCHEMA)
     terms = posts.groupBy("term").agg(
         F.sum("n_docs").alias("df"),
         F.sum("sum_tf").alias("cf"),
@@ -506,7 +514,7 @@ def build_dictionary(
     cat.write(
         out.withColumn("fc", term_fc_col(F.col("term")))
         .sortWithinPartitions("term"),
-        "dictionary",
+        table,
         partition_by=["fc"],
     )
     if cached is not None:

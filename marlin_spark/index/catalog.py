@@ -15,6 +15,10 @@ src/main/dtrie.c; we keep partitioned Parquet tables + JSON metadata):
                                 precomputed short-prefix docid blocks,
                                 dtrie short-prefix bitmap analog)
       stats.json                n_docs avgdl total_tokens n_terms build_id
+      docs_delta/batch=N/       one NRT micro-batch's docs and posting
+      postings_delta/batch=N/   blocks (live once committed, see below)
+      tombstones/               deleted docids (until compaction)
+      metadata/                 the snapshot log (IndexCatalog)
       manifest/                 per-stage/per-group checkpoint records
       counters.json             build counters (postings, bytes, fan-in,
                                 seconds and Spark jobs per stage)
@@ -66,12 +70,14 @@ def _reader(spark: SparkSession, schema: str | None):
 
 
 class IndexCatalog:
-    """Local table catalog with an Iceberg-style snapshot log.
+    """Local table catalog with an Iceberg-style snapshot log: the one
+    way any write becomes visible to a reader.
 
     Table locations are indirected through ``metadata/``:
 
         metadata/v<N>.metadata.json   immutable snapshot: {snapshot_id,
                                       parent, tables: {logical -> dir},
+                                      segments: [[batch, committed_by]],
                                       summary}; created with O_EXCL so a
                                       concurrent committer of the same
                                       version fails loudly (optimistic
@@ -82,51 +88,84 @@ class IndexCatalog:
                                       Iceberg's HadoopCatalog protocol
 
     A fresh build has no metadata/ and every logical name maps to its
-    plain directory; compaction stages new ``<table>__snap<N>`` dirs and
-    swaps BOTH docs and postings visible in ONE commit (the multi-table
-    transaction the streaming dual-_SUCCESS gate approximates). A crash
-    before the hint rename leaves the old snapshot live and the staged
-    dirs orphaned — never a half-swapped index. Superseded data dirs are
-    expired after commit (expire_superseded); metadata history is kept.
+    plain directory (or file: ``stats.json`` maps like a table). Two
+    writers commit:
+    - an NRT micro-batch writes docs_delta/batch=N and postings_delta/
+      batch=N, then commits batch N into ``segments``, stamped with the
+      committing snapshot's id (one commit per micro-batch, like the
+      reference's one LMDB txn per write batch, si_write_end);
+    - compaction stages ``<table>__snap<N>`` docs, postings, dictionary,
+      prefix_accel and stats.json and maps them ALL live, with an empty
+      segment list, in ONE commit (a multi-table transaction).
+    A crash before the hint rename leaves the old snapshot live and the
+    written dirs unreferenced — never a half-visible write. Superseded
+    data is expired after commit (expire_superseded); metadata history is
+    kept.
     """
 
     def __init__(self, index_dir: str):
         self.dir = index_dir
-        self._snap = None
-        self._snap_loaded = False
+        # (pointer bytes, snapshot) pinned by the last read, or None; one
+        # reference, swapped whole, so concurrent readers never pair one
+        # read's pointer with another's snapshot
+        self._pinned: tuple | None = None
 
     # --- snapshot log ---
     def _meta(self, *parts: str) -> str:
         return os.path.join(self.dir, "metadata", *parts)
 
-    def current_snapshot(self) -> dict | None:
-        if not self._snap_loaded:
-            self._snap = None
+    def read_snapshot(self) -> dict | None:
+        """Pin the snapshot the pointer names now, and return it (None
+        without a snapshot log). One small read of version-hint.text; the
+        metadata file is parsed only when the pointer's content differs
+        from the pinned one's, so a reader can call this once per lookup."""
+        try:
+            with open(self._meta("version-hint.text"), "rb") as f:
+                hint = f.read()
+        except FileNotFoundError:
+            hint = None
+        pinned = self._pinned
+        if pinned is not None and pinned[0] == hint:
+            return pinned[1]
+        snap = None
+        if hint is not None:
             try:
-                with open(self._meta("version-hint.text")) as f:
-                    n = int(f.read().strip())
-                with open(self._meta(f"v{n}.metadata.json")) as f:
-                    self._snap = json.load(f)
+                with open(self._meta(f"v{int(hint)}.metadata.json")) as f:
+                    snap = json.load(f)
             except (FileNotFoundError, ValueError):
                 pass
-            self._snap_loaded = True
-        return self._snap
+        self._pinned = (hint, snap)
+        return snap
+
+    def current_snapshot(self) -> dict | None:
+        """The pinned snapshot (read once, then kept until
+        reload_snapshot() or a commit through this catalog)."""
+        pinned = self._pinned
+        return self.read_snapshot() if pinned is None else pinned[1]
 
     def reload_snapshot(self) -> None:
-        """Re-read the snapshot pointer (SearchEngine.refresh calls this
-        so a compact() done by another process becomes visible)."""
-        self._snap_loaded = False
+        """Unpin: the next current_snapshot() reads the pointer again."""
+        self._pinned = None
 
-    def commit_snapshot(self, tables: dict, summary: dict | None = None) -> int:
+    def commit_snapshot(self, tables: dict | None = None, summary: dict | None = None,
+                        segments: list[int] | None = None) -> int:
+        """Commit the next snapshot: ``tables`` remaps logical names, and
+        ``segments`` (None keeps them) is the list of NRT batch ids live
+        from this commit on. A batch new to the list is stamped with
+        this snapshot's id; one already live keeps its stamp."""
         cur = self.current_snapshot()
         mapping = dict(cur["tables"]) if cur else {}
-        mapping.update(tables)
+        mapping.update(tables or {})
         n = (cur["snapshot_id"] + 1) if cur else 1
+        live = dict(cur.get("segments", [])) if cur else {}
+        if segments is not None:
+            live = {b: live.get(b, n) for b in segments}
         os.makedirs(self._meta(), exist_ok=True)
         meta = {
             "snapshot_id": n,
             "parent": cur["snapshot_id"] if cur else None,
             "tables": mapping,
+            "segments": sorted(live.items()),
             "summary": summary or {},
         }
         # immutable + exclusive: a racing writer of v<n> fails here
@@ -136,19 +175,19 @@ class IndexCatalog:
         with open(tmp, "w") as f:
             f.write(str(n))
         os.replace(tmp, self._meta("version-hint.text"))  # THE commit
-        self._snap_loaded = False
+        self._pinned = None
         return n
 
     def expire_superseded(self, retain_last: int = 1) -> None:
-        """Remove data dirs no longer referenced by the ``retain_last``
-        most recent snapshots (snapshot-expire analog; run post-commit,
-        failures harmless). retain_last=1 is aggressive single-snapshot
-        retention — in-flight readers of older files fail, like the
-        pre-snapshot rmtree swap did; retain_last>=2 gives concurrent
-        readers holding snapshot N a full grace window while the writer
-        commits N+1 (Iceberg's expire_snapshots(retain_last) contract,
-        tested in test_iceberg_spec.py::test_concurrent_reader_survives_
-        commit_and_expire)."""
+        """Remove data dirs (and stats.json files) no longer referenced
+        by the ``retain_last`` most recent snapshots (snapshot-expire analog;
+        run post-commit, failures harmless). retain_last=1 is aggressive
+        single-snapshot retention — in-flight readers of older files
+        fail, like the pre-snapshot rmtree swap did; retain_last>=2 gives
+        concurrent readers holding snapshot N a full grace window while
+        the writer commits N+1 (Iceberg's expire_snapshots(retain_last)
+        contract, tested in test_iceberg_spec.py::test_concurrent_reader_
+        survives_commit_and_expire)."""
         import shutil as _sh
 
         snap = self.current_snapshot()
@@ -162,21 +201,26 @@ class IndexCatalog:
                     live |= set(json.load(f)["tables"].values())
             except (FileNotFoundError, ValueError):
                 pass
-        for logical, mapped in snap["tables"].items():
+        for logical in snap["tables"]:
             for cand in [logical] + [
                 d
                 for d in os.listdir(self.dir)
                 if d.startswith(logical + "__snap")
             ]:
-                if cand not in live and os.path.isdir(os.path.join(self.dir, cand)):
-                    _sh.rmtree(os.path.join(self.dir, cand), ignore_errors=True)
+                p = os.path.join(self.dir, cand)
+                if cand in live:
+                    continue
+                if os.path.isdir(p):
+                    _sh.rmtree(p, ignore_errors=True)
+                elif os.path.exists(p):
+                    os.remove(p)
 
     def clear_snapshots(self) -> None:
         """Drop the snapshot log (full rebuild = new table history)."""
         import shutil as _sh
 
         _sh.rmtree(self._meta(), ignore_errors=True)
-        self._snap_loaded = False
+        self._pinned = None
 
     def path(self, name: str) -> str:
         """Location of a logical table (snapshot-resolved); subpaths
@@ -241,24 +285,20 @@ class IndexCatalog:
                     pass
         return total
 
-    def committed_delta_dirs(self, name: str) -> list[str]:
-        """Streaming delta dirs of ``name`` whose batch is FULLY
-        committed: a batch becomes visible only when BOTH its
-        postings_delta and docs_delta writes finished (_SUCCESS on each)
-        — a micro-batch that crashed between the two writes must never
-        expose ghost postings (hits with no doc) or ghost docs; the
-        streaming retry overwrites the same batch dir idempotently."""
-        import glob
+    def delta_segments(self, name: str, snap: dict | None) -> list[tuple[str, int]]:
+        """(dir, id of the committing snapshot) of each NRT segment of
+        table ``name`` live in ``snap``, in batch order."""
+        return [
+            (self.raw_path(f"{name}_delta/batch={b}"), n)
+            for b, n in (snap or {}).get("segments", [])
+        ]
 
-        out = []
-        for d in sorted(glob.glob(self.path(f"{name}_delta/batch=*"))):
-            bid = d.rsplit("=", 1)[1]
-            if all(
-                os.path.exists(self.path(f"{t}_delta/batch={bid}/_SUCCESS"))
-                for t in ("postings", "docs")
-            ):
-                out.append(d)
-        return out
+    def committed_delta_dirs(self, name: str) -> list[str]:
+        """Dirs of the NRT segments of ``name`` live in the pinned
+        snapshot: a micro-batch is visible exactly from its commit, so a
+        batch that crashed before it (or a re-run withdrawn for its
+        rewrite) is never read — no ghost postings, no ghost docs."""
+        return [d for d, _n in self.delta_segments(name, self.current_snapshot())]
 
     def read_delta(
         self,

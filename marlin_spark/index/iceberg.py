@@ -26,13 +26,17 @@ dictionary/fc=c/       table `<ns>.<index>_dictionary`
 prefix_accel/fc=c/     table `<ns>.<index>_prefix_accel`
                         partition spec: identity(fc); sort order
                         (prefix, range_id)
-*_delta/batch=N/       Iceberg branch or staged snapshots: one
-                        snapshot per micro-batch; the dual-_SUCCESS
-                        visibility gate (catalog.committed_delta_dirs)
-                        becomes a SINGLE multi-table transaction (or
-                        one snapshot commit per table with the same
-                        batch watermark property)
-stats.json             table properties / snapshot summary entries
+*_delta/batch=N/       appends to the docs and postings tables:
+                        the local stand-in already commits once per
+                        micro-batch (the snapshot's segment list,
+                        catalog.committed_delta_dirs); Iceberg makes
+                        that a SINGLE multi-table transaction (or one
+                        snapshot commit per table with the same batch
+                        watermark property)
+stats.json             table properties / snapshot summary entries;
+                        the stand-in maps it through the snapshot log
+                        like a table, so compaction commits it with
+                        the data it describes
 manifest/ _done marks  snapshot-per-stage: a build unit's overwrite
                         maps to `overwritePartitions` on its rgroup
                         partition — atomic, idempotent on retry,
@@ -52,7 +56,7 @@ Operational notes for the swap:
   pyiceberg's `table.scan(row_filter=...).to_arrow()`, which applies
   the same partition + stats pruning;
 - `spark.catalog.refreshByPath` calls disappear (snapshot isolation);
-  SearchEngine.refresh() pins a new snapshot id instead.
+  a lookup pins the current snapshot id, as it pins the stand-in's.
 
 `layout_spec()` below is the machine-readable version of the table —
 unit-tested against what the local catalog actually writes

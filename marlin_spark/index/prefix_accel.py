@@ -22,8 +22,8 @@ varbyte blob per group:
 Query-side (engine._docids_for): a <=L-char prefix reads its blobs with
 partition + row-group pruning and decodes docids directly — no
 dictionary expansion, no per-term postings scan. Uncompacted streaming
-deltas are consulted separately (the accelerator is rebuilt on
-compaction, like the dictionary).
+deltas are consulted separately (compaction rebuilds the accelerator
+and commits it with the dictionary).
 """
 
 from __future__ import annotations
@@ -57,14 +57,16 @@ def decode_docids(blob: bytes) -> np.ndarray:
 
 
 def build_prefix_accel(
-    spark: SparkSession, cat: IndexCatalog, cfg: EngineConfig
+    spark: SparkSession, cat: IndexCatalog, cfg: EngineConfig,
+    postings: str = "postings", table: str = "prefix_accel",
 ) -> dict:
-    """Build (or rebuild) prefix_accel/ from the current postings. Cost:
+    """Build table ``table`` (default prefix_accel/) from the posting
+    blocks of table ``postings``. Cost:
     one postings scan + a shuffle of exploded docid blobs keyed
     (prefix, range_id) — every group <= range_size docids, head-prefix
     skew spread structurally across ranges."""
     L = cfg.prefix_accel_len
-    posts = cat.read(spark, "postings").select("term", "range_id", "postings")
+    posts = cat.read(spark, postings).select("term", "range_id", "postings")
     pref = posts.withColumn(
         "prefix",
         F.explode(
@@ -100,10 +102,10 @@ def build_prefix_accel(
     )
     cat.write(
         out.sortWithinPartitions("prefix", "range_id"),
-        "prefix_accel",
+        table,
         partition_by=["fc"],
     )
-    stored = cat.read(spark, "prefix_accel")
+    stored = cat.read(spark, table)
     row = stored.agg(
         F.count("*").alias("n_groups"),
         F.countDistinct("prefix").alias("n_prefixes"),

@@ -7,8 +7,10 @@ execute_query fan-out -> per-shard squery -> form_result merge):
    union of the queries' terms and prefixes in the dictionary — one
    pyarrow read of its fc partitions on the driver, no Spark job
    (_dictionary_lookup; typo expansion reads the same way, with a Spark
-   fallback only for fc partitions above typo_local_bytes) — lists the
-   postings segments once, and returns {query_id: QueryPlan}: terms with
+   fallback only for fc partitions above typo_local_bytes) — reads the
+   snapshot pointer once for the postings segments (a commit that
+   changed the tables reloads the engine's state first), and returns
+   {query_id: QueryPlan}: terms with
    idf and slots (reference: lookup_terms, squery.c:159-166), required
    slots, a theta seed and the segment list;
 2. score: one pruned postings scan of the plans' segments
@@ -32,7 +34,6 @@ ranking key = (round(score, 9) desc, docid asc).
 from __future__ import annotations
 
 import math
-import os
 import threading
 from bisect import bisect_left
 
@@ -154,48 +155,56 @@ class SearchEngine:
     def __init__(self, spark: SparkSession, index_dir: str, config: EngineConfig | None = None):
         self.spark = spark
         self.cat = IndexCatalog(index_dir)
-        self.stats = self.cat.read_json("stats.json")
+        stats = self.cat.read_json("stats.json")
         cfg = config or EngineConfig()
         self.cfg = cfg.with_(
-            k1=self.stats.get("k1", cfg.k1),
-            b=self.stats.get("b", cfg.b),
-            analyzer=self.stats.get("analyzer", cfg.analyzer),
-            n_term_buckets=self.stats.get("n_term_buckets", cfg.n_term_buckets),
+            k1=stats.get("k1", cfg.k1),
+            b=stats.get("b", cfg.b),
+            analyzer=stats.get("analyzer", cfg.analyzer),
+            n_term_buckets=stats.get("n_term_buckets", cfg.n_term_buckets),
             # learned/declared mapping travels with the index: a rebuild
             # or streaming add must tokenize the SAME fields the base
             # build did (reference persists its mapping, mapping.c:537-601)
             indexed_fields=tuple(
-                self.stats.get("indexed_fields", cfg.indexed_fields)
+                stats.get("indexed_fields", cfg.indexed_fields)
             ),
         )
-        self.n_docs = self.stats["n_docs"]
-        self.avgdl = self.stats["avgdl"]
         # guards the segment cache's LRU order and byte count: server
         # handler threads look up concurrently
         self._cache_lock = threading.Lock()
-        self._load_live_state()
+        # one thread at a time reloads the live state after a commit
+        self._state_lock = threading.Lock()
+        self._load_live_state(self.cat.current_snapshot())
 
     # ------------------------------------------------- live index state
-    def _load_live_state(self) -> None:
-        """Load tombstones + reset per-epoch caches. Deletes take effect
-        on the NEXT engine construction or refresh() — the reference's
-        serial writer has the same read-your-writes boundary (a query
-        started before the delete commit sees the old snapshot)."""
+    def _load_live_state(self, snap: dict | None) -> None:
+        """Load the index state of snapshot ``snap`` (pinned in self.cat):
+        its stats and tables, the tombstones, and empty per-state caches.
+        A lookup calls this when a commit changed the tables (compaction);
+        an NRT append commit changes only the segment list, so it keeps
+        every cache. Deletes take effect at construction, refresh() or
+        the next compaction — the reference's serial writer has the same
+        read-your-writes boundary (a query started before the delete
+        commit sees the old snapshot)."""
         import pyarrow.dataset as pads
 
+        self.stats = self.cat.read_json("stats.json")
+        self.n_docs = self.stats["n_docs"]
+        self.avgdl = self.stats["avgdl"]
         self._df_cache: dict = {}
         self._postings_cached = None  # (segments, postings DataFrame)
-        # per-epoch pyarrow caches for the driver-local fast path
+        # per-state pyarrow caches for the driver-local fast path
         # (round-3 verdict item #1: re-running hive discovery + footer
-        # reads per query regressed bm25_local_qps 63 -> 16; both caches
-        # reset here, i.e. at construction and refresh())
+        # reads per query regressed bm25_local_qps 63 -> 16)
         self._pads_cache: dict = {}          # name/path -> pads.Dataset
         with self._cache_lock:
             # (segment, bucket) -> _Blocks, LRU by dict order
             self._bucket_cache: dict = {}
             self._bucket_cache_bytes = 0
             self._segments_seen: tuple = ()
-        self._stats_epoch = self.stats.get("stats_epoch", 0)
+        # the base segment's stamp: the snapshot its tables were read at
+        self._tables = snap["tables"] if snap else {}
+        self._base_id = snap["snapshot_id"] if snap else 0
         # short-prefix accelerator: available iff built for this index
         self._accel_len = (
             int(self.stats.get("prefix_accel_len", 0))
@@ -223,21 +232,18 @@ class SearchEngine:
                     self.deleted = arr.astype(np.int64)
 
     def refresh(self) -> None:
-        """Re-read stats.json + tombstones and drop the term->df cache.
-        Call after IncrementalIndexer.compact()/delete on a long-lived
-        engine: the df cache (including negative entries) and the stats
-        snapshot are keyed to the construction-time epoch and would
-        otherwise serve stale idf / miss newly-indexed terms."""
-        self.cat.reload_snapshot()  # pick up compaction snapshot commits
-        self.stats = self.cat.read_json("stats.json")
-        self.n_docs = self.stats["n_docs"]
-        self.avgdl = self.stats["avgdl"]
+        """Re-read the snapshot, stats and tombstones and drop every
+        per-state cache. Lookups follow commits (NRT batches, compaction)
+        by themselves; call this to see deletes made since construction."""
+        self.cat.reload_snapshot()
+        snap = self.cat.current_snapshot()
         for name in ("postings", "docs", "dictionary"):
             try:
                 self.spark.catalog.refreshByPath(self.cat.path(name))
             except Exception:
                 pass
-        self._load_live_state()
+        with self._state_lock:
+            self._load_live_state(snap)
 
     def _postings_df(self, segs: tuple) -> DataFrame:
         """The Spark plans' postings: the segments ``segs`` (_segments),
@@ -248,17 +254,17 @@ class SearchEngine:
         (df lookup finds nothing) and df/idf of existing terms stay at
         base values until compaction — the standard NRT trade (segment
         visible, stats refreshed on commit)."""
-        # cache the assembled DataFrame keyed by the committed segments
-        # and their commit stamps: spark.read.parquet lists files + reads
-        # a footer on the driver (~90 ms), a fixed per-query cost. A new
-        # micro-batch, or a re-run that rewrote batch=N, changes the key,
-        # and the fresh read lists the dir's current files (a cached
-        # DataFrame keeps the listing it was made with).
+        # cache the assembled DataFrame keyed by the segments and the
+        # snapshots that committed them: spark.read.parquet lists files +
+        # reads a footer on the driver (~90 ms), a fixed per-query cost. A
+        # new micro-batch, or a re-run committed again under a new id,
+        # changes the key, and the fresh read lists the dir's current
+        # files (a cached DataFrame keeps the listing it was made with).
         cached = self._postings_cached
         if cached is not None and cached[0] == segs:
             return cached[1]
         deltas = [d for d, _stamp in segs[1:]]
-        base = self.cat.read(self.spark, "postings").select(*POSTING_COLS)
+        base = self.spark.read.parquet(segs[0][0]).select(*POSTING_COLS)
         if deltas:
             base = base.unionByName(
                 self.cat.read_delta(self.spark, "postings", deltas).select(
@@ -387,11 +393,12 @@ class SearchEngine:
                      prefix_last: bool = False) -> dict[str, QueryPlan]:
         """The one query planner: {query_id: QueryPlan} for
         {query_id: text}, from ONE dictionary lookup for the union of the
-        queries' exact terms and prefixes and ONE listing of the postings
-        segments, which every plan carries so that the block fetch reads
-        the segments the seed gate saw. k is capped at max_hits. A term
-        maps to (idf, slots): the slots of the query words it satisfies;
-        under prefix_last the typed-last word's expansions take its slot.
+        queries' exact terms and prefixes and ONE read of the snapshot's
+        postings segments, which every plan carries so that the block
+        fetch reads the segments the seed gate saw. k is capped at
+        max_hits. A term maps to (idf, slots): the slots of the query
+        words it satisfies; under prefix_last the typed-last word's
+        expansions take its slot.
 
         theta_seed, a GLOBAL lower bound on the final k-th best score, is
         read off the dictionary's top_maxes (index/build.py): a block's
@@ -608,12 +615,13 @@ class SearchEngine:
         words = [
             t for t, _ in analyze(q, self.cfg.analyzer, mode="search")
         ]
+        if len(words) == 1 and typos:
+            return self.typo_match(q, prefix_last)
+        segs = self._segments()
         if not words:
             return self._docs_df().select("docid")
         if len(words) == 1:
-            if typos:
-                return self.typo_match(q, prefix_last)
-            return self._docids_for_terms([words[0]], prefix_last)
+            return self._docids_for_terms([words[0]], prefix_last, segs)
         terms: list[str] = []
         for i, w in enumerate(words):
             terms.append(w)
@@ -647,19 +655,19 @@ class SearchEngine:
             for exp, owner in zip(expansions, owners):
                 (comb_terms if owner < 0 else g_terms[owner]).update(exp)
             comb = (
-                self._docids_for(sorted(comb_terms), [])
+                self._docids_for(sorted(comb_terms), [], segs)
                 if comb_terms
                 else self.spark.createDataFrame([], "docid long")
             )
             if any(not g for g in g_terms):
                 return comb.distinct()
-            anded = self._docids_for_groups([sorted(g) for g in g_terms])
+            anded = self._docids_for_groups([sorted(g) for g in g_terms], segs)
             return anded.unionByName(comb).distinct()
         parts = []
         for gid, g in enumerate(groups):
             exact = [t for t, p in g if not p]
             pref = [t for t, p in g if p]
-            d = self._docids_for(exact, pref)
+            d = self._docids_for(exact, pref, segs)
             parts.append(d.withColumn("gid", F.lit(gid)))
         allg = parts[0]
         for p in parts[1:]:
@@ -671,26 +679,26 @@ class SearchEngine:
             .filter(F.col("ng") >= len(groups))
             .select("docid")
         )
-        comb = self._docids_for_terms([combined], prefix_last)
+        comb = self._docids_for_terms([combined], prefix_last, segs)
         return anded.unionByName(comb).distinct()
 
-    def _docids_for_terms(self, terms: list[str], prefix: bool) -> DataFrame:
+    def _docids_for_terms(self, terms: list[str], prefix: bool, segs: tuple) -> DataFrame:
         if prefix:
-            return self._docids_for([], terms)
-        return self._docids_for(terms, [])
+            return self._docids_for([], terms, segs)
+        return self._docids_for(terms, [], segs)
 
-    def _docids_for(self, exact: list[str], prefixes: list[str]) -> DataFrame:
+    def _docids_for(self, exact: list[str], prefixes: list[str], segs: tuple) -> DataFrame:
         """Distinct docids holding any of the terms / prefix expansions
-        (posting-list OR, reference squery.c:72-142). Prefixes no longer
-        than the accelerator length are answered from the precomputed
-        prefix_accel/ docid blobs (dtrie short-prefix bitmap analog,
-        dtrie.c:355-375) — no dictionary expansion, no per-term postings
-        scan, cost independent of how many terms share the prefix."""
+        in the segments ``segs`` (posting-list OR, reference
+        squery.c:72-142). Prefixes no longer than the accelerator length
+        are answered from the precomputed prefix_accel/ docid blobs
+        (dtrie short-prefix bitmap analog, dtrie.c:355-375) — no
+        dictionary expansion, no per-term postings scan, cost independent
+        of how many terms share the prefix."""
         accel_len = self._accel_len
         short = [p for p in prefixes if len(p) <= accel_len]
         rest = [p for p in prefixes if len(p) > accel_len]
         parts: list[DataFrame] = []
-        segs = self._segments()
         if short:
             from marlin_spark.index.prefix_accel import accel_docids_df
 
@@ -752,9 +760,9 @@ class SearchEngine:
         return self._local_topk({"": plan})[""]
 
     def _arrow_dataset(self, key: str, path: str):
-        """Memoized pyarrow dataset (file discovery + schema) per stats
-        epoch — the cache lives in _load_live_state so construction and
-        refresh() both reset it."""
+        """Memoized pyarrow dataset (file discovery + schema) per loaded
+        state — _load_live_state resets the cache at construction,
+        refresh() and a commit that changed the tables."""
         ds = self._pads_cache.get(key)
         if ds is None:
             import pyarrow.dataset as pads
@@ -764,17 +772,23 @@ class SearchEngine:
             )
         return ds
 
-    def _segments(self) -> tuple[tuple[str, "int | None"], ...]:
-        """The postings segments a lookup reads, as (dir, stamp):
-        the base (stamp None: it changes only at refresh(), which empties
-        the cache) and every committed delta segment, stamped with the
-        mtime of its postings _SUCCESS so a retried overwrite of
-        batch=N is a new segment, never served stale. When the set
-        changes, cached buckets of segments no longer in it are
-        dropped."""
-        segs = ((self.cat.path("postings"), None),) + tuple(
-            (d, os.stat(os.path.join(d, "_SUCCESS")).st_mtime_ns)
-            for d in self.cat.committed_delta_dirs("postings")
+    def _segments(self) -> tuple[tuple[str, int], ...]:
+        """The postings segments one lookup reads, from ONE read of the
+        snapshot pointer, as (dir, id of the snapshot that committed
+        it): the base, stamped with the snapshot its tables were loaded
+        at, and every live NRT segment. A commit that changed the tables
+        (compaction) reloads the live state first, as refresh() does; a
+        re-run batch is a new segment (withdrawn, then committed again
+        under a new id), never served stale. When the set changes,
+        cached buckets of segments no longer in it are dropped."""
+        snap = self.cat.read_snapshot()
+        tables = snap["tables"] if snap else {}
+        if tables != self._tables:
+            with self._state_lock:
+                if tables != self._tables:
+                    self._load_live_state(snap)
+        segs = ((self.cat.path("postings"), self._base_id),) + tuple(
+            self.cat.delta_segments("postings", snap)
         )
         if segs != self._segments_seen:
             live = set(segs)
@@ -784,7 +798,7 @@ class SearchEngine:
                 self._segments_seen = segs
         return segs
 
-    def _bucket_table(self, seg: tuple[str, "int | None"], bucket: int) -> "_Blocks":
+    def _bucket_table(self, seg: tuple[str, int], bucket: int) -> "_Blocks":
         """In-memory posting blocks of one term bucket of one segment
         (BM25 columns only — positions stay pruned), term-sorted with a
         term -> row span index, so a query term's blocks are a dict hit
@@ -857,6 +871,7 @@ class SearchEngine:
         (/root/reference/src/main/sindex.c:718-724); our standard
         positional layout gets it for free. Mirrors
         oracle.bm25.phrase_match_oracle."""
+        segs = self._segments()
         words = [t for t, _ in analyze(q, self.cfg.analyzer, mode="search")]
         if not words:
             return self._docs_df().select("docid")
@@ -864,7 +879,7 @@ class SearchEngine:
         found = {r["term"] for r in rows}
         if not all(w in found for w in words):
             return self.spark.createDataFrame([], "docid long")
-        blocks = self._matched_blocks(set(words), self._segments()).select(
+        blocks = self._matched_blocks(set(words), segs).select(
             "term", "range_id", "postings", "positions"
         )
 
@@ -1047,6 +1062,7 @@ class SearchEngine:
             order_by_rules,
         )
 
+        segs = self._segments()
         words = [t for t, _ in analyze(q, self.cfg.analyzer, mode="search")]
         base_rules = list(rules or DEFAULT_RULES)
         field = sort_by or rank_by
@@ -1083,7 +1099,7 @@ class SearchEngine:
             if not term_meta:
                 base = self.spark.createDataFrame([], RANK_SCHEMA)
                 return base if explain else base.select("docid")
-            blocks = self._matched_blocks(term_meta, self._segments()).select(
+            blocks = self._matched_blocks(term_meta, segs).select(
                 "term", "range_id", "postings", "positions"
             )
             n_part = self._scorer_partitions()
@@ -1116,7 +1132,7 @@ class SearchEngine:
             # deltas the match set can exceed it, and F.broadcast
             # bypasses AQE's size check, so skip the forced broadcast
             # and let AQE decide from actual sizes instead
-            deltas_pending = len(self._segments()) > 1
+            deltas_pending = len(segs) > 1
             left = (
                 F.broadcast(feats)
                 if est is not None
@@ -1140,6 +1156,7 @@ class SearchEngine:
         Single-word goldens pinned by levenshtein.robot."""
         from marlin_spark.oracle.typo import maxdist
 
+        segs = self._segments()
         words = [t for t, _ in analyze(q, self.cfg.analyzer, mode="search")]
         if not words:
             return self._docs_df().select("docid")
@@ -1150,19 +1167,19 @@ class SearchEngine:
         groups = self._typo_expand_words(specs)
         if any(not g for g in groups):
             return self.spark.createDataFrame([], "docid long")
-        return self._docids_for_groups(groups)
+        return self._docids_for_groups(groups, segs)
 
-    def _docids_for_groups(self, groups: list) -> DataFrame:
+    def _docids_for_groups(self, groups: list, segs: tuple) -> DataFrame:
         """Distinct docids holding >= 1 term of EVERY group: one pruned
-        postings scan for the union of all terms, then an n-way AND via
-        countDistinct(group) — never one scan per group."""
+        postings scan of ``segs`` for the union of all terms, then an
+        n-way AND via countDistinct(group) — never one scan per group."""
         meta_rows = sorted(
             {(t, gid) for gid, g in enumerate(groups) for t in g}
         )
         terms = sorted({t for t, _ in meta_rows})
         if not terms:
             return self.spark.createDataFrame([], "docid long")
-        decoded = self._decoded_postings(terms, self._segments())
+        decoded = self._decoded_postings(terms, segs)
         meta = self.spark.createDataFrame(
             meta_rows, "term string, gid int"
         )

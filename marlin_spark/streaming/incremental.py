@@ -12,20 +12,24 @@ maintenance API:
   its docs are written to docs_delta/batch=N first, then the bulk
   build's block writer (build.write_postings) builds
   postings_delta/batch=N from that dir at the base avgdl (same block
-  layout, tagged with the batch id). Queries see deltas immediately:
-  SearchEngine._postings_df()/_docs_df() union postings_delta/ and
-  docs_delta/ into every scan. NRT caveats (stats refreshed at
+  layout, tagged with the batch id), then ONE snapshot commit makes the
+  batch live (IndexCatalog.commit_snapshot). Every lookup reads the
+  snapshot pointer, so the batch is searchable from that commit on
+  without refresh(); SearchEngine._postings_df()/_docs_df() union the
+  live segments into every scan. NRT caveats (stats refreshed at
   compaction; brand-new terms invisible until the dictionary rebuild)
   are documented on those helpers.
 - DELETE: tombstone docids appended to tombstones/ (query-time
   anti-join / numpy mask inside WAND), folded at compaction — the
-  Lucene liveDocs pattern.
+  Lucene liveDocs pattern. Not yet a commit: an engine sees deletes
+  from its construction, refresh() or the next compaction.
 - UPDATE/REPLACE: delete + add, like the reference.
 - COMPACT: folds delta segments AND tombstones into the base in one
   rewrite (segment merge; what an Iceberg MERGE INTO + snapshot expire
   would do on a real lakehouse), then rebuilds the dictionary and
-  collection stats. The collection stats are observed on the staged docs
-  write; the postings go through the bulk build's merge-and-write stage
+  collection stats, and commits all of it in one snapshot. The
+  collection stats are observed on the staged docs write; the postings
+  go through the bulk build's merge-and-write stage
   (build.merge_and_write) with the compaction rewriter, which re-cuts
   every (term, range) group with the block merger's fold and recomputes
   its max_tfnorm under the POST-compaction avgdl — see
@@ -36,8 +40,6 @@ Limitations kept honest:
 - docids for streamed turns continue AFTER the base build's max docid in
   arrival order (per-batch rank over (conv_id, turn_idx)); global
   rank-stability across restarts comes from the checkpoint.
-- a long-lived SearchEngine must call refresh() after compact()/deletes
-  (its df cache and stats snapshot are epoch-keyed at construction).
 """
 
 from __future__ import annotations
@@ -89,28 +91,29 @@ class IncrementalIndexer:
         """foreachBatch body: append one delta segment of posting blocks.
 
         Writes docs_delta/batch=N, then builds postings_delta/batch=N
-        from it; the batch is visible once both have committed
-        (catalog.committed_delta_dirs). Idempotent per batch_id
-        (streaming retry safety): both dirs are overwritten, mirroring the
-        reference's one-LMDB-txn-per-batch (si_write_end)."""
+        from it, then commits batch N as a live segment: the batch is
+        visible exactly from that commit, like the reference's one LMDB
+        txn per batch (si_write_end). Idempotent per batch_id (streaming
+        retry safety): a re-run of a committed batch first commits its
+        withdrawal and only then overwrites both dirs, so no committed
+        file is rewritten in place. The row count for the capacity check
+        rides on the docs write (Observation); an overflowing batch
+        raises before its commit."""
+        from pyspark.sql import Observation, Window
+
         cfg = self.cfg
         base = int(self.stats.get("max_docid", self.stats["n_docs"]))
         capacity = int(self.stats.get("batch_capacity", cfg.batch_capacity))
-        n_rows = batch_df.count()
-        if n_rows > capacity:
-            # fail loudly: a silent overflow would assign docids that
-            # collide with the next batch's range
-            raise ValueError(
-                f"micro-batch {batch_id} has {n_rows} rows > batch_capacity "
-                f"{capacity}; raise EngineConfig.batch_capacity (and rebuild "
-                "stats.json) or split the batch"
+        live = [b for b, _n in (self.cat.read_snapshot() or {}).get("segments", [])]
+        batch_id = int(batch_id)
+        if batch_id in live:
+            live.remove(batch_id)
+            self.cat.commit_snapshot(
+                segments=live, summary={"operation": "withdraw", "batch": batch_id}
             )
-        offset = base + int(batch_id) * capacity
-        w_cols = ["conv_id", "turn_idx"]
+        offset = base + batch_id * capacity
         # per-batch deterministic docids after the base corpus
-        from pyspark.sql import Window
-
-        w = Window.orderBy(*w_cols)
+        w = Window.orderBy("conv_id", "turn_idx")
         dl_col = None
         for fname in cfg.indexed_fields:
             s = F.when(F.col(fname).isNull(), F.lit(0)).otherwise(
@@ -129,14 +132,29 @@ class IncrementalIndexer:
         # so an auto-mapped index with extra stored fields must find
         # them here too (mirrors build.py's `keep` columns)
         keep = [c for c in docs.columns if c not in ("dl", "range_id", "docid")]
+        obs = Observation(f"batch_{batch_id}")
         docs_name = f"docs_delta/batch={batch_id}"
-        docs.select("docid", *keep, "dl").write.mode("overwrite").parquet(
-            self.cat.path(docs_name)
-        )
+        docs.select("docid", *keep, "dl").observe(
+            obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
+        ).write.mode("overwrite").parquet(self.cat.path(docs_name))
+        n_rows = int(obs.get["n"])
+        if n_rows > capacity:
+            # fail loudly: a silent overflow would assign docids that
+            # collide with the next batch's range
+            raise ValueError(
+                f"micro-batch {batch_id} has {n_rows} rows > batch_capacity "
+                f"{capacity}; raise EngineConfig.batch_capacity (and rebuild "
+                "stats.json) or split the batch"
+            )
         write_postings(
             self.spark, self.cat, f"postings_delta/batch={batch_id}",
             self.cat.read(self.spark, docs_name), cfg, self.stats["avgdl"],
             self.cat.dir_bytes(docs_name),
+        )
+        self.cat.commit_snapshot(
+            segments=live + [batch_id],
+            summary={"operation": "append", "batch": batch_id, "n_docs": n_rows,
+                     "sum_dl": int(obs.get["sum_dl"] or 0)},
         )
 
     # ------------------------------------------------------------------
@@ -257,11 +275,15 @@ class IncrementalIndexer:
         """Fold delta segments + tombstones into the base and refresh
         dictionary/stats (segment merge; Iceberg MERGE INTO analog).
 
-        Visibility protocol: the merged docs AND postings are staged in
-        ``<table>__snap<N>`` dirs, then made live together by ONE atomic
-        snapshot commit (catalog.commit_snapshot: version-hint rename) —
-        a crash anywhere before that leaves the previous snapshot fully
-        intact; superseded dirs are expired afterwards. The snapshot
+        Visibility protocol: the merged docs and postings, the dictionary
+        and prefix_accel built over them, and the new stats.json are all
+        staged under ``<table>__snap<N>`` names, then made live together,
+        with an empty segment list, by ONE atomic snapshot commit
+        (catalog.commit_snapshot: version-hint rename) — a crash anywhere
+        before that leaves the previous snapshot fully intact. After the
+        commit nothing of the index is written: superseded dirs, the
+        folded delta dirs and the folded tombstones are removed. Every
+        engine reads the new snapshot at its next lookup. The snapshot
         summary records the wall seconds and Spark jobs of the staged
         rewrite it commits.
 
@@ -276,17 +298,20 @@ class IncrementalIndexer:
         from pyspark.sql import Observation
 
         t0, job0 = time.time(), last_job_id(self.spark)
-        # fold only fully-committed batches; a half-written (crashed)
-        # batch dir is left in place for the streaming retry to overwrite
+        snap = self.cat.read_snapshot()
+        # fold the committed batches only; a crashed batch's dirs are
+        # left for the streaming retry to overwrite
         delta_dirs = self.cat.committed_delta_dirs("postings")
         doc_deltas = self.cat.committed_delta_dirs("docs")
         tomb = self._tombstones()
-        if not delta_dirs and not doc_deltas and tomb is None:
+        if not delta_dirs and tomb is None:
             return
-        snap = self.cat.current_snapshot()
         next_id = (snap["snapshot_id"] + 1) if snap else 1
-        docs_new = f"docs__snap{next_id}"
-        postings_new = f"postings__snap{next_id}"
+        staged = {
+            t: f"{t}__snap{next_id}"
+            for t in ("docs", "postings", "dictionary", "prefix_accel", "stats.json")
+            if t != "prefix_accel" or self.cat.exists("prefix_accel")
+        }
 
         # ---- 1. docs: base + deltas - tombstones -> staged docs dir. The
         # collection stats ride on the same write job (Observation), as
@@ -304,7 +329,7 @@ class IncrementalIndexer:
             F.sum("dl").alias("total"),
         )
         rg_bytes = str(self.cfg.docs_row_group_mb * 1024 * 1024)
-        self.cat.write(docs, docs_new, options={"parquet.block.size": rg_bytes})
+        self.cat.write(docs, staged["docs"], options={"parquet.block.size": rg_bytes})
         row = obs.get
         new_avgdl = float(row["avgdl"] or 0.0)
 
@@ -324,42 +349,16 @@ class IncrementalIndexer:
             self.cfg.k1, self.cfg.b, new_avgdl, self.cfg.block_size, tomb
         )
         merge_and_write(
-            self.spark, self.cat, postings_new, merged, rewriter, self.cfg,
+            self.spark, self.cat, staged["postings"], merged, rewriter, self.cfg,
             self.cat.dir_bytes("postings") + self.cat.dir_bytes("postings_delta"),
         )
-        # ---- COMMIT: docs + postings swap visibility in one atomic
-        # version-hint rename (multi-table transaction); crash before
-        # this line leaves the old snapshot fully live
-        self.cat.commit_snapshot(
-            {"docs": docs_new, "postings": postings_new},
-            summary={
-                "operation": "compact",
-                "folded_batches": len(delta_dirs),
-                "tombstones": 0 if tomb is None else int(tomb.size),
-                "n_docs": int(row["n"]),
-                "seconds": round(time.time() - t0, 3),
-                "spark_jobs": last_job_id(self.spark) - job0,
-            },
+
+        # ---- 3. the dictionary (df/cf/term ids) and the short-prefix
+        # accelerator over the staged postings, and the new stats
+        n_terms, _ = build_dictionary(
+            self.spark, self.cat, self.cfg, staged["postings"], staged["dictionary"]
         )
-        self.cat.expire_superseded()
-        # Spark caches file listings per path for the whole session; the
-        # resolved table paths MUST be refreshed or later reads in this
-        # session silently see stale listings
-        self.spark.catalog.refreshByPath(self.cat.path("docs"))
-        self.spark.catalog.refreshByPath(self.cat.path("postings"))
-
-        # ---- 3. clear folded inputs
-        for d in delta_dirs + doc_deltas:
-            shutil.rmtree(d)
-        if tomb is not None:
-            shutil.rmtree(self.cat.path("tombstones"), ignore_errors=True)
-
-        # ---- 4. refresh the dictionary (df/cf/term ids over merged
-        # postings) and stats
-        n_terms, _ = build_dictionary(self.spark, self.cat, self.cfg)
-        if self.cat.exists("prefix_accel"):
-            # fold the merged segments into the short-prefix accelerator
-            # (same rebuild-on-commit contract as the dictionary)
+        if "prefix_accel" in staged:
             from marlin_spark.index.prefix_accel import build_prefix_accel
 
             build_prefix_accel(
@@ -372,9 +371,11 @@ class IncrementalIndexer:
                         )
                     )
                 ),
+                staged["postings"],
+                staged["prefix_accel"],
             )
-            self.spark.catalog.refreshByPath(self.cat.path("prefix_accel"))
-        self.stats.update(
+        stats = dict(
+            self.stats,
             n_docs=int(row["n"]),
             avgdl=new_avgdl,
             total_tokens=int(row["total"] or 0),
@@ -382,4 +383,28 @@ class IncrementalIndexer:
             n_terms=n_terms,
             stats_epoch=self.stats.get("stats_epoch", 0) + 1,
         )
-        self.cat.write_json("stats.json", self.stats)
+        self.cat.write_json(staged["stats.json"], stats)
+
+        # ---- COMMIT: everything above becomes visible in one atomic
+        # version-hint rename (multi-table transaction); a crash before
+        # this line leaves the old snapshot fully live
+        self.cat.commit_snapshot(
+            staged,
+            summary={
+                "operation": "compact",
+                "folded_batches": len(delta_dirs),
+                "tombstones": 0 if tomb is None else int(tomb.size),
+                "n_docs": int(row["n"]),
+                "seconds": round(time.time() - t0, 3),
+                "spark_jobs": last_job_id(self.spark) - job0,
+            },
+            segments=[],
+        )
+        self.stats = stats
+
+        # ---- 4. remove what the commit superseded or folded
+        self.cat.expire_superseded()
+        for d in delta_dirs + doc_deltas:
+            shutil.rmtree(d)
+        if tomb is not None:
+            shutil.rmtree(self.cat.path("tombstones"), ignore_errors=True)

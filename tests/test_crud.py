@@ -74,8 +74,9 @@ def test_delete_excludes_doc_from_every_path(spark, crud_index, tiny_oracle):
     assert victim not in {
         r["docid"] for r in eng.match_marlin("worst", prefix_last=False).collect()
     }
-    # the old engine instance (constructed pre-delete) still serves the
-    # old snapshot until refresh() — documented read-your-writes boundary
+    # deletes are not commits yet: the engine constructed before the
+    # delete keeps its tombstone set until refresh() or the next
+    # compaction — the documented read-your-writes boundary
     eng0.refresh()
     assert victim not in {
         r["docid"] for r in eng0.search("worst", k=100).collect()
@@ -347,20 +348,30 @@ def test_patch_rejects_unknown_fields(spark, crud_index):
 
 
 def test_batch_capacity_overflow_fails_loudly(spark, crud_index):
+    """The overflow raises before the batch's commit, so a fresh engine
+    finds none of its turns on any path."""
     d, cfg = crud_index
     inc = IncrementalIndexer(spark, d, cfg)
+    base_max = int(inc.stats.get("max_docid", inc.stats["n_docs"]))
     inc.stats["batch_capacity"] = 1
     with pytest.raises(ValueError, match="batch_capacity"):
         inc.process_batch(
             _batch(
                 spark,
                 [
-                    ("c1", 0, "user", "a", None),
-                    ("c1", 1, "user", "b", None),
+                    ("c1", 0, "user", "a worst", None),
+                    ("c1", 1, "user", "b best", None),
                 ],
             ),
             0,
         )
+    eng = SearchEngine(spark, d, cfg)
+    for q in ("worst", "best"):
+        for hits in _every_path(eng, q, k=1000).values():
+            assert hits and all(doc <= base_max for doc, _ in hits), q
+    everything = eng.hydrate(eng.search("", k=1000)).collect()
+    assert len(everything) == base_max
+    assert "c1" not in {r["conv_id"] for r in everything}
 
 
 def test_distributed_tombstones_never_touch_driver(spark, crud_index):
@@ -535,8 +546,9 @@ def test_compacted_dictionary_equals_bulk_build(
 
 # ------------------------------------------- driver segment cache (NRT)
 def _delta_keys(eng) -> list:
-    """Cached (segment, bucket) keys of delta segments (stamped)."""
-    return [key for key in eng._bucket_cache if key[0][1] is not None]
+    """Cached (segment, bucket) keys of delta segments."""
+    return [key for key in eng._bucket_cache
+            if key[0][0] != eng.cat.path("postings")]
 
 
 def test_committed_batch_visible_to_search_local_without_refresh(spark, crud_index):
@@ -562,8 +574,9 @@ def test_committed_batch_visible_to_search_local_without_refresh(spark, crud_ind
 
 def test_rerun_batch_is_served_fresh(spark, crud_index):
     """Re-running process_batch for the same batch id with different
-    turns overwrites batch=0; the cache keys segments by their commit
-    stamp, so the warmed engine serves the new turns, not the old."""
+    turns withdraws batch=0, overwrites it and commits it again; the
+    cache keys segments by the snapshot that committed them, so the
+    warmed engine serves the new turns, not the old."""
     d, cfg = crud_index
     eng = SearchEngine(spark, d, cfg)
     inc = IncrementalIndexer(spark, d, cfg)
@@ -638,7 +651,13 @@ def test_compact_and_refresh_leave_no_delta_entries(spark, crud_index):
     eng.refresh()
     got = eng.search_local("this worst", k=10)
     assert not _delta_keys(eng)
-    assert {key[0] for key in eng._bucket_cache} == {(eng.cat.path("postings"), None)}
+    # the base segment is stamped with the snapshot it was loaded at:
+    # the compaction's
+    snap = eng.cat.current_snapshot()
+    assert snap["summary"]["operation"] == "compact"
+    assert {key[0] for key in eng._bucket_cache} == {
+        (eng.cat.path("postings"), snap["snapshot_id"])
+    }
     assert got == SearchEngine(spark, d, cfg).search_local("this worst", k=10)
 
 
@@ -682,3 +701,201 @@ def test_concurrent_lookups_keep_the_cache_consistent(spark, crud_index):
         assert got == serial[qm], qm
     assert eng._bucket_cache_bytes == sum(e.nbytes for e in eng._bucket_cache.values())
     assert eng._bucket_cache_bytes <= total // 3 or len(eng._bucket_cache) == 1
+
+
+# ------------------------------------------------ one commit protocol
+def _every_path(eng, q: str, mode: str = "any", k: int = 10) -> dict:
+    """Ranked (docid, score at 9 dp) of q on the driver, Spark WAND and
+    exact paths."""
+    out = {"local": [(doc, round(s, 9)) for doc, s in eng.search_local(q, k, mode)]}
+    for path, use_wand in (("wand", True), ("exact", False)):
+        out[path] = [
+            (r["docid"], round(r["score"], 9))
+            for r in eng.search(q, k=k, mode=mode, use_wand=use_wand).collect()
+        ]
+    return out
+
+
+def _stream(spark, inc, batches) -> dict:
+    """Commits each list of rows as batch 0, 1, ...: {(conv_id,
+    turn_idx): (docid, text)} of the streamed turns."""
+    base_max = int(inc.stats.get("max_docid", inc.stats["n_docs"]))
+    capacity = int(inc.stats["batch_capacity"])
+    out = {}
+    for bid, rows in enumerate(batches):
+        inc.process_batch(_batch(spark, rows), bid)
+        for i, r in enumerate(sorted(rows)):
+            out[(r[0], r[1])] = (base_max + bid * capacity + i + 1, r[3])
+    return out
+
+
+def _edited_oracle(tiny_rows, streamed: dict, deleted: list) -> OracleIndex:
+    """Oracle over the base turns plus the streamed ones, less the
+    deleted (conv_id, turn_idx) keys."""
+    keyed = sorted(tiny_rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
+    live = {(r["conv_id"], r["turn_idx"]): (i + 1, r["text"])
+            for i, r in enumerate(keyed)}
+    live.update(streamed)
+    for key in deleted:
+        del live[key]
+    return OracleIndex(sorted(live.values()))
+
+
+_QUERIES = [("worst", "any"), ("this best", "any"), ("test", "all"),
+            ("aaaa bbbb", "any"), ("worst again", "all")]
+
+
+def test_engine_built_at_compaction_commit_sees_one_copy(
+    spark, crud_index, tiny_rows, monkeypatch
+):
+    """Each append and the compaction become visible through exactly one
+    commit; compaction commits docs, postings, dictionary and stats
+    before it removes the folded batches and tombstones. An engine built
+    right after that commit answers like the post-compaction oracle on
+    every path: each streamed doc once, the new stats."""
+    from marlin_spark.index.catalog import IndexCatalog
+
+    d, cfg = crud_index
+    commits, seen = [], {}
+    real = IndexCatalog.commit_snapshot
+
+    def commit_then_look(self, *args, **kwargs):
+        n = real(self, *args, **kwargs)
+        commits.append(kwargs["summary"]["operation"])
+        if commits[-1] == "compact":
+            eng = SearchEngine(spark, d, cfg)
+            seen["n_docs"] = eng.n_docs
+            seen.update({qm: _every_path(eng, *qm) for qm in _QUERIES})
+        return n
+
+    monkeypatch.setattr(IndexCatalog, "commit_snapshot", commit_then_look)
+    inc = IncrementalIndexer(spark, d, cfg)
+    streamed = _stream(spark, inc, _NRT_BATCHES[:2])
+    base_key = min((r["conv_id"], r["turn_idx"]) for r in tiny_rows)
+    deleted = [base_key, ("nrt-a", 1)]
+    inc.delete_turns(deleted)
+    oracle = _edited_oracle(tiny_rows, streamed, deleted)
+    inc.compact()
+    assert commits == ["append", "append", "compact"]
+    assert seen.pop("n_docs") == oracle.n_docs
+    for (q, mode), paths in seen.items():
+        want = [(doc, round(s, 9)) for doc, s in oracle.search(q, k=10, mode=mode)]
+        assert want, q
+        for path, got in paths.items():
+            assert len({doc for doc, _ in got}) == len(got), (q, path)
+            assert got == want, (q, mode, path)
+
+
+def test_engine_built_before_a_batch_follows_compaction(
+    spark, crud_index, tiny_rows
+):
+    """An engine built before process_batch and never refreshed (the one
+    an app caches) answers after compact() like a fresh engine and the
+    oracle, on every path, for terms whose base and delta buckets it had
+    cached and for terms it had not."""
+    import os
+
+    from marlin_spark.app import MarlinApp
+
+    d, cfg = crud_index
+    app, name = MarlinApp(spark, os.path.dirname(d)), os.path.basename(d)
+    eng = app.get_index(name)
+    cached = [("worst", "any"), ("this best", "any")]
+    for q, mode in cached:
+        eng.search_local(q, 10, mode)
+    inc = IncrementalIndexer(spark, d, cfg)
+    streamed = _stream(spark, inc, _NRT_BATCHES[:2])
+    for q, mode in cached:
+        eng.search_local(q, 10, mode)
+    assert _delta_keys(eng)
+    base_key = min((r["conv_id"], r["turn_idx"]) for r in tiny_rows)
+    inc.delete_turns([base_key])
+    inc.compact()
+    oracle = _edited_oracle(tiny_rows, streamed, [base_key])
+    fresh = SearchEngine(spark, d, cfg)
+    for q, mode in cached + [("test", "all"), ("aaaa bbbb", "any"),
+                             ("again", "any"), ("worst again", "all")]:
+        want = [(doc, round(s, 9)) for doc, s in oracle.search(q, k=10, mode=mode)]
+        assert want, q
+        got = _every_path(eng, q, mode)
+        assert got == _every_path(fresh, q, mode), (q, mode)
+        assert got == {path: want for path in got}, (q, mode)
+    assert eng.n_docs == oracle.n_docs
+    assert not _delta_keys(eng)
+    # the build's stats.json is superseded by the one compaction
+    # committed; the app still finds the index through the snapshot
+    assert not os.path.exists(os.path.join(d, "stats.json"))
+    assert app.list_indexes() == [name]
+    assert MarlinApp(spark, os.path.dirname(d)).get_index(name).n_docs == oracle.n_docs
+
+
+def test_rebuild_starts_clean(spark, crud_index, tiny_rows, tiny_df):
+    """A rebuild over a new corpus, in a dir that holds a live batch and
+    tombstones, answers like the oracle of the new corpus alone: no
+    docid is hidden by an old tombstone or served from an old batch."""
+    from marlin_spark.index.build import IndexBuilder
+
+    d, cfg = crud_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    _stream(spark, inc, _NRT_BATCHES[:1])
+    keyed = sorted(tiny_rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
+    inc.delete_turns([(r["conv_id"], r["turn_idx"]) for r in keyed[:3]])
+    texts = ["worst first", "best worst", "this is a test", "worst test",
+             "best of all"]
+    rows = [dict(keyed[0], conv_id="rebuilt", turn_idx=i, text=t)
+            for i, t in enumerate(texts)]
+    IndexBuilder(spark, d, cfg).build(
+        spark.createDataFrame(rows, tiny_df.schema), build_id="t1"
+    )
+    oracle = OracleIndex(assign_docids(rows))
+    eng = SearchEngine(spark, d, cfg)
+    assert eng.deleted is None and len(eng._segments()) == 1
+    for q in ("worst", "best test", "this worst"):
+        for mode in ("any", "all"):
+            want = [(doc, round(s, 9)) for doc, s in oracle.search(q, k=10, mode=mode)]
+            got = _every_path(eng, q, mode)
+            assert got == {path: want for path in got}, (q, mode)
+
+
+def test_lookups_during_an_append_see_all_or_none_of_it(spark, crud_index):
+    """8 threads look up, without refresh(), while process_batch writes
+    and commits a batch: every answer is the answer before the batch or
+    the one after it, never a part of it."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    d, cfg = crud_index
+    eng = SearchEngine(spark, d, cfg)
+    pool = [("worst", "any"), ("this best", "any"), ("test", "all"),
+            ("worst streamed", "any")]
+    before = {(q, mode): eng.search_local(q, 10, mode) for q, mode in pool}
+    done = threading.Event()
+
+    def look():
+        seen, last_round = [], False
+        while not last_round:
+            last_round = done.is_set()
+            seen += [((q, mode), eng.search_local(q, 10, mode)) for q, mode in pool]
+        return seen
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            futures = [ex.submit(look) for _ in range(8)]
+            try:
+                IncrementalIndexer(spark, d, cfg).process_batch(
+                    _batch(spark, _NRT_BATCHES[0]), 0
+                )
+            finally:
+                done.set()
+            seen = [hit for f in futures for hit in f.result(timeout=300)]
+    finally:
+        sys.setswitchinterval(switch)
+    fresh = SearchEngine(spark, d, cfg)
+    after = {(q, mode): fresh.search_local(q, 10, mode) for q, mode in pool}
+    assert all(before[qm] != after[qm] for qm in pool)
+    assert {qm for qm, got in seen if got == after[qm]} == set(pool)
+    for qm, got in seen:
+        assert got in (before[qm], after[qm]), qm

@@ -39,6 +39,14 @@ def plain_engine(spark, tiny_index):
     return SearchEngine(spark, d, cfg)
 
 
+def _docids(eng, exact, prefixes) -> set:
+    """The match set of exact terms and prefixes in eng's segments."""
+    return {
+        r["docid"]
+        for r in eng._docids_for(exact, prefixes, eng._segments()).collect()
+    }
+
+
 @pytest.mark.parametrize("prefix", ["t", "te", "tes", "w", "b", "zz", "a"])
 def test_accel_matches_unaccelerated_path(spark, accel_index, plain_engine, prefix):
     """Accelerated short-prefix match set == the dictionary-expansion +
@@ -46,11 +54,7 @@ def test_accel_matches_unaccelerated_path(spark, accel_index, plain_engine, pref
     d, cfg = accel_index
     eng = SearchEngine(spark, d, cfg)
     assert eng._accel_len == 3
-    got = {r["docid"] for r in eng._docids_for([], [prefix]).collect()}
-    want = {
-        r["docid"] for r in plain_engine._docids_for([], [prefix]).collect()
-    }
-    assert got == want, prefix
+    assert _docids(eng, [], [prefix]) == _docids(plain_engine, [], [prefix]), prefix
 
 
 def test_accel_mixed_exact_and_long_prefix(spark, accel_index, plain_engine):
@@ -58,15 +62,8 @@ def test_accel_mixed_exact_and_long_prefix(spark, accel_index, plain_engine):
     distinct docid set identical to the unaccelerated engine."""
     d, cfg = accel_index
     eng = SearchEngine(spark, d, cfg)
-    got = {
-        r["docid"]
-        for r in eng._docids_for(["worst"], ["t", "test"]).collect()
-    }
-    want = {
-        r["docid"]
-        for r in plain_engine._docids_for(["worst"], ["t", "test"]).collect()
-    }
-    assert got == want
+    got = _docids(eng, ["worst"], ["t", "test"])
+    assert got == _docids(plain_engine, ["worst"], ["t", "test"])
 
 
 def test_accel_scan_is_partition_pruned(spark, accel_index):
@@ -106,10 +103,10 @@ def test_accel_sees_streaming_delta_before_compact(spark, accel_index):
     )
     inc.process_batch(spark.createDataFrame(rows, schema), batch_id=1)
     eng = SearchEngine(spark, d, cfg)
-    before = {r["docid"] for r in eng._docids_for([], ["zeb"]).collect()}
+    before = _docids(eng, [], ["zeb"])
     assert len(before) == 1  # only the delta doc matches 'zeb'
     inc.compact()
     eng.refresh()
     eng2 = SearchEngine(spark, d, cfg)
-    after = {r["docid"] for r in eng2._docids_for([], ["zeb"]).collect()}
+    after = _docids(eng2, [], ["zeb"])
     assert after == before

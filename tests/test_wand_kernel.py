@@ -267,9 +267,9 @@ def test_mixed_mode_batch_is_one_kernel_call(spark, tiny_index, monkeypatch):
 @pytest.mark.parametrize("uncompacted", [False, True])
 def test_one_delta_listing_per_lookup_and_batch(spark, index_copy, monkeypatch,
                                                 uncompacted):
-    """The planner lists the committed delta dirs once, and the seed gate
-    and the block fetch both read that list: one listing per search_local
-    and one per search_many_wand."""
+    """The planner lists the live delta segments with ONE read of the
+    snapshot pointer, and the seed gate and the block fetch both use that
+    list: one read per search_local and one per search_many_wand."""
     from marlin_spark.index.catalog import IndexCatalog
 
     d, cfg = index_copy
@@ -278,13 +278,13 @@ def test_one_delta_listing_per_lookup_and_batch(spark, index_copy, monkeypatch,
             _batch(spark, [("nrt-a", 0, "user", "bi ta lefu", None)]), 0
         )
     calls = []
-    real = IndexCatalog.committed_delta_dirs
+    real = IndexCatalog.read_snapshot
 
-    def counting(self, name):
-        calls.append(name)
-        return real(self, name)
+    def counting(self):
+        calls.append(self.dir)
+        return real(self)
 
-    monkeypatch.setattr(IndexCatalog, "committed_delta_dirs", counting)
+    monkeypatch.setattr(IndexCatalog, "read_snapshot", counting)
     eng = SearchEngine(spark, d, cfg)
     for q, mode, prefix in (("bi", "any", False), ("ta de", "all", False),
                             ("bi lef", "any", True)):
