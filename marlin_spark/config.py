@@ -59,17 +59,13 @@ class EngineConfig:
     prefix_accel: bool = False
     prefix_accel_len: int = 3
 
-    # Tombstone handling tiers (reference analog: free-list bitmap
-    # deletes, sdata.c:64-79, which also never buffer the whole set):
-    #   <= tombstone_driver_max     driver numpy mask inside the WAND /
-    #                               rank kernels (fast paths intact)
-    #   <= tombstone_compact_max    DISTRIBUTED mode — the set is never
-    #                               materialized on the driver; queries
-    #                               route through the exact path with a
-    #                               shuffled anti-join
-    #   >  tombstone_compact_max    search refuses until compact()
+    # Tombstones live on the driver: up to this many deleted docids are
+    # one sorted numpy array that the WAND and rank kernels mask with
+    # (reference analog: free-list bitmap deletes, sdata.c:64-79). Above
+    # it an engine refuses to load (construction, refresh() or a lookup
+    # after a compaction commit) until IncrementalIndexer.compact()
+    # folds them: the bound keeps a bulk delete from filling the driver.
     tombstone_driver_max: int = 5_000_000
-    tombstone_compact_max: int = 200_000_000
 
     # Driver-local fast path (search_local): per-term-bucket posting
     # tables are cached IN MEMORY after first touch, LRU-evicted above

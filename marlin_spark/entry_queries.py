@@ -1149,14 +1149,22 @@ def _dot_py(a, b) -> float:
 
 
 def _round_spark_double(x: float, scale: int = 6) -> float:
-    """Exact Python twin of Spark's round(double, scale): Spark routes
-    doubles through BigDecimal.valueOf (Double.toString — the shortest
-    decimal repr, which Python's repr also produces), setScale HALF_UP,
-    toDouble (BigDecimal has no signed zero, hence the `+ 0.0`).
-    Pinned bit-for-bit against F.round over 20k random doubles + the
-    half-way/signed-zero edge cases (tests/test_r06_opt_equivalence)."""
+    """Python twin of Spark's round(double, scale): Spark routes doubles
+    through BigDecimal.valueOf (Double.toString), setScale HALF_UP,
+    toDouble (BigDecimal has no signed zero, hence the `+ 0.0`); the twin
+    reads Python's repr, the shortest decimal string. Pinned bit-for-bit
+    against F.round over 5k random doubles + the half-way/signed-zero
+    edge cases (tests/test_r06_opt_equivalence) on the JDK 17 runtime.
+    That pin depends on the JDK: before JDK 19, Double.toString is not
+    always the shortest string, so for rare doubles whose longer string
+    straddles a half-way point at digit scale + 1 the twin can differ
+    from Spark. A non-finite x (±inf, nan) is returned unchanged, as
+    Spark's round returns it."""
+    import math
     from decimal import ROUND_HALF_UP, Decimal
 
+    if not math.isfinite(x):
+        return x
     return (
         float(
             Decimal(repr(x)).quantize(

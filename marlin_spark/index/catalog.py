@@ -99,8 +99,9 @@ class IndexCatalog:
       segment list, in ONE commit (a multi-table transaction).
     A crash before the hint rename leaves the old snapshot live and the
     written dirs unreferenced — never a half-visible write. Superseded
-    data is expired after commit (expire_superseded); metadata history is
-    kept.
+    data is expired after commit (expire_superseded), and with it the
+    metadata of expired append and withdrawal commits; the metadata of
+    each table version is kept.
     """
 
     def __init__(self, index_dir: str):
@@ -114,26 +115,36 @@ class IndexCatalog:
     def _meta(self, *parts: str) -> str:
         return os.path.join(self.dir, "metadata", *parts)
 
+    def _read_hint(self) -> bytes | None:
+        try:
+            with open(self._meta("version-hint.text"), "rb") as f:
+                return f.read()
+        except FileNotFoundError:
+            return None
+
     def read_snapshot(self) -> dict | None:
         """Pin the snapshot the pointer names now, and return it (None
         without a snapshot log). One small read of version-hint.text; the
         metadata file is parsed only when the pointer's content differs
-        from the pinned one's, so a reader can call this once per lookup."""
-        try:
-            with open(self._meta("version-hint.text"), "rb") as f:
-                hint = f.read()
-        except FileNotFoundError:
-            hint = None
+        from the pinned one's, so a reader can call this once per lookup.
+        A metadata file expired between the two reads means the pointer
+        has moved on: it is read again. A pointer that names a missing
+        file and stays put is a damaged log and raises."""
+        hint = self._read_hint()
         pinned = self._pinned
         if pinned is not None and pinned[0] == hint:
             return pinned[1]
         snap = None
-        if hint is not None:
+        while hint is not None:
             try:
                 with open(self._meta(f"v{int(hint)}.metadata.json")) as f:
                     snap = json.load(f)
-            except (FileNotFoundError, ValueError):
-                pass
+                break
+            except FileNotFoundError:
+                again = self._read_hint()
+                if again == hint:
+                    raise
+                hint = again
         self._pinned = (hint, snap)
         return snap
 
@@ -187,7 +198,14 @@ class IndexCatalog:
         concurrent readers holding snapshot N a full grace window while
         the writer commits N+1 (Iceberg's expire_snapshots(retain_last)
         contract, tested in test_iceberg_spec.py::test_concurrent_reader_
-        survives_commit_and_expire)."""
+        survives_commit_and_expire).
+
+        Older metadata files go too, except those that record a table
+        version (a commit whose tables differ from the one before it: a
+        compaction, or the first commit that mapped a table): the log
+        keeps that history and drops the per-micro-batch append and
+        withdrawal files, so metadata/ grows with compactions, not with
+        batches."""
         import shutil as _sh
 
         snap = self.current_snapshot()
@@ -195,7 +213,9 @@ class IndexCatalog:
             return
         live = set(snap["tables"].values())
         n = snap["snapshot_id"]
-        for k in range(max(1, n - retain_last + 1), n):
+        first = max(1, n - retain_last + 1)
+        self._expire_metadata(first)
+        for k in range(first, n):
             try:
                 with open(self._meta(f"v{k}.metadata.json")) as f:
                     live |= set(json.load(f)["tables"].values())
@@ -214,6 +234,24 @@ class IndexCatalog:
                     _sh.rmtree(p, ignore_errors=True)
                 elif os.path.exists(p):
                     os.remove(p)
+
+    def _expire_metadata(self, first: int) -> None:
+        """Remove v<k>.metadata.json for k < ``first`` when its tables
+        equal those of the nearest older file kept (none: no tables)."""
+        ids = sorted(
+            int(f[1:-len(".metadata.json")])
+            for f in os.listdir(self._meta())
+            if f.startswith("v") and f.endswith(".metadata.json")
+        )
+        prev: dict = {}
+        for k in (k for k in ids if k < first):
+            path = self._meta(f"v{k}.metadata.json")
+            with open(path) as f:
+                tables = json.load(f)["tables"]
+            if tables == prev:
+                os.remove(path)
+            else:
+                prev = tables
 
     def clear_snapshots(self) -> None:
         """Drop the snapshot log (full rebuild = new table history)."""

@@ -1,1 +1,1 @@
-"""Query engine: planner, exact scorer, block-max WAND, filters, aggs."""
+"""Query engine: planner, block-max WAND scorer, filters, aggs."""

@@ -1,4 +1,4 @@
-"""Search engine: planner + BM25 scorers + where they run (SURVEY.md §3.1).
+"""Search engine: planner + one BM25 scorer + where it runs (SURVEY.md §3.1).
 
 Query lifecycle mapping (reference: api.c -> index_json_query ->
 execute_query fan-out -> per-shard squery -> form_result merge):
@@ -15,15 +15,17 @@ execute_query fan-out -> per-shard squery -> form_result merge):
    slots, a theta seed and the segment list;
 2. score: one pruned postings scan of the plans' segments
    (_matched_blocks: only the query terms' buckets; BM25 never reads the
-   positions column), then one of two scorers, each taking a ``plans``
-   mapping (a single query is a batch of one; a batch may mix modes):
-   - the block-max WAND kernel (query/wand.py), placed on the driver
-     (_local_topk: blocks from the segment cache, zero Spark jobs) or
-     on Spark (_wand_scores: mapInPandas per doc-range partition);
-   - the exact DataFrame scorer (_exact_scores), for filtered queries
-     and distributed tombstone sets;
-   and rank: TakeOrderedAndProject for one query (_rank), a per-query
-   window for a batch (_window_rank);
+   positions column), then the one BM25 scorer, the block-max WAND
+   kernel (query/wand.py), over a ``plans`` mapping (a single query is a
+   batch of one; a batch may mix modes), in one of two placements: the
+   driver (_local_topk: blocks from the segment cache, zero Spark jobs)
+   or Spark (_wand_scores: mapInPandas per doc-range partition). The
+   exact answer (use_wand=False, filtered queries, search_many) is the
+   same kernel with pruning off (_unpruned: no top-k cut, no theta, no
+   seed), so a filter semi-joined after it stays exact. Tombstones are
+   the kernel's sorted driver-side mask; above tombstone_driver_max the
+   engine refuses to load until compact(). Rank: TakeOrderedAndProject
+   for one query (_rank), a per-query window for a batch (_window_rank);
 3. hydration = broadcast join of the top page against docs/
    (reference: query.c:385-401).
 
@@ -36,6 +38,7 @@ from __future__ import annotations
 import math
 import threading
 from bisect import bisect_left
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd  # noqa: F401 — resolves stringified UDF type hints
@@ -48,7 +51,7 @@ from marlin_spark.index.catalog import IndexCatalog, term_bucket_py
 from marlin_spark.oracle.tokenizer import analyze
 from marlin_spark.query.wand import QueryPlan, make_batch_wand_kernel, pandas_scorer
 
-DECODE_SCHEMA = "term string, docid long, tf int, dl int"
+DECODE_SCHEMA = "term string, docid long"
 # block columns the WAND kernel reads (positions stay pruned)
 KERNEL_COLS = ["term", "range_id", "n_docs", "max_tfnorm", "postings"]
 SCORED_SCHEMA = "query_id string, docid long, score double"
@@ -86,8 +89,8 @@ def _in_pred(col: str, values) -> "F.Column":
 
 
 def _decode_blocks(batches):
-    """mapInPandas: (term, n_docs, postings) blocks -> one (term, docid,
-    tf, dl) row per posting, each batch decoded in one varbyte pass."""
+    """mapInPandas: (term, n_docs, postings) blocks -> one (term, docid)
+    row per posting, each batch decoded in one varbyte pass."""
     import numpy as np
     import pandas as pd
 
@@ -95,14 +98,9 @@ def _decode_blocks(batches):
 
     for pdf in batches:
         n = pdf["n_docs"].to_numpy(np.int64)
-        docids, tfs, dls, _ = decode_blocks_many(list(pdf["postings"]), n)
+        docids = decode_blocks_many(list(pdf["postings"]), n)[0]
         yield pd.DataFrame(
-            {
-                "term": np.repeat(pdf["term"].to_numpy(object), n),
-                "docid": docids,
-                "tf": tfs.astype("int32"),
-                "dl": dls.astype("int32"),
-            }
+            {"term": np.repeat(pdf["term"].to_numpy(object), n), "docid": docids}
         )
 
 
@@ -111,6 +109,13 @@ def _scan_of(plans: dict) -> tuple[list[str], tuple]:
     were planned against (one planner call made them all)."""
     terms = sorted({t for p in plans.values() for t in p.term_meta})
     return terms, next(iter(plans.values())).segments
+
+
+def _unpruned(plans: dict) -> dict:
+    """The plans with pruning off: a k above any match count and no theta
+    seed, so the kernel's theta never rises and it emits every doc
+    scoring > 0 with its exact score."""
+    return {qid: replace(p, k=1 << 62, theta_seed=None) for qid, p in plans.items()}
 
 
 class _Blocks:
@@ -185,9 +190,30 @@ class SearchEngine:
         every cache. Deletes take effect at construction, refresh() or
         the next compaction — the reference's serial writer has the same
         read-your-writes boundary (a query started before the delete
-        commit sees the old snapshot)."""
+        commit sees the old snapshot).
+
+        Tombstones always live on the driver, as the sorted array the
+        kernels mask with. More than tombstone_driver_max of them raise
+        RuntimeError before anything is read or assigned (count_rows
+        reads parquet metadata only), so a refused refresh() leaves the
+        engine serving its previous state until compact() folds them."""
         import pyarrow.dataset as pads
 
+        deleted = None
+        if self.cat.exists("tombstones"):
+            # a pyarrow error here is a damaged tombstones file: propagate
+            tombs = pads.dataset(self.cat.path("tombstones"), format="parquet")
+            n_tombs = tombs.count_rows()
+            if n_tombs > self.cfg.tombstone_driver_max:
+                raise RuntimeError(
+                    f"{n_tombs} tombstoned docids exceed tombstone_driver_max="
+                    f"{self.cfg.tombstone_driver_max}; run "
+                    "IncrementalIndexer.compact() before searching"
+                )
+            if n_tombs:
+                deleted = np.unique(
+                    tombs.to_table(columns=["docid"])["docid"].to_numpy()
+                ).astype(np.int64)
         self.stats = self.cat.read_json("stats.json")
         self.n_docs = self.stats["n_docs"]
         self.avgdl = self.stats["avgdl"]
@@ -211,30 +237,14 @@ class SearchEngine:
             if self.cat.exists("prefix_accel")
             else 0
         )
-        self.deleted = None
-        self._tombstones_distributed = False
-        self._n_tombstones = 0
-        if self.cat.exists("tombstones"):
-            # size-gate BEFORE materializing: count_rows is parquet
-            # metadata only (round-3 verdict item #3 — a bulk delete of
-            # 1e9 docids must never OOM the driver). A pyarrow error here
-            # is a damaged tombstones file and propagates.
-            tombs = pads.dataset(self.cat.path("tombstones"), format="parquet")
-            n_rows = tombs.count_rows()
-            self._n_tombstones = int(n_rows)
-            if n_rows > self.cfg.tombstone_driver_max:
-                # distributed mode: the set stays in parquet; queries
-                # anti-join it (see _not_deleted / search dispatch)
-                self._tombstones_distributed = True
-            elif n_rows:
-                arr = np.unique(tombs.to_table(columns=["docid"])["docid"].to_numpy())
-                if arr.size:
-                    self.deleted = arr.astype(np.int64)
+        self.deleted = deleted
 
     def refresh(self) -> None:
         """Re-read the snapshot, stats and tombstones and drop every
         per-state cache. Lookups follow commits (NRT batches, compaction)
-        by themselves; call this to see deletes made since construction."""
+        by themselves; call this to see deletes made since construction.
+        Raises RuntimeError, keeping the previous state, when the
+        tombstones exceed tombstone_driver_max (_load_live_state)."""
         self.cat.reload_snapshot()
         snap = self.cat.current_snapshot()
         for name in ("postings", "docs", "dictionary"):
@@ -274,43 +284,17 @@ class SearchEngine:
         self._postings_cached = (segs, base)
         return base
 
-    def _docs_df(self, with_deleted: bool = False) -> DataFrame:
-        base = self.cat.read_docs(self.spark, self.cfg.range_size)
-        if not with_deleted and (
-            self.deleted is not None or self._tombstones_distributed
-        ):
-            base = self._not_deleted(base)
-        return base
+    def _docs_df(self) -> DataFrame:
+        return self._not_deleted(self.cat.read_docs(self.spark, self.cfg.range_size))
 
     def _not_deleted(self, df: DataFrame, col: str = "docid") -> DataFrame:
-        """Anti-join the tombstone set. Below tombstone_driver_max the
-        set is driver-resident and broadcasts; above it the tombstones
-        parquet is read DISTRIBUTED and the anti-join shuffles — the set
-        never touches the driver."""
-        if self._tombstones_distributed:
-            self._check_tombstone_pressure()
-            tomb = (
-                self.spark.read.parquet(self.cat.path("tombstones"))
-                .select(F.col("docid").cast("long").alias(col))
-                .distinct()
-            )
-            return df.join(tomb, col, "left_anti")
+        """Anti-join the driver-resident tombstone set (broadcast)."""
         if self.deleted is None:
             return df
         tomb = self.spark.createDataFrame(
             [(int(d),) for d in self.deleted], "docid long"
         ).withColumnRenamed("docid", col)
         return df.join(F.broadcast(tomb), col, "left_anti")
-
-    def _check_tombstone_pressure(self) -> None:
-        """Above tombstone_compact_max every query would drag a huge
-        anti-join along; refuse loudly instead of degrading silently."""
-        if self._n_tombstones > self.cfg.tombstone_compact_max:
-            raise RuntimeError(
-                f"{self._n_tombstones} tombstoned docids exceed "
-                f"tombstone_compact_max={self.cfg.tombstone_compact_max}; "
-                "run IncrementalIndexer.compact() before searching"
-            )
 
     def _scorer_partitions(self) -> int:
         """Partition count for the range-keyed numpy-kernel stages (WAND
@@ -413,8 +397,7 @@ class SearchEngine:
         """
         k = min(k, self.cfg.max_hits)
         segs = self._segments()
-        seeded = (mode == "any" and len(segs) == 1 and self.deleted is None
-                  and not self._tombstones_distributed)
+        seeded = mode == "any" and len(segs) == 1 and self.deleted is None
         parsed, exact, prefixes = {}, set(), set()
         for qid, q in queries.items():
             # the typed last word is taken BEFORE sorting: PREFIX_LAST
@@ -470,7 +453,7 @@ class SearchEngine:
         )
 
     def _decoded_postings(self, terms, segs: tuple) -> DataFrame:
-        """(term, docid, tf, dl) rows of every posting of ``terms``."""
+        """(term, docid) rows of every posting of ``terms``."""
         return (
             self._matched_blocks(terms, segs)
             .select("term", "n_docs", "postings")
@@ -495,12 +478,15 @@ class SearchEngine:
         use_wand: bool = True,
         filter_cond=None,
     ) -> DataFrame:
-        """Top-k BM25 as a Spark plan. Returns DataFrame(docid, score)
-        ranked; search_local answers the same queries on the driver.
+        """Top-k BM25 as a Spark plan: DataFrame(docid, score) ranked, the
+        WAND kernel placed on Spark; search_local answers the same queries
+        on the driver. use_wand=False runs the kernel with pruning off, the
+        exact cross-check of the pruned run.
 
         filter_cond: optional Catalyst Column over docs/ columns
-        (role/tool/ts/...). Filters force the exact path — the filter is
-        ANDed before ranking, like the reference
+        (role/tool/ts/...). A filtered query runs the unpruned kernel and
+        left-semi-joins the filtered docs before the top-k, so the filter
+        is ANDed before ranking, like the reference
         (/root/reference/src/main/squery.c:377-395).
         """
         return self._search_plan(
@@ -509,12 +495,6 @@ class SearchEngine:
 
     def _search_plan(self, plan: QueryPlan, use_wand: bool = True,
                      filter_cond=None) -> DataFrame:
-        if self._tombstones_distributed:
-            # the numpy-masked WAND kernel cannot see a distributed
-            # tombstone set — route through the exact path, whose
-            # _not_deleted anti-join shuffles (scale-safe)
-            self._check_tombstone_pressure()
-            use_wand = False
         if plan.match_all_docs:
             docs = self._docs_df()
             if filter_cond is not None:
@@ -527,51 +507,19 @@ class SearchEngine:
             )
         if not plan.term_meta:
             return self.spark.createDataFrame([], "docid long, score double")
-        if use_wand and filter_cond is None:
-            return self._search_wand(plan)
-        return self._search_exact(plan, filter_cond)
-
-    # ---------------------------------------------------------- scorers
-    def _exact_scores(self, plans: dict) -> DataFrame:
-        """Exact BM25 as DataFrame ops, every matching doc of every plan:
-        (query_id, docid, score). A doc sums each matched term's score
-        once and is kept when the union of its terms' slot sets holds the
-        plan's required_slots. The filtered path and the
-        distributed-tombstone fallback: no top-k inside, so a shuffled
-        anti-join or a filter semi-join after it stays exact."""
-        meta = self.spark.createDataFrame(
-            [
-                (qid, t, float(idf), sorted(slots), p.required_slots)
-                for qid, p in plans.items()
-                for t, (idf, slots) in p.term_meta.items()
-            ],
-            "query_id string, term string, idf double, slots array<int>, need int",
-        )
-        decoded = self._decoded_postings(*_scan_of(plans))
-        k1, b = self.cfg.k1, self.cfg.b
-        scored = (
-            decoded.join(F.broadcast(meta), "term")
-            .withColumn(
-                "tscore",
-                F.col("idf")
-                * F.col("tf")
-                * (k1 + 1.0)
-                / (
-                    F.col("tf")
-                    + k1 * (1.0 - b + b * F.col("dl") / float(self.avgdl))
-                ),
+        plans = {"": plan}
+        if not use_wand or filter_cond is not None:
+            plans = _unpruned(plans)
+        scored = self._wand_scores(plans)
+        if filter_cond is not None:
+            # the kernel already masked the tombstones: no anti-join here
+            docs = self.cat.read_docs(self.spark, self.cfg.range_size)
+            scored = scored.join(
+                docs.filter(filter_cond).select("docid"), "docid", "left_semi"
             )
-            .groupBy("query_id", "docid")
-            .agg(
-                F.sum("tscore").alias("score"),
-                F.size(F.array_distinct(F.flatten(F.collect_list("slots"))))
-                .alias("got"),
-                F.first("need").alias("need"),
-            )
-            .filter(F.col("got") >= F.col("need"))
-        )
-        return self._not_deleted(scored.select("query_id", "docid", "score"))
+        return self._rank(scored, plan.k)
 
+    # ----------------------------------------------------------- scorer
     def _kernel(self, plans: dict):
         """The WAND kernel under this index's BM25 parameters and
         driver-resident tombstones, for either placement."""
@@ -582,21 +530,12 @@ class SearchEngine:
     def _wand_scores(self, plans: dict) -> DataFrame:
         """The WAND kernel placed on Spark: matched blocks repartitioned
         by doc range, one kernel call per partition. (query_id, docid,
-        score) rows, a partition-local top-k per query."""
+        score) rows, a partition-local top-k per query (every match of an
+        _unpruned plan)."""
         blocks = self._matched_blocks(*_scan_of(plans)).select(*KERNEL_COLS)
         return blocks.repartition(self._scorer_partitions(), "range_id").mapInPandas(
             pandas_scorer(self._kernel(plans)), SCORED_SCHEMA
         )
-
-    def _search_exact(self, plan: QueryPlan, filter_cond=None) -> DataFrame:
-        scored = self._exact_scores({"": plan})
-        if filter_cond is not None:
-            docs = self._docs_df().filter(filter_cond)
-            scored = scored.join(docs.select("docid"), "docid", "left_semi")
-        return self._rank(scored, plan.k)
-
-    def _search_wand(self, plan: QueryPlan) -> DataFrame:
-        return self._rank(self._wand_scores({"": plan}), plan.k)
 
     # ------------------------------------ marlin matching semantics
     def match_marlin(self, q: str, prefix_last: bool = True, typos: bool = False) -> DataFrame:
@@ -741,17 +680,12 @@ class SearchEngine:
         rounded to 9 dp, rank-identical to search(). A query is scored
         on the driver by the WAND kernel over blocks from the segment
         cache (_bucket_table) — no Spark job. Spark answers what the
-        driver should not: match-all (a docs scan), a distributed
-        tombstone set (the kernel's numpy mask cannot see it) and a
-        summed df above LOCAL_MAX_DF, where the Spark WAND job's fixed
-        cost is already paid back. A query with no dictionary term
-        answers [] on the driver."""
+        driver should not: match-all (a docs scan) and a summed df above
+        LOCAL_MAX_DF, where the Spark WAND job's fixed cost is already
+        paid back. Both placements mask the same driver-side tombstones.
+        A query with no dictionary term answers [] on the driver."""
         plan = self.plan(q, k, mode, prefix_last)
-        if (
-            plan.match_all_docs
-            or self._tombstones_distributed
-            or plan.total_df > LOCAL_MAX_DF
-        ):
+        if plan.match_all_docs or plan.total_df > LOCAL_MAX_DF:
             return [
                 (r["docid"], r["score"]) for r in self._search_plan(plan).collect()
             ]
@@ -1107,10 +1041,6 @@ class SearchEngine:
             feats = blocks.repartition(n_part, "range_id").mapInPandas(
                 kernel, RANK_SCHEMA
             )
-            if self._tombstones_distributed:
-                # kernel emits full features per matched doc (no top-k
-                # inside), so the shuffled anti-join here is exact
-                feats = self._not_deleted(feats)
         if field is not None:
             # semi-join-with-payload against the compare field: only the
             # surviving feature docids reach the sort. The match set is
@@ -1218,13 +1148,8 @@ class SearchEngine:
     def search_many_wand(self, queries: dict[str, str], k: int = 10, mode: str = "any") -> DataFrame:
         """Batched block-max WAND: one planner call + one pruned postings
         scan for ALL queries; each block decoded once per range,
-        per-query theta pruning, per-partition top-k — avoids the exact
-        path's |candidates| x |queries| shuffle entirely."""
-        if self._tombstones_distributed:
-            # per-partition top-k with an unseeable tombstone set could
-            # evict live docs; the exact batch path anti-joins correctly
-            self._check_tombstone_pressure()
-            return self.search_many(queries, k, mode)
+        per-query theta pruning, per-partition top-k — avoids the
+        unpruned path's |candidates| x |queries| shuffle entirely."""
         plans = self.plan_queries(queries, k, mode)
         plans = {qid: p for qid, p in plans.items() if p.term_meta}
         if not plans:
@@ -1272,12 +1197,13 @@ class SearchEngine:
         return ranked
 
     def search_many(self, queries: dict[str, str], k: int = 10, mode: str = "any") -> DataFrame:
-        """Score MANY queries in one Spark job with the exact scorer:
-        one planner call, one postings scan, per-query top-k via window.
-        The batch fallback under a distributed tombstone set."""
+        """Score MANY queries in one Spark job with the WAND kernel with
+        pruning off: one planner call, one postings scan, every match
+        scored, per-query top-k via window — the exact cross-check of
+        search_many_wand."""
         plans = self.plan_queries(queries, k, mode)
         plans = {qid: p for qid, p in plans.items() if p.term_meta}
         if not plans:
             return self.spark.createDataFrame([], RANKED_SCHEMA)
         k = next(iter(plans.values())).k  # capped by the planner
-        return self._window_rank(self._exact_scores(plans), k)
+        return self._window_rank(self._wand_scores(_unpruned(plans)), k)

@@ -62,7 +62,7 @@ _DENSE_SPAN_PER_POSTING = 32
 
 @dataclass
 class QueryPlan:
-    """One planned query: what the kernel and the exact scorer read."""
+    """One planned query: what the kernel reads."""
 
     query: str
     words: list[str]

@@ -231,8 +231,9 @@ class IncrementalIndexer:
             F.col("turn_idx").cast("long").alias("turn_idx"),
             *self.PATCHABLE_FIELDS,
         )
-        if self.cat.exists("tombstones"):
-            cur = cur.join(self._tombstone_df(), "docid", "left_anti")
+        tomb_files = self._tombstone_files()
+        if tomb_files:
+            cur = cur.join(self._tombstone_df(tomb_files), "docid", "left_anti")
         p = patch_df.select(
             F.col("conv_id").cast("string").alias("conv_id"),
             F.col("turn_idx").cast("long").alias("turn_idx"),
@@ -248,23 +249,33 @@ class IncrementalIndexer:
         self.update_turns(merged, batch_id)
 
     # ------------------------------------------------------------------
-    def _tombstone_df(self) -> DataFrame:
-        """Distinct tombstoned docids, broadcast for an anti-join; read
-        where delete_docids wrote them, never through a driver list."""
+    def _tombstone_files(self) -> list[str]:
+        """The tombstone parquet files delete_docids has written so far
+        (a write still in flight sits under _temporary and is not
+        listed)."""
+        import glob
+        import os
+
+        return sorted(glob.glob(os.path.join(self.cat.path("tombstones"), "*.parquet")))
+
+    def _tombstone_df(self, files: list[str]) -> DataFrame:
+        """Distinct docids of the tombstone ``files``, broadcast for an
+        anti-join; read where delete_docids wrote them, never through a
+        driver list."""
         return F.broadcast(
-            self.cat.read(self.spark, "tombstones", "docid long").distinct()
+            self.spark.read.schema("docid long").parquet(*files).distinct()
         )
 
-    def _tombstones(self):
-        """Sorted int64 tombstone array, or None."""
+    @staticmethod
+    def _tombstones(files: list[str]):
+        """Sorted int64 docid array of the tombstone ``files``, or None."""
         import numpy as np
-
-        if not self.cat.exists("tombstones"):
-            return None
         import pyarrow.dataset as pads
 
+        if not files:
+            return None
         arr = np.unique(
-            pads.dataset(self.cat.path("tombstones"), format="parquet")
+            pads.dataset(files, format="parquet")
             .to_table(columns=["docid"])["docid"]
             .to_numpy()
         ).astype(np.int64)
@@ -287,11 +298,18 @@ class IncrementalIndexer:
         summary records the wall seconds and Spark jobs of the staged
         rewrite it commits.
 
-        Honesty note (scale): _tombstones() materializes the delete set
-        on the driver for the rewriter closure — compaction of a >1e8
-        tombstone backlog should stream the set instead (the query-side
-        distributed gate in engine._not_deleted has no compaction twin
-        yet)."""
+        The tombstone files are listed once, at the start: the docs
+        anti-join and the postings rewriter read exactly those files, and
+        only those are removed after the commit. A delete that lands
+        during the compaction stays in tombstones/ for every engine to
+        mask and for the next compaction to fold.
+
+        Honesty note (scale): the folded delete set is materialized on
+        the driver for the rewriter closure, as every engine holds it.
+        Engines refuse more than EngineConfig.tombstone_driver_max of
+        them; this method reads whatever backlog is listed, so one far
+        past that bound needs a compaction that streams the set."""
+        import os
         import shutil
         import time
 
@@ -303,7 +321,8 @@ class IncrementalIndexer:
         # left for the streaming retry to overwrite
         delta_dirs = self.cat.committed_delta_dirs("postings")
         doc_deltas = self.cat.committed_delta_dirs("docs")
-        tomb = self._tombstones()
+        tomb_files = self._tombstone_files()
+        tomb = self._tombstones(tomb_files)
         if not delta_dirs and tomb is None:
             return
         next_id = (snap["snapshot_id"] + 1) if snap else 1
@@ -319,7 +338,7 @@ class IncrementalIndexer:
         # post-compaction avgdl
         docs = self.cat.read_docs(self.spark, self.cfg.range_size, doc_deltas)
         if tomb is not None:
-            docs = docs.join(self._tombstone_df(), "docid", "left_anti")
+            docs = docs.join(self._tombstone_df(tomb_files), "docid", "left_anti")
         obs = Observation("compact_stats")
         docs = docs.observe(
             obs,
@@ -406,5 +425,8 @@ class IncrementalIndexer:
         self.cat.expire_superseded()
         for d in delta_dirs + doc_deltas:
             shutil.rmtree(d)
-        if tomb is not None:
-            shutil.rmtree(self.cat.path("tombstones"), ignore_errors=True)
+        for f in tomb_files:
+            os.remove(f)
+            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)

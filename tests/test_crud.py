@@ -374,66 +374,156 @@ def test_batch_capacity_overflow_fails_loudly(spark, crud_index):
     assert "c1" not in {r["conv_id"] for r in everything}
 
 
-def test_distributed_tombstones_never_touch_driver(spark, crud_index):
-    """Round-3 verdict item #3: above tombstone_driver_max the engine
-    must NOT materialize the tombstone set on the driver (a 1e9-docid
-    bulk delete would OOM it). The gated fallback reads tombstones/
-    distributed and anti-joins (shuffled); every query path stays
-    correct; above tombstone_compact_max search refuses until compact().
-    Reference analog: free-list bitmap deletes (sdata.c:64-79) never
-    buffer the whole set either."""
-    from pyspark.sql import functions as F
+class _CountOnly:
+    """A pyarrow dataset whose rows must not be read: count_rows only."""
+
+    def __init__(self, ds):
+        self._ds = ds
+
+    def count_rows(self, **kw):
+        return self._ds.count_rows(**kw)
+
+    def to_table(self, *a, **kw):
+        raise AssertionError("tombstone docids read on the driver")
+
+
+def test_tombstones_above_driver_bound_refuse_until_compact(
+    spark, crud_index, monkeypatch
+):
+    """Tombstones always live on the driver. Above tombstone_driver_max
+    an engine refuses to load them: construction and refresh() raise,
+    naming compact(), without reading the docid array (count_rows reads
+    parquet metadata only). A long-lived engine whose refresh() raised
+    still answers from its old state; after compact() every engine
+    answers with the survivors."""
+    import pyarrow.dataset as pads
 
     d, cfg = crud_index
-    eng0 = SearchEngine(spark, d, cfg)
-    victims = [
-        r["docid"]
-        for r in eng0.search("worst", k=3, use_wand=False).collect()
+    low = cfg.with_(tombstone_driver_max=1)
+    eng0 = SearchEngine(spark, d, low)
+    before_local = eng0.search_local("this", k=1000)
+    before_spark = [
+        (r["docid"], r["score"]) for r in eng0.search("this", k=1000).collect()
     ]
-    survivors_expected = {
-        r["docid"]
-        for r in eng0.search("worst", k=1000, use_wand=False).collect()
-    } - set(victims)
+    assert len(before_local) > 2
+    victims = [doc for doc, _ in before_local[:2]]
+    survivors = {doc for doc, _ in before_local} - set(victims)
+    IncrementalIndexer(spark, d, low).delete_docids(victims)
+
+    real = pads.dataset
+
+    def count_only(source, *a, **kw):
+        ds = real(source, *a, **kw)
+        return _CountOnly(ds) if "tombstones" in str(source) else ds
+
+    with monkeypatch.context() as m:
+        m.setattr(pads, "dataset", count_only)
+        with pytest.raises(RuntimeError, match="compact"):
+            SearchEngine(spark, d, low)
+        with pytest.raises(RuntimeError, match="compact"):
+            eng0.refresh()
+        assert eng0.search_local("this", k=1000) == before_local
+        assert [
+            (r["docid"], r["score"]) for r in eng0.search("this", k=1000).collect()
+        ] == before_spark
+    IncrementalIndexer(spark, d, low).compact()
+    # the long-lived engine follows the compaction commit by itself
+    for eng in (eng0, SearchEngine(spark, d, low)):
+        assert eng.deleted is None
+        for path, hits in _every_path(eng, "this", k=1000).items():
+            assert {doc for doc, _ in hits} == survivors, path
+
+
+def test_delete_during_compaction_stays_for_the_next(
+    spark, crud_index, tiny_rows, monkeypatch
+):
+    """compact() folds exactly the tombstone files it listed when it
+    started. A turn deleted mid-compaction stays in tombstones/: a fresh
+    engine excludes it on every path, the compacted docs and postings
+    hold the same docids, and the next compaction folds it."""
+    import numpy as np
+    import pyarrow.dataset as pads
+
+    from marlin_spark.functions.codec import decode_blocks_many
+    from marlin_spark.index.catalog import IndexCatalog
+
+    d, cfg = crud_index
     inc = IncrementalIndexer(spark, d, cfg)
-    # bulk delete as a DataFrame: 1e6 docids, real victims + far-range
-    # padding; built from spark.range so the driver never holds the set
-    inc.delete_docids(
-        spark.range(1_000_000_000, 1_000_000_000 + 1_000_000 - len(victims))
-        .select(F.col("id").alias("docid"))
-        .unionAll(
-            spark.createDataFrame([(int(v),) for v in victims], "docid long")
-        )
+    inc.process_batch(_batch(spark, _NRT_BATCHES[0]), 0)
+    key_rows = sorted(tiny_rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
+    inc.delete_turns([(key_rows[0]["conv_id"], key_rows[0]["turn_idx"])])
+    late = next(
+        doc for doc, _ in SearchEngine(spark, d, cfg).search_local("worst", k=100)
+        if 1 < doc <= len(key_rows)
     )
-    low_gate = cfg.with_(tombstone_driver_max=1000)
-    eng = SearchEngine(spark, d, low_gate)
-    # the set was never pulled down: numpy mask absent, distributed on
+    late_key = (key_rows[late - 1]["conv_id"], key_rows[late - 1]["turn_idx"])
+
+    # the delete lands right after compact() listed the tombstones
+    fired = []
+    real_read_docs = inc.cat.read_docs
+
+    def read_docs_after_a_delete(*a, **kw):
+        if not fired:
+            fired.append(True)
+            IncrementalIndexer(spark, d, cfg).delete_turns([late_key])
+        return real_read_docs(*a, **kw)
+
+    monkeypatch.setattr(inc.cat, "read_docs", read_docs_after_a_delete)
+    inc.compact()
+    assert fired
+
+    cat = IndexCatalog(d)
+    docs_ids = {
+        r["docid"]
+        for r in cat.read(spark, "docs").filter("dl > 0").select("docid").collect()
+    }
+    blocks = pads.dataset(
+        cat.path("postings"), partitioning="hive", format="parquet"
+    ).to_table(columns=["n_docs", "postings"])
+    post_ids = set(decode_blocks_many(
+        blocks["postings"].to_pylist(),
+        blocks["n_docs"].to_numpy().astype(np.int64),
+    )[0].tolist())
+    assert post_ids == docs_ids
+    assert 1 not in docs_ids and late in docs_ids
+
+    eng = SearchEngine(spark, d, cfg)
+    assert eng.deleted.tolist() == [late]
+    for path, hits in _every_path(eng, "worst", k=1000).items():
+        assert hits and late not in {doc for doc, _ in hits}, path
+    assert late not in {r["docid"] for r in eng.search("", k=1000).collect()}
+    assert late not in {
+        r["docid"] for r in eng.match_marlin("worst", prefix_last=False).collect()
+    }
+    # the next compaction folds it
+    IncrementalIndexer(spark, d, cfg).compact()
+    eng = SearchEngine(spark, d, cfg)
     assert eng.deleted is None
-    assert eng._tombstones_distributed
-    assert eng._n_tombstones == 1_000_000
-    # every public path excludes the victims (routed through exact +
-    # shuffled anti-join)
-    for ids in (
-        {r["docid"] for r in eng.search("worst", k=1000).collect()},
-        {r["docid"] for r in eng.search("worst", k=1000, use_wand=False).collect()},
-        {docid for docid, _ in eng.search_local("worst", k=1000)},
-        {
-            r["docid"]
-            for r in eng.search_many_wand({"q0": "worst"}, k=1000).collect()
-        },
-    ):
-        assert ids == survivors_expected
-    # pressure gate: above tombstone_compact_max search refuses loudly
-    eng2 = SearchEngine(
-        spark, d, cfg.with_(tombstone_driver_max=10, tombstone_compact_max=100)
-    )
-    with pytest.raises(RuntimeError, match="compact"):
-        eng2.search("worst", k=10).collect()
-    # compact() folds the set; afterwards everything is back to normal
-    IncrementalIndexer(spark, d, low_gate).compact()
-    eng3 = SearchEngine(spark, d, low_gate)
-    assert not eng3._tombstones_distributed
-    ids = {r["docid"] for r in eng3.search("worst", k=1000).collect()}
-    assert ids == survivors_expected
+    assert late not in {
+        r["docid"] for r in eng.cat.read(spark, "docs").select("docid").collect()
+    }
+
+
+def test_snapshot_log_stays_bounded(spark, crud_index):
+    """Each micro-batch commits one snapshot; compaction expires the
+    metadata files of the append commits it folded, so after 20 batches
+    and a compact() metadata/ holds the retained snapshot and the hint."""
+    import os
+
+    d, cfg = crud_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    for bid in range(20):
+        inc.process_batch(
+            _batch(spark, [(f"nrt-m{bid:02d}", 0, "user", "worst bounded log", None)]),
+            bid,
+        )
+    assert len(os.listdir(os.path.join(d, "metadata"))) == 21
+    inc.compact()
+    assert sorted(os.listdir(os.path.join(d, "metadata"))) == [
+        "v21.metadata.json", "version-hint.text"
+    ]
+    eng = SearchEngine(spark, d, cfg)
+    assert len(eng.search_local("bounded", k=100)) == 20
 
 
 def test_compaction_refreshes_total_tokens(spark, crud_index, tiny_rows):

@@ -75,6 +75,75 @@ def test_search_with_filter(engine, tiny_oracle, docs, tiny_rows):
     assert [r["docid"] for r in hits] == oracle_hits
 
 
+def test_filtered_search_matches_oracle_with_tombstone_and_delta(
+    spark, tiny_index, tiny_rows, tmp_path
+):
+    """A filtered search() equals the oracle's ranking restricted to
+    filter AND live, at 9 dp: pruned and unpruned (use_wand=False) kernel
+    runs, both modes, with a tombstoned doc and an uncompacted batch.
+    Until compaction every path scores with the base's statistics: the
+    oracle over base + delta docs, given the base's n_docs, avgdl and df."""
+    import datetime as dt
+    import shutil
+
+    from marlin_spark.oracle.bm25 import OracleIndex, assign_docids
+    from marlin_spark.streaming.incremental import IncrementalIndexer
+
+    base_dir, cfg, _ = tiny_index
+    d = str(tmp_path / "filtered_idx")
+    shutil.copytree(base_dir, d)
+    streamed = [
+        ("nrt-a", 0, "user", "this worst best streamed", None),
+        ("nrt-a", 1, "assistant", "this test worst best", None),
+        ("nrt-b", 0, "user", "worst this this", None),
+        ("nrt-b", 1, "user", "test this again", None),
+    ]
+    inc = IncrementalIndexer(spark, d, cfg)
+    inc.process_batch(
+        spark.createDataFrame(
+            [r + (dt.datetime(2025, 1, 1),) for r in streamed],
+            "conv_id string, turn_idx int, role string, text string, "
+            "tool string, ts timestamp",
+        ),
+        0,
+    )
+    base_docs = assign_docids(tiny_rows)
+    n = len(base_docs)
+    docs = base_docs + [(n + i + 1, r[3]) for i, r in enumerate(sorted(streamed))]
+    role = {doc["docid"]: doc["role"] for doc in _pydocs(tiny_rows)}
+    role.update({n + i + 1: r[2] for i, r in enumerate(sorted(streamed))})
+    base = OracleIndex(base_docs)
+    oracle = OracleIndex(docs)
+    oracle.n_docs, oracle.avgdl, oracle.df = base.n_docs, base.avgdl, base.df
+    # the best-ranked user turn for "this" goes; the filter must not
+    # hand its top-k slot back to it
+    victim = next(
+        doc for doc, _ in oracle.search("this", k=10_000) if role[doc] == "user"
+    )
+    inc.delete_docids([victim])
+    eng = SearchEngine(spark, d, cfg)
+    cond = filter_to_column({"role": "user"})
+    hit_delta = False
+    for mode in ("any", "all"):
+        for q in ("this", "worst best", "this test", "worst"):
+            want = [
+                (doc, round(s, 9))
+                for doc, s in oracle.search(q, k=10_000, mode=mode)
+                if role[doc] == "user" and doc != victim
+            ][:5]
+            assert want, (q, mode)
+            hit_delta |= any(doc > n for doc, _ in want)
+            for use_wand in (True, False):
+                got = [
+                    (r["docid"], round(r["score"], 9))
+                    for r in eng.search(
+                        q, k=5, mode=mode, use_wand=use_wand, filter_cond=cond
+                    ).collect()
+                ]
+                assert got == want, (q, mode, use_wand)
+    assert hit_delta
+
+
 def test_ts_range_filter(docs, tiny_rows):
     import datetime as dt
 

@@ -202,3 +202,38 @@ def test_concurrent_reader_survives_commit_and_expire(tmp_path):
         assert os.path.exists(
             os.path.join(d, "metadata", f"v{k}.metadata.json")
         )
+
+
+def test_read_snapshot_follows_the_pointer_past_an_expired_file(
+    tmp_path, monkeypatch
+):
+    """A reader that read the pointer just before a commit expired the
+    metadata file it names reads the pointer again and gets the current
+    snapshot, never None (no snapshot log) or the expired one."""
+    import os
+
+    from marlin_spark.index import catalog
+    from marlin_spark.index.catalog import IndexCatalog
+
+    d = str(tmp_path / "idx")
+    os.makedirs(d)
+    writer = IndexCatalog(d)
+    writer.commit_snapshot(segments=[0])  # an append: no table version
+    reader = IndexCatalog(d)
+    armed = [True]
+
+    def open_then_commit(path, *a, **kw):
+        f = open(path, *a, **kw)
+        if armed[0] and str(path).endswith("version-hint.text"):
+            armed[0] = False
+            os.makedirs(os.path.join(d, "docs__snap2"))
+            writer.commit_snapshot({"docs": "docs__snap2"}, segments=[])
+            writer.expire_superseded()
+        return f
+
+    monkeypatch.setattr(catalog, "open", open_then_commit, raising=False)
+    snap = reader.read_snapshot()
+    assert not armed[0]
+    assert not os.path.exists(os.path.join(d, "metadata", "v1.metadata.json"))
+    assert snap is not None and snap["snapshot_id"] == 2
+    assert reader.path("docs") == os.path.join(d, "docs__snap2")

@@ -69,17 +69,24 @@ def test_hydrate_uses_broadcast_join(engine):
     assert "BroadcastHashJoin" in plan_str
 
 
-def test_exact_scorer_broadcasts_term_meta(engine):
+def test_filtered_path_semi_joins_kernel_scores(engine):
+    """A filtered query is the WAND kernel with pruning off, semi-joined
+    to the filtered docs before one TakeOrderedAndProject: the scores
+    come from the kernel, not from an aggregate over decoded postings."""
+    from marlin_spark.query.filters import filter_to_column
+
     plan = engine.plan("this best worst")
-    df = engine._search_exact(plan)
+    df = engine._search_plan(plan, filter_cond=filter_to_column({"role": "user"}))
     plan_str = _plan(df)
-    assert "BroadcastHashJoin" in plan_str
+    assert "MapInPandas" in plan_str
+    assert "LeftSemi" in plan_str
     # global top-k is TakeOrdered, not a full sort
     assert "TakeOrderedAndProject" in plan_str
+    assert "Aggregate" not in plan_str
 
 
 def test_wand_path_is_take_ordered(engine):
-    df = engine._search_wand(engine.plan("this best"))
+    df = engine._search_plan(engine.plan("this best"))
     assert "TakeOrderedAndProject" in _plan(df)
 
 

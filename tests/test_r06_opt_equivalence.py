@@ -478,6 +478,22 @@ def test_round_spark_double_twin_bit_identical(spark):
         )
 
 
+def test_round_spark_double_passes_non_finite_through(spark):
+    """±inf and nan come back unchanged, as Spark's round returns them
+    (Decimal would raise on quantize)."""
+    import math
+
+    from marlin_spark.entry_queries import _round_spark_double
+
+    xs = [math.inf, -math.inf, math.nan]
+    rows = spark.createDataFrame([(x,) for x in xs], "x double").select(
+        F.round("x", 6).alias("r")
+    ).collect()
+    for x, r in zip(xs, rows):
+        got = _round_spark_double(x)
+        assert repr(got) == repr(x) == repr(r["r"])
+
+
 def test_ivf_probe_planner_side_matches_spark_job(spark):
     """The planner-side probe selection (python dot/norm/round over the
     collected centroids) must pick the same nprobe cids, in the same
