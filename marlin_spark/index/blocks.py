@@ -11,7 +11,8 @@ One builder plus one merger write every posting block of the index:
   the bucket-coalesce shuffle of the ~100x-smaller compressed blocks.
 
 The bulk build and the streaming delta segments both run this pair
-(build.write_postings). Compaction re-cuts every (term, range) group with
+(build.write_postings): as Spark stages, or, for a small micro-batch,
+called on the driver once per doc slab and once per term bucket. Compaction re-cuts every (term, range) group with
 the merger's fold (fold_blocks), dropping tombstones and recomputing
 block-max under the post-compaction avgdl.
 
@@ -29,6 +30,7 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from marlin_spark.functions.codec import (
     decode_blocks_many,
@@ -50,6 +52,15 @@ _OUT_COLS = [
 # columns and schema of a stored postings table (base or delta segment)
 POSTING_COLS = _OUT_COLS + ["bucket"]
 POSTINGS_SCHEMA = BLOCK_SCHEMA + ", bucket int"
+
+_ARROW_TYPES = {
+    "string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+    "double": pa.float64(), "binary": pa.binary(),
+}
+# the same schema for pyarrow writers (write_postings' driver placement)
+POSTINGS_ARROW_SCHEMA = pa.schema(
+    [(n, _ARROW_TYPES[t]) for n, t in (f.split() for f in POSTINGS_SCHEMA.split(","))]
+)
 
 
 def emit_blocks_vec(

@@ -47,8 +47,11 @@ from __future__ import annotations
 import contextlib
 import shutil
 import time
-from typing import Callable
+from typing import Callable, Iterator
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -57,11 +60,17 @@ from marlin_spark.config import EngineConfig
 from marlin_spark.functions.analyzers import token_count_col
 from marlin_spark.index.blocks import (
     BLOCK_SCHEMA,
+    POSTINGS_ARROW_SCHEMA,
     POSTINGS_SCHEMA,
     make_block_merger,
     make_doc_range_builder,
 )
-from marlin_spark.index.catalog import IndexCatalog, term_bucket_col, term_fc_col
+from marlin_spark.index.catalog import (
+    IndexCatalog,
+    term_bucket_col,
+    term_bucket_py,
+    term_fc_col,
+)
 from marlin_spark.index.manifest import BuildManifest
 from marlin_spark.operators.docids import with_dense_ids
 
@@ -333,7 +342,7 @@ def write_postings(
     spark: SparkSession,
     cat: IndexCatalog,
     name: str,
-    docs: DataFrame,
+    docs: DataFrame | pa.Table,
     cfg: EngineConfig,
     avgdl: float,
     docs_bytes: int,
@@ -342,9 +351,20 @@ def write_postings(
     """Writes the posting blocks of ``docs`` (docid, dl, indexed fields)
     to table ``name``, partitioned by bucket: the one block writer of the
     bulk build (one call per range group) and of streaming delta segments
-    (one call per micro-batch). ``docs_bytes`` is the on-disk size of the
-    scanned docs and sets the scan split width; ``counters`` maps names
-    to Spark accumulators."""
+    (one call per micro-batch). Two placements of the same builder and
+    merger:
+
+    - a DataFrame runs as Spark stages: the builder per scan split, then
+      merge_and_write. ``docs_bytes``, the on-disk size of the scanned
+      docs, sets the scan split width.
+    - a pyarrow Table (docid-sorted; the small NRT micro-batch) runs on
+      the driver, with no Spark job: the builder per DRIVER_SLAB_DOCS-doc
+      slab, as per scan split, and the merger per term bucket, as per
+      merge task. Its blocks are byte-identical to the Spark placement's
+      (the merger re-cuts any split of a group into the same blocks),
+      written by pyarrow in the same layout, schema and order.
+
+    ``counters`` maps names to Spark accumulators."""
     counters = counters or {}
     fields = list(cfg.indexed_fields)
     builder = make_doc_range_builder(
@@ -356,6 +376,12 @@ def write_postings(
         cfg.k1, cfg.b, avgdl, cfg.block_size,
         {k: v for k, v in counters.items() if k in _MERGE_COUNTERS},
     )
+    if isinstance(docs, pa.Table):
+        cat.write_arrow(
+            name, _local_blocks(docs, builder, merger, cfg.n_term_buckets),
+            POSTINGS_ARROW_SCHEMA, partition_by="bucket",
+        )
+        return
     # parallelism of the zero-shuffle stage = scan splits; docs/ is
     # written with small row groups (docs_row_group_mb) precisely so
     # this split size is effective
@@ -369,6 +395,40 @@ def write_postings(
             )
         )
         merge_and_write(spark, cat, name, raw, merger, cfg, docs_bytes)
+
+
+# docs per builder call of write_postings' driver placement, which
+# bounds the builder's token arrays: over ingest_nrt's 3,155-turn batch
+# the Python heap peaked at 21.8 MB in one call and 5.1 MB in 512-doc
+# slabs (tracemalloc)
+DRIVER_SLAB_DOCS = 512
+
+
+def _local_blocks(
+    docs: pa.Table, builder: Callable, merger: Callable, n_buckets: int
+) -> Iterator[pa.Table]:
+    """write_postings' driver placement: the builder over each
+    DRIVER_SLAB_DOCS-doc slab of ``docs``, then the merger over each term
+    bucket's partial blocks. Yields one POSTINGS_ARROW_SCHEMA table per
+    bucket, in bucket order, sorted by (term, range_id, block_id) as the
+    Spark placement's sortWithinPartitions writes them."""
+    parts = []
+    for lo in range(0, docs.num_rows, DRIVER_SLAB_DOCS):
+        parts += builder(iter([docs.slice(lo, DRIVER_SLAB_DOCS).to_pandas()]))
+    if not parts:
+        return
+    raw = pd.concat(parts, ignore_index=True)
+    del parts
+    codes, terms = pd.factorize(raw["term"])
+    raw["bucket"] = np.asarray(
+        [term_bucket_py(t, n_buckets) for t in terms], dtype=np.int32
+    )[codes]
+    for _bucket, part in raw.groupby("bucket", sort=True):
+        merged = next(merger(iter([part])))
+        yield pa.Table.from_pandas(
+            merged.sort_values(["term", "range_id", "block_id"]),
+            POSTINGS_ARROW_SCHEMA, preserve_index=False,
+        )
 
 
 def _split_bytes(spark: SparkSession, cfg: EngineConfig, nbytes: int) -> int:
@@ -412,7 +472,8 @@ def merge_and_write(
     # data, one task per input split: a merge task costs ~0.15 s even
     # when empty, which dominated small inputs. On a 4-core host the
     # rewrite of a ~2 MB compaction took 1.0 s in its scan's 8 splits and
-    # 0.4 s in one task; a delta segment is one split.
+    # 0.4 s in one task. A micro-batch small enough to reach this stage
+    # never does: write_postings places it on the driver.
     cores = spark.sparkContext.defaultParallelism
     n_tasks = min(
         max(16, 4 * cores),

@@ -39,6 +39,7 @@ from __future__ import annotations
 import json
 import os
 import zlib
+from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,8 +101,7 @@ class IndexCatalog:
     A crash before the hint rename leaves the old snapshot live and the
     written dirs unreferenced — never a half-visible write. Superseded
     data is expired after commit (expire_superseded), and with it the
-    metadata of expired append and withdrawal commits; the metadata of
-    each table version is kept.
+    metadata of every snapshot out of the retained window.
     """
 
     def __init__(self, index_dir: str):
@@ -200,12 +200,9 @@ class IndexCatalog:
         contract, tested in test_iceberg_spec.py::test_concurrent_reader_
         survives_commit_and_expire).
 
-        Older metadata files go too, except those that record a table
-        version (a commit whose tables differ from the one before it: a
-        compaction, or the first commit that mapped a table): the log
-        keeps that history and drops the per-micro-batch append and
-        withdrawal files, so metadata/ grows with compactions, not with
-        batches."""
+        The metadata files of older snapshots go too, so metadata/ holds
+        the retained window and the pointer: a file out of the window
+        would name tables this expiry removes."""
         import shutil as _sh
 
         snap = self.current_snapshot()
@@ -236,22 +233,12 @@ class IndexCatalog:
                     os.remove(p)
 
     def _expire_metadata(self, first: int) -> None:
-        """Remove v<k>.metadata.json for k < ``first`` when its tables
-        equal those of the nearest older file kept (none: no tables)."""
-        ids = sorted(
-            int(f[1:-len(".metadata.json")])
-            for f in os.listdir(self._meta())
-            if f.startswith("v") and f.endswith(".metadata.json")
-        )
-        prev: dict = {}
-        for k in (k for k in ids if k < first):
-            path = self._meta(f"v{k}.metadata.json")
-            with open(path) as f:
-                tables = json.load(f)["tables"]
-            if tables == prev:
-                os.remove(path)
-            else:
-                prev = tables
+        """Remove v<k>.metadata.json for every k < ``first``: a snapshot
+        out of the retained window names data that expiry removes."""
+        for f in os.listdir(self._meta()):
+            if (f.startswith("v") and f.endswith(".metadata.json")
+                    and int(f[1:-len(".metadata.json")]) < first):
+                os.remove(self._meta(f))
 
     def clear_snapshots(self) -> None:
         """Drop the snapshot log (full rebuild = new table history)."""
@@ -294,6 +281,34 @@ class IndexCatalog:
             df.limit(0).repartition(1).write.mode("overwrite").parquet(
                 self.path(name)
             )
+
+    def write_arrow(self, name: str, tables: Iterable, schema,
+                    partition_by: str | None = None) -> None:
+        """The driver twin of write(): replaces table ``name`` with the
+        pyarrow ``tables`` (each of ``schema``), one parquet file each.
+        With ``partition_by`` each table holds one value of that column
+        and is written, without it, to that value's hive partition dir.
+        No rows at all leave one schema-only footer, as write() does."""
+        import shutil as _sh
+
+        import pyarrow.parquet as pq
+
+        path = self.path(name)
+        _sh.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        wrote = False
+        for i, tbl in enumerate(tables):
+            if not tbl.num_rows:
+                continue
+            d = path
+            if partition_by:
+                d = os.path.join(path, f"{partition_by}={tbl[partition_by][0].as_py()}")
+                tbl = tbl.drop_columns([partition_by])
+                os.makedirs(d)
+            pq.write_table(tbl, os.path.join(d, f"part-{i:05d}.parquet"))
+            wrote = True
+        if not wrote:
+            pq.write_table(schema.empty_table(), os.path.join(path, "part-00000.parquet"))
 
     def has_part_files(self, name: str) -> bool:
         for root, _dirs, files in os.walk(self.path(name)):

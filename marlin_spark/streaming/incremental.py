@@ -11,7 +11,7 @@ maintenance API:
 - ADD: each micro-batch of new turns is appended as a DELTA SEGMENT:
   its docs are written to docs_delta/batch=N first, then the bulk
   build's block writer (build.write_postings) builds
-  postings_delta/batch=N from that dir at the base avgdl (same block
+  postings_delta/batch=N from them at the base avgdl (same block
   layout, tagged with the batch id), then ONE snapshot commit makes the
   batch live (IndexCatalog.commit_snapshot). Every lookup reads the
   snapshot pointer, so the batch is searchable from that commit on
@@ -19,10 +19,19 @@ maintenance API:
   live segments into every scan. NRT caveats (stats refreshed at
   compaction; brand-new terms invisible until the dictionary rebuild)
   are documented on those helpers.
-- DELETE: tombstone docids appended to tombstones/ (query-time
-  anti-join / numpy mask inside WAND), folded at compaction — the
-  Lucene liveDocs pattern. Not yet a commit: an engine sees deletes
-  from its construction, refresh() or the next compaction.
+  Two placements write the same files. A batch of at most
+  DRIVER_BATCH_MAX rows is collected once and indexed on the driver:
+  pyarrow docids and dl, the same builder and merger called per doc
+  slab and per term bucket, pyarrow writes; most of a small batch's
+  cost was Spark's fixed cost per job, which the reference never pays
+  (it indexes a batch in-process on its write pool, sindex.c:1072-1091).
+  A larger batch runs as Spark stages.
+- DELETE: tombstone docids go to tombstones/, one parquet file per
+  delete; a key or docid list is resolved and written on the driver
+  (pyarrow), a DataFrame by Spark. Every engine holds the tombstones as
+  one sorted numpy array that each kernel masks with, and compaction
+  folds them — the Lucene liveDocs pattern. Not yet a commit: an engine
+  sees deletes from its construction, refresh() or the next compaction.
 - UPDATE/REPLACE: delete + add, like the reference.
 - COMPACT: folds delta segments AND tombstones into the base in one
   rewrite (segment merge; what an Iceberg MERGE INTO + snapshot expire
@@ -44,6 +53,10 @@ Limitations kept honest:
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,12 +68,23 @@ from marlin_spark.index.blocks import (
     make_compaction_rewriter,
 )
 from marlin_spark.index.build import (
+    DRIVER_SLAB_DOCS,
     build_dictionary,
     last_job_id,
     merge_and_write,
     write_postings,
 )
 from marlin_spark.index.catalog import IndexCatalog
+
+# Micro-batches of at most this many rows are indexed on the driver
+# (process_batch, update_turns); larger ones run as Spark stages. Set
+# from a sweep of batch sizes (scripts/nrt_gate_sweep.py, ingest_nrt's
+# corpus, 4 cores, warm JVM): the driver placement took 0.20/0.30/0.46/
+# 0.93/1.56 s at 0.5k/3.2k/7.2k/18k/36k turns against Spark's 1.19/
+# 1.14/1.23/1.75/2.32 s, so time alone sets no bound there; driver
+# memory does: its peak RSS rose ~8 MB + 1.8 KB per turn (+14 MB at
+# 3.2k, +21 MB at 7.2k, +37 MB at 18k, +65 MB at 36k turns).
+DRIVER_BATCH_MAX = 8192
 
 
 class IncrementalIndexer:
@@ -96,11 +120,27 @@ class IncrementalIndexer:
         txn per batch (si_write_end). Idempotent per batch_id (streaming
         retry safety): a re-run of a committed batch first commits its
         withdrawal and only then overwrites both dirs, so no committed
-        file is rewritten in place. The row count for the capacity check
-        rides on the docs write (Observation); an overflowing batch
-        raises before its commit."""
-        from pyspark.sql import Observation, Window
+        file is rewritten in place. A batch of more than batch_capacity
+        rows raises before its commit.
 
+        One bounded collect (the batch's first DRIVER_BATCH_MAX + 1 rows)
+        picks the placement: a batch that fits is indexed on the driver
+        from that Arrow table, with no further Spark job; a larger one
+        runs as Spark stages. Both write the same files."""
+        batch = self._collect_small(batch_df)
+        self._append(batch_df if batch is None else batch, batch_id)
+
+    @staticmethod
+    def _collect_small(df: DataFrame) -> pa.Table | None:
+        """``df`` as an Arrow table when it has at most DRIVER_BATCH_MAX
+        rows, else None (one Spark job, bounded at DRIVER_BATCH_MAX + 1
+        rows)."""
+        tbl = df.limit(DRIVER_BATCH_MAX + 1).toArrow()
+        return tbl if tbl.num_rows <= DRIVER_BATCH_MAX else None
+
+    def _append(self, batch: DataFrame | pa.Table, batch_id: int) -> None:
+        """process_batch's body for a collected batch (driver placement)
+        or a DataFrame (Spark placement)."""
         cfg = self.cfg
         base = int(self.stats.get("max_docid", self.stats["n_docs"]))
         capacity = int(self.stats.get("batch_capacity", cfg.batch_capacity))
@@ -111,8 +151,42 @@ class IncrementalIndexer:
             self.cat.commit_snapshot(
                 segments=live, summary={"operation": "withdraw", "batch": batch_id}
             )
-        offset = base + batch_id * capacity
         # per-batch deterministic docids after the base corpus
+        offset = base + batch_id * capacity
+        docs_name = f"docs_delta/batch={batch_id}"
+        place = self._docs_local if isinstance(batch, pa.Table) else self._docs_spark
+        docs, n_rows, sum_dl = place(batch, docs_name, offset, capacity, batch_id)
+        write_postings(
+            self.spark, self.cat, f"postings_delta/batch={batch_id}", docs, cfg,
+            self.stats["avgdl"], self.cat.dir_bytes(docs_name),
+        )
+        self.cat.commit_snapshot(
+            segments=live + [batch_id],
+            summary={"operation": "append", "batch": batch_id, "n_docs": n_rows,
+                     "sum_dl": sum_dl},
+        )
+
+    @staticmethod
+    def _check_capacity(n_rows: int, capacity: int, batch_id: int) -> None:
+        if n_rows > capacity:
+            # fail loudly: a silent overflow would assign docids that
+            # collide with the next batch's range
+            raise ValueError(
+                f"micro-batch {batch_id} has {n_rows} rows > batch_capacity "
+                f"{capacity}; raise EngineConfig.batch_capacity (and rebuild "
+                "stats.json) or split the batch"
+            )
+
+    def _docs_spark(self, batch_df: DataFrame, docs_name: str, offset: int,
+                    capacity: int, batch_id: int) -> tuple[DataFrame, int, int]:
+        """Spark placement: writes the batch's docs (docid = offset +
+        row_number over (conv_id, turn_idx), dl over the indexed fields)
+        to ``docs_name``. The row count for the capacity check and the
+        batch's sum of dl ride on that write (Observation). Returns (the
+        written docs, rows, sum of dl)."""
+        from pyspark.sql import Observation, Window
+
+        cfg = self.cfg
         w = Window.orderBy("conv_id", "turn_idx")
         dl_col = None
         for fname in cfg.indexed_fields:
@@ -128,34 +202,53 @@ class IncrementalIndexer:
         )
         # carry EVERY source column (not just the default transcript
         # schema): IndexCatalog.read_docs selects the base docs schema
-        # from deltas,
-        # so an auto-mapped index with extra stored fields must find
-        # them here too (mirrors build.py's `keep` columns)
+        # from deltas, so an auto-mapped index with extra stored fields
+        # must find them here too (mirrors build.py's `keep` columns)
         keep = [c for c in docs.columns if c not in ("dl", "range_id", "docid")]
         obs = Observation(f"batch_{batch_id}")
-        docs_name = f"docs_delta/batch={batch_id}"
         docs.select("docid", *keep, "dl").observe(
             obs, F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
         ).write.mode("overwrite").parquet(self.cat.path(docs_name))
         n_rows = int(obs.get["n"])
-        if n_rows > capacity:
-            # fail loudly: a silent overflow would assign docids that
-            # collide with the next batch's range
-            raise ValueError(
-                f"micro-batch {batch_id} has {n_rows} rows > batch_capacity "
-                f"{capacity}; raise EngineConfig.batch_capacity (and rebuild "
-                "stats.json) or split the batch"
-            )
-        write_postings(
-            self.spark, self.cat, f"postings_delta/batch={batch_id}",
-            self.cat.read(self.spark, docs_name), cfg, self.stats["avgdl"],
-            self.cat.dir_bytes(docs_name),
+        self._check_capacity(n_rows, capacity, batch_id)
+        return (self.cat.read(self.spark, docs_name), n_rows,
+                int(obs.get["sum_dl"] or 0))
+
+    def _docs_local(self, batch: pa.Table, docs_name: str, offset: int,
+                    capacity: int, batch_id: int) -> tuple[pa.Table, int, int]:
+        """Driver placement of _docs_spark, the same rows in the same
+        schema: docids by a stable sort on (conv_id, turn_idx), nulls
+        first as Spark orders them; dl from the analyzer's counts, one
+        DRIVER_SLAB_DOCS slab at a time. The capacity check runs before
+        the write. Returns (docid, dl and indexed fields of the docs,
+        docid-sorted; rows; sum of dl)."""
+        import pyarrow.compute as pc
+
+        from marlin_spark.oracle.tokenizer import analyze_batch
+
+        cfg = self.cfg
+        n_rows = batch.num_rows
+        self._check_capacity(n_rows, capacity, batch_id)
+        batch = batch.take(pc.sort_indices(
+            batch, [("conv_id", "ascending"), ("turn_idx", "ascending")],
+            null_placement="at_start",
+        ))
+        dl = np.zeros(n_rows, dtype=np.int32)
+        for lo in range(0, n_rows, DRIVER_SLAB_DOCS):
+            for fname in cfg.indexed_fields:
+                counts, _terms, _pos = analyze_batch(
+                    batch[fname].slice(lo, DRIVER_SLAB_DOCS).to_pylist(),
+                    cfg.analyzer, "index",
+                )
+                dl[lo:lo + counts.size] += counts.astype(np.int32)
+        keep = [c for c in batch.column_names if c not in ("dl", "range_id", "docid")]
+        docs = pa.table(
+            {"docid": np.arange(offset + 1, offset + n_rows + 1, dtype=np.int64),
+             **{c: batch[c] for c in keep}, "dl": dl}
         )
-        self.cat.commit_snapshot(
-            segments=live + [batch_id],
-            summary={"operation": "append", "batch": batch_id, "n_docs": n_rows,
-                     "sum_dl": int(obs.get["sum_dl"] or 0)},
-        )
+        self.cat.write_arrow(docs_name, [docs], docs.schema)
+        return (docs.select(["docid", "dl", *cfg.indexed_fields]), n_rows,
+                int(dl.sum()))
 
     # ------------------------------------------------------------------
     def start(self, stream_df: DataFrame, checkpoint: str):
@@ -170,25 +263,48 @@ class IncrementalIndexer:
     # ---------------------------------------------------------- delete
     def delete_docids(self, docids) -> None:
         """Tombstone docids (reference: index_delete_document_callback,
-        /root/reference/src/main/index.c:1037-1070). Queries constructed
-        by a SearchEngine built (or refresh()ed) after this call exclude
-        them; compact() folds them out of docs/ and postings/."""
+        src/main/index.c:1037-1070): a DataFrame of
+        docids is appended to tombstones/ by Spark, a list is written by
+        the driver as one file (_write_tombstones). Engines constructed
+        (or refresh()ed) after this call mask them in every kernel, from
+        one sorted driver array; compact() folds them out of docs/ and
+        postings/."""
         if isinstance(docids, DataFrame):
-            df = docids.select(F.col(docids.columns[0]).cast("long").alias("docid"))
+            docids.select(
+                F.col(docids.columns[0]).cast("long").alias("docid")
+            ).write.mode("append").parquet(self.cat.path("tombstones"))
         else:
-            df = self.spark.createDataFrame(
-                [(int(d),) for d in docids], "docid long"
-            )
-        df.write.mode("append").parquet(self.cat.path("tombstones"))
+            self._write_tombstones(np.asarray([int(d) for d in docids], dtype=np.int64))
+
+    def _write_tombstones(self, docids: np.ndarray) -> None:
+        """One tombstone file of ``docids``, written under a uniquely
+        named dot-prefixed temp name and renamed into place: Spark,
+        pyarrow datasets and _tombstone_files all skip dot-files, so no
+        reader ever lists a half-written file."""
+        import uuid
+
+        import pyarrow.parquet as pq
+
+        if not docids.size:
+            return
+        d = self.cat.path("tombstones")
+        os.makedirs(d, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(d, f".{name}.tmp")
+        pq.write_table(pa.table({"docid": docids}), tmp)
+        os.replace(tmp, os.path.join(d, name))
 
     def delete_turns(self, keys) -> None:
         """Delete by natural key (conv_id, turn_idx) — the reference's
         external-id delete (sindex.c:1057-1099 via the id mapping).
-        Resolves docids over base + uncompacted delta docs."""
+        Resolves docids over base + uncompacted delta docs: a DataFrame
+        of keys with a Spark join, a list on the driver (_delete_keys)."""
         if not isinstance(keys, DataFrame):
-            keys = self.spark.createDataFrame(
-                [(str(c), int(t)) for c, t in keys], "conv_id string, turn_idx long"
-            )
+            self._delete_keys(pa.table({
+                "conv_id": [str(c) for c, _t in keys],
+                "turn_idx": [int(t) for _c, t in keys],
+            }))
+            return
         keys = keys.select(
             F.col("conv_id").cast("string").alias("conv_id"),
             F.col("turn_idx").cast("long").alias("turn_idx"),
@@ -201,11 +317,45 @@ class IncrementalIndexer:
         ids = docs.join(F.broadcast(keys), ["conv_id", "turn_idx"], "left_semi")
         self.delete_docids(ids.select("docid"))
 
+    def _delete_keys(self, keys: pa.Table) -> None:
+        """delete_turns on the driver: a pyarrow read of (docid, conv_id,
+        turn_idx) of the base docs and the live delta docs, filtered on
+        the conv_ids of ``keys`` (a table with conv_id and turn_idx
+        columns), joined to the keys and written as one tombstone file."""
+        import pyarrow.dataset as pads
+
+        cols = {"docid": pa.int64(), "conv_id": pa.string(), "turn_idx": pa.int64()}
+        keys = keys.select(["conv_id", "turn_idx"]).cast(
+            pa.schema({c: cols[c] for c in ("conv_id", "turn_idx")})
+        )
+        convs = keys["conv_id"].combine_chunks()
+        found = []
+        for src in [self.cat.path("docs")] + self.cat.committed_delta_dirs("docs"):
+            ds = pads.dataset(src, format="parquet")
+            tbl = ds.to_table(
+                columns=list(cols),
+                filter=pads.field("conv_id").isin(
+                    convs.cast(ds.schema.field("conv_id").type)
+                ),
+            )
+            found.append(tbl.cast(pa.schema(cols)))
+        ids = pa.concat_tables(found).join(
+            keys, ["conv_id", "turn_idx"], join_type="left semi"
+        )["docid"]
+        self._write_tombstones(ids.to_numpy())
+
     def update_turns(self, batch_df: DataFrame, batch_id: int) -> None:
         """Replace turns by natural key: delete + add, exactly the
-        reference's replace path (index.c:965-1034)."""
-        self.delete_turns(batch_df.select("conv_id", "turn_idx"))
-        self.process_batch(batch_df, batch_id)
+        reference's replace path (index.c:965-1034). A batch that fits
+        the driver is collected once: its keys and its append come from
+        the same Arrow table."""
+        batch = self._collect_small(batch_df)
+        if batch is None:
+            self.delete_turns(batch_df.select("conv_id", "turn_idx"))
+            self._append(batch_df, batch_id)
+            return
+        self._delete_keys(batch)
+        self._append(batch, batch_id)
 
     PATCHABLE_FIELDS = ("role", "text", "tool", "ts")
 
@@ -250,11 +400,10 @@ class IncrementalIndexer:
 
     # ------------------------------------------------------------------
     def _tombstone_files(self) -> list[str]:
-        """The tombstone parquet files delete_docids has written so far
-        (a write still in flight sits under _temporary and is not
-        listed)."""
+        """The tombstone parquet files delete_docids has written so far.
+        A write still in flight is not listed: Spark's sits under
+        _temporary, the driver's under a dot-prefixed temp name."""
         import glob
-        import os
 
         return sorted(glob.glob(os.path.join(self.cat.path("tombstones"), "*.parquet")))
 
@@ -269,7 +418,6 @@ class IncrementalIndexer:
     @staticmethod
     def _tombstones(files: list[str]):
         """Sorted int64 docid array of the tombstone ``files``, or None."""
-        import numpy as np
         import pyarrow.dataset as pads
 
         if not files:
@@ -309,7 +457,6 @@ class IncrementalIndexer:
         Engines refuse more than EngineConfig.tombstone_driver_max of
         them; this method reads whatever backlog is listed, so one far
         past that bound needs a compaction that streams the set."""
-        import os
         import shutil
         import time
 

@@ -54,3 +54,16 @@ def last_job_id(spark):
         return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
 
     return job_id
+
+
+@pytest.fixture
+def nrt_placement(monkeypatch):
+    """Callable: force where IncrementalIndexer indexes a micro-batch,
+    'driver' or 'spark', by patching its size gate."""
+    from marlin_spark.streaming import incremental
+
+    def force(placement: str) -> None:
+        gate = {"driver": 10**9, "spark": -1}[placement]
+        monkeypatch.setattr(incremental, "DRIVER_BATCH_MAX", gate)
+
+    return force

@@ -199,8 +199,9 @@ def _kernel_blocks(docs_path: str, cfg, avgdl: float) -> pd.DataFrame:
 
 
 def _assert_same_blocks(got: pd.DataFrame, want: pd.DataFrame) -> None:
+    assert list(got.columns) == list(want.columns)
     assert len(got) == len(want) > 0
-    for col in _OUT_COLS:  # max_tfnorm included: bit-identical floats
+    for col in got.columns:  # max_tfnorm included: bit-identical floats
         assert got[col].tolist() == want[col].tolist(), col
 
 
@@ -241,3 +242,80 @@ def test_compacted_blocks_equal_doc_range_builder(
     got = _table_blocks(cat.path("postings"))
     want = _kernel_blocks(cat.path("docs"), cfg, stats["avgdl"])
     _assert_same_blocks(got, want)
+
+
+# ------------------------------------------------ placements of a batch
+def _placed_index(spark, base, cfg, tmp_path, placement, nrt_placement):
+    d = str(tmp_path / placement)
+    shutil.copytree(base, d)
+    nrt_placement(placement)
+    return d, IncrementalIndexer(spark, d, cfg)
+
+
+def _table_rows(spark, path: str) -> tuple:
+    """(Spark schema, docid-ordered rows) of a docs table."""
+    df = spark.read.parquet(path)
+    return df.schema, df.orderBy("docid").collect()
+
+
+def _bucketed_blocks(path: str) -> pd.DataFrame:
+    """Every block of a postings table, bucket column included."""
+    return (
+        pads.dataset(path, partitioning="hive", format="parquet")
+        .to_table(columns=_OUT_COLS + ["bucket"]).to_pandas()
+        .sort_values(_KEY).reset_index(drop=True)
+    )
+
+
+def test_delta_segment_equal_across_placements(
+    spark, writer_index, tmp_path, nrt_placement
+):
+    """The driver and Spark placements of one micro-batch write the same
+    docs rows, in the same Spark schema, and byte-identical blocks (every
+    column, bucket included), each equal to the doc-range builder's."""
+    base, cfg = writer_index
+    docs, blocks = {}, {}
+    for placement in ("driver", "spark"):
+        d, inc = _placed_index(spark, base, cfg, tmp_path, placement, nrt_placement)
+        inc.process_batch(_stream_batch(spark, 90, 1), 1)
+        cat = IndexCatalog(d)
+        docs[placement] = _table_rows(spark, cat.path("docs_delta/batch=1"))
+        blocks[placement] = _bucketed_blocks(cat.path("postings_delta/batch=1"))
+        want = _kernel_blocks(cat.path("docs_delta/batch=1"), cfg,
+                              inc.stats["avgdl"])
+        _assert_same_blocks(blocks[placement][_OUT_COLS], want)
+    assert docs["driver"] == docs["spark"]
+    assert len(docs["driver"][1]) == 90
+    _assert_same_blocks(blocks["driver"], blocks["spark"])
+
+
+def test_compacted_postings_equal_across_placements(
+    spark, writer_index, tmp_path, nrt_placement
+):
+    """Two batches and deletes (a docid list, a key list, a key
+    DataFrame) compacted on each placement: the compacted docs and
+    postings are identical across placements and equal to the doc-range
+    builder's over the compacted docs."""
+    base, cfg = writer_index
+    docs, blocks = {}, {}
+    for placement in ("driver", "spark"):
+        d, inc = _placed_index(spark, base, cfg, tmp_path, placement, nrt_placement)
+        for bid in (0, 2):
+            inc.process_batch(_stream_batch(spark, 40, bid), bid)
+        base_max = int(inc.stats["max_docid"])
+        cap = int(inc.stats["batch_capacity"])
+        inc.delete_docids([1, 5, base_max + 3])
+        inc.delete_turns([("w2", 7)])
+        inc.delete_turns(spark.createDataFrame([("w0", 11)], "conv_id string, turn_idx int"))
+        inc.compact()
+        cat = IndexCatalog(d)
+        stats = cat.read_json("stats.json")
+        docs[placement] = _table_rows(spark, cat.path("docs"))
+        ids = {r["docid"] for r in docs[placement][1]}
+        # turn t of batch N's one conversation has docid base_max + N * cap + t + 1
+        assert not ids & {1, 5, base_max + 3, base_max + 12, base_max + 2 * cap + 8}
+        blocks[placement] = _bucketed_blocks(cat.path("postings"))
+        want = _kernel_blocks(cat.path("docs"), cfg, stats["avgdl"])
+        _assert_same_blocks(blocks[placement][_OUT_COLS], want)
+    assert docs["driver"] == docs["spark"]
+    _assert_same_blocks(blocks["driver"], blocks["spark"])

@@ -349,7 +349,21 @@ def test_patch_rejects_unknown_fields(spark, crud_index):
 
 def test_batch_capacity_overflow_fails_loudly(spark, crud_index):
     """The overflow raises before the batch's commit, so a fresh engine
-    finds none of its turns on any path."""
+    finds none of its turns on any path (the driver placement: it raises
+    before writing the batch's docs)."""
+    _overflow_fails_loudly(spark, crud_index)
+
+
+def test_batch_capacity_overflow_fails_loudly_on_spark(
+    spark, crud_index, nrt_placement
+):
+    """The same on the Spark placement, which counts the rows on its
+    docs write."""
+    nrt_placement("spark")
+    _overflow_fails_loudly(spark, crud_index)
+
+
+def _overflow_fails_loudly(spark, crud_index):
     d, cfg = crud_index
     inc = IncrementalIndexer(spark, d, cfg)
     base_max = int(inc.stats.get("max_docid", inc.stats["n_docs"]))

@@ -153,6 +153,7 @@ def test_concurrent_reader_survives_commit_and_expire(tmp_path):
     contract); only a further commit + expire retires N's data dirs.
     The reader's pinned metadata never changes under it — snapshot
     isolation — and reload_snapshot() moves it forward explicitly."""
+    import json
     import os
 
     from marlin_spark.index.catalog import IndexCatalog
@@ -197,11 +198,16 @@ def test_concurrent_reader_survives_commit_and_expire(tmp_path):
     assert not os.path.exists(os.path.join(d, "docs__snap1"))
     assert os.path.exists(os.path.join(d, "docs__snap2"))  # retained
     assert os.path.exists(os.path.join(d, "docs__snap3"))
-    # metadata history is never deleted (time travel stays possible)
-    for k in (1, 2, 3):
-        assert os.path.exists(
-            os.path.join(d, "metadata", f"v{k}.metadata.json")
-        )
+    # metadata/ keeps the retained window: v1, whose docs__snap1 is
+    # gone, is gone too, and every remaining file names only tables
+    # that exist
+    meta = os.path.join(d, "metadata")
+    kept = sorted(f for f in os.listdir(meta) if f.endswith(".metadata.json"))
+    assert kept == ["v2.metadata.json", "v3.metadata.json"]
+    for name in kept:
+        with open(os.path.join(meta, name)) as f:
+            for table in json.load(f)["tables"].values():
+                assert os.path.exists(os.path.join(d, table)), (name, table)
 
 
 def test_read_snapshot_follows_the_pointer_past_an_expired_file(
