@@ -358,11 +358,12 @@ def write_postings(
       merge_and_write. ``docs_bytes``, the on-disk size of the scanned
       docs, sets the scan split width.
     - a pyarrow Table (docid-sorted; the small NRT micro-batch) runs on
-      the driver, with no Spark job: the builder per DRIVER_SLAB_DOCS-doc
-      slab, as per scan split, and the merger per term bucket, as per
-      merge task. Its blocks are byte-identical to the Spark placement's
-      (the merger re-cuts any split of a group into the same blocks),
-      written by pyarrow in the same layout, schema and order.
+      the driver, with no Spark job: the builder per slab of docs
+      (driver_slabs), as per scan split, and the merger per term
+      bucket, as per merge task. Its blocks are byte-identical to the
+      Spark placement's (the merger re-cuts any split of a group into
+      the same blocks), written by pyarrow in the same layout, schema
+      and order.
 
     ``counters`` maps names to Spark accumulators."""
     counters = counters or {}
@@ -378,7 +379,7 @@ def write_postings(
     )
     if isinstance(docs, pa.Table):
         cat.write_arrow(
-            name, _local_blocks(docs, builder, merger, cfg.n_term_buckets),
+            name, _local_blocks(docs, builder, merger, cfg.n_term_buckets, fields),
             POSTINGS_ARROW_SCHEMA, partition_by="bucket",
         )
         return
@@ -397,24 +398,49 @@ def write_postings(
         merge_and_write(spark, cat, name, raw, merger, cfg, docs_bytes)
 
 
-# docs per builder call of write_postings' driver placement, which
-# bounds the builder's token arrays: over ingest_nrt's 3,155-turn batch
-# the Python heap peaked at 21.8 MB in one call and 5.1 MB in 512-doc
-# slabs (tracemalloc)
+# docs and bytes of indexed text per builder call of write_postings'
+# driver placement, which bound the builder's token arrays (~200 B per
+# token at their peak): over ingest_nrt's 3,155-turn batch the Python
+# heap peaked at 21.8 MB in one call and 5.1 MB in 512-doc slabs
+# (~64 KB of text each); 203 turns of 16 KB took 119 MB in one 512-doc
+# slab (tracemalloc)
 DRIVER_SLAB_DOCS = 512
+DRIVER_SLAB_BYTES = 64 << 10
+
+
+def driver_slabs(docs: pa.Table, fields: list[str]) -> Iterator[tuple[int, int]]:
+    """(offset, length) of consecutive slabs of ``docs``, each of at most
+    DRIVER_SLAB_DOCS docs and DRIVER_SLAB_BYTES of text in ``fields``,
+    or one doc that alone holds more."""
+    import pyarrow.compute as pc
+
+    size = np.zeros(docs.num_rows, dtype=np.int64)
+    for f in fields:
+        size += pc.fill_null(
+            pc.binary_length(docs[f].cast(pa.string())), 0
+        ).to_numpy(zero_copy_only=False)
+    cum = np.cumsum(size)
+    lo = 0
+    while lo < docs.num_rows:
+        cap = (cum[lo - 1] if lo else 0) + DRIVER_SLAB_BYTES
+        hi = int(np.searchsorted(cum, cap, side="right"))
+        hi = min(max(hi, lo + 1), lo + DRIVER_SLAB_DOCS, docs.num_rows)
+        yield lo, hi - lo
+        lo = hi
 
 
 def _local_blocks(
-    docs: pa.Table, builder: Callable, merger: Callable, n_buckets: int
+    docs: pa.Table, builder: Callable, merger: Callable, n_buckets: int,
+    fields: list[str],
 ) -> Iterator[pa.Table]:
-    """write_postings' driver placement: the builder over each
-    DRIVER_SLAB_DOCS-doc slab of ``docs``, then the merger over each term
-    bucket's partial blocks. Yields one POSTINGS_ARROW_SCHEMA table per
-    bucket, in bucket order, sorted by (term, range_id, block_id) as the
-    Spark placement's sortWithinPartitions writes them."""
+    """write_postings' driver placement: the builder over each slab of
+    ``docs`` (driver_slabs), then the merger over each term bucket's
+    partial blocks. Yields one POSTINGS_ARROW_SCHEMA table per bucket, in
+    bucket order, sorted by (term, range_id, block_id) as the Spark
+    placement's sortWithinPartitions writes them."""
     parts = []
-    for lo in range(0, docs.num_rows, DRIVER_SLAB_DOCS):
-        parts += builder(iter([docs.slice(lo, DRIVER_SLAB_DOCS).to_pandas()]))
+    for lo, n in driver_slabs(docs, fields):
+        parts += builder(iter([docs.slice(lo, n).to_pandas()]))
     if not parts:
         return
     raw = pd.concat(parts, ignore_index=True)

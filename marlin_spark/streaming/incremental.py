@@ -20,18 +20,20 @@ maintenance API:
   compaction; brand-new terms invisible until the dictionary rebuild)
   are documented on those helpers.
   Two placements write the same files. A batch of at most
-  DRIVER_BATCH_MAX rows is collected once and indexed on the driver:
-  pyarrow docids and dl, the same builder and merger called per doc
+  DRIVER_BATCH_MAX rows and DRIVER_BATCH_BYTES is collected once and
+  indexed on the driver: pyarrow docids, dl counted as Spark counts it
+  (analyzers.token_counts), the same builder and merger called per doc
   slab and per term bucket, pyarrow writes; most of a small batch's
   cost was Spark's fixed cost per job, which the reference never pays
   (it indexes a batch in-process on its write pool, sindex.c:1072-1091).
   A larger batch runs as Spark stages.
 - DELETE: tombstone docids go to tombstones/, one parquet file per
-  delete; a key or docid list is resolved and written on the driver
-  (pyarrow), a DataFrame by Spark. Every engine holds the tombstones as
-  one sorted numpy array that each kernel masks with, and compaction
-  folds them — the Lucene liveDocs pattern. Not yet a commit: an engine
-  sees deletes from its construction, refresh() or the next compaction.
+  delete, resolved and written on the driver (pyarrow; keys or docids
+  given as a DataFrame are collected first). Every engine holds the
+  tombstones as one sorted numpy array that each kernel masks with, and
+  compaction folds them — the Lucene liveDocs pattern. Not yet a commit:
+  an engine sees deletes from its construction, refresh() or the next
+  compaction.
 - UPDATE/REPLACE: delete + add, like the reference.
 - COMPACT: folds delta segments AND tombstones into the base in one
   rewrite (segment merge; what an Iceberg MERGE INTO + snapshot expire
@@ -61,15 +63,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from marlin_spark.config import EngineConfig
-from marlin_spark.functions.analyzers import token_count_col
+from marlin_spark.functions.analyzers import token_count_col, token_counts
 from marlin_spark.index.blocks import (
     POSTING_COLS,
     POSTINGS_SCHEMA,
     make_compaction_rewriter,
 )
 from marlin_spark.index.build import (
-    DRIVER_SLAB_DOCS,
     build_dictionary,
+    driver_slabs,
     last_job_id,
     merge_and_write,
     write_postings,
@@ -85,6 +87,13 @@ from marlin_spark.index.catalog import IndexCatalog
 # memory does: its peak RSS rose ~8 MB + 1.8 KB per turn (+14 MB at
 # 3.2k, +21 MB at 7.2k, +37 MB at 18k, +65 MB at 36k turns).
 DRIVER_BATCH_MAX = 8192
+# ... and whose Arrow table holds at most this many bytes: that memory
+# grows with the batch's tokens, not its rows. The same sweep over a
+# long-turn corpus (--turn-chars 16000, ~16 KB turns) rose +18/+31/+50/
+# +87 MB at 0.8/1.7/3.3/6.1 MB of Arrow (51 to 377 turns); ingest_nrt's
+# turns weigh ~175 B, so its batches meet the row gate first (8,192
+# turns ~1.4 MB).
+DRIVER_BATCH_BYTES = 2 << 20
 
 
 class IncrementalIndexer:
@@ -124,19 +133,21 @@ class IncrementalIndexer:
         rows raises before its commit.
 
         One bounded collect (the batch's first DRIVER_BATCH_MAX + 1 rows)
-        picks the placement: a batch that fits is indexed on the driver
-        from that Arrow table, with no further Spark job; a larger one
-        runs as Spark stages. Both write the same files."""
+        picks the placement: a batch that fits both gates is indexed on
+        the driver from that Arrow table, with no further Spark job; a
+        larger one runs as Spark stages. Both write the same files."""
         batch = self._collect_small(batch_df)
         self._append(batch_df if batch is None else batch, batch_id)
 
     @staticmethod
     def _collect_small(df: DataFrame) -> pa.Table | None:
         """``df`` as an Arrow table when it has at most DRIVER_BATCH_MAX
-        rows, else None (one Spark job, bounded at DRIVER_BATCH_MAX + 1
-        rows)."""
+        rows in at most DRIVER_BATCH_BYTES, else None (one Spark job,
+        bounded at DRIVER_BATCH_MAX + 1 rows)."""
         tbl = df.limit(DRIVER_BATCH_MAX + 1).toArrow()
-        return tbl if tbl.num_rows <= DRIVER_BATCH_MAX else None
+        if tbl.num_rows > DRIVER_BATCH_MAX or tbl.nbytes > DRIVER_BATCH_BYTES:
+            return None
+        return tbl
 
     def _append(self, batch: DataFrame | pa.Table, batch_id: int) -> None:
         """process_batch's body for a collected batch (driver placement)
@@ -218,13 +229,11 @@ class IncrementalIndexer:
                     capacity: int, batch_id: int) -> tuple[pa.Table, int, int]:
         """Driver placement of _docs_spark, the same rows in the same
         schema: docids by a stable sort on (conv_id, turn_idx), nulls
-        first as Spark orders them; dl from the analyzer's counts, one
-        DRIVER_SLAB_DOCS slab at a time. The capacity check runs before
-        the write. Returns (docid, dl and indexed fields of the docs,
+        first as Spark orders them; dl by token_counts, token_count_col's
+        driver twin, one slab (driver_slabs) at a time. The capacity
+        check runs before the write. Returns (docid, dl and indexed fields of the docs,
         docid-sorted; rows; sum of dl)."""
         import pyarrow.compute as pc
-
-        from marlin_spark.oracle.tokenizer import analyze_batch
 
         cfg = self.cfg
         n_rows = batch.num_rows
@@ -234,13 +243,11 @@ class IncrementalIndexer:
             null_placement="at_start",
         ))
         dl = np.zeros(n_rows, dtype=np.int32)
-        for lo in range(0, n_rows, DRIVER_SLAB_DOCS):
+        for lo, n in driver_slabs(batch, list(cfg.indexed_fields)):
             for fname in cfg.indexed_fields:
-                counts, _terms, _pos = analyze_batch(
-                    batch[fname].slice(lo, DRIVER_SLAB_DOCS).to_pylist(),
-                    cfg.analyzer, "index",
+                dl[lo:lo + n] += token_counts(
+                    batch[fname].slice(lo, n).to_pylist(), cfg.analyzer
                 )
-                dl[lo:lo + counts.size] += counts.astype(np.int32)
         keep = [c for c in batch.column_names if c not in ("dl", "range_id", "docid")]
         docs = pa.table(
             {"docid": np.arange(offset + 1, offset + n_rows + 1, dtype=np.int64),
@@ -263,16 +270,19 @@ class IncrementalIndexer:
     # ---------------------------------------------------------- delete
     def delete_docids(self, docids) -> None:
         """Tombstone docids (reference: index_delete_document_callback,
-        src/main/index.c:1037-1070): a DataFrame of
-        docids is appended to tombstones/ by Spark, a list is written by
-        the driver as one file (_write_tombstones). Engines constructed
-        (or refresh()ed) after this call mask them in every kernel, from
-        one sorted driver array; compact() folds them out of docs/ and
+        src/main/index.c:1037-1070), a list or a one-column DataFrame
+        (collected: engines hold every tombstone on the driver anyway),
+        written as one file (_write_tombstones). Engines constructed (or
+        refresh()ed) after this call mask them in every kernel, from one
+        sorted driver array; compact() folds them out of docs/ and
         postings/."""
         if isinstance(docids, DataFrame):
-            docids.select(
+            import pyarrow.compute as pc
+
+            col = docids.select(
                 F.col(docids.columns[0]).cast("long").alias("docid")
-            ).write.mode("append").parquet(self.cat.path("tombstones"))
+            ).toArrow()["docid"]
+            self._write_tombstones(pc.drop_null(col).to_numpy())
         else:
             self._write_tombstones(np.asarray([int(d) for d in docids], dtype=np.int64))
 
@@ -297,25 +307,19 @@ class IncrementalIndexer:
     def delete_turns(self, keys) -> None:
         """Delete by natural key (conv_id, turn_idx) — the reference's
         external-id delete (sindex.c:1057-1099 via the id mapping).
-        Resolves docids over base + uncompacted delta docs: a DataFrame
-        of keys with a Spark join, a list on the driver (_delete_keys)."""
-        if not isinstance(keys, DataFrame):
-            self._delete_keys(pa.table({
+        ``keys`` is a list of pairs or a DataFrame with those columns
+        (collected); _delete_keys resolves them on the driver."""
+        if isinstance(keys, DataFrame):
+            keys = keys.select(
+                F.col("conv_id").cast("string").alias("conv_id"),
+                F.col("turn_idx").cast("long").alias("turn_idx"),
+            ).toArrow()
+        else:
+            keys = pa.table({
                 "conv_id": [str(c) for c, _t in keys],
                 "turn_idx": [int(t) for _c, t in keys],
-            }))
-            return
-        keys = keys.select(
-            F.col("conv_id").cast("string").alias("conv_id"),
-            F.col("turn_idx").cast("long").alias("turn_idx"),
-        )
-        docs = self.cat.read_docs(self.spark, self.cfg.range_size).select(
-            "docid",
-            F.col("conv_id").cast("string").alias("conv_id"),
-            F.col("turn_idx").cast("long").alias("turn_idx"),
-        )
-        ids = docs.join(F.broadcast(keys), ["conv_id", "turn_idx"], "left_semi")
-        self.delete_docids(ids.select("docid"))
+            })
+        self._delete_keys(keys)
 
     def _delete_keys(self, keys: pa.Table) -> None:
         """delete_turns on the driver: a pyarrow read of (docid, conv_id,
@@ -401,8 +405,8 @@ class IncrementalIndexer:
     # ------------------------------------------------------------------
     def _tombstone_files(self) -> list[str]:
         """The tombstone parquet files delete_docids has written so far.
-        A write still in flight is not listed: Spark's sits under
-        _temporary, the driver's under a dot-prefixed temp name."""
+        A write still in flight is not listed: it sits under a
+        dot-prefixed temp name (_write_tombstones)."""
         import glob
 
         return sorted(glob.glob(os.path.join(self.cat.path("tombstones"), "*.parquet")))

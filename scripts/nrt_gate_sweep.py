@@ -1,19 +1,30 @@
-"""Batch-size sweep of the two placements of an NRT micro-batch: the
-measurement behind ``streaming.incremental.DRIVER_BATCH_MAX``.
+"""Batch-size sweep of the placements of an NRT micro-batch: the
+measurement behind ``streaming.incremental.DRIVER_BATCH_MAX`` and
+``DRIVER_BATCH_BYTES``.
 
 Builds one base index the shape of perfbench's ingest_nrt (its seeded
-corpus, 8 term buckets), then for each batch size appends one micro-batch
-per placement to a fresh copy of that base, alternating which placement
-runs first, and times ``IncrementalIndexer.process_batch`` end to end
-(bounded collect included). Also records the process's peak RSS after
-each driver-placed batch (sizes run in ascending order, so a rise is the
-largest batch's). Prints one JSON line per run and a summary line of
-medians per (size, placement).
+corpus, 8 term buckets), then for each batch size runs one write per
+placement on a fresh copy of that base, rotating which placement runs
+first, and times ``IncrementalIndexer.process_batch`` (or, with ``--op
+update``, ``update_turns``) end to end, bounded collect included. The
+placements are ``driver`` and ``spark`` (each forced through both
+gates) and ``gate`` (the module's gates as they are: what a caller
+gets). Also records the rise of the process's peak RSS over its value
+after the base build (sizes run in ascending order, so a rise is the
+largest batch's so far). Prints one JSON line per run and a summary
+line of medians per (size, placement).
 
     python scripts/nrt_gate_sweep.py --sizes 100,400,1600,4000 --reps 3
+    python scripts/nrt_gate_sweep.py --sizes 20,40,80 --turn-chars 16000 \
+        --placements driver
 
-Sizes are in conversations (~4.5 turns each). Needs pyspark and a local
-JVM; takes a few minutes at the default sizes on 4 cores.
+Sizes are in conversations (~4.5 turns each). ``--turn-chars N``
+lengthens every turn's text to at least N characters with the texts of
+the turns after it (a long-turn corpus: tool outputs, documents). The
+script only imports ``IncrementalIndexer`` and sets the gates it finds,
+so it also times a checkout without them (``gate`` is then that
+checkout's own process_batch). Needs pyspark and a local JVM; takes a
+few minutes at the default sizes on 4 cores.
 """
 
 from __future__ import annotations
@@ -40,9 +51,13 @@ def main() -> None:
     ap.add_argument("--base-convs", type=int, default=2000)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--master", default="local[4]")
+    ap.add_argument("--placements", default="driver,spark")
+    ap.add_argument("--turn-chars", type=int, default=0)
+    ap.add_argument("--op", choices=("process", "update"), default="process")
     args = ap.parse_args()
 
-    from inputs import conversations, stage_parquet
+    import pyarrow as pa
+    from inputs import TRANSCRIPT_SCHEMA, conversations, stage_parquet
 
     from marlin_spark.config import EngineConfig
     from marlin_spark.index.build import IndexBuilder
@@ -58,29 +73,44 @@ def main() -> None:
         IndexBuilder(spark, base, EngineConfig(n_term_buckets=8)).build(
             spark.read.parquet(base_src), "sweep", source_path=base_src
         )
-        gates = {"driver": 10**9, "spark": -1}
+        names = ("DRIVER_BATCH_MAX", "DRIVER_BATCH_BYTES")
+        gates = {
+            "driver": (10**9, 10**15),
+            "spark": (-1, -1),
+            "gate": tuple(getattr(incremental, n, None) for n in names),
+        }
+        placements = args.placements.split(",")
+        base_rss = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
         times: dict = {}
         for size in (int(s) for s in args.sizes.split(",")):
             rows = conversations(args.seed, args.base_convs, size)
+            if args.turn_chars:
+                rows = _lengthen(rows, args.turn_chars)
             src = os.path.join(work, f"batch{size}")
             stage_parquet(rows, src, 2)
+            nbytes = pa.Table.from_pylist(rows, schema=TRANSCRIPT_SCHEMA).nbytes
             for rep in range(args.reps):
-                order = ("driver", "spark") if rep % 2 == 0 else ("spark", "driver")
-                for placement in order:
+                k = rep % len(placements)
+                for placement in placements[k:] + placements[:k]:
                     d = os.path.join(work, "run")
                     shutil.rmtree(d, ignore_errors=True)
                     shutil.copytree(base, d)
-                    incremental.DRIVER_BATCH_MAX = gates[placement]
+                    for n, v in zip(names, gates[placement]):
+                        if v is not None:
+                            setattr(incremental, n, v)
                     inc = incremental.IncrementalIndexer(spark, d)
+                    write = inc.process_batch if args.op == "process" else inc.update_turns
                     t = time.perf_counter()
-                    inc.process_batch(spark.read.parquet(src), 0)
+                    write(spark.read.parquet(src), 0)
                     secs = time.perf_counter() - t
                     times.setdefault((len(rows), placement), []).append(secs)
                     print(json.dumps({
-                        "turns": len(rows), "placement": placement, "rep": rep,
+                        "turns": len(rows), "arrow_bytes": nbytes,
+                        "placement": placement, "rep": rep,
                         "seconds": round(secs, 4),
-                        "peak_rss_mb": round(
-                            resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, 1
+                        "peak_rss_rise_mb": round(
+                            resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
+                            - base_rss, 1
                         ),
                     }), flush=True)
         print(json.dumps({
@@ -93,6 +123,21 @@ def main() -> None:
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
+
+
+def _lengthen(rows: list[dict], chars: int) -> list[dict]:
+    """``rows`` with each text extended to at least ``chars`` characters
+    by the texts of the rows after it (cyclically)."""
+    texts = [r["text"] for r in rows if r["text"]]
+    out = []
+    for i, r in enumerate(rows):
+        parts, n, j = [], 0, i
+        while n < chars:
+            parts.append(texts[j % len(texts)])
+            n += len(parts[-1]) + 1
+            j += 1
+        out.append(dict(r, text=" ".join(parts)))
+    return out
 
 
 if __name__ == "__main__":

@@ -59,11 +59,17 @@ def last_job_id(spark):
 @pytest.fixture
 def nrt_placement(monkeypatch):
     """Callable: force where IncrementalIndexer indexes a micro-batch,
-    'driver' or 'spark', by patching its size gate."""
+    'driver' or 'spark', by patching its size gates. 'spark' keeps the
+    row gate, so the batch still takes the bounded collect that every
+    batch over a gate pays."""
     from marlin_spark.streaming import incremental
 
     def force(placement: str) -> None:
-        gate = {"driver": 10**9, "spark": -1}[placement]
-        monkeypatch.setattr(incremental, "DRIVER_BATCH_MAX", gate)
+        if placement == "driver":
+            monkeypatch.setattr(incremental, "DRIVER_BATCH_MAX", 10**9)
+            monkeypatch.setattr(incremental, "DRIVER_BATCH_BYTES", 10**15)
+        else:
+            assert placement == "spark", placement
+            monkeypatch.setattr(incremental, "DRIVER_BATCH_BYTES", -1)
 
     return force

@@ -25,6 +25,7 @@ import shutil
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.dataset as pads
 import pytest
 
@@ -36,6 +37,7 @@ from marlin_spark.index.blocks import (
     make_block_merger,
     make_doc_range_builder,
 )
+from marlin_spark.index import build
 from marlin_spark.index.build import IndexBuilder
 from marlin_spark.index.catalog import IndexCatalog
 from marlin_spark.streaming.incremental import IncrementalIndexer
@@ -248,7 +250,7 @@ def test_compacted_blocks_equal_doc_range_builder(
 def _placed_index(spark, base, cfg, tmp_path, placement, nrt_placement):
     d = str(tmp_path / placement)
     shutil.copytree(base, d)
-    nrt_placement(placement)
+    nrt_placement("spark" if placement == "spark" else "driver")
     return d, IncrementalIndexer(spark, d, cfg)
 
 
@@ -268,15 +270,22 @@ def _bucketed_blocks(path: str) -> pd.DataFrame:
 
 
 def test_delta_segment_equal_across_placements(
-    spark, writer_index, tmp_path, nrt_placement
+    spark, writer_index, tmp_path, nrt_placement, monkeypatch
 ):
     """The driver and Spark placements of one micro-batch write the same
     docs rows, in the same Spark schema, and byte-identical blocks (every
-    column, bucket included), each equal to the doc-range builder's."""
+    column, bucket included), each equal to the doc-range builder's. So
+    does the driver placement cut into many slabs, by docs and by bytes
+    ('slabs'): the merger re-cuts the slabs' partial blocks."""
     base, cfg = writer_index
     docs, blocks = {}, {}
-    for placement in ("driver", "spark"):
-        d, inc = _placed_index(spark, base, cfg, tmp_path, placement, nrt_placement)
+    for placement in ("driver", "spark", "slabs"):
+        if placement == "slabs":
+            monkeypatch.setattr(build, "DRIVER_SLAB_DOCS", 7)
+            monkeypatch.setattr(build, "DRIVER_SLAB_BYTES", 60)
+        d, inc = _placed_index(
+            spark, base, cfg, tmp_path, placement, nrt_placement
+        )
         inc.process_batch(_stream_batch(spark, 90, 1), 1)
         cat = IndexCatalog(d)
         docs[placement] = _table_rows(spark, cat.path("docs_delta/batch=1"))
@@ -284,9 +293,25 @@ def test_delta_segment_equal_across_placements(
         want = _kernel_blocks(cat.path("docs_delta/batch=1"), cfg,
                               inc.stats["avgdl"])
         _assert_same_blocks(blocks[placement][_OUT_COLS], want)
-    assert docs["driver"] == docs["spark"]
+    assert docs["driver"] == docs["spark"] == docs["slabs"]
     assert len(docs["driver"][1]) == 90
     _assert_same_blocks(blocks["driver"], blocks["spark"])
+    _assert_same_blocks(blocks["slabs"], blocks["spark"])
+
+
+def test_driver_slabs_bound_docs_and_bytes(monkeypatch):
+    """Slabs hold at most DRIVER_SLAB_DOCS docs and DRIVER_SLAB_BYTES of
+    text over the indexed fields (nulls count 0), or one larger doc."""
+    monkeypatch.setattr(build, "DRIVER_SLAB_DOCS", 3)
+    monkeypatch.setattr(build, "DRIVER_SLAB_BYTES", 10)
+    tbl = pa.table({
+        "text": ["aaaa", "bb", "c" * 25, None, "d", "e", "f", "gggg", "\u00e9" * 3],
+        "role": ["x", None, None, None, "yyyyyyyy", None, None, None, None],
+    })
+    slabs = list(build.driver_slabs(tbl, ["text", "role"]))
+    # sizes (bytes): 5, 2, 25, 0, 9, 1, 1, 4, 6
+    assert slabs == [(0, 2), (2, 1), (3, 3), (6, 2), (8, 1)]
+    assert list(build.driver_slabs(tbl.slice(0, 0), ["text"])) == []
 
 
 def test_compacted_postings_equal_across_placements(
@@ -318,4 +343,44 @@ def test_compacted_postings_equal_across_placements(
         want = _kernel_blocks(cat.path("docs"), cfg, stats["avgdl"])
         _assert_same_blocks(blocks[placement][_OUT_COLS], want)
     assert docs["driver"] == docs["spark"]
+    _assert_same_blocks(blocks["driver"], blocks["spark"])
+
+
+@pytest.mark.parametrize("analyzer", ["whitespace", "simple"])
+def test_delta_segment_equal_across_placements_non_ascii(
+    spark, tiny_df, tmp_path, nrt_placement, analyzer
+):
+    """The Spark placement takes dl from the Catalyst split (Java regex);
+    the driver placement must count the same tokens, also where Python's
+    str.split() and Java's \\s disagree (U+00A0, U+2003, U+0085, U+001C)
+    and where lowercasing leaves ASCII (simple)."""
+    cfg = EngineConfig(block_size=16, range_size=64, n_term_buckets=8,
+                       analyzer=analyzer)
+    base = str(tmp_path / "base")
+    IndexBuilder(spark, base, cfg).build(tiny_df, build_id="a0")
+    texts = [
+        "eps\u00a0zeta worst", "alpha\u2003beta\tgamma best", "x\x1cy\u0085z",
+        "\u0130stanbul \u212aelvin Stra\u00dfe \u03a3\u0391\u03a3 test",
+        "\uff46\uff55\uff4c\uff4c width", "   ", "", None, "this is\r\nbest",
+    ]
+    batch = spark.createDataFrame(
+        [("u", i, "user", t, None, dt.datetime(2025, 1, 1))
+         for i, t in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    docs, blocks = {}, {}
+    for placement in ("driver", "spark"):
+        d, inc = _placed_index(spark, base, cfg, tmp_path, placement, nrt_placement)
+        inc.process_batch(batch, 1)
+        cat = IndexCatalog(d)
+        docs[placement] = _table_rows(spark, cat.path("docs_delta/batch=1"))
+        blocks[placement] = _bucketed_blocks(cat.path("postings_delta/batch=1"))
+        want = _kernel_blocks(cat.path("docs_delta/batch=1"), cfg,
+                              inc.stats["avgdl"])
+        _assert_same_blocks(blocks[placement][_OUT_COLS], want)
+    assert docs["driver"] == docs["spark"]
+    dl = [r["dl"] for r in docs["driver"][1]]
+    assert dl[0] == (2 if analyzer == "whitespace" else 3)
+    assert dl[5:8] == [0, 0, 0]
     _assert_same_blocks(blocks["driver"], blocks["spark"])

@@ -273,6 +273,18 @@ def test_delta_blocks_inside_a_base_range_rank_like_exact(
 
 
 def test_update_replaces_turn(spark, crud_index, tiny_rows):
+    """On the driver placement, the default for a one-row batch."""
+    _update_replaces_turn(spark, crud_index, tiny_rows)
+
+
+def test_update_replaces_turn_on_spark(spark, crud_index, tiny_rows, nrt_placement):
+    """The same on the Spark placement: the keys to delete are collected
+    from the batch DataFrame, the append runs as Spark stages."""
+    nrt_placement("spark")
+    _update_replaces_turn(spark, crud_index, tiny_rows)
+
+
+def _update_replaces_turn(spark, crud_index, tiny_rows):
     d, cfg = crud_index
     key_rows = sorted(tiny_rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
     conv, turn = key_rows[2]["conv_id"], key_rows[2]["turn_idx"]
@@ -297,6 +309,18 @@ def test_update_replaces_turn(spark, crud_index, tiny_rows):
 def test_patch_merges_fields_into_stored_turn(spark, crud_index):
     """PATCH semantics (index.c:965-1034): provided fields replace,
     absent fields survive, and the index reflects the new text."""
+    _patch_merges_fields(spark, crud_index)
+
+
+def test_patch_merges_fields_into_stored_turn_on_spark(
+    spark, crud_index, nrt_placement
+):
+    """The same with the merged batch placed on Spark."""
+    nrt_placement("spark")
+    _patch_merges_fields(spark, crud_index)
+
+
+def _patch_merges_fields(spark, crud_index):
     d, cfg = crud_index
     eng0 = SearchEngine(spark, d, cfg)
     row = eng0.hydrate(

@@ -1,8 +1,9 @@
 """The two placements of an NRT write (streaming/incremental.py).
 
-A micro-batch of at most DRIVER_BATCH_MAX rows is indexed on the driver
-from one bounded Arrow collect; a larger one runs as Spark stages. Key
-and docid-list deletes always run on the driver. Both placements must
+A micro-batch of at most DRIVER_BATCH_MAX rows in DRIVER_BATCH_BYTES is
+indexed on the driver from one bounded Arrow collect; a larger one runs
+as Spark stages. Deletes always run on the driver (keys or docids given
+as a DataFrame are collected first). Both placements must
 write the same index: the same docids, the same docs rows and blocks
 (byte identity is asserted in test_blocks_fastpath.py), the same
 answers on every query path before and after compaction, and the same
@@ -249,3 +250,58 @@ def test_tombstone_invisible_until_renamed(spark, nrt_index, monkeypatch):
     assert not {victim["docid"], 2} & {
         r["docid"] for r in eng.cat.read_docs(spark, cfg.range_size).collect()
     }
+
+
+def test_byte_gate_sends_long_batch_to_spark(
+    spark, nrt_index, tmp_path, last_job_id, monkeypatch
+):
+    """A batch under the row gate whose Arrow table is over
+    DRIVER_BATCH_BYTES runs as Spark stages, after its bounded collect,
+    and writes the docs the driver placement writes."""
+    d, cfg = nrt_index
+    src = str(tmp_path / "batch.parquet")
+    _batch(spark, [(f"b-{i % 4}", i, "user", f"worst long turn {i} " * 20, None)
+                   for i in range(30)]).write.parquet(src)
+    batch = spark.read.parquet(src)
+    nbytes = batch.toArrow().nbytes
+    got = {}
+    for gate in (nbytes * 2, nbytes // 2):
+        monkeypatch.setattr(incremental, "DRIVER_BATCH_BYTES", gate)
+        on_driver = IncrementalIndexer._collect_small(batch) is not None
+        assert on_driver == (gate > nbytes)
+        idx = str(tmp_path / f"idx{gate}")
+        shutil.copytree(d, idx)
+        inc = IncrementalIndexer(spark, idx, cfg)
+        j = last_job_id()
+        inc.process_batch(batch, 0)
+        assert (last_job_id() - j == 1) == on_driver
+        got[on_driver] = sorted(
+            tuple(r) for r in spark.read.parquet(inc.cat.path("docs_delta/batch=0"))
+            .select("docid", "conv_id", "turn_idx", "dl").collect()
+        )
+    assert got[True] == got[False] and len(got[True]) == 30
+
+
+def test_dataframe_deletes_collect_once(spark, nrt_index, tmp_path, last_job_id):
+    """Keys or docids given as a DataFrame are collected by one Spark job
+    and written by the driver's one tombstone writer, as lists are."""
+    d, cfg = nrt_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    rows = sorted(inc.cat.read_docs(spark, cfg.range_size)
+                  .select("conv_id", "turn_idx", "docid").collect())
+    keys, ids = str(tmp_path / "keys.parquet"), str(tmp_path / "ids.parquet")
+    spark.createDataFrame(
+        [(rows[0]["conv_id"], rows[0]["turn_idx"]), ("no-such-conv", 0)],
+        "conv_id string, turn_idx long",
+    ).write.parquet(keys)
+    spark.createDataFrame([(rows[1]["docid"],), (None,)], "docid long").write.parquet(ids)
+    key_df, id_df = spark.read.parquet(keys), spark.read.parquet(ids)
+    j = last_job_id()
+    inc.delete_turns(key_df)
+    assert last_job_id() - j == 1
+    j = last_job_id()
+    inc.delete_docids(id_df)
+    assert last_job_id() - j == 1
+    assert len(inc._tombstone_files()) == 2
+    eng = SearchEngine(spark, d, cfg)
+    assert eng.deleted.tolist() == sorted([rows[0]["docid"], rows[1]["docid"]])
