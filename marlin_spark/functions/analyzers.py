@@ -13,8 +13,6 @@ matching /root/reference/src/analyzer/default_analyzer.c emission order.
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
@@ -76,30 +74,15 @@ def token_count_col(col: Column, analyzer: str, mode: str = "index") -> Column:
     return F.size(tokens_col(col, analyzer, mode))
 
 
-# the non-empty pieces of the Catalyst split patterns below: Java's \s
-# (no UNICODE_CHARACTER_CLASS) is ASCII-only, unlike Python's str.split()
-_TOKEN_RUNS = {
-    "simple": re.compile(r"[a-z0-9]+"),
-    "whitespace": re.compile(r"[^ \t\n\x0b\f\r]+"),
-}
-
-
 def token_counts(texts: list, analyzer: str) -> np.ndarray:
     """token_count_col on the driver: the index-mode token count of each
-    of ``texts`` (None counts 0), int32. simple and whitespace count the
-    Catalyst expressions' tokens, not the Python tokenizer's, so a dl
-    computed here equals the one Spark writes (whitespace_tokenize also
-    splits on non-ASCII whitespace such as U+00A0; Java's \\s does not)."""
-    if analyzer == "marlin":
-        from marlin_spark.oracle.tokenizer import analyze_batch
+    of ``texts`` (None counts 0), int32, from the Python tokenizer the
+    block builder indexes with. For simple and whitespace it counts the
+    Catalyst expressions' tokens: both split on ASCII separators only,
+    as Java's regex does."""
+    from marlin_spark.oracle.tokenizer import analyze_batch
 
-        return analyze_batch(texts, "marlin", "index")[0].astype(np.int32)
-    runs = _TOKEN_RUNS[analyzer]
-    fold = str.lower if analyzer == "simple" else str
-    return np.fromiter(
-        (len(runs.findall(fold(t))) if t else 0 for t in texts),
-        dtype=np.int32, count=len(texts),
-    )
+    return analyze_batch(texts, analyzer, "index")[0].astype(np.int32)
 
 
 def simple_tokens(col: Column) -> Column:

@@ -52,6 +52,7 @@ from typing import Callable, Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -406,27 +407,72 @@ def write_postings(
 # slab (tracemalloc)
 DRIVER_SLAB_DOCS = 512
 DRIVER_SLAB_BYTES = 64 << 10
+# postings per kernel call of merge_local, which bound the decoded
+# arrays of one fold (docids, tfs, dls and positions, ~40 B per
+# posting): a whole-bucket rewrite of ingest_nrt's compaction raised the
+# driver's peak RSS by ~26 MB against ~7 MB with slabs of this size.
+# Slabs are cut between (term, range) groups, not only between terms:
+# a 157k-posting term of a 26 MB index, rewritten in one call, raised
+# it by ~30 MB
+DRIVER_MERGE_POSTINGS = 8192
+
+
+def _slabs(sizes: np.ndarray, max_size: int, max_items: int) -> Iterator[tuple[int, int]]:
+    """(offset, length) of consecutive runs of items, each of at most
+    ``max_items`` items whose ``sizes`` sum to at most ``max_size``, or
+    one item that alone holds more."""
+    cum = np.cumsum(sizes)
+    lo = 0
+    while lo < len(sizes):
+        cap = (cum[lo - 1] if lo else 0) + max_size
+        hi = int(np.searchsorted(cum, cap, side="right"))
+        hi = min(max(hi, lo + 1), lo + max_items, len(sizes))
+        yield lo, hi - lo
+        lo = hi
 
 
 def driver_slabs(docs: pa.Table, fields: list[str]) -> Iterator[tuple[int, int]]:
     """(offset, length) of consecutive slabs of ``docs``, each of at most
     DRIVER_SLAB_DOCS docs and DRIVER_SLAB_BYTES of text in ``fields``,
     or one doc that alone holds more."""
-    import pyarrow.compute as pc
-
     size = np.zeros(docs.num_rows, dtype=np.int64)
     for f in fields:
         size += pc.fill_null(
             pc.binary_length(docs[f].cast(pa.string())), 0
         ).to_numpy(zero_copy_only=False)
-    cum = np.cumsum(size)
-    lo = 0
-    while lo < docs.num_rows:
-        cap = (cum[lo - 1] if lo else 0) + DRIVER_SLAB_BYTES
-        hi = int(np.searchsorted(cum, cap, side="right"))
-        hi = min(max(hi, lo + 1), lo + DRIVER_SLAB_DOCS, docs.num_rows)
-        yield lo, hi - lo
-        lo = hi
+    return _slabs(size, DRIVER_SLAB_BYTES, DRIVER_SLAB_DOCS)
+
+
+def merge_local(blocks: pd.DataFrame, kernel: Callable) -> pa.Table | None:
+    """merge_and_write's driver twin for the blocks of ONE term bucket
+    (POSTINGS_SCHEMA columns): ``kernel`` (the block merger, the
+    compaction rewriter) runs once per slab of whole (term, range)
+    groups holding at most DRIVER_MERGE_POSTINGS postings (or one group
+    that alone holds more, at most range_size postings), as it runs once
+    per merge task: each group's blocks meet in one call, and no call
+    decodes a term's other ranges. Returns the bucket's blocks in
+    POSTINGS_ARROW_SCHEMA, sorted by (term, range_id, block_id) as the
+    Spark placement's sortWithinPartitions writes them, or None when no
+    block is left."""
+    blocks = blocks.sort_values(["term", "range_id"], kind="stable", ignore_index=True)
+    terms, rids = blocks["term"].to_numpy(), blocks["range_id"].to_numpy()
+    if not terms.size:
+        return None
+    starts = np.flatnonzero(
+        np.r_[True, (terms[1:] != terms[:-1]) | (rids[1:] != rids[:-1])]
+    )
+    ends = np.r_[starts[1:], terms.size]
+    per_group = np.add.reduceat(blocks["n_docs"].to_numpy(np.int64), starts)
+    outs = []
+    for lo, n in _slabs(per_group, DRIVER_MERGE_POSTINGS, starts.size):
+        outs += kernel(iter([blocks.iloc[starts[lo]:ends[lo + n - 1]]]))
+    if not outs:
+        return None
+    merged = pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
+    return pa.Table.from_pandas(
+        merged.sort_values(["term", "range_id", "block_id"]),
+        POSTINGS_ARROW_SCHEMA, preserve_index=False,
+    )
 
 
 def _local_blocks(
@@ -435,9 +481,8 @@ def _local_blocks(
 ) -> Iterator[pa.Table]:
     """write_postings' driver placement: the builder over each slab of
     ``docs`` (driver_slabs), then the merger over each term bucket's
-    partial blocks. Yields one POSTINGS_ARROW_SCHEMA table per bucket, in
-    bucket order, sorted by (term, range_id, block_id) as the Spark
-    placement's sortWithinPartitions writes them."""
+    partial blocks (merge_local). Yields one POSTINGS_ARROW_SCHEMA table
+    per bucket, in bucket order."""
     parts = []
     for lo, n in driver_slabs(docs, fields):
         parts += builder(iter([docs.slice(lo, n).to_pandas()]))
@@ -450,11 +495,9 @@ def _local_blocks(
         [term_bucket_py(t, n_buckets) for t in terms], dtype=np.int32
     )[codes]
     for _bucket, part in raw.groupby("bucket", sort=True):
-        merged = next(merger(iter([part])))
-        yield pa.Table.from_pandas(
-            merged.sort_values(["term", "range_id", "block_id"]),
-            POSTINGS_ARROW_SCHEMA, preserve_index=False,
-        )
+        merged = merge_local(part, merger)
+        if merged is not None:
+            yield merged
 
 
 def _split_bytes(spark: SparkSession, cfg: EngineConfig, nbytes: int) -> int:
@@ -496,10 +539,10 @@ def merge_and_write(
     # gives 16*n_term_buckets keys over ~4 partitions/core, so no single
     # reducer straggles the merge wave. The task count is sized by the
     # data, one task per input split: a merge task costs ~0.15 s even
-    # when empty, which dominated small inputs. On a 4-core host the
-    # rewrite of a ~2 MB compaction took 1.0 s in its scan's 8 splits and
-    # 0.4 s in one task. A micro-batch small enough to reach this stage
-    # never does: write_postings places it on the driver.
+    # when empty, which dominated small inputs. Small inputs never reach
+    # this stage: write_postings places a small micro-batch, and
+    # IncrementalIndexer.compact a small index, on the driver
+    # (merge_local), where no job's fixed cost is paid.
     cores = spark.sparkContext.defaultParallelism
     n_tasks = min(
         max(16, 4 * cores),
@@ -534,6 +577,71 @@ def merge_and_write(
 # bound the distributed two-pass runs, with the aggregated terms frame
 # persisted so the range sampler does not re-scan postings.
 _DICT_DRIVER_MAX = 500_000
+
+
+# per-term aggregates of a postings table, and the dictionary table:
+# those, a dense term_id and the fc partition column
+TERM_AGG_SCHEMA = pa.schema([
+    ("term", pa.string()), ("df", pa.int64()), ("cf", pa.int64()),
+    ("max_tfnorm", pa.float64()), ("n_blocks", pa.int64()),
+    ("top_maxes", pa.list_(pa.float64())),
+])
+DICT_ARROW_SCHEMA = TERM_AGG_SCHEMA.append(pa.field("term_id", pa.int64())).append(
+    pa.field("fc", pa.string())
+)
+
+
+def term_aggregates(blocks: pa.Table) -> pa.Table:
+    """build_dictionary's per-term aggregates on the driver, over the
+    term-sorted, non-empty blocks of one bucket (merge_local's output):
+    df, cf, max_tfnorm, n_blocks and the top-16 block maxes, largest
+    first. TERM_AGG_SCHEMA, in term order."""
+    terms = blocks["term"].to_numpy(zero_copy_only=False)
+    mx = blocks["max_tfnorm"].to_numpy()
+    new_term = np.r_[True, terms[1:] != terms[:-1]]
+    starts = np.flatnonzero(new_term)
+    g = np.cumsum(new_term) - 1
+    counts = np.diff(np.r_[starts, terms.size])
+    # each term's maxes, largest first; the first 16 of each are kept
+    order = np.lexsort((-mx, g))
+    top = order[np.arange(terms.size) - starts[g[order]] < 16]
+    offsets = np.r_[0, np.cumsum(np.minimum(counts, 16))].astype(np.int32)
+    return pa.table({
+        "term": terms[starts],
+        "df": np.add.reduceat(blocks["n_docs"].to_numpy().astype(np.int64), starts),
+        "cf": np.add.reduceat(blocks["sum_tf"].to_numpy(), starts),
+        "max_tfnorm": np.maximum.reduceat(mx, starts),
+        "n_blocks": counts,
+        "top_maxes": pa.ListArray.from_arrays(offsets, mx[top]),
+    }, schema=TERM_AGG_SCHEMA)
+
+
+def dense_term_ids(terms: pa.Table) -> pa.Table:
+    """Per-term rows ``terms`` sorted by term (UTF-8 byte order, as
+    Spark sorts strings), with dense term ids 1..n appended as term_id:
+    the id assignment of every dictionary small enough for the driver,
+    whichever placement computed its aggregates."""
+    terms = terms.take(pc.sort_indices(terms, [("term", "ascending")]))
+    return terms.append_column(
+        "term_id", pa.array(np.arange(1, terms.num_rows + 1, dtype=np.int64))
+    )
+
+
+def write_dictionary_local(cat: IndexCatalog, table: str, terms: pa.Table) -> int:
+    """build_dictionary on the driver, from per-term aggregates
+    (term_aggregates of every bucket): dense term ids, then one
+    term-sorted file per fc partition. Returns n_terms."""
+    from marlin_spark.query.fuzzy import term_fc_py
+
+    terms = dense_term_ids(terms)
+    fc = pa.array([term_fc_py(t) for t in terms["term"].to_pylist()], pa.string())
+    terms = terms.append_column("fc", fc)
+    cat.write_arrow(
+        table,
+        (terms.filter(pc.equal(fc, v)) for v in pc.unique(fc).to_pylist()),
+        DICT_ARROW_SCHEMA, partition_by="fc",
+    )
+    return terms.num_rows
 
 
 def build_dictionary(
@@ -572,21 +680,17 @@ def build_dictionary(
             F.sort_array(F.collect_list("max_tfnorm"), asc=False), 1, 16
         ).alias("top_maxes"),
     )
-    rows = terms.limit(_DICT_DRIVER_MAX + 1).collect()
+    rows = terms.limit(_DICT_DRIVER_MAX + 1).toArrow()
     cached = None
-    if len(rows) <= _DICT_DRIVER_MAX:
-        n_terms = len(rows)
-        rows = sorted((r.asDict() for r in rows), key=lambda r: r["term"])
-        fan_in = 0
-        for i, r in enumerate(rows):
-            r["term_id"] = i + 1
-            fan_in += r["n_blocks"]
+    if rows.num_rows <= _DICT_DRIVER_MAX:
+        n_terms = rows.num_rows
+        rows = dense_term_ids(rows.cast(TERM_AGG_SCHEMA))
+        fan_in = int(pc.sum(rows["n_blocks"]).as_py() or 0)
         out = spark.createDataFrame(
             rows,
             "term string, df long, cf long, max_tfnorm double, "
             "n_blocks long, top_maxes array<double>, term_id long",
-        ).select("term", "df", "cf", "max_tfnorm", "n_blocks",
-                 "top_maxes", "term_id")
+        )
     else:
         from pyspark.sql import Observation
         from pyspark.storagelevel import StorageLevel

@@ -312,9 +312,16 @@ def simple_tokenize(text: str) -> List[Tuple[str, int]]:
 
 def whitespace_tokenize(text: str) -> List[Tuple[str, int]]:
     """Reference whitespace analyzer analog
-    (/root/reference/src/analyzer/whitespace_analyzer.c)."""
-    toks = [t for t in text.split() if t]
+    (/root/reference/src/analyzer/whitespace_analyzer.c). Splits on
+    ASCII whitespace only, as the Catalyst split on Java's ``\\s+`` does
+    (analyzers.whitespace_tokens, which counts dl): Python's
+    str.split() would also split on U+00A0, U+2003, U+0085 and the
+    U+001C-U+001F separators, and index more tokens than dl counts."""
+    toks = [t for t in _ASCII_WS.split(text) if t]
     return [(t, i + 1) for i, t in enumerate(toks)]
+
+
+_ASCII_WS = _re.compile(r"[ \t\n\x0b\f\r]+")
 
 
 ANALYZERS = {

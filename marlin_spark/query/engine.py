@@ -127,22 +127,11 @@ class _Blocks:
 
     @classmethod
     def read(cls, seg_dir: str, bucket: int) -> "_Blocks":
-        import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-        import pyarrow.parquet as pq
 
-        # each of the bucket partition's files is read whole on this
-        # thread: the dataset scanner's thread pools left ~1.5 MB more
-        # of driver memory resident per 8 buckets read (measured)
-        ds = pads.dataset(seg_dir, partitioning="hive", format="parquet")
-        tables = []
-        for frag in ds.get_fragments(filter=pads.field("bucket") == bucket):
-            with pq.ParquetFile(frag.path) as f:
-                tables.append(f.read(columns=KERNEL_COLS, use_threads=False))
-        tbl = pa.concat_tables(
-            tables or [ds.schema.empty_table().select(KERNEL_COLS)]
-        ).sort_by([("term", "ascending"), ("range_id", "ascending")])
+        tbl = IndexCatalog.read_bucket(seg_dir, bucket, KERNEL_COLS).sort_by(
+            [("term", "ascending"), ("range_id", "ascending")]
+        )
         self = cls()
         for c in cls.COLS:
             setattr(self, c, tbl[c].to_numpy())

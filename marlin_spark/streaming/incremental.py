@@ -39,13 +39,19 @@ maintenance API:
   rewrite (segment merge; what an Iceberg MERGE INTO + snapshot expire
   would do on a real lakehouse), then rebuilds the dictionary and
   collection stats, and commits all of it in one snapshot. The
-  collection stats are observed on the staged docs write; the postings
-  go through the bulk build's merge-and-write stage
-  (build.merge_and_write) with the compaction rewriter, which re-cuts
-  every (term, range) group with the block merger's fold and recomputes
-  its max_tfnorm under the POST-compaction avgdl — see
-  blocks.fold_blocks for why stale block-max values would break WAND's
-  upper-bound contract.
+  collection stats are counted on the staged docs write; the postings
+  go through the compaction rewriter, which re-cuts every (term, range)
+  group with the block merger's fold and recomputes its max_tfnorm
+  under the POST-compaction avgdl — see blocks.fold_blocks for why
+  stale block-max values would break WAND's upper-bound contract.
+  Two placements stage the same tables. A compaction of at most
+  COMPACT_DRIVER_BYTES of input runs on the driver with pyarrow: docs
+  streamed one record batch at a time, the rewriter per term bucket in
+  slabs of whole (term, range) groups (build.merge_local, which also
+  merges a driver-placed micro-batch), the dictionary from the blocks as they
+  are written; a ~2 MB compaction spent most of its seconds in the
+  fixed cost of ~10 Spark jobs. A larger one runs the bulk build's
+  merge-and-write stage (build.merge_and_write) and build_dictionary.
 
 Limitations kept honest:
 - docids for streamed turns continue AFTER the base build's max docid in
@@ -66,14 +72,19 @@ from marlin_spark.config import EngineConfig
 from marlin_spark.functions.analyzers import token_count_col, token_counts
 from marlin_spark.index.blocks import (
     POSTING_COLS,
+    POSTINGS_ARROW_SCHEMA,
     POSTINGS_SCHEMA,
     make_compaction_rewriter,
 )
 from marlin_spark.index.build import (
+    TERM_AGG_SCHEMA,
     build_dictionary,
     driver_slabs,
     last_job_id,
     merge_and_write,
+    merge_local,
+    term_aggregates,
+    write_dictionary_local,
     write_postings,
 )
 from marlin_spark.index.catalog import IndexCatalog
@@ -94,6 +105,21 @@ DRIVER_BATCH_MAX = 8192
 # turns weigh ~175 B, so its batches meet the row gate first (8,192
 # turns ~1.4 MB).
 DRIVER_BATCH_BYTES = 2 << 20
+# Compactions whose inputs (docs, postings and their live and crashed
+# deltas) hold at most this many bytes on disk run on the driver
+# (compact); larger ones run as Spark stages. Set from
+# scripts/nrt_gate_sweep.py --op compact (ingest_nrt corpus, 4 cores, a
+# fresh process per run): the driver took 0.26/0.70/1.9/3.9 s against
+# Spark's 9.8/11.4/12.3/14.1 s at 1.8/6.9/26/51 MB, so time sets no
+# gate. Memory does: the driver's RSS rose +30/+47/+80/+111 MB, Spark's
+# +38 MB at every size, so up to ~8 MB the driver costs at most ~10 MB
+# more than the Spark placement itself.
+COMPACT_DRIVER_BYTES = 8 << 20
+# Uncompressed parquet bytes per docs record batch, and so per row
+# group, of a driver compaction: whole-file batches raised ingest_nrt's
+# driver peak RSS by ~12 MB, batches of ~3k turns bound the docs step
+# near +4 MB at any index size, for a ~0.7% larger docs file.
+COMPACT_DOCS_BATCH_BYTES = 512 << 10
 
 
 class IncrementalIndexer:
@@ -447,24 +473,36 @@ class IncrementalIndexer:
         commit nothing of the index is written: superseded dirs, the
         folded delta dirs and the folded tombstones are removed. Every
         engine reads the new snapshot at its next lookup. The snapshot
-        summary records the wall seconds and Spark jobs of the staged
-        rewrite it commits.
+        summary records the placement, wall seconds and Spark jobs of
+        the staged rewrite it commits.
 
-        The tombstone files are listed once, at the start: the docs
-        anti-join and the postings rewriter read exactly those files, and
-        only those are removed after the commit. A delete that lands
-        during the compaction stays in tombstones/ for every engine to
-        mask and for the next compaction to fold.
+        Two placements stage the same tables (_compact_tables): a
+        compaction whose inputs hold at most COMPACT_DRIVER_BYTES on disk
+        runs on the driver with pyarrow and no Spark job
+        (_compact_local); a larger one runs as Spark stages
+        (_compact_spark). Only prefix_accel, when the index has one, is
+        always built by Spark over the staged postings.
+
+        The tombstone files are listed once, at the start: both
+        placements fold exactly those files, and only those are removed
+        after the commit. A delete that lands during the compaction
+        stays in tombstones/ for every engine to mask and for the next
+        compaction to fold.
 
         Honesty note (scale): the folded delete set is materialized on
         the driver for the rewriter closure, as every engine holds it.
         Engines refuse more than EngineConfig.tombstone_driver_max of
         them; this method reads whatever backlog is listed, so one far
-        past that bound needs a compaction that streams the set."""
+        past that bound needs a compaction that streams the set. The
+        driver placement holds one docs record batch (about
+        COMPACT_DOCS_BATCH_BYTES) and one term bucket's blocks at a
+        time, and decodes at most DRIVER_MERGE_POSTINGS postings per
+        rewriter call (or one (term, range) group, at most range_size
+        postings); a bucket's blocks and the dictionary, built in driver
+        memory like build_dictionary's collected branch, grow with the
+        index, which COMPACT_DRIVER_BYTES bounds."""
         import shutil
         import time
-
-        from pyspark.sql import Observation
 
         t0, job0 = time.time(), last_job_id(self.spark)
         snap = self.cat.read_snapshot()
@@ -483,50 +521,9 @@ class IncrementalIndexer:
             if t != "prefix_accel" or self.cat.exists("prefix_accel")
         }
 
-        # ---- 1. docs: base + deltas - tombstones -> staged docs dir. The
-        # collection stats ride on the same write job (Observation), as
-        # in the bulk build's docs stage: the postings rewrite needs the
-        # post-compaction avgdl
-        docs = self.cat.read_docs(self.spark, self.cfg.range_size, doc_deltas)
-        if tomb is not None:
-            docs = docs.join(self._tombstone_df(tomb_files), "docid", "left_anti")
-        obs = Observation("compact_stats")
-        docs = docs.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.avg("dl").alias("avgdl"),
-            F.max("docid").alias("mx"),
-            F.sum("dl").alias("total"),
-        )
-        rg_bytes = str(self.cfg.docs_row_group_mb * 1024 * 1024)
-        self.cat.write(docs, staged["docs"], options={"parquet.block.size": rg_bytes})
-        row = obs.get
-        new_avgdl = float(row["avgdl"] or 0.0)
-
-        # ---- 2. postings: base + deltas -> the merge-and-write stage
-        # with the rewriter, which re-cuts every (term, range) group under
-        # the new avgdl and drops tombstones (the select drops build-time
-        # rgroup and delta batch partition columns)
-        merged = self.cat.read(self.spark, "postings", POSTINGS_SCHEMA).select(
-            *POSTING_COLS
-        )
-        if delta_dirs:
-            deltas = self.cat.read_delta(
-                self.spark, "postings", delta_dirs, POSTINGS_SCHEMA
-            )
-            merged = merged.unionByName(deltas.select(*POSTING_COLS))
-        rewriter = make_compaction_rewriter(
-            self.cfg.k1, self.cfg.b, new_avgdl, self.cfg.block_size, tomb
-        )
-        merge_and_write(
-            self.spark, self.cat, staged["postings"], merged, rewriter, self.cfg,
-            self.cat.dir_bytes("postings") + self.cat.dir_bytes("postings_delta"),
-        )
-
-        # ---- 3. the dictionary (df/cf/term ids) and the short-prefix
-        # accelerator over the staged postings, and the new stats
-        n_terms, _ = build_dictionary(
-            self.spark, self.cat, self.cfg, staged["postings"], staged["dictionary"]
+        # ---- 1-3. docs, postings and dictionary, staged
+        placement, new = self._compact_tables(
+            staged, doc_deltas, delta_dirs, tomb, tomb_files
         )
         if "prefix_accel" in staged:
             from marlin_spark.index.prefix_accel import build_prefix_accel
@@ -545,13 +542,7 @@ class IncrementalIndexer:
                 staged["prefix_accel"],
             )
         stats = dict(
-            self.stats,
-            n_docs=int(row["n"]),
-            avgdl=new_avgdl,
-            total_tokens=int(row["total"] or 0),
-            max_docid=int(row["mx"] or 0),
-            n_terms=n_terms,
-            stats_epoch=self.stats.get("stats_epoch", 0) + 1,
+            self.stats, **new, stats_epoch=self.stats.get("stats_epoch", 0) + 1
         )
         self.cat.write_json(staged["stats.json"], stats)
 
@@ -562,9 +553,10 @@ class IncrementalIndexer:
             staged,
             summary={
                 "operation": "compact",
+                "placement": placement,
                 "folded_batches": len(delta_dirs),
                 "tombstones": 0 if tomb is None else int(tomb.size),
-                "n_docs": int(row["n"]),
+                "n_docs": new["n_docs"],
                 "seconds": round(time.time() - t0, 3),
                 "spark_jobs": last_job_id(self.spark) - job0,
             },
@@ -581,3 +573,175 @@ class IncrementalIndexer:
             crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
             if os.path.exists(crc):
                 os.remove(crc)
+
+    def _compact_tables(self, staged: dict, doc_deltas: list[str],
+                        delta_dirs: list[str], tomb: np.ndarray | None,
+                        tomb_files: list[str]) -> tuple[str, dict]:
+        """compact()'s steps 1-3 on the placement its input size picks:
+        base + delta docs minus ``tomb`` (from ``tomb_files``) to
+        staged["docs"], the rewritten postings to staged["postings"] and
+        their dictionary to staged["dictionary"]. Returns (placement, the
+        new collection stats: n_docs, avgdl, total_tokens, max_docid,
+        n_terms)."""
+        size = sum(self.cat.dir_bytes(t)
+                   for t in ("docs", "docs_delta", "postings", "postings_delta"))
+        if size <= COMPACT_DRIVER_BYTES:
+            return "driver", self._compact_local(staged, doc_deltas, delta_dirs, tomb)
+        return "spark", self._compact_spark(
+            staged, doc_deltas, delta_dirs, tomb, tomb_files, size
+        )
+
+    def _compact_spark(self, staged: dict, doc_deltas: list[str],
+                       delta_dirs: list[str], tomb: np.ndarray | None,
+                       tomb_files: list[str], size: int) -> dict:
+        """Spark placement of _compact_tables."""
+        from pyspark.sql import Observation
+
+        # docs: base + deltas - tombstones. The collection stats ride on
+        # the same write job (Observation), as in the bulk build's docs
+        # stage: the postings rewrite needs the post-compaction avgdl
+        docs = self.cat.read_docs(self.spark, self.cfg.range_size, doc_deltas)
+        if tomb is not None:
+            docs = docs.join(self._tombstone_df(tomb_files), "docid", "left_anti")
+        obs = Observation("compact_stats")
+        docs = docs.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.avg("dl").alias("avgdl"),
+            F.max("docid").alias("mx"),
+            F.sum("dl").alias("total"),
+        )
+        rg_bytes = str(self.cfg.docs_row_group_mb * 1024 * 1024)
+        self.cat.write(docs, staged["docs"], options={"parquet.block.size": rg_bytes})
+        row = obs.get
+        new_avgdl = float(row["avgdl"] or 0.0)
+
+        # postings: base + deltas -> the merge-and-write stage with the
+        # rewriter, which re-cuts every (term, range) group under the new
+        # avgdl and drops tombstones (the select drops build-time rgroup
+        # and delta batch partition columns)
+        merged = self.cat.read(self.spark, "postings", POSTINGS_SCHEMA).select(
+            *POSTING_COLS
+        )
+        if delta_dirs:
+            deltas = self.cat.read_delta(
+                self.spark, "postings", delta_dirs, POSTINGS_SCHEMA
+            )
+            merged = merged.unionByName(deltas.select(*POSTING_COLS))
+        merge_and_write(
+            self.spark, self.cat, staged["postings"], merged,
+            self._rewriter(new_avgdl, tomb), self.cfg,
+            self.cat.dir_bytes("postings") + self.cat.dir_bytes("postings_delta"),
+        )
+        n_terms, _ = build_dictionary(
+            self.spark, self.cat, self.cfg, staged["postings"], staged["dictionary"]
+        )
+        return {
+            "n_docs": int(row["n"]),
+            "avgdl": new_avgdl,
+            "total_tokens": int(row["total"] or 0),
+            "max_docid": int(row["mx"] or 0),
+            "n_terms": n_terms,
+        }
+
+    def _rewriter(self, avgdl: float, tomb: np.ndarray | None):
+        return make_compaction_rewriter(
+            self.cfg.k1, self.cfg.b, avgdl, self.cfg.block_size, tomb
+        )
+
+    def _compact_local(self, staged: dict, doc_deltas: list[str],
+                       delta_dirs: list[str], tomb: np.ndarray | None) -> dict:
+        """Driver placement of _compact_tables, the same tables with
+        pyarrow: the docs streamed one record batch at a time, the
+        postings one term bucket at a time through merge_local with the
+        rewriter, the dictionary from the blocks as they are written."""
+        n, total, mx = self._docs_compacted(staged["docs"], doc_deltas, tomb)
+        avgdl = float(total) / n if n else 0.0
+        rewriter = self._rewriter(avgdl, tomb)
+        sources = [self.cat.path("postings")] + delta_dirs
+        terms = []
+
+        def buckets():
+            for k in range(self.cfg.n_term_buckets):
+                blocks = merge_local(_bucket_blocks(sources, k), rewriter)
+                if blocks is not None:
+                    terms.append(term_aggregates(blocks))
+                    yield blocks
+
+        self.cat.write_arrow(staged["postings"], buckets(), POSTINGS_ARROW_SCHEMA,
+                             partition_by="bucket")
+        n_terms = write_dictionary_local(
+            self.cat, staged["dictionary"],
+            pa.concat_tables(terms) if terms else TERM_AGG_SCHEMA.empty_table(),
+        )
+        return {"n_docs": n, "avgdl": avgdl, "total_tokens": total,
+                "max_docid": mx, "n_terms": n_terms}
+
+    def _docs_compacted(self, name: str, doc_deltas: list[str],
+                        tomb: np.ndarray | None) -> tuple[int, int, int]:
+        """Writes base docs + the delta docs of ``doc_deltas`` - ``tomb``
+        to ``name`` through one parquet writer, one record batch of about
+        COMPACT_DOCS_BATCH_BYTES at a time, in the base's schema (read_docs' rows: delta rows get
+        their range_id and the base types). Returns (rows, sum of dl,
+        max docid), as compact_stats observes them on Spark."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        base = self.cat.parquet_files(self.cat.path("docs"))
+        schema = _spark_arrow_schema(base[0])
+        dead = pa.array([] if tomb is None else tomb, pa.int64())
+        seen = [0, 0, 0]
+
+        def batches():
+            for f in base + [f for d in doc_deltas for f in self.cat.parquet_files(d)]:
+                with pq.ParquetFile(f, coerce_int96_timestamp_unit="us") as pf:
+                    md = pf.metadata
+                    raw = sum(md.row_group(i).total_byte_size
+                              for i in range(md.num_row_groups))
+                    rows = max(1, COMPACT_DOCS_BATCH_BYTES * md.num_rows // max(1, raw))
+                    for rb in pf.iter_batches(batch_size=rows, use_threads=False):
+                        tbl = pa.Table.from_batches([rb])
+                        if "range_id" not in tbl.column_names:
+                            rid = tbl["docid"].to_numpy() // self.cfg.range_size
+                            tbl = tbl.append_column("range_id", pa.array(rid.astype(np.int32)))
+                        tbl = tbl.filter(pc.invert(pc.is_in(tbl["docid"], dead)))
+                        tbl = tbl.select(schema.names).cast(schema)
+                        if tbl.num_rows:
+                            seen[0] += tbl.num_rows
+                            seen[1] += pc.sum(tbl["dl"]).as_py() or 0
+                            seen[2] = max(seen[2], pc.max(tbl["docid"]).as_py())
+                        yield tbl
+
+        self.cat.write_arrow(name, batches(), schema)
+        return seen[0], seen[1], seen[2]
+
+
+def _spark_arrow_schema(path: str) -> pa.Schema:
+    """The Arrow schema that writes columns of the Spark types of the
+    parquet file ``path``. Spark stores TimestampType as INT96 (pyarrow
+    reads it as a naive timestamp, which Spark would read back as
+    TimestampNTZType): those become UTC-adjusted microseconds.
+    TIMESTAMP_NTZ columns stay naive, UTC-adjusted ones keep their zone."""
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+        int96 = {
+            pf.schema.column(i).path for i in range(len(pf.schema))
+            if pf.schema.column(i).physical_type == "INT96"
+        }
+        schema = pf.schema_arrow.remove_metadata()
+    for i, f in enumerate(schema):
+        if f.name in int96:
+            schema = schema.set(i, f.with_type(pa.timestamp("us", tz="UTC")))
+    return schema
+
+
+def _bucket_blocks(sources: list[str], bucket: int) -> pd.DataFrame:
+    """The blocks of term bucket ``bucket`` in the postings dirs
+    ``sources``, POSTING_COLS."""
+    cols = [c for c in POSTING_COLS if c != "bucket"]
+    blocks = pa.concat_tables(
+        [IndexCatalog.read_bucket(src, bucket, cols) for src in sources]
+    ).to_pandas()
+    blocks["bucket"] = np.int32(bucket)
+    return blocks

@@ -73,3 +73,18 @@ def nrt_placement(monkeypatch):
             monkeypatch.setattr(incremental, "DRIVER_BATCH_BYTES", -1)
 
     return force
+
+
+@pytest.fixture
+def compact_placement(monkeypatch):
+    """Callable: force where IncrementalIndexer.compact stages its
+    tables, 'driver' or 'spark', by patching its size gate."""
+    from marlin_spark.streaming import incremental
+
+    def force(placement: str) -> None:
+        assert placement in ("driver", "spark"), placement
+        monkeypatch.setattr(
+            incremental, "COMPACT_DRIVER_BYTES", 10**15 if placement == "driver" else -1
+        )
+
+    return force

@@ -314,6 +314,31 @@ def test_driver_slabs_bound_docs_and_bytes(monkeypatch):
     assert list(build.driver_slabs(tbl.slice(0, 0), ["text"])) == []
 
 
+def test_merge_local_cuts_slabs_between_term_range_groups(monkeypatch):
+    """merge_local hands the kernel whole (term, range) groups, at most
+    DRIVER_MERGE_POSTINGS postings per call or one larger group: one
+    term's ranges may meet in different calls, one group never does."""
+    monkeypatch.setattr(build, "DRIVER_MERGE_POSTINGS", 5)
+    blocks = pd.DataFrame(
+        [("a", 0, 2), ("a", 1, 3), ("b", 0, 3), ("a", 0, 1), ("b", 0, 3),
+         ("c", 2, 9), ("d", 2, 1), ("d", 3, 1)],
+        columns=["term", "range_id", "n_docs"],
+    )
+    calls = []
+
+    def kernel(batches):
+        pdf = next(batches)
+        calls.append((sorted(set(zip(pdf["term"], pdf["range_id"]))),
+                      int(pdf["n_docs"].sum())))
+        return iter([])
+
+    assert build.merge_local(blocks, kernel) is None
+    assert calls == [
+        ([("a", 0)], 3), ([("a", 1)], 3), ([("b", 0)], 6), ([("c", 2)], 9),
+        ([("d", 2), ("d", 3)], 2),
+    ]
+
+
 def test_compacted_postings_equal_across_placements(
     spark, writer_index, tmp_path, nrt_placement
 ):
@@ -346,6 +371,79 @@ def test_compacted_postings_equal_across_placements(
     _assert_same_blocks(blocks["driver"], blocks["spark"])
 
 
+def _dictionary_rows(spark, path: str) -> tuple:
+    """(Spark schema, term-ordered rows) of a dictionary table."""
+    df = spark.read.parquet(path)
+    return df.schema, df.orderBy("term").collect()
+
+
+def test_compaction_equal_across_placements(
+    spark, writer_index, tmp_path, compact_placement, last_job_id, monkeypatch
+):
+    """Two batches and deletes compacted on the Spark placement and on
+    the driver, also with tiny merge slabs ('slabs': 7 postings): the
+    staged docs (rows and Spark schema), blocks (every column), the
+    dictionary (rows and Spark schema) and stats.json are equal. The
+    driver placement runs no Spark job."""
+    base, cfg = writer_index
+    got = {}
+    for placement in ("spark", "driver", "slabs"):
+        d = str(tmp_path / placement)
+        shutil.copytree(base, d)
+        compact_placement("spark" if placement == "spark" else "driver")
+        if placement == "slabs":
+            monkeypatch.setattr(build, "DRIVER_MERGE_POSTINGS", 7)
+        inc = IncrementalIndexer(spark, d, cfg)
+        for bid in (0, 2):
+            inc.process_batch(_stream_batch(spark, 40, bid), bid)
+        base_max = int(inc.stats["max_docid"])
+        inc.delete_docids([1, 5, 6, 40, base_max + 3])
+        inc.delete_turns([("w2", 7)])
+        j = last_job_id()
+        inc.compact()
+        jobs = last_job_id() - j
+        summary = inc.cat.current_snapshot()["summary"]
+        assert summary["placement"] == ("spark" if placement == "spark" else "driver")
+        if placement == "spark":
+            assert jobs > 0
+        else:
+            assert jobs == summary["spark_jobs"] == 0
+        cat = IndexCatalog(d)
+        stats = cat.read_json("stats.json")
+        got[placement] = (
+            _table_rows(spark, cat.path("docs")),
+            _bucketed_blocks(cat.path("postings")),
+            _dictionary_rows(spark, cat.path("dictionary")),
+            stats,
+        )
+    want = got["spark"]
+    assert len(want[0][1]) > 0 and len(want[2][1]) > 0
+    for placement in ("driver", "slabs"):
+        docs, blocks, dictionary, stats = got[placement]
+        assert docs == want[0], placement
+        _assert_same_blocks(blocks, want[1])
+        assert dictionary == want[2], placement
+        assert stats == want[3], placement
+
+
+# texts where Python's str.split()/str.lower() and Java's \\s/$ differ
+_NON_ASCII_TEXTS = [
+    "eps\u00a0zeta worst", "alpha\u2003beta\tgamma best", "x\x1cy\u0085z",
+    "\u0130stanbul \u212aelvin Stra\u00dfe \u03a3\u0391\u03a3 test",
+    "\uff46\uff55\uff4c\uff4c width", "   ", "", None, "this is\r\nbest",
+    "line\u2028 end\u0085 worst",
+]
+
+
+def _non_ascii_batch(spark, conv_id: str):
+    return spark.createDataFrame(
+        [(conv_id, i, "user", t, None, dt.datetime(2025, 1, 1))
+         for i, t in enumerate(_NON_ASCII_TEXTS)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+
+
 @pytest.mark.parametrize("analyzer", ["whitespace", "simple"])
 def test_delta_segment_equal_across_placements_non_ascii(
     spark, tiny_df, tmp_path, nrt_placement, analyzer
@@ -358,17 +456,7 @@ def test_delta_segment_equal_across_placements_non_ascii(
                        analyzer=analyzer)
     base = str(tmp_path / "base")
     IndexBuilder(spark, base, cfg).build(tiny_df, build_id="a0")
-    texts = [
-        "eps\u00a0zeta worst", "alpha\u2003beta\tgamma best", "x\x1cy\u0085z",
-        "\u0130stanbul \u212aelvin Stra\u00dfe \u03a3\u0391\u03a3 test",
-        "\uff46\uff55\uff4c\uff4c width", "   ", "", None, "this is\r\nbest",
-    ]
-    batch = spark.createDataFrame(
-        [("u", i, "user", t, None, dt.datetime(2025, 1, 1))
-         for i, t in enumerate(texts)],
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
-    )
+    batch = _non_ascii_batch(spark, "u")
     docs, blocks = {}, {}
     for placement in ("driver", "spark"):
         d, inc = _placed_index(spark, base, cfg, tmp_path, placement, nrt_placement)
@@ -384,3 +472,59 @@ def test_delta_segment_equal_across_placements_non_ascii(
     assert dl[0] == (2 if analyzer == "whitespace" else 3)
     assert dl[5:8] == [0, 0, 0]
     _assert_same_blocks(blocks["driver"], blocks["spark"])
+
+
+def _tf_per_doc(postings_path: str) -> dict:
+    """docid -> the sum of its tf over every block of a postings table."""
+    from marlin_spark.functions.codec import decode_blocks_many
+
+    tbl = pads.dataset(postings_path, partitioning="hive", format="parquet").to_table(
+        columns=["n_docs", "postings"]
+    )
+    docids, tfs, _dls, _ = decode_blocks_many(
+        tbl["postings"].to_pylist(), tbl["n_docs"].to_numpy().astype(np.int64)
+    )
+    return pd.Series(tfs).groupby(docids).sum().to_dict()
+
+
+@pytest.mark.parametrize("analyzer", ["whitespace", "simple"])
+def test_dl_counts_the_indexed_tokens_non_ascii(
+    spark, tmp_path, nrt_placement, compact_placement, analyzer
+):
+    """Every doc's dl equals the sum of tf over its postings, on the
+    non-ASCII text set: after the bulk build, after an NRT batch on each
+    placement and after a compaction on each placement, whose tables
+    (docs, dictionary with its fc partitions) are equal."""
+    cfg = EngineConfig(block_size=4, range_size=8, n_term_buckets=4,
+                       analyzer=analyzer)
+    base = str(tmp_path / "base")
+    IndexBuilder(spark, base, cfg).build(_non_ascii_batch(spark, "a"), build_id="n0")
+
+    def check(cat: IndexCatalog, docs: str, postings: str) -> None:
+        dl = {r["docid"]: r["dl"] for r in spark.read.parquet(cat.path(docs)).collect()}
+        tf = _tf_per_doc(cat.path(postings))
+        assert {d: n for d, n in dl.items() if n} == tf
+        assert len(tf) >= 7
+
+    check(IndexCatalog(base), "docs", "postings")
+    got = {}
+    for placement in ("driver", "spark"):
+        d = str(tmp_path / placement)
+        shutil.copytree(base, d)
+        nrt_placement(placement)
+        compact_placement(placement)
+        inc = IncrementalIndexer(spark, d, cfg)
+        inc.process_batch(_non_ascii_batch(spark, "b"), 1)
+        check(inc.cat, "docs_delta/batch=1", "postings_delta/batch=1")
+        inc.delete_docids([2])
+        inc.compact()
+        assert inc.cat.current_snapshot()["summary"]["placement"] == placement
+        check(inc.cat, "docs", "postings")
+        got[placement] = (
+            _table_rows(spark, inc.cat.path("docs")),
+            _dictionary_rows(spark, inc.cat.path("dictionary")),
+        )
+    assert got["driver"] == got["spark"]
+    if analyzer == "whitespace":
+        fc = {r["term"]: r["fc"] for r in got["driver"][1][1]}
+        assert fc["line\u2028"] == fc["end\u0085"] == "oth"

@@ -473,73 +473,80 @@ def test_tombstones_above_driver_bound_refuse_until_compact(
 
 
 def test_delete_during_compaction_stays_for_the_next(
-    spark, crud_index, tiny_rows, monkeypatch
+    spark, tiny_index, tiny_rows, tmp_path, monkeypatch, compact_placement
 ):
     """compact() folds exactly the tombstone files it listed when it
-    started. A turn deleted mid-compaction stays in tombstones/: a fresh
-    engine excludes it on every path, the compacted docs and postings
-    hold the same docids, and the next compaction folds it."""
+    started, on both placements. A turn deleted mid-compaction stays in
+    tombstones/: a fresh engine excludes it on every path, the compacted
+    docs and postings hold the same docids, and the next compaction
+    folds it."""
     import numpy as np
     import pyarrow.dataset as pads
 
     from marlin_spark.functions.codec import decode_blocks_many
     from marlin_spark.index.catalog import IndexCatalog
 
-    d, cfg = crud_index
-    inc = IncrementalIndexer(spark, d, cfg)
-    inc.process_batch(_batch(spark, _NRT_BATCHES[0]), 0)
-    key_rows = sorted(tiny_rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
-    inc.delete_turns([(key_rows[0]["conv_id"], key_rows[0]["turn_idx"])])
-    late = next(
-        doc for doc, _ in SearchEngine(spark, d, cfg).search_local("worst", k=100)
-        if 1 < doc <= len(key_rows)
-    )
-    late_key = (key_rows[late - 1]["conv_id"], key_rows[late - 1]["turn_idx"])
+    base_dir, cfg, _ = tiny_index
+    for placement in ("driver", "spark"):
+        compact_placement(placement)
+        d = str(tmp_path / placement)
+        shutil.copytree(base_dir, d)
+        inc = IncrementalIndexer(spark, d, cfg)
+        inc.process_batch(_batch(spark, _NRT_BATCHES[0]), 0)
+        key_rows = sorted(tiny_rows, key=lambda r: (r["conv_id"], r["turn_idx"]))
+        inc.delete_turns([(key_rows[0]["conv_id"], key_rows[0]["turn_idx"])])
+        late = next(
+            doc for doc, _ in SearchEngine(spark, d, cfg).search_local("worst", k=100)
+            if 1 < doc <= len(key_rows)
+        )
+        late_key = (key_rows[late - 1]["conv_id"], key_rows[late - 1]["turn_idx"])
 
-    # the delete lands right after compact() listed the tombstones
-    fired = []
-    real_read_docs = inc.cat.read_docs
+        # the delete lands right after compact() listed the tombstones:
+        # _compact_tables is where both placements start
+        fired = []
+        real_tables = inc._compact_tables
 
-    def read_docs_after_a_delete(*a, **kw):
-        if not fired:
-            fired.append(True)
-            IncrementalIndexer(spark, d, cfg).delete_turns([late_key])
-        return real_read_docs(*a, **kw)
+        def tables_after_a_delete(*a, **kw):
+            if not fired:
+                fired.append(True)
+                IncrementalIndexer(spark, d, cfg).delete_turns([late_key])
+            return real_tables(*a, **kw)
 
-    monkeypatch.setattr(inc.cat, "read_docs", read_docs_after_a_delete)
-    inc.compact()
-    assert fired
+        monkeypatch.setattr(inc, "_compact_tables", tables_after_a_delete)
+        inc.compact()
+        assert fired
+        assert inc.cat.current_snapshot()["summary"]["placement"] == placement
 
-    cat = IndexCatalog(d)
-    docs_ids = {
-        r["docid"]
-        for r in cat.read(spark, "docs").filter("dl > 0").select("docid").collect()
-    }
-    blocks = pads.dataset(
-        cat.path("postings"), partitioning="hive", format="parquet"
-    ).to_table(columns=["n_docs", "postings"])
-    post_ids = set(decode_blocks_many(
-        blocks["postings"].to_pylist(),
-        blocks["n_docs"].to_numpy().astype(np.int64),
-    )[0].tolist())
-    assert post_ids == docs_ids
-    assert 1 not in docs_ids and late in docs_ids
+        cat = IndexCatalog(d)
+        docs_ids = {
+            r["docid"]
+            for r in cat.read(spark, "docs").filter("dl > 0").select("docid").collect()
+        }
+        blocks = pads.dataset(
+            cat.path("postings"), partitioning="hive", format="parquet"
+        ).to_table(columns=["n_docs", "postings"])
+        post_ids = set(decode_blocks_many(
+            blocks["postings"].to_pylist(),
+            blocks["n_docs"].to_numpy().astype(np.int64),
+        )[0].tolist())
+        assert post_ids == docs_ids
+        assert 1 not in docs_ids and late in docs_ids
 
-    eng = SearchEngine(spark, d, cfg)
-    assert eng.deleted.tolist() == [late]
-    for path, hits in _every_path(eng, "worst", k=1000).items():
-        assert hits and late not in {doc for doc, _ in hits}, path
-    assert late not in {r["docid"] for r in eng.search("", k=1000).collect()}
-    assert late not in {
-        r["docid"] for r in eng.match_marlin("worst", prefix_last=False).collect()
-    }
-    # the next compaction folds it
-    IncrementalIndexer(spark, d, cfg).compact()
-    eng = SearchEngine(spark, d, cfg)
-    assert eng.deleted is None
-    assert late not in {
-        r["docid"] for r in eng.cat.read(spark, "docs").select("docid").collect()
-    }
+        eng = SearchEngine(spark, d, cfg)
+        assert eng.deleted.tolist() == [late]
+        for path, hits in _every_path(eng, "worst", k=1000).items():
+            assert hits and late not in {doc for doc, _ in hits}, path
+        assert late not in {r["docid"] for r in eng.search("", k=1000).collect()}
+        assert late not in {
+            r["docid"] for r in eng.match_marlin("worst", prefix_last=False).collect()
+        }
+        # the next compaction folds it
+        IncrementalIndexer(spark, d, cfg).compact()
+        eng = SearchEngine(spark, d, cfg)
+        assert eng.deleted is None
+        assert late not in {
+            r["docid"] for r in eng.cat.read(spark, "docs").select("docid").collect()
+        }
 
 
 def test_snapshot_log_stays_bounded(spark, crud_index):
@@ -587,17 +594,22 @@ def test_compaction_refreshes_total_tokens(spark, crud_index, tiny_rows):
     assert stats["total_tokens"] == oracle.total_tokens
 
 
-# Spark jobs of the compaction below (one delta batch, no tombstones):
-# 2 docs footer reads, the docs write, the postings merge-and-write
-# (shuffle map + merge), and the dictionary's aggregate, collect and
-# write. Before compaction shared the bulk build's merge-and-write stage
-# it ran 17 jobs here.
+# Spark jobs of the compaction below on the Spark placement (one delta
+# batch, no tombstones): 2 docs footer reads, the docs write, the
+# postings merge-and-write (shuffle map + merge), and the dictionary's
+# aggregate, collect and write. Before compaction shared the bulk
+# build's merge-and-write stage it ran 17 jobs here. The driver
+# placement runs none (test_blocks_fastpath.py).
 _COMPACT_MAX_JOBS = 8
 
 
-def test_compaction_merge_tasks_and_jobs_bounded(spark, crud_index, last_job_id):
-    """compact() runs its merge in no more tasks than its postings scan
-    has splits, and runs no more Spark jobs than the guard above."""
+def test_compaction_merge_tasks_and_jobs_bounded(
+    spark, crud_index, last_job_id, compact_placement
+):
+    """compact() on the Spark placement runs its merge in no more tasks
+    than its postings scan has splits, and runs no more Spark jobs than
+    the guard above."""
+    compact_placement("spark")
     d, cfg = crud_index
     inc = IncrementalIndexer(spark, d, cfg)
     inc.process_batch(_batch(spark, _NRT_BATCHES[0]), 0)
@@ -630,13 +642,20 @@ def test_compaction_merge_tasks_and_jobs_bounded(spark, crud_index, last_job_id)
 _DICT_COLS = ["term", "term_id", "df", "cf", "max_tfnorm", "n_blocks", "top_maxes"]
 
 
-@pytest.mark.parametrize("driver_max", [None, 1], ids=["driver", "distributed"])
+@pytest.mark.parametrize(
+    "placement, driver_max",
+    [("driver", None), ("spark", None), ("spark", 1)],
+    ids=["driver", "spark", "distributed"],
+)
 def test_compacted_dictionary_equals_bulk_build(
-    spark, crud_index, tiny_rows, tmp_path, monkeypatch, driver_max
+    spark, crud_index, tiny_rows, tmp_path, monkeypatch, compact_placement,
+    placement, driver_max
 ):
     """compact()'s dictionary equals the one the bulk build's postings and
-    dictionary stages write over the compacted docs; with the driver
-    bound at 1 compaction takes the distributed with_dense_ids path."""
+    dictionary stages write over the compacted docs, on the driver
+    placement and on the Spark one; with the dictionary's driver bound at
+    1 the Spark placement takes the distributed with_dense_ids path."""
+    compact_placement(placement)
     from marlin_spark.index import build
     from marlin_spark.index.catalog import IndexCatalog
 

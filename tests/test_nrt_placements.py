@@ -305,3 +305,86 @@ def test_dataframe_deletes_collect_once(spark, nrt_index, tmp_path, last_job_id)
     assert len(inc._tombstone_files()) == 2
     eng = SearchEngine(spark, d, cfg)
     assert eng.deleted.tolist() == sorted([rows[0]["docid"], rows[1]["docid"]])
+
+
+# ------------------------------------------------ compaction placements
+def test_failed_driver_compaction_leaves_snapshot_live(
+    spark, nrt_index, compact_placement, monkeypatch
+):
+    """An exception inside the driver placement's postings write (after
+    two buckets) commits nothing: the previous snapshot stays live, with
+    its segment and tombstone, and the next compact() succeeds."""
+    compact_placement("driver")
+    d, cfg = nrt_index
+    inc = IncrementalIndexer(spark, d, cfg)
+    inc.process_batch(_batch(spark, [("crash-c", 0, "user", "worst folded turn", None)]), 0)
+    inc.delete_docids([2])
+    snap = inc.cat.read_snapshot()
+    before = _paths(SearchEngine(spark, d, cfg), "worst")
+
+    real, calls = incremental.merge_local, []
+
+    def crash(blocks, kernel):
+        if len(calls) == 2:
+            raise RuntimeError("crash")
+        calls.append(1)
+        return real(blocks, kernel)
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "merge_local", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            inc.compact()
+    assert inc.cat.read_snapshot() == snap
+    eng = SearchEngine(spark, d, cfg)
+    assert eng.deleted.tolist() == [2]
+    assert _paths(eng, "worst") == before
+
+    inc.compact()
+    assert inc.cat.read_snapshot()["summary"]["placement"] == "driver"
+    eng = SearchEngine(spark, d, cfg)
+    assert eng.deleted is None and eng.cat.read_snapshot()["segments"] == []
+    after = _paths(eng, "worst")
+    assert after["wand"] == after["exact"] == after["local"]
+    assert {doc for doc, _ in after["local"]} == {doc for doc, _ in before["local"]}
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_compacted_timestamp_keeps_its_spark_type(
+    spark, tiny_df, tmp_path, compact_placement, ts_type
+):
+    """The driver placement's compacted docs keep the base's Spark type
+    for ts: TimestampType (stored by Spark as INT96) and TimestampNTZType
+    (a source of naive timestamps, like perfbench's) both read back with
+    an unchanged schema and values through read_docs and hydration."""
+    from pyspark.sql import functions as F
+
+    from marlin_spark.config import EngineConfig
+    from marlin_spark.index.build import IndexBuilder
+
+    compact_placement("driver")
+    cfg = EngineConfig(block_size=16, range_size=64, n_term_buckets=8)
+    d = str(tmp_path / "idx")
+    IndexBuilder(spark, d, cfg).build(
+        tiny_df.withColumn("ts", F.col("ts").cast(ts_type)), build_id="ts0"
+    )
+    inc = IncrementalIndexer(spark, d, cfg)
+    inc.process_batch(
+        _batch(spark, [("ts-c", 0, "user", "worst timed turn", None)])
+        .withColumn("ts", F.col("ts").cast(ts_type)), 0,
+    )
+    docs = inc.cat.read_docs(spark, cfg.range_size)
+    assert docs.schema["ts"].dataType.typeName() == ts_type
+    want = sorted((r["docid"], r["ts"]) for r in docs.select("docid", "ts").collect())
+    schema = docs.schema
+
+    inc.compact()
+    assert inc.cat.read_snapshot()["summary"]["placement"] == "driver"
+    docs = inc.cat.read_docs(spark, cfg.range_size)
+    assert docs.schema == schema
+    assert sorted((r["docid"], r["ts"]) for r in docs.select("docid", "ts").collect()) == want
+    docid = int(inc.stats["max_docid"])
+    assert (docid, TS) in want
+    eng = SearchEngine(spark, d, cfg)
+    hyd = eng.hydrate(eng.search("worst", k=1000, use_wand=False)).collect()
+    assert {r["docid"]: r["ts"] for r in hyd}[docid] == TS
+    assert hyd and all((r["docid"], r["ts"]) in want for r in hyd)
