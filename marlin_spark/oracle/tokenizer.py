@@ -312,7 +312,7 @@ def simple_tokenize(text: str) -> List[Tuple[str, int]]:
 
 def whitespace_tokenize(text: str) -> List[Tuple[str, int]]:
     """Reference whitespace analyzer analog
-    (/root/reference/src/analyzer/whitespace_analyzer.c). Splits on
+    (the reference's src/analyzer/whitespace_analyzer.c). Splits on
     ASCII whitespace only, as the Catalyst split on Java's ``\\s+`` does
     (analyzers.whitespace_tokens, which counts dl): Python's
     str.split() would also split on U+00A0, U+2003, U+0085 and the

@@ -681,9 +681,10 @@ class IncrementalIndexer:
                         tomb: np.ndarray | None) -> tuple[int, int, int]:
         """Writes base docs + the delta docs of ``doc_deltas`` - ``tomb``
         to ``name`` through one parquet writer, one record batch of about
-        COMPACT_DOCS_BATCH_BYTES at a time, in the base's schema (read_docs' rows: delta rows get
-        their range_id and the base types). Returns (rows, sum of dl,
-        max docid), as compact_stats observes them on Spark."""
+        COMPACT_DOCS_BATCH_BYTES at a time, in the base's schema
+        (read_docs' rows: delta rows get their range_id and the base
+        types). Returns (rows, sum of dl, max docid), as compact_stats
+        observes them on Spark."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
