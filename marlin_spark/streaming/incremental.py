@@ -587,13 +587,11 @@ class IncrementalIndexer:
                    for t in ("docs", "docs_delta", "postings", "postings_delta"))
         if size <= COMPACT_DRIVER_BYTES:
             return "driver", self._compact_local(staged, doc_deltas, delta_dirs, tomb)
-        return "spark", self._compact_spark(
-            staged, doc_deltas, delta_dirs, tomb, tomb_files, size
-        )
+        return "spark", self._compact_spark(staged, doc_deltas, delta_dirs, tomb, tomb_files)
 
     def _compact_spark(self, staged: dict, doc_deltas: list[str],
                        delta_dirs: list[str], tomb: np.ndarray | None,
-                       tomb_files: list[str], size: int) -> dict:
+                       tomb_files: list[str]) -> dict:
         """Spark placement of _compact_tables."""
         from pyspark.sql import Observation
 
